@@ -11,6 +11,9 @@ the classpath for real brokers):
   python -m stedi_human_balance_redis_kafka_spark_streaming_spark.app \
       kafkajoin --bootstrap localhost:9092 \
       --checkpoint /tmp/spark-checkpoints/kafkajoin [--watermarked]
+
+Every command writes its streaming progress to stderr, one JSON line per
+micro-batch (streaming/progress.py).
 """
 
 from __future__ import annotations
@@ -20,6 +23,7 @@ import argparse
 from .session import get_spark
 from .sources import kafka
 from .streaming import queries as sq
+from .streaming.progress import JsonProgressListener
 
 DEFAULT_REDIS_TOPIC = "redis-server"  # reference: sparkpykafkajoin.py:70
 DEFAULT_EVENTS_TOPIC = "stedi-events"  # reference: sparkpykafkajoin.py:197
@@ -53,6 +57,7 @@ def _parser() -> argparse.ArgumentParser:
 def main(argv: list[str] | None = None) -> None:
     args = _parser().parse_args(argv)
     spark = get_spark(app_name=f"stedi-{args.command}")
+    spark.streams.addListener(JsonProgressListener())
 
     def read(topic: str):
         return kafka.read_kafka_stream(

@@ -264,10 +264,15 @@ def streaming_risk_gate_tws(risk: DataFrame) -> DataFrame:
     :func:`streaming_risk_gate_stateful`: running (count, exact-int sum)
     per customer, emit whenever the n ≥ 4 gate holds after a batch.
 
-    Use with update output mode.  Runtime-gated: the API's state-server
-    protocol needs ``protobuf`` in the Python environment (absent in
-    this container — the query fails at start, not import; the pytest
-    is importorskip-gated the same way as the Redis sink).
+    Use with update output mode.  Runtime-gated, two requirements:
+
+    * the API's state-server protocol needs ``protobuf`` in the Python
+      environment (without it the query fails at start, not import; the
+      pytest is importorskip-gated the same way as the Redis sink);
+    * the RocksDB state store provider (``session.get_spark``'s default):
+      the operator keeps its state in column families, which Spark
+      4.1.2's HDFS-backed provider rejects
+      (``UNSUPPORTED_FEATURE.STATE_STORE_MULTIPLE_COLUMN_FAMILIES``).
     """
     from pyspark.sql.streaming.stateful_processor import (
         StatefulProcessor,

@@ -1,9 +1,11 @@
-"""CLI arg-surface tests (no SparkSession started)."""
+"""CLI arg-surface tests (no SparkSession started; ``main`` runs against
+fakes)."""
 
 from __future__ import annotations
 
 import pytest
 
+from stedi_human_balance_redis_kafka_spark_streaming_spark import app
 from stedi_human_balance_redis_kafka_spark_streaming_spark.app import _parser
 
 
@@ -30,3 +32,33 @@ def test_console_commands_and_flags():
 def test_unknown_command_rejected():
     with pytest.raises(SystemExit):
         _parser().parse_args(["nope"])
+
+
+def test_main_registers_progress_listener_before_query_starts(monkeypatch):
+    calls = []
+
+    class FakeStreams:
+        def addListener(self, listener):
+            calls.append(("addListener", type(listener).__name__))
+
+    class FakeSpark:
+        streams = FakeStreams()
+
+    class FakeQuery:
+        def awaitTermination(self):
+            calls.append(("awaitTermination",))
+
+    def start(sdf):
+        calls.append(("start", sdf))
+        return FakeQuery()
+
+    monkeypatch.setattr(app, "get_spark", lambda app_name: FakeSpark())
+    monkeypatch.setattr(app.kafka, "read_kafka_stream", lambda spark, topic, **kw: topic)
+    monkeypatch.setattr(app.sq, "customers_stream", lambda raw: raw)
+    monkeypatch.setattr(app.kafka, "write_console_stream", start)
+    app.main(["redis-console"])
+    assert calls == [
+        ("addListener", "JsonProgressListener"),
+        ("start", app.DEFAULT_REDIS_TOPIC),
+        ("awaitTermination",),
+    ]

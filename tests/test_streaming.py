@@ -19,6 +19,9 @@ from stedi_human_balance_redis_kafka_spark_streaming_spark.streaming import (
     sinks,
     stateful,
 )
+from stedi_human_balance_redis_kafka_spark_streaming_spark.streaming.progress import (
+    JsonProgressListener,
+)
 
 SF = "/root/testdata/sf0.001"
 
@@ -64,6 +67,20 @@ def test_streaming_customers_matches_batch(spark, stream_dirs):
     assert sorted(map(tuple, out.collect())) == sorted(map(tuple, batch.collect()))
 
 
+def _join_batch_dual(spark, redis_dir, events_dir):
+    """``customer_risk_stream``'s batch dual over the same payload files."""
+    return joins.format_customer_risk(
+        joins.join_risk_with_customers(
+            pipeline.parse_risk_events(spark.read.parquet(events_dir)),
+            pipeline.customers_from_redis_stream(spark.read.parquet(redis_dir)),
+        )
+    )
+
+
+def _rows(df):
+    return sorted(map(tuple, df.collect()))
+
+
 def test_streaming_join_matches_batch(spark, stream_dirs):
     redis_dir, events_dir = stream_dirs
     sdf = sq.customer_risk_stream(
@@ -71,14 +88,159 @@ def test_streaming_join_matches_batch(spark, stream_dirs):
     )
     out = _run_to_memory(spark, sdf, f"join_{uuid.uuid4().hex[:8]}")
     assert out.columns == ["key", "value"]
+    assert _rows(out) == _rows(_join_batch_dual(spark, redis_dir, events_dir))
 
-    batch = joins.format_customer_risk(
-        joins.join_risk_with_customers(
-            pipeline.parse_risk_events(spark.read.parquet(events_dir)),
-            pipeline.customers_from_redis_stream(spark.read.parquet(redis_dir)),
-        )
+
+@pytest.fixture(scope="module")
+def split_stream_dirs(spark, tmp_path_factory):
+    """The wire payloads split into six files per feed, so a file source
+    with ``maxFilesPerTrigger=1`` drains them over six triggers."""
+    base = tmp_path_factory.mktemp("split_streams")
+    redis_dir, events_dir = str(base / "redis"), str(base / "events")
+    synthetic.redis_envelope_raw(spark, SF).repartition(6).write.parquet(redis_dir)
+    synthetic.stedi_events_raw(spark, SF).repartition(6).write.parquet(events_dir)
+    return redis_dir, events_dir
+
+
+def _start_join_to_files(spark, dirs, sink, ckpt):
+    """``customer_risk_stream`` over ``dirs`` (one file per feed per
+    trigger) into a parquet sink with a checkpoint."""
+    raw = [
+        spark.readStream.schema("value string")
+        .option("maxFilesPerTrigger", "1")
+        .parquet(d)
+        for d in dirs
+    ]
+    return (
+        sq.customer_risk_stream(*raw)
+        .writeStream.format("parquet")
+        .option("path", sink)
+        .option("checkpointLocation", ckpt)
+        .start()
     )
-    assert sorted(map(tuple, out.collect())) == sorted(map(tuple, batch.collect()))
+
+
+def _drain(query):
+    """Run ``query`` until its input is exhausted; return its progress
+    reports that carry state operators."""
+    try:
+        query.processAllAvailable()
+        return [p for p in query.recentProgress if p.get("stateOperators")]
+    finally:
+        query.stop()
+
+
+def _stop_after(query, n_triggers):
+    """Stop ``query`` once ``n_triggers`` micro-batches have completed."""
+    import time
+
+    try:
+        while (query.lastProgress or {}).get("batchId", -1) < n_triggers - 1:
+            assert query.isActive, query.exception()
+            time.sleep(0.01)
+    finally:
+        query.stop()
+
+
+def test_join_state_is_one_rocksdb_store_per_partition(spark, split_stream_dirs, tmp_path):
+    """The session's defaults put the stream-stream join's state in one
+    RocksDB store per shuffle partition (join state format 3) with
+    changelog checkpointing; the HDFS-backed format-2 layout would show
+    four store instances per partition and no RocksDB metrics."""
+    sink = str(tmp_path / "sink")
+    progress = _drain(
+        _start_join_to_files(spark, split_stream_dirs, sink, str(tmp_path / "ckpt"))
+    )
+    op = progress[-1]["stateOperators"][0]
+    assert op["numStateStoreInstances"] == op["numShufflePartitions"]
+    assert "rocksdbChangeLogWriterCommitLatencyMs" in op["customMetrics"]
+    assert _rows(spark.read.parquet(sink)) == _rows(
+        _join_batch_dual(spark, *split_stream_dirs)
+    )
+
+
+_PROVIDER = "spark.sql.streaming.stateStore.providerClass"
+_JOIN_FORMAT = "spark.sql.streaming.join.stateFormatVersion"
+
+
+def test_join_restarts_from_hdfs_format2_checkpoint(spark, split_stream_dirs, tmp_path):
+    """A checkpoint written under Spark's old defaults (HDFS-backed
+    stores, join state format 2) restarts under the new defaults: the
+    offset log pins the old provider and format, and the sink ends equal
+    to the batch dual."""
+    sink, ckpt = str(tmp_path / "sink"), str(tmp_path / "ckpt")
+    saved = {k: spark.conf.get(k) for k in (_PROVIDER, _JOIN_FORMAT)}
+    spark.conf.set(
+        _PROVIDER,
+        "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider",
+    )
+    spark.conf.set(_JOIN_FORMAT, "2")
+    try:
+        _stop_after(_start_join_to_files(spark, split_stream_dirs, sink, ckpt), 3)
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+    expected = _rows(_join_batch_dual(spark, *split_stream_dirs))
+    assert len(_rows(spark.read.parquet(sink))) < len(expected)
+
+    progress = _drain(_start_join_to_files(spark, split_stream_dirs, sink, ckpt))
+    op = progress[-1]["stateOperators"][0]
+    assert op["numStateStoreInstances"] == 4 * op["numShufflePartitions"]
+    assert _rows(spark.read.parquet(sink)) == expected
+
+
+def test_join_restart_mid_drain_matches_uninterrupted_run(spark, split_stream_dirs, tmp_path):
+    """Under the session defaults, stopping the join mid-drain and
+    restarting it from its checkpoint gives the same sink as one
+    uninterrupted run."""
+    whole = str(tmp_path / "whole")
+    _drain(_start_join_to_files(spark, split_stream_dirs, whole, str(tmp_path / "ck_whole")))
+
+    sink, ckpt = str(tmp_path / "sink"), str(tmp_path / "ckpt")
+    _stop_after(_start_join_to_files(spark, split_stream_dirs, sink, ckpt), 3)
+    expected = _rows(spark.read.parquet(whole))
+    assert len(_rows(spark.read.parquet(sink))) < len(expected)
+    _drain(_start_join_to_files(spark, split_stream_dirs, sink, ckpt))
+    assert _rows(spark.read.parquet(sink)) == expected
+
+
+def test_progress_listener_writes_json_lines(spark, split_stream_dirs, tmp_path, capsys):
+    """``JsonProgressListener`` writes one JSON line per progress event
+    to stderr, with the per-batch and per-state-operator fields."""
+    import json
+    import time
+
+    listener = JsonProgressListener()
+    spark.streams.addListener(listener)
+    try:
+        progress = _drain(
+            _start_join_to_files(
+                spark, split_stream_dirs, str(tmp_path / "sink"), str(tmp_path / "ckpt")
+            )
+        )
+        last = progress[-1]["batchId"]
+        records: list[dict] = []
+        deadline = time.time() + 30
+        while not any(r["batchId"] == last for r in records) and time.time() < deadline:
+            time.sleep(0.1)
+            err = capsys.readouterr().err
+            records += [json.loads(x) for x in err.splitlines() if x.startswith("{")]
+    finally:
+        spark.streams.removeListener(listener)
+    by_batch = {r["batchId"]: r for r in records}
+    assert sorted(by_batch) == [p["batchId"] for p in progress]
+    for p in progress:
+        r = by_batch[p["batchId"]]
+        assert r["numInputRows"] == p["numInputRows"]
+        assert r["durationMs"]["triggerExecution"] == p["durationMs"]["triggerExecution"]
+        op = p["stateOperators"][0]
+        assert r["stateOperators"] == [
+            {
+                "numRowsTotal": op["numRowsTotal"],
+                "commitTimeMs": op["commitTimeMs"],
+                "numStateStoreInstances": op["numStateStoreInstances"],
+            }
+        ]
 
 
 def test_stateful_risk_gate(spark, stream_dirs):
@@ -211,12 +373,7 @@ def test_redis_sink_write_path(spark, stream_dirs, tmp_path):
         for line in open(spool / fn):
             k, v = line.rstrip("\n").split("\t", 1)
             written[k] = v
-    batch = joins.format_customer_risk(
-        joins.join_risk_with_customers(
-            pipeline.parse_risk_events(spark.read.parquet(events_dir)),
-            pipeline.customers_from_redis_stream(spark.read.parquet(redis_dir)),
-        )
-    )
+    batch = _join_batch_dual(spark, redis_dir, events_dir)
     expected_pairs = {(r.key, r.value) for r in batch.collect()}
     expected_keys = {k for k, _ in expected_pairs}
     # SET is last-write-wins per key: every key reached Redis, and every
