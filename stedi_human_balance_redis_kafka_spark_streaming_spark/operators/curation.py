@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.hashing import tokens
+from ..session import fixpoint, unchanged
 
 _SALT_OK = re.compile(r"^[A-Za-z0-9_\-]*$")
 
@@ -346,15 +347,16 @@ def connected_components(
     ``localCheckpoint`` truncates the growing lineage each round so the
     plan stays O(1) deep.
 
-    Checkpoint lifecycle: each round's convergence probe MATERIALIZES
-    that round's (lazy) checkpoint, so the previous round's blocks are
-    dead the moment the probe returns — they are released immediately
-    (deterministic, no ContextCleaner / JVM-GC timing).  The FINAL
-    round's blocks back the returned frame; with ``caches`` provided
-    its release handle is appended for the caller to scope to the
-    query result (the registry pattern), else it is left to the
-    ContextCleaner (safe default for callers that derive from the
-    result).
+    The loop runs on :func:`..session.fixpoint` with Σlabel as the
+    observed metric: labels only ever drop to a smaller reachable id,
+    so Σlabel is strictly decreasing until the fixpoint and one column
+    aggregate replaces a per-round shuffle join + count.
+    decimal(38,0) keeps the sum exact far beyond int64 (10¹⁰ nodes ×
+    10¹⁰ max id ≈ 10²⁰ ≪ 10³⁸).  The final round's checkpoint backs
+    the returned frame; with ``caches`` provided its release handle is
+    appended for the caller to scope to the query result (the registry
+    pattern), else it is left to the ContextCleaner (safe default for
+    callers that derive from the result).
     """
     sym = (
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
@@ -363,65 +365,38 @@ def connected_components(
         .persist()
     )
     sym.count()
-    # Lazy checkpoints throughout: the Σ-label convergence probe is the
-    # round's ONLY consumer, so letting it materialize the checkpoint
-    # folds what were two jobs per round (eager checkpoint + probe) into
-    # one — pure fixed-overhead reduction, same lineage truncation.
-    from ..session import checkpoint_handle
-
-    labels = (
+    labels0 = (
         sym.select(F.col("u").alias("node"))
         .distinct()
         .withColumn("label", F.col("node"))
-        .localCheckpoint(eager=False)
     )
-    live_handle = checkpoint_handle(labels)
 
-    # Convergence probe: Σ label is strictly decreasing until the fixpoint
-    # (labels only ever drop to a smaller reachable id), so one cheap
-    # column aggregate replaces a per-round shuffle join + count.
-    # decimal(38,0) keeps the sum exact far beyond int64 (10¹⁰ nodes ×
-    # 10¹⁰ max id ≈ 10²⁰ ≪ 10³⁸).
-    def _label_sum(df: DataFrame):
-        return df.agg(
-            F.sum(F.col("label").cast("decimal(38,0)")).alias("s")
-        ).first()["s"]
-
-    prev_sum = _label_sum(labels)
-    converged = False
-    for _ in range(max_iter):
+    def propagate(labels: DataFrame, _) -> DataFrame:
         msgs = sym.join(labels, sym["u"] == labels["node"]).select(
             F.col("v").alias("node"), F.col("label")
         )
-        new_labels = (
+        return (
             msgs.unionByName(labels)
             .groupBy("node")
             .agg(F.min("label").alias("label"))
-            .localCheckpoint(eager=False)
         )
-        new_handle = checkpoint_handle(new_labels)
-        new_sum = _label_sum(new_labels)
-        # The probe materialized this round's checkpoint; the previous
-        # round's blocks are now dead — release them synchronously.
-        live_handle.unpersist(False)
-        live_handle = new_handle
-        labels = new_labels
-        if new_sum == prev_sum:
-            converged = True
-            break
-        prev_sum = new_sum
-    sym.unpersist()
-    if caches is not None:
-        caches.append(live_handle)
-    if not converged:
+
+    try:
         # A component with diameter > max_iter would otherwise yield
         # silently-wrong cluster ids; non-convergence must be loud.
-        raise RuntimeError(
-            f"connected_components did not reach the label fixpoint in "
-            f"{max_iter} iterations — a component's diameter exceeds "
+        labels, handle = fixpoint(
+            propagate, labels0,
+            metric=[F.sum(F.col("label").cast("decimal(38,0)")).alias("s")],
+            converged=unchanged, max_iter=max_iter,
+            error=f"connected_components did not reach the label fixpoint "
+            f"in {max_iter} iterations — a component's diameter exceeds "
             f"max_iter; raise max_iter (or switch to large-star/"
-            f"small-star contraction for long-chain graphs)"
+            f"small-star contraction for long-chain graphs)",
         )
+    finally:
+        sym.unpersist()
+    if caches is not None:
+        caches.append(handle)
     return labels.select(
         F.col("node").alias("doc_id"), F.col("label").alias("cluster_id")
     )
@@ -479,80 +454,54 @@ def cc_star(
     of 1.  For near-dup graphs (clique-ish, diameter 2-4) propagation
     wins; for long-chain graphs this is the right engine.
 
-    Fixpoint detection: a cheap (count, Σu, Σv) probe (exact
-    decimal(38,0) sums) gates an EXACT set-equality check
-    (``exceptAll``), so a probe collision can never terminate the loop
-    early — the exact check runs only on probe-stable rounds, on the
-    contracted (star-shaped, ≈|V|-edge) edge set.
-
-    Checkpoint lifecycle (see :func:`connected_components`): each
-    round's probe materializes its checkpoint, so the superseded
-    round's blocks are released synchronously; the final edge frame's
-    and the node frame's handles go to ``caches`` when provided (the
-    returned join reads both).
+    Fixpoint detection (:func:`..session.fixpoint`): the (count, Σu,
+    Σv) metric (exact decimal(38,0) sums) rides each round's checkpoint
+    job and gates an EXACT set-equality check (``exceptAll``), so a
+    metric collision can never terminate the loop early — the exact
+    check runs only on metric-stable rounds, on the contracted
+    (star-shaped, ≈|V|-edge) edge set, and before the superseded
+    round's checkpoint is released.  The final edge frame's handle
+    goes to ``caches`` when provided.
     """
-    from ..session import checkpoint_handle
-
-    e = (
+    e0 = (
         edges.select(
             F.greatest(F.col(src), F.col(dst)).alias("u"),
             F.least(F.col(src), F.col(dst)).alias("v"),
         )
         .filter(F.col("u") != F.col("v"))
         .distinct()
-        .localCheckpoint(eager=False)
     )
-    e_handle = checkpoint_handle(e)
+
+    def stable(prev, cur) -> bool:
+        # counts are equal, so one exceptAll side suffices
+        return prev.metric == cur.metric and cur.frame.exceptAll(
+            prev.frame
+        ).isEmpty()
+
+    e, handle = fixpoint(
+        lambda cur, _: _small_star(_large_star(cur)), e0,
+        metric=[
+            F.count("*").alias("n"),
+            F.sum(F.col("u").cast("decimal(38,0)")).alias("su"),
+            F.sum(F.col("v").cast("decimal(38,0)")).alias("sv"),
+        ],
+        converged=stable, max_iter=max_iter,
+        error=f"cc_star did not reach the edge fixpoint in {max_iter} "
+        f"alternations — raise max_iter",
+    )
+    if caches is not None:
+        caches.append(handle)
+    # Fixpoint edges are per-component stars (child u → component-min v);
+    # roots never appear as a child.  min() is belt-and-braces: at the
+    # fixpoint each child has exactly one parent.  Each contraction
+    # keeps every node on some edge, so the final edges' endpoints are
+    # the input's node set.
+    parents = e.groupBy(F.col("u").alias("node")).agg(F.min("v").alias("label"))
     nodes = (
         e.select(F.col("u").alias("node"))
         .unionByName(e.select(F.col("v").alias("node")))
         .distinct()
-        .localCheckpoint(eager=False)
     )
-    nodes_handle = checkpoint_handle(nodes)
-
-    def _probe(df: DataFrame):
-        row = df.agg(
-            F.count("*").alias("n"),
-            F.sum(F.col("u").cast("decimal(38,0)")).alias("su"),
-            F.sum(F.col("v").cast("decimal(38,0)")).alias("sv"),
-        ).first()
-        return (row["n"], row["su"], row["sv"])
-
-    prev = _probe(e)
-    # Materialize the node checkpoint NOW: its plan reads the INITIAL
-    # edge checkpoint's blocks, which the loop releases as soon as
-    # round 1 supersedes them — deferring this to the caller's final
-    # action would read already-dropped blocks (unrecoverable for a
-    # lineage-truncated checkpoint).
-    nodes.count()
-    converged = False
-    for _ in range(max_iter):
-        nxt = _small_star(_large_star(e)).localCheckpoint(eager=False)
-        nxt_handle = checkpoint_handle(nxt)
-        cur = _probe(nxt)
-        # Probe-stable: confirm exactly (both directions; counts are
-        # equal so one exceptAll side plus the count check suffices).
-        stable = cur == prev and nxt.exceptAll(e).isEmpty()
-        # nxt is materialized (probe) and the exact check — the last
-        # reader of the superseded frame — has run: release its blocks.
-        e_handle.unpersist(False)
-        e, e_handle = nxt, nxt_handle
-        if stable:
-            converged = True
-            break
-        prev = cur
-    if caches is not None:
-        caches.extend((e_handle, nodes_handle))
-    if not converged:
-        raise RuntimeError(
-            f"cc_star did not reach the edge fixpoint in {max_iter} "
-            f"alternations — raise max_iter"
-        )
-    # Fixpoint edges are per-component stars (child u → component-min v);
-    # roots never appear as a child.  min() is belt-and-braces: at the
-    # fixpoint each child has exactly one parent.
-    parents = e.groupBy(F.col("u").alias("node")).agg(F.min("v").alias("label"))
     return (
         nodes.join(parents, "node", "left")
         .select(

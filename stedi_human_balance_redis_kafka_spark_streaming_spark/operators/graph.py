@@ -19,6 +19,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..session import checkpoint_handle, fixpoint, scope_caches, unchanged
+
 RANK_QUANT = 1_000_000_000_000  # 1e12 — rank units
 
 
@@ -231,8 +233,6 @@ def pagerank(
         nodes = nodes.withColumn(
             "__base", F.lit(base).cast("long")
         )
-    from ..session import checkpoint_handle
-
     # Loop-invariant hoist (r18, guide §1.2): e ⨝ deg never changes
     # across rounds, yet the loop re-joined (and re-broadcast/
     # re-shuffled) it every iteration.  Join once, persist the
@@ -312,6 +312,36 @@ def pagerank(
     return ranks
 
 
+def _canonical(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """Simple undirected edge set (u < v): self-loops dropped,
+    orientation and duplicates collapsed, so a parallel edge never
+    double-counts."""
+    a, b = F.col(src), F.col(dst)
+    return (
+        edges.select(F.least(a, b).alias("u"), F.greatest(a, b).alias("v"))
+        .filter(F.col("u") != F.col("v"))
+        .distinct()
+    )
+
+
+def _degrees(edges: DataFrame) -> DataFrame:
+    """(node, deg) over a canonical simple edge set (u, v): one
+    partial-aggregable endpoint count."""
+    return (
+        edges.select(F.col("u").alias("node"))
+        .unionByName(edges.select(F.col("v").alias("node")))
+        .groupBy("node")
+        .agg(F.count("*").alias("deg"))
+    )
+
+
+def _symmetric(und: DataFrame) -> DataFrame:
+    """Both orientations (a, b) of a canonical edge set (u, v)."""
+    return und.select(F.col("u").alias("a"), F.col("v").alias("b")).unionByName(
+        und.select(F.col("v").alias("a"), F.col("u").alias("b"))
+    )
+
+
 def triangle_count(
     edges: DataFrame, *, src: str = "src", dst: str = "dst"
 ) -> DataFrame:
@@ -353,8 +383,6 @@ def triangle_count(
     )
     n_nodes = deg.agg(F.count("*").alias("n_nodes"))
     n_edges = und.agg(F.count("*").alias("n_edges"))
-    from ..session import scope_caches
-
     out = n_nodes.crossJoin(n_edges).crossJoin(tri)
     return scope_caches(out, und, o)
 
@@ -369,22 +397,9 @@ def _oriented(
     endpoint under the (degree ASC, node ASC) total order.  ``und``
     and ``o`` are persisted and materialized — callers own their
     release (scope_caches)."""
-    a, b = F.col(src), F.col(dst)
-    und = (
-        edges.select(
-            F.least(a, b).alias("u"), F.greatest(a, b).alias("v")
-        )
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .persist()
-    )
+    und = _canonical(edges, src, dst).persist()
     und.count()
-    deg = (
-        und.select(F.col("u").alias("node"))
-        .unionByName(und.select(F.col("v").alias("node")))
-        .groupBy("node")
-        .agg(F.count("*").alias("deg"))
-    )
+    deg = _degrees(und)
     da = deg.select(F.col("node").alias("u"), F.col("deg").alias("deg_u"))
     db = deg.select(F.col("node").alias("v"), F.col("deg").alias("deg_v"))
     lower_first = F.expr(
@@ -464,8 +479,6 @@ def clustering_coefficient(
             .alias("local_cc"),
         )
     )
-    from ..session import scope_caches
-
     return scope_caches(out, und, o)
 
 
@@ -502,13 +515,14 @@ def k_core(
     Scale shape: each round is ONE partial-aggregable degree count
     (explode both endpoints → groupBy node) plus two anti-joins keyed
     on node — all shuffles on the node key, no windows, no all-pairs.
-    The weak frame per round is bounded by that round's casualties;
-    ``localCheckpoint`` truncates the growing loop lineage exactly as
-    in :func:`pagerank`.  Round count equals the peel DEPTH of the
-    graph (typically O(log N) in practice, ≪ N always); ``max_iter``
-    bounds the driver loop and the operator RAISES on non-convergence
-    rather than silently returning a partially-peeled set — at 100 TB
-    raise the bound, never trust a truncated peel.
+    The loop runs on :func:`..session.fixpoint` with the surviving
+    edge count as the observed metric: the edge set only shrinks, so
+    an unchanged count IS the fixpoint (no weak node left).  Round
+    count equals the peel DEPTH of the graph (typically O(log N) in
+    practice, ≪ N always) plus the round that sees the count stand
+    still; ``max_iter`` bounds the loop and the operator RAISES on
+    non-convergence rather than silently returning a partially-peeled
+    set — at 100 TB raise the bound, never trust a truncated peel.
 
     Determinism: pure set arithmetic on exact integers — no floats
     anywhere — so a SQL oracle can replay the identical peel
@@ -517,65 +531,27 @@ def k_core(
     """
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
-    a, b = F.col(src), F.col(dst)
-    und = (
-        edges.select(
-            F.least(a, b).alias("u"),
-            F.greatest(a, b).alias("v"),
-        )
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .persist()
-    )
-    und.count()
-    from ..session import checkpoint_handle, scope_caches
 
-    active = und
-    live_handle = None
-    for _ in range(max_iter):
-        deg = (
-            active.select(F.col("u").alias("node"))
-            .unionByName(active.select(F.col("v").alias("node")))
-            .groupBy("node")
-            .agg(F.count("*").alias("deg"))
-        )
-        weak = deg.filter(F.col("deg") < k).select("node").persist()
-        if weak.count() == 0:
-            weak.unpersist()
-            break
-        active = (
-            active.join(
-                weak.withColumnRenamed("node", "u"), "u", "left_anti"
-            )
-            .join(weak.withColumnRenamed("node", "v"), "v", "left_anti")
-            .localCheckpoint(eager=True)
-        )
-        # The eager checkpoint just materialized from the previous
-        # round's blocks — release the superseded round synchronously.
-        new_handle = checkpoint_handle(active)
-        if live_handle is not None:
-            live_handle.unpersist(False)
-        live_handle = new_handle
-        weak.unpersist()
-    else:
-        und.unpersist()
-        if live_handle is not None:
-            live_handle.unpersist(False)
-        raise RuntimeError(
-            f"k_core did not converge within max_iter={max_iter} rounds; "
-            "raise max_iter (peel depth exceeds the bound)"
-        )
-    out = (
-        active.select(F.col("u").alias("node"))
-        .unionByName(active.select(F.col("v").alias("node")))
-        .groupBy("node")
-        .agg(F.count("*").cast("long").alias("core_deg"))
+    def peel(active: DataFrame, _) -> DataFrame:
+        weak = _degrees(active).filter(F.col("deg") < k).select("node")
+        return active.join(
+            weak.withColumnRenamed("node", "u"), "u", "left_anti"
+        ).join(weak.withColumnRenamed("node", "v"), "v", "left_anti")
+
+    active, handle = fixpoint(
+        peel, _canonical(edges, src, dst),
+        metric=[F.count("*").alias("n")], converged=unchanged,
+        max_iter=max_iter,
+        error=f"k_core did not converge within max_iter={max_iter} rounds; "
+        "raise max_iter (peel depth exceeds the bound)",
     )
-    final = [live_handle] if live_handle is not None else []
+    out = _degrees(active).select(
+        "node", F.col("deg").cast("long").alias("core_deg")
+    )
     if caches is not None:
-        caches.extend([und, *final])
+        caches.append(handle)
         return out
-    return scope_caches(out, und, *final)
+    return scope_caches(out, handle)
 
 
 def _coreness_hindex(
@@ -594,78 +570,53 @@ def _coreness_hindex(
     symmetrized per-node count equals the endpoint count), so threading
     it here removes a duplicate full-edge-list shuffle (the guard
     deg-sharing discipline, r19).  The frame is consumed once into the
-    c₀ checkpoint and unpersisted as soon as that materializes.
+    c₀ checkpoint and unpersisted when the loop ends.
 
     Per round: ONE b-keyed join ships every node its neighbors' current
     values, one per-node descending rank computes H (h = max rank r
     with value ≥ r; every node has ≥ 1 neighbor of value ≥ 1, so h ≥ 1
-    and no node drops out), lazily checkpointed and materialized by
-    the Σc convergence probe (decimal(38,0)-exact; c is monotone
-    non-increasing, so an unchanged sum IS the pointwise fixpoint).
-    Superseded rounds release synchronously; the final frame's handle
-    rides ``caches=``.
+    and no node drops out).  The loop runs on
+    :func:`..session.fixpoint` with Σc (decimal(38,0)-exact) as the
+    observed metric: c is monotone non-increasing, so an unchanged sum
+    IS the pointwise fixpoint.
     """
-    from ..session import checkpoint_handle, scope_caches
-
-    sym = (
-        und.select(F.col("u").alias("a"), F.col("v").alias("b"))
-        .unionByName(und.select(F.col("v").alias("a"), F.col("u").alias("b")))
-        .persist()
-    )
+    sym = _symmetric(und).persist()
     sym.count()
     und.unpersist()  # sym supersedes the caller's canonical edge cache
     if deg is None:
-        c = sym.groupBy(F.col("a").alias("node")).agg(
+        c0 = sym.groupBy(F.col("a").alias("node")).agg(
             F.count("*").cast("long").alias("c")
         )
     else:
-        c = deg.select("node", F.col("deg").cast("long").alias("c"))
-    c = c.localCheckpoint(eager=False)
-    live_handle = checkpoint_handle(c)
-
-    def _sum(df: DataFrame):
-        return df.agg(
-            F.sum(F.col("c").cast("decimal(38,0)")).alias("s")
-        ).first()["s"]
-
-    prev_sum = _sum(c)
-    if deg is not None:
-        # c0 is checkpointed (materialized by the probe above) — the
-        # shared rollup's cache is no longer referenced
-        deg.unpersist()
-    converged = False
+        c0 = deg.select("node", F.col("deg").cast("long").alias("c"))
     rank_w = Window.partitionBy("a").orderBy(F.desc("c"))
-    for _ in range(max_iter):
+
+    def h_step(c: DataFrame, _) -> DataFrame:
         msgs = sym.join(c, sym["b"] == c["node"]).select("a", "c")
-        new_c = (
+        return (
             msgs.withColumn("__rn", F.row_number().over(rank_w))
             .filter(F.col("c") >= F.col("__rn"))
             .groupBy(F.col("a").alias("node"))
             .agg(F.max("__rn").cast("long").alias("c"))
-            .localCheckpoint(eager=False)
         )
-        new_handle = checkpoint_handle(new_c)
-        new_sum = _sum(new_c)
-        live_handle.unpersist(False)
-        live_handle = new_handle
-        c = new_c
-        if new_sum == prev_sum:
-            converged = True
-            break
-        prev_sum = new_sum
-    sym.unpersist()
-    if not converged:
-        live_handle.unpersist(False)
-        raise RuntimeError(
-            f"coreness (h-index) did not reach the fixpoint in "
-            f"{max_iter} rounds; raise max_iter (or use "
-            f"algorithm='peel')"
+
+    try:
+        c, handle = fixpoint(
+            h_step, c0,
+            metric=[F.sum(F.col("c").cast("decimal(38,0)")).alias("s")],
+            converged=unchanged, max_iter=max_iter,
+            error=f"coreness (h-index) did not reach the fixpoint in "
+            f"{max_iter} rounds; raise max_iter (or use algorithm='peel')",
         )
+    finally:
+        sym.unpersist()
+        if deg is not None:
+            deg.unpersist()
     out = c.select("node", F.col("c").alias("coreness"))
     if caches is not None:
-        caches.append(live_handle)
+        caches.append(handle)
         return out
-    return scope_caches(out, live_handle)
+    return scope_caches(out, handle)
 
 
 def _pick_coreness_engine(max_degree: int, threshold: int) -> str:
@@ -727,40 +678,25 @@ def coreness(
       :func:`k_core`.
 
     Both RAISE on non-convergence within ``max_iter`` rather than
-    returning a partial decomposition, and both release superseded
-    per-round checkpoints synchronously (final frames ride the
-    ``caches=`` seam).
+    returning a partial decomposition.  The h-index loop runs on
+    :func:`..session.fixpoint`; the peel engine keeps every level's
+    casualty frame and jumps no-op levels, so it keeps its own loop
+    and releases superseded edge checkpoints synchronously (final
+    frames ride the ``caches=`` seam).
     """
     if algorithm not in ("auto", "hindex", "peel"):
         raise ValueError(
             f"algorithm must be 'auto', 'hindex' or 'peel', got "
             f"{algorithm!r}"
         )
-    a, b = F.col(src), F.col(dst)
-    und = (
-        edges.select(
-            F.least(a, b).alias("u"),
-            F.greatest(a, b).alias("v"),
-        )
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .persist()
-    )
+    und = _canonical(edges, src, dst).persist()
     und.count()
-    from ..session import checkpoint_handle, scope_caches
-
     if algorithm == "auto":
         # ONE degree rollup serves both the engine probe and (for the
         # h-index engine) c₀ — previously the probe's full-edge-list
         # shuffle was thrown away and recomputed as c₀ (r19, the guard
         # deg-sharing discipline; measured ~1.3 s / 3 jobs at sf0.1).
-        deg = (
-            und.select(F.col("u").alias("node"))
-            .unionByName(und.select(F.col("v").alias("node")))
-            .groupBy("node")
-            .agg(F.count("*").alias("deg"))
-            .persist()
-        )
+        deg = _degrees(und).persist()
         max_deg = deg.agg(F.max("deg")).first()[0]
         algorithm = _pick_coreness_engine(
             int(max_deg or 0), hub_degree_threshold
@@ -803,12 +739,7 @@ def coreness(
     k = 2
     converged = False
     for _ in range(max_iter):
-        deg = (
-            active.select(F.col("u").alias("node"))
-            .unionByName(active.select(F.col("v").alias("node")))
-            .groupBy("node")
-            .agg(F.count("*").alias("deg"))
-        )
+        deg = _degrees(active)
         weak = deg.filter(F.col("deg") < k).select("node").persist()
         if weak.count() == 0:
             weak.unpersist()
@@ -883,12 +814,7 @@ def _edge_support(active: DataFrame) -> DataFrame:
     clustering_coefficient's vertex credit), one partial-aggregable
     keyed count.  Output: (u, v, support) for edges in ≥1 triangle
     (callers left-join and coalesce 0)."""
-    deg = (
-        active.select(F.col("u").alias("node"))
-        .unionByName(active.select(F.col("v").alias("node")))
-        .groupBy("node")
-        .agg(F.count("*").alias("deg"))
-    )
+    deg = _degrees(active)
     da = deg.select(F.col("node").alias("u"), F.col("deg").alias("deg_u"))
     db = deg.select(F.col("node").alias("v"), F.col("deg").alias("deg_v"))
     lower_first = F.expr("deg_u < deg_v OR (deg_u = deg_v AND u < v)")
@@ -952,66 +878,40 @@ def k_truss(
     Scale shape per round: one degree rollup + the O(m^1.5)-bounded
     oriented wedge join of :func:`triangle_count` (per-edge credit via
     a 3-struct explode, partial-aggregable count) + one (u, v)-keyed
-    anti-join; ``localCheckpoint`` truncates loop lineage.  Round count
-    = the truss peel depth (≪ m); ``max_iter`` bounds the loop and
-    RAISES on non-convergence rather than returning a half-peeled
-    edge set.  Pure integer set arithmetic — the SQL oracle replays
-    the identical cascade (plans/extras.py graph_ktruss).
+    left join keeping support ≥ k−2, on :func:`..session.fixpoint`
+    with the surviving edge count as the observed metric (the edge set
+    only shrinks, so an unchanged count is the fixpoint).  Round count
+    = the truss peel depth (≪ m) plus one; ``max_iter`` bounds the
+    loop and RAISES on non-convergence rather than returning a
+    half-peeled edge set.  Pure integer set arithmetic — the SQL
+    oracle replays the identical cascade (plans/extras.py
+    graph_ktruss).
     """
     if k < 2:
         raise ValueError(f"k must be >= 2, got {k}")
-    a, b = F.col(src), F.col(dst)
-    und = (
-        edges.select(
-            F.least(a, b).alias("u"), F.greatest(a, b).alias("v")
-        )
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .persist()
-    )
-    und.count()
-    from ..session import checkpoint_handle, scope_caches
 
-    active = und
-    live_handle = None
-    for _ in range(max_iter):
+    def peel(active: DataFrame, _) -> DataFrame:
+        active = active.select("u", "v")
         sup = _edge_support(active)
-        scored = active.join(sup, ["u", "v"], "left").select(
+        return active.join(sup, ["u", "v"], "left").select(
             "u",
             "v",
             F.coalesce(F.col("support"), F.lit(0))
             .cast("long")
             .alias("support"),
-        )
-        weak = scored.filter(F.col("support") < k - 2).persist()
-        if weak.count() == 0:
-            weak.unpersist()
-            out = scored
-            break
-        active = (
-            active.join(weak.select("u", "v"), ["u", "v"], "left_anti")
-            .localCheckpoint(eager=True)
-        )
-        # Eager checkpoint materialized — the superseded round's blocks
-        # are dead; release synchronously (see k_core).
-        new_handle = checkpoint_handle(active)
-        if live_handle is not None:
-            live_handle.unpersist(False)
-        live_handle = new_handle
-        weak.unpersist()
-    else:
-        und.unpersist()
-        if live_handle is not None:
-            live_handle.unpersist(False)
-        raise RuntimeError(
-            f"k_truss did not converge within max_iter={max_iter} rounds; "
-            "raise max_iter (peel depth exceeds the bound)"
-        )
-    final = [live_handle] if live_handle is not None else []
+        ).filter(F.col("support") >= k - 2)
+
+    out, handle = fixpoint(
+        peel, _canonical(edges, src, dst),
+        metric=[F.count("*").alias("n")], converged=unchanged,
+        max_iter=max_iter,
+        error=f"k_truss did not converge within max_iter={max_iter} rounds; "
+        "raise max_iter (peel depth exceeds the bound)",
+    )
     if caches is not None:
-        caches.extend([und, *final])
+        caches.append(handle)
         return out
-    return scope_caches(out, und, *final)
+    return scope_caches(out, handle)
 
 
 def label_propagation(
@@ -1057,10 +957,10 @@ def label_propagation(
     partial-aggregable (node, label) vote count, and a per-node
     window rank over that node's distinct candidate labels (bounded by
     its degree — never a global window).  The label frame is n rows
-    every round; ``localCheckpoint`` truncates loop lineage and each
-    superseded round's blocks are released synchronously, exactly as
-    in :func:`k_core`.  At 100 TB the round cost is PageRank's plus
-    the vote count — no all-pairs shape anywhere.
+    every round; the rounds run on :func:`..session.fixpoint` with no
+    metric and no convergence test, i.e. exactly ``iters`` rounds.
+    At 100 TB the round cost is PageRank's plus the vote count — no
+    all-pairs shape anywhere.
 
     CONVERGENCE TELEMETRY: fixed rounds are the deterministic choice
     (synchronous LPA can 2-cycle, so a fixpoint probe may never fire),
@@ -1070,69 +970,60 @@ def label_propagation(
     number of nodes whose label changed that round (one node-keyed
     join + partial-aggregable count of consecutive label frames, the
     same probe shape as coreness' Σc).  ``telemetry[-1] > 0`` means
-    the communities had not stabilized; raise ``iters``.  The probe
-    runs one extra eager job per round, so leave ``telemetry=None``
-    (the default) when the report is not needed.
+    the communities had not stabilized; raise ``iters``.  The diff
+    runs as the fixpoint's convergence callback (it reads both
+    rounds' frames before the older one is released) and costs one
+    extra job per round, so leave ``telemetry=None`` (the default)
+    when the report is not needed.
     """
     if iters < 1:
         raise ValueError(f"iters must be >= 1, got {iters}")
-    from ..session import checkpoint_handle, scope_caches
-
-    a, b = F.col(src), F.col(dst)
-    und = (
-        edges.select(
-            F.least(a, b).alias("u"),
-            F.greatest(a, b).alias("v"),
-        )
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-    )
-    sym = (
-        und.select(F.col("u").alias("a"), F.col("v").alias("b"))
-        .unionByName(und.select(F.col("v").alias("a"), F.col("u").alias("b")))
-        .persist()
-    )
+    sym = _symmetric(_canonical(edges, src, dst)).persist()
     sym.count()
-    lbl = sym.select(F.col("a").alias("node")).distinct().select(
+    lbl0 = sym.select(F.col("a").alias("node")).distinct().select(
         "node", F.col("node").alias("lbl")
-    ).localCheckpoint(eager=True)
-    live_handle = checkpoint_handle(lbl)
+    )
     rank_w = Window.partitionBy("node").orderBy(
         F.desc("votes"), F.asc("lbl")
     )
-    for _ in range(iters):
+
+    def vote(lbl: DataFrame, _) -> DataFrame:
         nbr_votes = sym.join(lbl, sym["b"] == lbl["node"]).select(
             F.col("a").alias("node"), "lbl"
         )
-        votes = nbr_votes.unionByName(lbl.select("node", "lbl"))
-        new_lbl = (
-            votes.groupBy("node", "lbl")
+        return (
+            nbr_votes.unionByName(lbl.select("node", "lbl"))
+            .groupBy("node", "lbl")
             .agg(F.count("*").alias("votes"))
             .withColumn("__rn", F.row_number().over(rank_w))
             .filter(F.col("__rn") == 1)
             .select("node", "lbl")
-            .localCheckpoint(eager=True)
         )
-        new_handle = checkpoint_handle(new_lbl)
-        if telemetry is not None:
-            # consecutive-frame diff BEFORE the superseded round's
-            # blocks release: one node-keyed join, partial-agg count
-            moved = (
-                new_lbl.select("node", F.col("lbl").alias("new_lbl"))
-                .join(lbl.select("node", F.col("lbl").alias("old_lbl")), "node")
-                .filter(F.col("new_lbl") != F.col("old_lbl"))
-                .count()
-            )
-            telemetry.append(int(moved))
-        live_handle.unpersist(False)
-        live_handle = new_handle
-        lbl = new_lbl
+
+    def record_moved(prev, cur) -> bool:
+        # consecutive-frame diff, run before the superseded round's
+        # blocks release: one node-keyed join, partial-agg count
+        telemetry.append(
+            cur.frame.select("node", F.col("lbl").alias("new_lbl"))
+            .join(prev.frame.select("node", F.col("lbl").alias("old_lbl")), "node")
+            .filter(F.col("new_lbl") != F.col("old_lbl"))
+            .count()
+        )
+        return False
+
+    try:
+        lbl, handle = fixpoint(
+            vote, lbl0, metric=[],
+            converged=None if telemetry is None else record_moved,
+            max_iter=iters, error=None,
+        )
+    finally:
+        sym.unpersist()
     out = lbl.select("node", F.col("lbl").cast("long").alias("community"))
-    sym.unpersist()
     if caches is not None:
-        caches.append(live_handle)
+        caches.append(handle)
         return out
-    return scope_caches(out, live_handle)
+    return scope_caches(out, handle)
 
 
 def bfs_distances(
@@ -1165,17 +1056,17 @@ def bfs_distances(
     shrinking after the expansion peak) to the adjacency on the node
     key, then one anti-join against the visited set discards
     already-reached nodes; both shuffles are node-keyed, no windows,
-    no all-pairs.  Rounds = graph diameter (bounded by ``max_iter``;
-    RAISES on non-convergence rather than returning truncated
-    distances).  The visited set grows to n rows; lineage is
-    truncated per round via ``localCheckpoint`` with synchronous
-    release of the superseded round, as in :func:`k_core`.
+    no all-pairs.  The loop runs on :func:`..session.fixpoint` with
+    the visited count as the observed metric: an unchanged count
+    means an empty layer.  Rounds = graph eccentricity from the
+    sources plus that empty round (bounded by ``max_iter``; RAISES
+    on non-convergence rather than returning truncated distances).
+    The visited set grows to n rows and is re-checkpointed each
+    round.
 
     Determinism: pure set arithmetic on exact integers — the SQL
     oracle replays it with a recursive CTE taking MIN(depth) per node.
     """
-    from ..session import checkpoint_handle, scope_caches
-
     a, b = F.col(src), F.col(dst)
     fwd = edges.select(a.alias("a"), b.alias("b"))
     adj = fwd if directed else fwd.unionByName(
@@ -1183,46 +1074,38 @@ def bfs_distances(
     )
     adj = adj.filter(F.col("a") != F.col("b")).distinct().persist()
     adj.count()
-    dist = sources.select(
+    dist0 = sources.select(
         F.col("node").cast("long").alias("node"),
         F.lit(0).cast("long").alias("dist"),
-    ).distinct().localCheckpoint(eager=True)
-    live_handle = checkpoint_handle(dist)
-    frontier = dist.select("node")
-    converged = False
-    for d in range(1, max_iter + 1):
-        nxt = (
+    ).distinct()
+
+    def expand(dist: DataFrame, d: int) -> DataFrame:
+        # round d: the frontier is layer d-1, read out of the previous
+        # round's checkpoint; already-visited nodes are anti-joined away
+        frontier = dist.filter(F.col("dist") == d - 1).select("node")
+        layer = (
             frontier.join(adj, frontier["node"] == adj["a"])
             .select(F.col("b").alias("node"))
             .distinct()
             .join(dist.select("node"), "node", "left_anti")
             .select("node", F.lit(d).cast("long").alias("dist"))
-            .persist()
         )
-        if nxt.count() == 0:
-            nxt.unpersist()
-            converged = True
-            break
-        dist = dist.unionByName(nxt).localCheckpoint(eager=True)
-        new_handle = checkpoint_handle(dist)
-        live_handle.unpersist(False)
-        live_handle = new_handle
-        # Read the next frontier out of the checkpoint blocks just
-        # materialized, not the about-to-be-released nxt cache.
-        frontier = dist.filter(F.col("dist") == d).select("node")
-        nxt.unpersist()
-    adj.unpersist()
-    if not converged:
-        live_handle.unpersist(False)
-        raise RuntimeError(
-            f"bfs_distances did not exhaust the frontier within "
+        return dist.unionByName(layer)
+
+    try:
+        dist, handle = fixpoint(
+            expand, dist0, metric=[F.count("*").alias("n")],
+            converged=unchanged, max_iter=max_iter,
+            error=f"bfs_distances did not exhaust the frontier within "
             f"max_iter={max_iter} rounds; raise max_iter (graph "
-            "diameter exceeds the bound)"
+            "diameter exceeds the bound)",
         )
+    finally:
+        adj.unpersist()
     if caches is not None:
-        caches.append(live_handle)
+        caches.append(handle)
         return dist
-    return scope_caches(dist, live_handle)
+    return scope_caches(dist, handle)
 
 
 def shortest_paths(
@@ -1263,12 +1146,11 @@ def shortest_paths(
     improve any neighbor), so an unrolled min-plus SQL oracle replays
     it exactly.  Rounds = longest shortest-path hop count (≤ n−1 by
     Bellman-Ford, typically ≪ n); the operator RAISES past
-    ``max_iter`` rather than returning under-relaxed costs.  Lineage
-    is truncated per round via ``localCheckpoint`` with synchronous
-    release of the superseded round, as in :func:`bfs_distances`.
+    ``max_iter`` rather than returning under-relaxed costs.  The loop
+    runs on :func:`..session.fixpoint`; the observed metric is the
+    number of improved nodes, and a round that improves none is the
+    fixpoint.
     """
-    from ..session import checkpoint_handle, scope_caches
-
     a, b, w = F.col(src), F.col(dst), F.col(weight).cast("long")
     fwd = edges.select(a.alias("a"), b.alias("b"), w.alias("w"))
     adj = fwd if directed else fwd.unionByName(
@@ -1289,14 +1171,13 @@ def shortest_paths(
                 f"shortest_paths requires positive integer weights; found "
                 f"w={bad[0]['w']} on edge ({bad[0]['a']}, {bad[0]['b']})"
             )
-    dist = sources.select(
+    dist0 = sources.select(
         F.col("node").cast("long").alias("node"),
         F.lit(0).cast("long").alias("dist"),
         F.lit(True).alias("changed"),
-    ).distinct().localCheckpoint(eager=True)
-    live_handle = checkpoint_handle(dist)
-    converged = False
-    for _ in range(max_iter):
+    ).distinct()
+
+    def relax(dist: DataFrame, _) -> DataFrame:
         fr = dist.filter(F.col("changed")).select("node", "dist")
         cand = (
             fr.join(adj, fr["node"] == adj["a"])
@@ -1312,33 +1193,32 @@ def shortest_paths(
         improved = F.col("od").isNull() | (
             F.col("d").isNotNull() & (F.col("d") < F.col("od"))
         )
-        dist = merged.select(
+        return merged.select(
             "node",
             F.when(improved, F.col("d"))
             .otherwise(F.col("od"))
             .cast("long")
             .alias("dist"),
             improved.alias("changed"),
-        ).localCheckpoint(eager=True)
-        new_handle = checkpoint_handle(dist)
-        live_handle.unpersist(False)
-        live_handle = new_handle
-        if dist.filter(F.col("changed")).count() == 0:
-            converged = True
-            break
-    adj.unpersist()
-    if not converged:
-        live_handle.unpersist(False)
-        raise RuntimeError(
-            f"shortest_paths did not reach the min-plus fixpoint within "
-            f"max_iter={max_iter} rounds; raise max_iter (longest "
-            "shortest-path hop count exceeds the bound)"
         )
+
+    try:
+        dist, handle = fixpoint(
+            relax, dist0,
+            metric=[F.count(F.when(F.col("changed"), 1)).alias("changed")],
+            converged=lambda _, cur: cur.metric["changed"] == 0,
+            max_iter=max_iter,
+            error=f"shortest_paths did not reach the min-plus fixpoint "
+            f"within max_iter={max_iter} rounds; raise max_iter (longest "
+            "shortest-path hop count exceeds the bound)",
+        )
+    finally:
+        adj.unpersist()
     out = dist.select("node", "dist")
     if caches is not None:
-        caches.append(live_handle)
+        caches.append(handle)
         return out
-    return scope_caches(out, live_handle)
+    return scope_caches(out, handle)
 
 
 def _reach_set(
@@ -1448,8 +1328,6 @@ def strongly_connected_components(
     through a recursive-CTE transitive closure — an INDEPENDENT
     algorithm, per the coreness h-index/peel pattern.
     """
-    from ..session import checkpoint_handle, scope_caches
-
     if algorithm not in ("auto", "fwbw", "coloring"):
         raise ValueError(
             f"algorithm must be 'auto', 'fwbw' or 'coloring', got "
@@ -1477,6 +1355,11 @@ def strongly_connected_components(
     nodes0_handle = checkpoint_handle(nodes0)
     comp_frames: list[DataFrame] = []
     comp_handles: list = []
+
+    def release_all() -> None:
+        for h in (live_handle, *comp_handles, nodes0_handle):
+            h.unpersist(False)
+
     converged = False
     pivot = None
     for _ in range(max_iter):
@@ -1562,9 +1445,7 @@ def strongly_connected_components(
                 # mirroring the coloring-fixpoint raise below.
                 # bfs_distances released its own checkpoint handle
                 # before raising; release this frame's here.
-                live_handle.unpersist(False)
-                for h in (*comp_handles, nodes0_handle):
-                    h.unpersist(False)
+                release_all()
                 raise RuntimeError(
                     f"strongly_connected_components: the pivot "
                     f"reachability pass did not exhaust its frontier "
@@ -1617,17 +1498,13 @@ def strongly_connected_components(
             #    the frontier shrinks monotonically after the
             #    propagation peak instead of re-scanning every node
             #    every round.
-            nodes_rem = endpoints(remaining)
-            colors = (
-                nodes_rem.select(
-                    "node",
-                    F.col("node").alias("color"),
-                    F.lit(True).alias("changed"),
-                ).localCheckpoint(eager=True)
+            colors0 = endpoints(remaining).select(
+                "node",
+                F.col("node").alias("color"),
+                F.lit(True).alias("changed"),
             )
-            c_handle = checkpoint_handle(colors)
-            colored = False
-            for _ in range(bfs_max_iter):
+
+            def propagate(colors: DataFrame, _) -> DataFrame:
                 frontier = colors.filter(F.col("changed")).select(
                     "node", "color"
                 )
@@ -1639,39 +1516,32 @@ def strongly_connected_components(
                     .groupBy("node")
                     .agg(F.min("color").alias("mc"))
                 )
-                new_c = (
-                    colors.join(msgs, "node", "left")
-                    .select(
-                        "node",
-                        F.least(
-                            F.col("color"), F.coalesce("mc", "color")
-                        ).alias("color"),
-                        (
-                            F.coalesce("mc", F.col("color"))
-                            < F.col("color")
-                        ).alias("changed"),
-                    )
-                    .localCheckpoint(eager=True)
+                return colors.join(msgs, "node", "left").select(
+                    "node",
+                    F.least(
+                        F.col("color"), F.coalesce("mc", "color")
+                    ).alias("color"),
+                    (F.coalesce("mc", F.col("color")) < F.col("color"))
+                    .alias("changed"),
                 )
-                new_ch = checkpoint_handle(new_c)
-                n_changed = new_c.filter(F.col("changed")).count()
-                c_handle.unpersist(False)
-                colors, c_handle = new_c, new_ch
-                if n_changed == 0:
-                    colored = True
-                    break
-            if not colored:
-                c_handle.unpersist(False)
-                live_handle.unpersist(False)
-                for h in (*comp_handles, nodes0_handle):
-                    h.unpersist(False)
-                raise RuntimeError(
-                    f"strongly_connected_components: min-label "
+
+            try:
+                colors, c_handle = fixpoint(
+                    propagate, colors0,
+                    metric=[
+                        F.count(F.when(F.col("changed"), 1)).alias("changed")
+                    ],
+                    converged=lambda _, cur: cur.metric["changed"] == 0,
+                    max_iter=bfs_max_iter,
+                    error=f"strongly_connected_components: min-label "
                     f"coloring did not reach its fixpoint within "
                     f"bfs_max_iter={bfs_max_iter} propagation rounds; "
                     f"raise bfs_max_iter (label chain depth exceeds "
-                    f"the bound)"
+                    f"the bound)",
                 )
+            except RuntimeError:
+                release_all()
+                raise
             # 2) roots + backward reach through same-color nodes only;
             #    classes are edge-disjoint after the color filter, so
             #    one multi-seed BFS serves every root at once.
@@ -1702,9 +1572,7 @@ def strongly_connected_components(
                 # and release this frame's handles (including the
                 # coloring fixpoint's) before surfacing.
                 c_handle.unpersist(False)
-                live_handle.unpersist(False)
-                for h in (*comp_handles, nodes0_handle):
-                    h.unpersist(False)
+                release_all()
                 raise RuntimeError(
                     f"strongly_connected_components: the root "
                     f"backward-reach pass (coloring engine) did not "
@@ -1732,16 +1600,15 @@ def strongly_connected_components(
         remaining, live_handle = new_r, new_h
         for h in held:
             h.unpersist(False)
-    live_handle.unpersist(False)  # the final (empty) edge checkpoint
     if not converged:
-        for h in (*comp_handles, nodes0_handle):
-            h.unpersist(False)
+        release_all()
         raise RuntimeError(
             f"strongly_connected_components did not exhaust the graph "
             f"within max_iter={max_iter} trim+peel rounds "
             f"(engine={engine}); raise max_iter, or use "
             f"algorithm='coloring' if many small SCCs remain"
         )
+    live_handle.unpersist(False)  # the final (empty) edge checkpoint
     # Singletons by construction: every initial node not in any pivot
     # component (trimmed nodes and isolated-by-trim nodes alike are
     # provably cycle-free — a cycle member always keeps in/out >= 1
@@ -1829,8 +1696,6 @@ def stress_centrality(
     Non-convergence RAISES past ``max_iter`` rather than returning
     truncated counts.
     """
-    from ..session import checkpoint_handle, scope_caches
-
     a, b = F.col(src), F.col(dst)
     fwd = edges.select(a.alias("a"), b.alias("b"))
     adj = fwd if directed else fwd.unionByName(
@@ -2087,8 +1952,6 @@ def modularity_stats(
     Integer-weight validation (:func:`_integral_weight`) applies
     unchanged.
     """
-    from ..session import scope_caches  # noqa: F401  (module pattern)
-
     a, b = F.col(src), F.col(dst)
     w_expr = (
         _integral_weight(edges, weight_col)
@@ -2202,8 +2065,6 @@ def modularity_score(
     from them.  Values are bit-identical by construction — the
     caller's frames are the same expressions over the same rows.
     """
-    from ..session import scope_caches
-
     a, b = F.col(src), F.col(dst)
     own: list = [] if caches is None else caches
     if (deg is not None or m is not None) and not assume_canonical:
@@ -2235,12 +2096,7 @@ def modularity_score(
         )
     else:
         und = (
-            edges.select(
-                F.least(a, b).alias("u"),
-                F.greatest(a, b).alias("v"),
-            )
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
+            _canonical(edges, src, dst)
             .withColumn("__w", F.lit(1).cast("long"))
             .persist()
         )
@@ -2413,8 +2269,6 @@ def modularity_merge_step(
     ALSO runs sibling operators on the same graph (a refined
     coarsening pass); a lone merge computes each exactly once anyway.
     """
-    from ..session import scope_caches
-
     a, b = F.col(src), F.col(dst)
     own: list = [] if caches is None else caches
     if (deg is not None or m is not None) and not assume_canonical:
@@ -2443,12 +2297,7 @@ def modularity_merge_step(
         )
     else:
         und = (
-            edges.select(
-                F.least(a, b).alias("u"),
-                F.greatest(a, b).alias("v"),
-            )
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
+            _canonical(edges, src, dst)
             .withColumn("__w", F.lit(1).cast("long"))
             .persist()
         )
@@ -2635,8 +2484,6 @@ def contract_graph(
     community pair — the same shape as one merge pass's ``ce`` stage,
     paid ONCE; output rows are bounded by community pairs ≪ |E|.
     """
-    from ..session import scope_caches
-
     a, b = F.col(src), F.col(dst)
     own: list = [] if caches is None else caches
     if weight_col is not None:
@@ -2664,12 +2511,7 @@ def contract_graph(
         )
     else:
         und = (
-            edges.select(
-                F.least(a, b).alias("u"),
-                F.greatest(a, b).alias("v"),
-            )
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
+            _canonical(edges, src, dst)
             .withColumn("__w", F.lit(1).cast("long"))
         )
     comm = communities.select(
@@ -2774,8 +2616,6 @@ def modularity_refine_step(
     :func:`modularity_score`'s parameters (canonical-only, enforced;
     bit-identical by construction).
     """
-    from ..session import scope_caches
-
     a, b = F.col(src), F.col(dst)
     own: list = [] if caches is None else caches
     if (deg is not None or m is not None) and not assume_canonical:
@@ -2804,12 +2644,7 @@ def modularity_refine_step(
         )
     else:
         und = (
-            edges.select(
-                F.least(a, b).alias("u"),
-                F.greatest(a, b).alias("v"),
-            )
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
+            _canonical(edges, src, dst)
             .withColumn("__w", F.lit(1).cast("long"))
             .persist()
         )
@@ -2991,8 +2826,6 @@ def modularity_refine_guarded(
     nothing.  Same canonical-only contract as the sub-operators
     (precomputed stats with ``assume_canonical=False`` raise there).
     """
-    from ..session import scope_caches
-
     a, b = F.col(src), F.col(dst)
     own: list = [] if caches is None else caches
     if weight_col is not None and not assume_canonical:
@@ -3153,8 +2986,6 @@ def louvain_coarsen(
     community-count-bounded joins/windows and one-row fan-ins; the
     final relabel is one broadcastable join against the seed.
     """
-    from ..session import checkpoint_handle, scope_caches
-
     if refine not in (None, "guarded"):
         raise ValueError(
             f"refine must be None or 'guarded', got {refine!r}"

@@ -26,14 +26,28 @@ wrong in both directions.  This factory pins the settings that matter:
 * Spark's ``WindowExec`` "No Partition Defined" warning silenced (ERROR
   level for that logger only): the engine's unpartitioned windows are
   bounded by design, and the warning was over half of a bench's stderr.
+
+The module also holds the block-lifetime helpers the operators share
+(``scope_caches``, ``checkpoint_handle``) and the one iteration loop:
+
+* ``fixpoint`` — the checkpointed loop behind k_core, k_truss, the
+  coreness h-index engine, label propagation, BFS, shortest paths, the
+  SCC coloring fixpoint and both connected-components engines.  Each
+  round is ONE Spark action: the convergence metric is attached with
+  ``observe`` and collected by the round's eager ``localCheckpoint``
+  job, not by a separate count.  The superseded round's checkpoint is
+  released only after the convergence test has seen both rounds, and
+  a loop that runs out of ``max_iter`` releases its live checkpoint
+  before it raises, so no block outlives a failed call.
 """
 
 from __future__ import annotations
 
 import os
 import weakref
+from typing import Callable, NamedTuple
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
@@ -143,6 +157,78 @@ def checkpoint_handle(df: DataFrame) -> _RddHandle:
             f"block release would be a silent no-op"
         )
     return _RddHandle(plan.rdd())
+
+
+class Round(NamedTuple):
+    """One materialized :func:`fixpoint` round: the checkpointed frame
+    and the metric row its checkpoint job observed (``None`` when the
+    loop declares no metric)."""
+
+    frame: DataFrame
+    metric: dict | None
+
+
+def _checkpoint(df: DataFrame, metric: list) -> tuple[Round, _RddHandle]:
+    obs = Observation()
+    if metric:
+        df = df.observe(obs, *metric)
+    df = df.localCheckpoint(eager=True)
+    return Round(df, obs.get if metric else None), checkpoint_handle(df)
+
+
+def unchanged(prev: Round, cur: Round) -> bool:
+    """The usual :func:`fixpoint` test: the observed metric row did not
+    move (sound for loops whose metric is strictly monotone until the
+    fixpoint, e.g. the edge count of a peel)."""
+    return prev.metric == cur.metric
+
+
+def fixpoint(
+    step: Callable[[DataFrame, int], DataFrame],
+    state: DataFrame,
+    *,
+    metric: list,
+    converged: Callable[[Round, Round], bool] | None,
+    max_iter: int,
+    error: str | None,
+) -> tuple[DataFrame, _RddHandle]:
+    """Run a checkpointed iteration loop; return ``(frame, handle)``.
+
+    ``state`` is materialized first (round 0).  Round ``r`` = 1, 2, …
+    builds ``step(frame, r)`` from the previous round's frame, attaches
+    ``metric`` (aggregate columns) with ``observe`` and runs
+    ``localCheckpoint(eager=True)`` — the round's only Spark action, so
+    the convergence metric rides the checkpoint job instead of a
+    separate probe.  Then ``converged(prev, cur)`` sees both rounds'
+    :class:`Round` (frame + metric row), and only after it returns is
+    the superseded round's checkpoint released, so a convergence test
+    may still read the previous frame (``cc_star``'s exact check).
+
+    ``converged=None`` never converges; with ``error=None`` the loop
+    then runs exactly ``max_iter`` rounds and returns the last one.
+    Otherwise reaching ``max_iter`` without converging releases the
+    live checkpoint and raises ``RuntimeError(error)`` — no block
+    outlives a failed call.  The returned handle backs the returned
+    frame; callers thread it through ``caches=`` / :func:`scope_caches`.
+    """
+    cur, handle = _checkpoint(state, metric)
+    live = [handle]
+    try:
+        for rnd in range(1, max_iter + 1):
+            prev = cur
+            cur, handle = _checkpoint(step(prev.frame, rnd), metric)
+            live.append(handle)
+            done = converged is not None and converged(prev, cur)
+            live.pop(0).unpersist(False)
+            if done:
+                return cur.frame, handle
+        if error is None:
+            return cur.frame, handle
+        raise RuntimeError(error)
+    except BaseException:
+        for h in live:
+            h.unpersist(False)
+        raise
 
 
 def get_spark(

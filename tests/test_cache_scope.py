@@ -13,6 +13,9 @@ from __future__ import annotations
 import gc
 import time
 
+import pytest
+from pyspark.sql import functions as F
+
 from stedi_human_balance_redis_kafka_spark_streaming_spark.operators import dedup
 from stedi_human_balance_redis_kafka_spark_streaming_spark.plans import registry
 from stedi_human_balance_redis_kafka_spark_streaming_spark.sources.files import load_table
@@ -167,5 +170,103 @@ def test_modularity_query_releases_all_caches(spark, sf_dir):
     result = registry.queries()["graph_modularity"](spark, sf_dir)
     rows = result.collect()
     assert len(rows) >= 1
+    del result
+    _assert_drains_to(spark, baseline)
+
+
+def _chain(spark, n):
+    return spark.createDataFrame(
+        [(i, i + 1, 1) for i in range(n - 1)], "src long, dst long, w long"
+    )
+
+
+def _raising_fixpoints():
+    """One max_iter-exceeded call per operator that runs on
+    session.fixpoint (label_propagation runs fixed rounds and never
+    raises), with the message its RuntimeError must carry."""
+    from stedi_human_balance_redis_kafka_spark_streaming_spark.operators import (
+        curation,
+        graph,
+    )
+
+    def seeds(spark):
+        return spark.createDataFrame([(0,)], "node long")
+
+    def cc_edges(spark):
+        return _chain(spark, 10).select(
+            F.col("src").alias("doc_a"), F.col("dst").alias("doc_b")
+        )
+
+    return {
+        "k_core": (lambda s: graph.k_core(_chain(s, 10), max_iter=2), "k_core"),
+        "k_truss": (
+            lambda s: graph.k_truss(_chain(s, 10), k=3, max_iter=1), "k_truss"
+        ),
+        "coreness_hindex": (
+            lambda s: graph.coreness(_chain(s, 10), max_iter=1), "h-index"
+        ),
+        "bfs_distances": (
+            lambda s: graph.bfs_distances(_chain(s, 10), seeds(s), max_iter=2),
+            "bfs_distances",
+        ),
+        "shortest_paths": (
+            lambda s: graph.shortest_paths(_chain(s, 10), seeds(s), max_iter=2),
+            "shortest_paths",
+        ),
+        "scc_coloring": (
+            lambda s: graph.strongly_connected_components(
+                s.createDataFrame(
+                    [(i, (i + 1) % 12) for i in range(12)], "src long, dst long"
+                ),
+                algorithm="coloring",
+                bfs_max_iter=5,
+            ),
+            "min-label coloring",
+        ),
+        "connected_components": (
+            lambda s: curation.connected_components(cc_edges(s), max_iter=2),
+            "fixpoint",
+        ),
+        "cc_star": (
+            lambda s: curation.cc_star(cc_edges(s), max_iter=1), "cc_star"
+        ),
+    }
+
+
+@pytest.mark.parametrize("name", sorted(_raising_fixpoints()))
+def test_non_converged_fixpoint_releases_every_block(spark, name):
+    """A loop that runs out of max_iter rounds raises with nothing left
+    in the block manager — released synchronously by the raise itself,
+    not by a later GC (no gc.collect / System.gc here)."""
+    call, message = _raising_fixpoints()[name]
+    spark.catalog.clearCache()
+    baseline = _persistent_rdd_count(spark)
+    with pytest.raises(RuntimeError, match=message):
+        call(spark)
+    # <=: a block another test leaked may be GC-released meanwhile
+    assert _persistent_rdd_count(spark) <= baseline
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "graph_kcore",
+        "graph_ktruss",
+        "graph_coreness",
+        "graph_label_propagation",
+        "graph_bfs_hops",
+        "graph_shortest_paths",
+        "graph_scc",
+        "dedup_clusters",
+        "dedup_clusters_star",
+    ],
+)
+def test_fixpoint_query_releases_all_blocks(spark, sf_dir, name):
+    """Every registered query built on session.fixpoint leaves no
+    persisted frame or checkpoint behind once its result is dropped."""
+    spark.catalog.clearCache()
+    baseline = _persistent_rdd_count(spark)
+    result = registry.queries()[name](spark, sf_dir)
+    result.collect()
     del result
     _assert_drains_to(spark, baseline)

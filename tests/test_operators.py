@@ -1563,3 +1563,55 @@ def test_sorted_neighborhood_pairs_window_and_verify(spark):
     assert [(r.doc_a, r.doc_b, r.jaccard) for r in out.collect()] == [
         (1, 2, 1.0)
     ]
+
+
+@pytest.mark.parametrize("n", [6, 10])
+def test_fixpoint_loops_run_one_job_per_round(spark, n):
+    """k_core, bfs_distances and shortest_paths observe their
+    convergence metric inside each round's checkpoint job, so a round
+    is exactly one Spark job.  AQE and broadcast joins are off for the
+    count: each would launch extra jobs of its own (one per shuffle
+    stage, one per broadcast), and one action would no longer be one
+    job.  On the path 0-1-…-(n-1): k_core (k=2) peels both leaves per
+    round, ceil((n-1)/2) rounds, plus one round that sees the edge
+    count stand still; bfs_distances and shortest_paths reach one new
+    node per round, n-1 rounds, plus one that finds nothing new."""
+    from stedi_human_balance_redis_kafka_spark_streaming_spark.operators import (
+        graph,
+    )
+
+    sc = spark.sparkContext
+    path = spark.createDataFrame(
+        [(i, i + 1, 1) for i in range(n - 1)], "src long, dst long, w long"
+    )
+    seeds = spark.createDataFrame([(0,)], "node long")
+    # fixed setup jobs: every loop checkpoints its initial frame (round
+    # 0); bfs_distances and shortest_paths first persist + count their
+    # adjacency
+    cases = {
+        "k_core": (lambda: graph.k_core(path, k=2), (n - 1 + 1) // 2 + 1, 1),
+        "bfs_distances": (lambda: graph.bfs_distances(path, seeds), n, 2),
+        "shortest_paths": (
+            lambda: graph.shortest_paths(path, seeds, validate=False), n, 2
+        ),
+    }
+    conf = {
+        "spark.sql.adaptive.enabled": "false",
+        "spark.sql.autoBroadcastJoinThreshold": "-1",
+    }
+    saved = {k: spark.conf.get(k) for k in conf}
+    try:
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        for name, (build, rounds, setup) in cases.items():
+            group = f"one-job-per-round-{name}-{n}"
+            sc.setJobGroup(group, group)
+            try:
+                build()
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+            assert jobs == rounds + setup, (name, jobs, rounds, setup)
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
