@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..session import scope_caches
+from ..session import hold, scoped
 
 _E6 = 1_000_000
 
@@ -271,6 +271,7 @@ def sequence_kgrams(
     )
 
 
+@scoped
 def followed_by_pairs(
     events: DataFrame,
     *,
@@ -278,7 +279,6 @@ def followed_by_pairs(
     seq_col: str = "user_id",
     item_col: str = "event_type",
     order_cols: tuple[str, ...] = ("ts", "event_id"),
-    caches: list[DataFrame] | None = None,
 ) -> DataFrame:
     """GAPPED sequential pairs — "a eventually followed by b": the
     PrefixSpan containment rule for length-2 patterns (an occurrence of
@@ -327,12 +327,10 @@ def followed_by_pairs(
         F.col(item_col).alias("__it"),
         F.row_number().over(w).alias("__pos"),
     )
-    si = p.groupBy("__seq", "__it").agg(
+    si = hold(p.groupBy("__seq", "__it").agg(
         F.min("__pos").alias("__first"),
         F.max("__pos").alias("__last"),
-    ).persist()
-    own: list[DataFrame] = [] if caches is None else caches
-    own.append(si)
+    ).persist())
     n_ante = si.groupBy(F.col("__it").alias("antecedent")).agg(
         F.count("*").cast("long").alias("n_ante")
     )
@@ -352,4 +350,4 @@ def followed_by_pairs(
             F.expr("n_both * 1000000 div n_ante").cast("long").alias("conf_e6"),
         )
     )
-    return ret if caches is not None else scope_caches(ret, *own)
+    return ret

@@ -34,7 +34,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.hashing import tokens
-from ..session import fixpoint, unchanged
+from ..session import fixpoint, scoped, unchanged
 
 _SALT_OK = re.compile(r"^[A-Za-z0-9_\-]*$")
 
@@ -327,13 +327,13 @@ def pack_sequences(
     )
 
 
+@scoped(tie=False)
 def connected_components(
     edges: DataFrame,
     *,
     src: str = "doc_a",
     dst: str = "doc_b",
     max_iter: int = 25,
-    caches: list | None = None,
 ) -> DataFrame:
     """Connected components of an undirected pair graph by iterative
     min-label propagation: every node's label converges to the minimum
@@ -353,10 +353,10 @@ def connected_components(
     aggregate replaces a per-round shuffle join + count.
     decimal(38,0) keeps the sum exact far beyond int64 (10¹⁰ nodes ×
     10¹⁰ max id ≈ 10²⁰ ≪ 10³⁸).  The final round's checkpoint backs
-    the returned frame; with ``caches`` provided its release handle is
-    appended for the caller to scope to the query result (the registry
-    pattern), else it is left to the ContextCleaner (safe default for
-    callers that derive from the result).
+    the returned frame: called from a scoped function it is held there
+    (the registry pattern); called at top level it is left to the
+    ContextCleaner, the safe default for callers that derive from the
+    result.
     """
     sym = (
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
@@ -384,7 +384,7 @@ def connected_components(
     try:
         # A component with diameter > max_iter would otherwise yield
         # silently-wrong cluster ids; non-convergence must be loud.
-        labels, handle = fixpoint(
+        labels = fixpoint(
             propagate, labels0,
             metric=[F.sum(F.col("label").cast("decimal(38,0)")).alias("s")],
             converged=unchanged, max_iter=max_iter,
@@ -395,8 +395,6 @@ def connected_components(
         )
     finally:
         sym.unpersist()
-    if caches is not None:
-        caches.append(handle)
     return labels.select(
         F.col("node").alias("doc_id"), F.col("label").alias("cluster_id")
     )
@@ -432,13 +430,13 @@ def _small_star(e: DataFrame) -> DataFrame:
     return rewired.unionByName(to_min).distinct()
 
 
+@scoped
 def cc_star(
     edges: DataFrame,
     *,
     src: str = "doc_a",
     dst: str = "doc_b",
     max_iter: int = 30,
-    caches: list | None = None,
 ) -> DataFrame:
     """Connected components by alternating large-star/small-star
     contraction (Kiveris et al., "Connected Components in MapReduce and
@@ -460,8 +458,7 @@ def cc_star(
     metric collision can never terminate the loop early — the exact
     check runs only on metric-stable rounds, on the contracted
     (star-shaped, ≈|V|-edge) edge set, and before the superseded
-    round's checkpoint is released.  The final edge frame's handle
-    goes to ``caches`` when provided.
+    round's checkpoint is released.
     """
     e0 = (
         edges.select(
@@ -478,7 +475,7 @@ def cc_star(
             prev.frame
         ).isEmpty()
 
-    e, handle = fixpoint(
+    e = fixpoint(
         lambda cur, _: _small_star(_large_star(cur)), e0,
         metric=[
             F.count("*").alias("n"),
@@ -489,8 +486,6 @@ def cc_star(
         error=f"cc_star did not reach the edge fixpoint in {max_iter} "
         f"alternations — raise max_iter",
     )
-    if caches is not None:
-        caches.append(handle)
     # Fixpoint edges are per-component stars (child u → component-min v);
     # roots never appear as a child.  min() is belt-and-braces: at the
     # fixpoint each child has exactly one parent.  Each contraction

@@ -19,11 +19,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..session import checkpoint_handle, fixpoint, scope_caches, unchanged
+from ..session import checkpoint_handle, fixpoint, hold, owned, scoped, unchanged
 
 RANK_QUANT = 1_000_000_000_000  # 1e12 — rank units
 
 
+@scoped
 def pagerank(
     edges: DataFrame,
     *,
@@ -35,7 +36,6 @@ def pagerank(
     validate: bool = True,
     weight: str | None = None,
     seeds: DataFrame | None = None,
-    caches: list | None = None,
 ) -> DataFrame:
     """Fixed-iteration PageRank over a directed edge list.
 
@@ -108,16 +108,16 @@ def pagerank(
             f"dangling must be 'error' or 'redistribute', got {dangling!r}"
         )
     if weight is None:
-        e = (
+        e = hold(
             edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
             .distinct()
             .persist()
         )
-        deg = e.groupBy("src").agg(F.count("*").alias("deg")).persist()
+        deg = hold(e.groupBy("src").agg(F.count("*").alias("deg")).persist())
         msg_expr = "rank_e12 div deg"
     else:
         # multigraph collapse: parallel edges sum their weights
-        e = (
+        e = hold(
             edges.select(
                 F.col(src).alias("src"),
                 F.col(dst).alias("dst"),
@@ -127,14 +127,9 @@ def pagerank(
             .agg(F.sum("w").alias("w"))
             .persist()
         )
-        if validate:
-            bad = e.filter(F.col("w") <= 0).limit(1).count()
-            if bad:
-                e.unpersist()
-                raise ValueError(
-                    "pagerank: edge weights must be positive integers"
-                )
-        deg = e.groupBy("src").agg(F.sum("w").alias("deg")).persist()
+        if validate and e.filter(F.col("w") <= 0).limit(1).count():
+            raise ValueError("pagerank: edge weights must be positive integers")
+        deg = hold(e.groupBy("src").agg(F.sum("w").alias("deg")).persist())
         msg_expr = "(cast(rank_e12 as decimal(38,0)) * w) div deg"
     deg.count()  # materialize both caches before the rounds read them
     if dangling == "error":
@@ -154,8 +149,6 @@ def pagerank(
                 .count()
             )
             if n_dangling:
-                e.unpersist()
-                deg.unpersist()
                 raise ValueError(
                     "pagerank: edge list has destination-only (dangling) "
                     "nodes; every node must appear as a source — "
@@ -165,7 +158,7 @@ def pagerank(
         nodes = deg.select(F.col("src").alias("node"))
         n_nodes = None
     else:
-        nodes = (
+        nodes = hold(
             e.select(F.col("src").alias("node"))
             .unionByName(e.select(F.col("dst").alias("node")))
             .distinct()
@@ -176,13 +169,7 @@ def pagerank(
             # Empty graph: short-circuit before the per-round sink-share
             # expression (dmass div 0 would raise under ANSI even with
             # zero rows upstream of the aggregate's single output row).
-            e.unpersist()
-            deg.unpersist()
-            empty = nodes.withColumn(
-                "rank_e12", F.lit(RANK_QUANT).cast("long")
-            )
-            nodes.unpersist()
-            return empty
+            return nodes.withColumn("rank_e12", F.lit(RANK_QUANT).cast("long"))
     base = (RANK_QUANT * (100 - damping_pct)) // 100
     seeded = seeds is not None
     if seeded:
@@ -203,16 +190,12 @@ def pagerank(
             F.coalesce(F.sum("__is_seed"), F.lit(0)).alias("k"),
         ).collect()[0]
         if cnt["k"] == 0:
-            e.unpersist()
-            deg.unpersist()
-            if n_nodes is not None:
-                nodes.unpersist()
             raise ValueError(
                 "pagerank: no seed node appears in the edge list"
             )
         seed_base = (base * int(cnt["n"])) // int(cnt["k"])
         old_nodes = nodes
-        nodes = (
+        nodes = hold(
             tagged.select(
                 "node",
                 F.when(F.col("__is_seed") == 1, F.lit(seed_base))
@@ -240,7 +223,7 @@ def pagerank(
     # join + the inbox aggregation.  Costs one extra cached copy of the
     # edge list (one int column wider); at scale it removes one |V|-
     # sized join build per round.
-    ed = e.join(deg, "src").persist()
+    ed = hold(e.join(deg, "src").persist())
     ranks = nodes.select(
         "node", F.lit(RANK_QUANT).cast("long").alias("rank_e12")
     )
@@ -291,7 +274,7 @@ def pagerank(
             )
             .localCheckpoint(eager=False)
         )
-        handles.append(checkpoint_handle(ranks))
+        handles.append(hold(checkpoint_handle(ranks)))
     # Materialize the final round before dropping the inputs it reads.
     # The one count() job materializes EVERY round's (lazy) checkpoint
     # bottom-up, so the superseded rounds' blocks are dead right after
@@ -307,8 +290,6 @@ def pagerank(
         nodes.unpersist()  # the seeded branch persisted the base frame
     elif persisted_nodes is not None:
         persisted_nodes.unpersist()
-    if caches is not None and handles:
-        caches.append(handles[-1])
     return ranks
 
 
@@ -342,6 +323,7 @@ def _symmetric(und: DataFrame) -> DataFrame:
     )
 
 
+@scoped
 def triangle_count(
     edges: DataFrame, *, src: str = "src", dst: str = "dst"
 ) -> DataFrame:
@@ -383,8 +365,7 @@ def triangle_count(
     )
     n_nodes = deg.agg(F.count("*").alias("n_nodes"))
     n_edges = und.agg(F.count("*").alias("n_edges"))
-    out = n_nodes.crossJoin(n_edges).crossJoin(tri)
-    return scope_caches(out, und, o)
+    return n_nodes.crossJoin(n_edges).crossJoin(tri)
 
 
 def _oriented(
@@ -395,9 +376,8 @@ def _oriented(
     (self-loops dropped, duplicates collapsed, u < v), ``deg`` its
     per-node degrees, and ``o`` every edge oriented from its lower
     endpoint under the (degree ASC, node ASC) total order.  ``und``
-    and ``o`` are persisted and materialized — callers own their
-    release (scope_caches)."""
-    und = _canonical(edges, src, dst).persist()
+    and ``o`` are persisted, materialized and held."""
+    und = hold(_canonical(edges, src, dst).persist())
     und.count()
     deg = _degrees(und)
     da = deg.select(F.col("node").alias("u"), F.col("deg").alias("deg_u"))
@@ -405,7 +385,7 @@ def _oriented(
     lower_first = F.expr(
         "deg_u < deg_v OR (deg_u = deg_v AND u < v)"
     )
-    o = (
+    o = hold(
         und.join(da, "u")
         .join(db, "v")
         .select(
@@ -418,6 +398,7 @@ def _oriented(
     return und, deg, o
 
 
+@scoped
 def clustering_coefficient(
     edges: DataFrame, *, src: str = "src", dst: str = "dst"
 ) -> DataFrame:
@@ -459,7 +440,7 @@ def clustering_coefficient(
         .groupBy("node")
         .agg(F.count("*").alias("n_tri"))
     )
-    out = (
+    return (
         deg.join(per_node, "node", "left")
         .select(
             "node",
@@ -479,9 +460,9 @@ def clustering_coefficient(
             .alias("local_cc"),
         )
     )
-    return scope_caches(out, und, o)
 
 
+@scoped
 def k_core(
     edges: DataFrame,
     k: int = 2,
@@ -489,7 +470,6 @@ def k_core(
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 100,
-    caches: list | None = None,
 ) -> DataFrame:
     """k-core membership via iterative peeling — the graph-family
     density primitive next to PageRank (centrality), connected
@@ -538,27 +518,22 @@ def k_core(
             weak.withColumnRenamed("node", "u"), "u", "left_anti"
         ).join(weak.withColumnRenamed("node", "v"), "v", "left_anti")
 
-    active, handle = fixpoint(
+    active = fixpoint(
         peel, _canonical(edges, src, dst),
         metric=[F.count("*").alias("n")], converged=unchanged,
         max_iter=max_iter,
         error=f"k_core did not converge within max_iter={max_iter} rounds; "
         "raise max_iter (peel depth exceeds the bound)",
     )
-    out = _degrees(active).select(
+    return _degrees(active).select(
         "node", F.col("deg").cast("long").alias("core_deg")
     )
-    if caches is not None:
-        caches.append(handle)
-        return out
-    return scope_caches(out, handle)
 
 
 def _coreness_hindex(
     und: DataFrame,
     *,
     max_iter: int,
-    caches: list | None,
     deg: DataFrame | None = None,
 ) -> DataFrame:
     """h-index fixpoint engine for :func:`coreness` — ``und`` is the
@@ -601,7 +576,7 @@ def _coreness_hindex(
         )
 
     try:
-        c, handle = fixpoint(
+        c = fixpoint(
             h_step, c0,
             metric=[F.sum(F.col("c").cast("decimal(38,0)")).alias("s")],
             converged=unchanged, max_iter=max_iter,
@@ -612,11 +587,7 @@ def _coreness_hindex(
         sym.unpersist()
         if deg is not None:
             deg.unpersist()
-    out = c.select("node", F.col("c").alias("coreness"))
-    if caches is not None:
-        caches.append(handle)
-        return out
-    return scope_caches(out, handle)
+    return c.select("node", F.col("c").alias("coreness"))
 
 
 def _pick_coreness_engine(max_degree: int, threshold: int) -> str:
@@ -630,6 +601,7 @@ def _pick_coreness_engine(max_degree: int, threshold: int) -> str:
     return "peel" if max_degree >= threshold else "hindex"
 
 
+@scoped
 def coreness(
     edges: DataFrame,
     *,
@@ -638,7 +610,6 @@ def coreness(
     max_iter: int = 200,
     algorithm: str = "auto",
     hub_degree_threshold: int = 5_000_000,
-    caches: list | None = None,
 ) -> DataFrame:
     """Full core decomposition: every node's core NUMBER — the largest
     k for which the node survives the k-core peel (k_core gives
@@ -681,35 +652,30 @@ def coreness(
     returning a partial decomposition.  The h-index loop runs on
     :func:`..session.fixpoint`; the peel engine keeps every level's
     casualty frame and jumps no-op levels, so it keeps its own loop
-    and releases superseded edge checkpoints synchronously (final
-    frames ride the ``caches=`` seam).
+    and releases superseded edge checkpoints synchronously.
     """
     if algorithm not in ("auto", "hindex", "peel"):
         raise ValueError(
             f"algorithm must be 'auto', 'hindex' or 'peel', got "
             f"{algorithm!r}"
         )
-    und = _canonical(edges, src, dst).persist()
+    und = hold(_canonical(edges, src, dst).persist())
     und.count()
     if algorithm == "auto":
         # ONE degree rollup serves both the engine probe and (for the
         # h-index engine) c₀ — previously the probe's full-edge-list
         # shuffle was thrown away and recomputed as c₀ (r19, the guard
         # deg-sharing discipline; measured ~1.3 s / 3 jobs at sf0.1).
-        deg = _degrees(und).persist()
+        deg = hold(_degrees(und).persist())
         max_deg = deg.agg(F.max("deg")).first()[0]
         algorithm = _pick_coreness_engine(
             int(max_deg or 0), hub_degree_threshold
         )
         if algorithm == "hindex":
-            return _coreness_hindex(
-                und, max_iter=max_iter, caches=caches, deg=deg
-            )
+            return _coreness_hindex(und, max_iter=max_iter, deg=deg)
         deg.unpersist()
     if algorithm == "hindex":
-        return _coreness_hindex(
-            und, max_iter=max_iter, caches=caches
-        )
+        return _coreness_hindex(und, max_iter=max_iter)
 
     def endpoints(df: DataFrame) -> DataFrame:
         return (
@@ -735,12 +701,11 @@ def coreness(
     active = und
     live_handle = None
     casualty_frames: list[DataFrame] = []
-    casualty_handles: list = []
     k = 2
     converged = False
     for _ in range(max_iter):
         deg = _degrees(active)
-        weak = deg.filter(F.col("deg") < k).select("node").persist()
+        weak = hold(deg.filter(F.col("deg") < k).select("node").persist())
         if weak.count() == 0:
             weak.unpersist()
             # k-core reached.  Exhausted graph ⇒ done; else JUMP the
@@ -762,27 +727,22 @@ def coreness(
             .join(weak.withColumnRenamed("node", "v"), "v", "left_anti")
             .localCheckpoint(eager=True)
         )
-        new_handle = checkpoint_handle(new_active)
+        new_handle = hold(checkpoint_handle(new_active))
         fallen = (
             endpoints(active)
             .join(endpoints(new_active), "node", "left_anti")
             .withColumn("coreness", F.lit(k - 1).cast("long"))
             .localCheckpoint(eager=False)
         )
-        f_handle = checkpoint_handle(fallen)
+        hold(checkpoint_handle(fallen))
         fallen.count()  # materialize before the superseded round frees
         casualty_frames.append(fallen)
-        casualty_handles.append(f_handle)
         if live_handle is not None:
             live_handle.unpersist(False)
         live_handle = new_handle
         active = new_active
         weak.unpersist()
     if not converged:
-        und.unpersist()
-        for h in (*casualty_handles, live_handle):
-            if h is not None:
-                h.unpersist(False)
         raise RuntimeError(
             f"coreness did not exhaust the graph within max_iter="
             f"{max_iter} rounds; raise max_iter"
@@ -800,10 +760,7 @@ def coreness(
     if live_handle is not None:
         # the (empty) final edge checkpoint has no further readers
         live_handle.unpersist(False)
-    if caches is not None:
-        caches.extend([und, *casualty_handles])
-        return out
-    return scope_caches(out, und, *casualty_handles)
+    return out
 
 
 def _edge_support(active: DataFrame) -> DataFrame:
@@ -852,6 +809,7 @@ def _edge_support(active: DataFrame) -> DataFrame:
     )
 
 
+@scoped
 def k_truss(
     edges: DataFrame,
     k: int = 3,
@@ -859,7 +817,6 @@ def k_truss(
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 100,
-    caches: list | None = None,
 ) -> DataFrame:
     """k-truss via iterative edge peeling — the EDGE-level cohesion
     primitive completing the graph family (PageRank: centrality, CC:
@@ -901,19 +858,16 @@ def k_truss(
             .alias("support"),
         ).filter(F.col("support") >= k - 2)
 
-    out, handle = fixpoint(
+    return fixpoint(
         peel, _canonical(edges, src, dst),
         metric=[F.count("*").alias("n")], converged=unchanged,
         max_iter=max_iter,
         error=f"k_truss did not converge within max_iter={max_iter} rounds; "
         "raise max_iter (peel depth exceeds the bound)",
     )
-    if caches is not None:
-        caches.append(handle)
-        return out
-    return scope_caches(out, handle)
 
 
+@scoped
 def label_propagation(
     edges: DataFrame,
     *,
@@ -921,7 +875,6 @@ def label_propagation(
     dst: str = "dst",
     iters: int = 4,
     telemetry: list | None = None,
-    caches: list | None = None,
 ) -> DataFrame:
     """Synchronous label-propagation community detection (LPA) — the
     graph-family COMMUNITY primitive next to centrality (PageRank),
@@ -1012,20 +965,17 @@ def label_propagation(
         return False
 
     try:
-        lbl, handle = fixpoint(
+        lbl = fixpoint(
             vote, lbl0, metric=[],
             converged=None if telemetry is None else record_moved,
             max_iter=iters, error=None,
         )
     finally:
         sym.unpersist()
-    out = lbl.select("node", F.col("lbl").cast("long").alias("community"))
-    if caches is not None:
-        caches.append(handle)
-        return out
-    return scope_caches(out, handle)
+    return lbl.select("node", F.col("lbl").cast("long").alias("community"))
 
 
+@scoped
 def bfs_distances(
     edges: DataFrame,
     sources: DataFrame,
@@ -1034,7 +984,6 @@ def bfs_distances(
     dst: str = "dst",
     directed: bool = False,
     max_iter: int = 100,
-    caches: list | None = None,
 ) -> DataFrame:
     """Multi-source breadth-first hop distances — the graph-family
     REACHABILITY primitive: the minimum hop count from any source to
@@ -1093,7 +1042,7 @@ def bfs_distances(
         return dist.unionByName(layer)
 
     try:
-        dist, handle = fixpoint(
+        dist = fixpoint(
             expand, dist0, metric=[F.count("*").alias("n")],
             converged=unchanged, max_iter=max_iter,
             error=f"bfs_distances did not exhaust the frontier within "
@@ -1102,12 +1051,10 @@ def bfs_distances(
         )
     finally:
         adj.unpersist()
-    if caches is not None:
-        caches.append(handle)
-        return dist
-    return scope_caches(dist, handle)
+    return dist
 
 
+@scoped
 def shortest_paths(
     edges: DataFrame,
     sources: DataFrame,
@@ -1118,7 +1065,6 @@ def shortest_paths(
     directed: bool = False,
     max_iter: int = 50,
     validate: bool = True,
-    caches: list | None = None,
 ) -> DataFrame:
     """Multi-source weighted shortest paths (Bellman-Ford rounds) —
     the weighted completion of the reachability plane: where
@@ -1156,7 +1102,7 @@ def shortest_paths(
     adj = fwd if directed else fwd.unionByName(
         edges.select(b.alias("a"), a.alias("b"), w.alias("w"))
     )
-    adj = (
+    adj = hold(
         adj.filter(F.col("a") != F.col("b"))
         .groupBy("a", "b")
         .agg(F.min("w").alias("w"))
@@ -1166,7 +1112,6 @@ def shortest_paths(
     if validate:
         bad = adj.filter(F.col("w") < 1).limit(1).collect()
         if bad:
-            adj.unpersist()
             raise ValueError(
                 f"shortest_paths requires positive integer weights; found "
                 f"w={bad[0]['w']} on edge ({bad[0]['a']}, {bad[0]['b']})"
@@ -1202,42 +1147,31 @@ def shortest_paths(
             improved.alias("changed"),
         )
 
-    try:
-        dist, handle = fixpoint(
-            relax, dist0,
-            metric=[F.count(F.when(F.col("changed"), 1)).alias("changed")],
-            converged=lambda _, cur: cur.metric["changed"] == 0,
-            max_iter=max_iter,
-            error=f"shortest_paths did not reach the min-plus fixpoint "
-            f"within max_iter={max_iter} rounds; raise max_iter (longest "
-            "shortest-path hop count exceeds the bound)",
-        )
-    finally:
-        adj.unpersist()
-    out = dist.select("node", "dist")
-    if caches is not None:
-        caches.append(handle)
-        return out
-    return scope_caches(out, handle)
+    dist = fixpoint(
+        relax, dist0,
+        metric=[F.count(F.when(F.col("changed"), 1)).alias("changed")],
+        converged=lambda _, cur: cur.metric["changed"] == 0,
+        max_iter=max_iter,
+        error=f"shortest_paths did not reach the min-plus fixpoint "
+        f"within max_iter={max_iter} rounds; raise max_iter (longest "
+        "shortest-path hop count exceeds the bound)",
+    )
+    adj.unpersist()
+    return dist.select("node", "dist")
 
 
-def _reach_set(
-    adj: DataFrame, seeds: DataFrame, *, max_iter: int
-) -> tuple[DataFrame, list]:
+def _reach_set(adj: DataFrame, seeds: DataFrame, *, max_iter: int) -> DataFrame:
     """Forward-reachable node set (seed included) over a directed
     adjacency ``adj(a, b)`` — delegates to :func:`bfs_distances`
     (hop distances discarded), so the frontier bookkeeping and
-    checkpoint lifecycle are the tested ones.  Returns (nodes frame,
-    handles) — the CALLER releases the handles once every consumer of
-    the frame has materialized."""
-    held: list = []
-    dist = bfs_distances(
-        adj, seeds, src="a", dst="b", directed=True,
-        max_iter=max_iter, caches=held,
-    )
-    return dist.select("node"), held
+    checkpoint lifecycle are the tested ones.  The checkpoint lands in
+    the caller's scope."""
+    return bfs_distances(
+        adj, seeds, src="a", dst="b", directed=True, max_iter=max_iter
+    ).select("node")
 
 
+@scoped
 def strongly_connected_components(
     edges: DataFrame,
     *,
@@ -1246,7 +1180,6 @@ def strongly_connected_components(
     max_iter: int = 50,
     bfs_max_iter: int = 100,
     algorithm: str = "auto",
-    caches: list | None = None,
 ) -> DataFrame:
     """Strongly connected components of a DIRECTED graph — the directed
     membership primitive the undirected planes (connected components in
@@ -1341,7 +1274,7 @@ def strongly_connected_components(
         .distinct()
         .localCheckpoint(eager=True)
     )
-    live_handle = checkpoint_handle(remaining)
+    live_handle = hold(checkpoint_handle(remaining))
     spark = edges.sparkSession
 
     def endpoints(df: DataFrame) -> DataFrame:
@@ -1352,20 +1285,14 @@ def strongly_connected_components(
         )
 
     nodes0 = endpoints(remaining).localCheckpoint(eager=True)
-    nodes0_handle = checkpoint_handle(nodes0)
+    hold(checkpoint_handle(nodes0))
     comp_frames: list[DataFrame] = []
-    comp_handles: list = []
-
-    def release_all() -> None:
-        for h in (live_handle, *comp_handles, nodes0_handle):
-            h.unpersist(False)
-
     converged = False
     pivot = None
     for _ in range(max_iter):
         # --- TRIM to a fixpoint: in-deg 0 or out-deg 0 ⇒ cycle-free ---
         while True:
-            flags = (
+            flags = hold(
                 remaining.select(
                     F.col("a").alias("node"),
                     F.lit(1).alias("o"),
@@ -1408,125 +1335,119 @@ def strongly_connected_components(
                 )
                 .localCheckpoint(eager=True)
             )
-            new_h = checkpoint_handle(new_r)
+            new_h = hold(checkpoint_handle(new_r))
             live_handle.unpersist(False)
             remaining, live_handle = new_r, new_h
             flags.unpersist()
         if converged:
             break
-        held: list = []
-        if engine in ("fwbw", "auto"):
-            # --- PIVOT: SCC = FWD ∩ BWD, one tagged BFS both sides ---
-            # Direction namespace 2n / 2n+1; decode with two's-
-            # complement bit ops (node & 1, shiftright(node, 1)) so
-            # negative node ids round-trip exactly — Spark's % returns
-            # negative remainders and div truncates toward zero, which
-            # silently dropped negative ids from the bwd set.
-            tagged = remaining.select(
-                (F.col("a") * 2).alias("a"), (F.col("b") * 2).alias("b")
-            ).unionByName(
-                remaining.select(
-                    (F.col("b") * 2 + 1).alias("a"),
-                    (F.col("a") * 2 + 1).alias("b"),
-                )
-            )
-            seeds = spark.createDataFrame(
-                [(pivot * 2,), (pivot * 2 + 1,)], "node long"
-            )
-            try:
-                reach, held = _reach_set(
-                    tagged, seeds, max_iter=bfs_max_iter
-                )
-            except RuntimeError as exc:
-                # The inner reach pass is bounded by THIS caller's
-                # bfs_max_iter knob, but bfs_distances can only name
-                # its own max_iter parameter — re-raise naming the
-                # knob the caller must actually turn (ADVICE r11),
-                # mirroring the coloring-fixpoint raise below.
-                # bfs_distances released its own checkpoint handle
-                # before raising; release this frame's here.
-                release_all()
-                raise RuntimeError(
-                    f"strongly_connected_components: the pivot "
-                    f"reachability pass did not exhaust its frontier "
-                    f"within bfs_max_iter={bfs_max_iter} rounds; "
-                    f"raise bfs_max_iter (reach depth exceeds the "
-                    f"bound)"
-                ) from exc
-            fwd = reach.filter(F.expr("node & 1") == 0).select(
-                F.expr("shiftright(node, 1)").alias("node")
-            )
-            bwd = reach.filter(F.expr("node & 1") == 1).select(
-                F.expr("shiftright(node, 1)").alias("node")
-            )
-            comp = (
-                fwd.join(bwd, "node")
-                .select(
-                    "node", F.lit(int(pivot)).cast("long").alias("scc")
-                )
-                .localCheckpoint(eager=True)
-            )
-            if engine == "auto":
-                # Engine probe (the coreness auto pattern, but
-                # MEASURED on this graph rather than a static
-                # threshold), re-evaluated EVERY pivot round: while
-                # each pivot's component covers >= half of the
-                # remaining nodes, few-large-cores FW-BW is winning
-                # and auto keeps probing; the first small pivot
-                # (< half) signals many components remain — switch
-                # to coloring, which retires every current root SCC
-                # per round, and never switch back (coloring is never
-                # the worse engine once components are many).  A
-                # one-shot probe would strand a mixed-shape graph
-                # (one giant core + thousands of 2-cycles) on
-                # one-SCC-per-round FW-BW after the giant retires.
-                # Any prefix of retired components is valid under
-                # either engine, so switching cannot change the
-                # labeling; the probe's cost is one count on the
-                # already-checkpointed component frame.
-                if 2 * comp.count() < int(stats["n"]):
-                    engine = "coloring"
-        else:
-            # --- COLORING: retire every root SCC in one round ---
-            # 1) min-label forward closure: color(v) = min{u : u →* v}.
-            #    Improved-only FRONTIER relaxation (the shortest_paths
-            #    argument, min-plus with unit labels): a node whose
-            #    color did not improve last round would re-send the
-            #    exact message already folded into its neighbors, so
-            #    joining only last round's improved nodes against the
-            #    adjacency is bit-identical to full relaxation — and
-            #    the frontier shrinks monotonically after the
-            #    propagation peak instead of re-scanning every node
-            #    every round.
-            colors0 = endpoints(remaining).select(
-                "node",
-                F.col("node").alias("color"),
-                F.lit(True).alias("changed"),
-            )
-
-            def propagate(colors: DataFrame, _) -> DataFrame:
-                frontier = colors.filter(F.col("changed")).select(
-                    "node", "color"
-                )
-                msgs = (
-                    frontier.join(
-                        remaining, frontier["node"] == remaining["a"]
+        with owned() as scratch:
+            if engine in ("fwbw", "auto"):
+                # --- PIVOT: SCC = FWD ∩ BWD, one tagged BFS both sides ---
+                # Direction namespace 2n / 2n+1; decode with two's-
+                # complement bit ops (node & 1, shiftright(node, 1)) so
+                # negative node ids round-trip exactly — Spark's % returns
+                # negative remainders and div truncates toward zero, which
+                # silently dropped negative ids from the bwd set.
+                tagged = remaining.select(
+                    (F.col("a") * 2).alias("a"), (F.col("b") * 2).alias("b")
+                ).unionByName(
+                    remaining.select(
+                        (F.col("b") * 2 + 1).alias("a"),
+                        (F.col("a") * 2 + 1).alias("b"),
                     )
-                    .select(F.col("b").alias("node"), "color")
-                    .groupBy("node")
-                    .agg(F.min("color").alias("mc"))
                 )
-                return colors.join(msgs, "node", "left").select(
+                seeds = spark.createDataFrame(
+                    [(pivot * 2,), (pivot * 2 + 1,)], "node long"
+                )
+                try:
+                    reach = _reach_set(tagged, seeds, max_iter=bfs_max_iter)
+                except RuntimeError as exc:
+                    # The inner reach pass is bounded by THIS caller's
+                    # bfs_max_iter knob, but bfs_distances can only name
+                    # its own max_iter parameter — re-raise naming the
+                    # knob the caller must actually turn (ADVICE r11),
+                    # mirroring the coloring-fixpoint raise below.
+                    raise RuntimeError(
+                        f"strongly_connected_components: the pivot "
+                        f"reachability pass did not exhaust its frontier "
+                        f"within bfs_max_iter={bfs_max_iter} rounds; "
+                        f"raise bfs_max_iter (reach depth exceeds the "
+                        f"bound)"
+                    ) from exc
+                fwd = reach.filter(F.expr("node & 1") == 0).select(
+                    F.expr("shiftright(node, 1)").alias("node")
+                )
+                bwd = reach.filter(F.expr("node & 1") == 1).select(
+                    F.expr("shiftright(node, 1)").alias("node")
+                )
+                comp = (
+                    fwd.join(bwd, "node")
+                    .select(
+                        "node", F.lit(int(pivot)).cast("long").alias("scc")
+                    )
+                    .localCheckpoint(eager=True)
+                )
+                if engine == "auto":
+                    # Engine probe (the coreness auto pattern, but
+                    # MEASURED on this graph rather than a static
+                    # threshold), re-evaluated EVERY pivot round: while
+                    # each pivot's component covers >= half of the
+                    # remaining nodes, few-large-cores FW-BW is winning
+                    # and auto keeps probing; the first small pivot
+                    # (< half) signals many components remain — switch
+                    # to coloring, which retires every current root SCC
+                    # per round, and never switch back (coloring is never
+                    # the worse engine once components are many).  A
+                    # one-shot probe would strand a mixed-shape graph
+                    # (one giant core + thousands of 2-cycles) on
+                    # one-SCC-per-round FW-BW after the giant retires.
+                    # Any prefix of retired components is valid under
+                    # either engine, so switching cannot change the
+                    # labeling; the probe's cost is one count on the
+                    # already-checkpointed component frame.
+                    if 2 * comp.count() < int(stats["n"]):
+                        engine = "coloring"
+            else:
+                # --- COLORING: retire every root SCC in one round ---
+                # 1) min-label forward closure: color(v) = min{u : u →* v}.
+                #    Improved-only FRONTIER relaxation (the shortest_paths
+                #    argument, min-plus with unit labels): a node whose
+                #    color did not improve last round would re-send the
+                #    exact message already folded into its neighbors, so
+                #    joining only last round's improved nodes against the
+                #    adjacency is bit-identical to full relaxation — and
+                #    the frontier shrinks monotonically after the
+                #    propagation peak instead of re-scanning every node
+                #    every round.
+                colors0 = endpoints(remaining).select(
                     "node",
-                    F.least(
-                        F.col("color"), F.coalesce("mc", "color")
-                    ).alias("color"),
-                    (F.coalesce("mc", F.col("color")) < F.col("color"))
-                    .alias("changed"),
+                    F.col("node").alias("color"),
+                    F.lit(True).alias("changed"),
                 )
 
-            try:
-                colors, c_handle = fixpoint(
+                def propagate(colors: DataFrame, _) -> DataFrame:
+                    frontier = colors.filter(F.col("changed")).select(
+                        "node", "color"
+                    )
+                    msgs = (
+                        frontier.join(
+                            remaining, frontier["node"] == remaining["a"]
+                        )
+                        .select(F.col("b").alias("node"), "color")
+                        .groupBy("node")
+                        .agg(F.min("color").alias("mc"))
+                    )
+                    return colors.join(msgs, "node", "left").select(
+                        "node",
+                        F.least(
+                            F.col("color"), F.coalesce("mc", "color")
+                        ).alias("color"),
+                        (F.coalesce("mc", F.col("color")) < F.col("color"))
+                        .alias("changed"),
+                    )
+
+                colors = fixpoint(
                     propagate, colors0,
                     metric=[
                         F.count(F.when(F.col("changed"), 1)).alias("changed")
@@ -1539,55 +1460,45 @@ def strongly_connected_components(
                     f"raise bfs_max_iter (label chain depth exceeds "
                     f"the bound)",
                 )
-            except RuntimeError:
-                release_all()
-                raise
-            # 2) roots + backward reach through same-color nodes only;
-            #    classes are edge-disjoint after the color filter, so
-            #    one multi-seed BFS serves every root at once.
-            roots = colors.filter(
-                F.col("color") == F.col("node")
-            ).select("node")
-            ca = colors.select(
-                F.col("node").alias("a"), F.col("color").alias("ca")
-            )
-            cb = colors.select(
-                F.col("node").alias("b"), F.col("color").alias("cb")
-            )
-            rev_within = (
-                remaining.join(ca, "a")
-                .join(cb, "b")
-                .filter(F.col("ca") == F.col("cb"))
-                .select(F.col("b").alias("a"), F.col("a").alias("b"))
-            )
-            try:
-                reach, held = _reach_set(
-                    rev_within, roots, max_iter=bfs_max_iter
+                # 2) roots + backward reach through same-color nodes only;
+                #    classes are edge-disjoint after the color filter, so
+                #    one multi-seed BFS serves every root at once.
+                roots = colors.filter(
+                    F.col("color") == F.col("node")
+                ).select("node")
+                ca = colors.select(
+                    F.col("node").alias("a"), F.col("color").alias("ca")
                 )
-            except RuntimeError as exc:
-                # Same re-raise contract as the fwbw pivot pass above
-                # (ADVICE r12): this reach is ALSO bounded by the
-                # caller's bfs_max_iter knob, so frontier exhaustion
-                # must name it — not bfs_distances' internal max_iter —
-                # and release this frame's handles (including the
-                # coloring fixpoint's) before surfacing.
-                c_handle.unpersist(False)
-                release_all()
-                raise RuntimeError(
-                    f"strongly_connected_components: the root "
-                    f"backward-reach pass (coloring engine) did not "
-                    f"exhaust its frontier within "
-                    f"bfs_max_iter={bfs_max_iter} rounds; raise "
-                    f"bfs_max_iter (reach depth exceeds the bound)"
-                ) from exc
-            comp = (
-                reach.join(colors.select("node", "color"), "node")
-                .select("node", F.col("color").cast("long").alias("scc"))
-                .localCheckpoint(eager=True)
-            )
-            held.append(c_handle)
+                cb = colors.select(
+                    F.col("node").alias("b"), F.col("color").alias("cb")
+                )
+                rev_within = (
+                    remaining.join(ca, "a")
+                    .join(cb, "b")
+                    .filter(F.col("ca") == F.col("cb"))
+                    .select(F.col("b").alias("a"), F.col("a").alias("b"))
+                )
+                try:
+                    reach = _reach_set(rev_within, roots, max_iter=bfs_max_iter)
+                except RuntimeError as exc:
+                    # Same re-raise contract as the fwbw pivot pass above
+                    # (ADVICE r12): this reach is ALSO bounded by the
+                    # caller's bfs_max_iter knob, so frontier exhaustion
+                    # must name it — not bfs_distances' internal max_iter.
+                    raise RuntimeError(
+                        f"strongly_connected_components: the root "
+                        f"backward-reach pass (coloring engine) did not "
+                        f"exhaust its frontier within "
+                        f"bfs_max_iter={bfs_max_iter} rounds; raise "
+                        f"bfs_max_iter (reach depth exceeds the bound)"
+                    ) from exc
+                comp = (
+                    reach.join(colors.select("node", "color"), "node")
+                    .select("node", F.col("color").cast("long").alias("scc"))
+                    .localCheckpoint(eager=True)
+                )
         comp_frames.append(comp)
-        comp_handles.append(checkpoint_handle(comp))
+        hold(checkpoint_handle(comp))
         new_r = (
             remaining.join(
                 comp.select(F.col("node").alias("a")), "a", "left_anti"
@@ -1595,13 +1506,12 @@ def strongly_connected_components(
             .join(comp.select(F.col("node").alias("b")), "b", "left_anti")
             .localCheckpoint(eager=True)
         )
-        new_h = checkpoint_handle(new_r)
+        new_h = hold(checkpoint_handle(new_r))
         live_handle.unpersist(False)
         remaining, live_handle = new_r, new_h
-        for h in held:
+        for h in scratch:  # the pivot round's reach/coloring blocks
             h.unpersist(False)
     if not converged:
-        release_all()
         raise RuntimeError(
             f"strongly_connected_components did not exhaust the graph "
             f"within max_iter={max_iter} trim+peel rounds "
@@ -1621,16 +1531,12 @@ def strongly_connected_components(
     else:
         comps = spark.createDataFrame([], "node long, scc long")
         singles = nodes0
-    out = comps.unionByName(
+    return comps.unionByName(
         singles.select("node", F.col("node").cast("long").alias("scc"))
     )
-    handles = [*comp_handles, nodes0_handle]
-    if caches is not None:
-        caches.extend(handles)
-        return out
-    return scope_caches(out, *handles)
 
 
+@scoped
 def stress_centrality(
     edges: DataFrame,
     sources: DataFrame,
@@ -1640,7 +1546,6 @@ def stress_centrality(
     directed: bool = False,
     max_iter: int = 100,
     dedupe_edges: bool = True,
-    caches: list | None = None,
 ) -> DataFrame:
     """Sampled-source STRESS centrality — the path-centrality measure
     the graph family lacked: for every node v, the number of shortest
@@ -1710,7 +1615,7 @@ def stress_centrality(
         # deduped bipartite edge list whose two node namespaces cannot
         # collide — to skip this full-edge-list shuffle.
         adj = adj.distinct()
-    adj = adj.persist()
+    adj = hold(adj.persist())
     adj.count()
     # forward: layers[d] = (s, node, dist, sigma) checkpointed per
     # round; visited = the LAZY union of the cached layers (each
@@ -1724,7 +1629,7 @@ def stress_centrality(
         F.lit(1).cast("long").alias("sigma"),
     ).distinct().localCheckpoint(eager=True)
     layers = [l0]
-    handles = [checkpoint_handle(l0)]
+    hold(checkpoint_handle(l0))
     visited = l0
     frontier = l0.select("s", "node", "sigma")
     depth = 0
@@ -1747,20 +1652,16 @@ def stress_centrality(
             )
             .localCheckpoint(eager=True)
         )
-        nxt_handle = checkpoint_handle(nxt)
+        nxt_handle = hold(checkpoint_handle(nxt))
         if nxt.count() == 0:
             nxt_handle.unpersist(False)
             converged = True
             depth = d - 1
             break
         layers.append(nxt)
-        handles.append(nxt_handle)
         visited = visited.unionByName(nxt)
         frontier = nxt.select("s", "node", "sigma")
     if not converged:
-        for hd in handles:
-            hd.unpersist(False)
-        adj.unpersist()
         raise RuntimeError(
             f"stress_centrality did not exhaust the frontier within "
             f"max_iter={max_iter} rounds; raise max_iter (graph "
@@ -1808,7 +1709,7 @@ def stress_centrality(
         .select("s", "node", "dist", "succ")
         .localCheckpoint(eager=True)
     )
-    handles.append(checkpoint_handle(dag))
+    hold(checkpoint_handle(dag))
     # the eager DAG checkpoint was the last adjacency reader — release
     # the symmetrized edge cache before the backward chain runs
     adj.unpersist()
@@ -1839,12 +1740,12 @@ def stress_centrality(
         acc = acc.unionByName(lay_h)
         if (depth - d) % 8 == 0:
             acc = acc.localCheckpoint(eager=True)
-            handles.append(checkpoint_handle(acc))
+            hold(checkpoint_handle(acc))
             lay_h = acc.filter(F.col("h").isNotNull()).join(
                 layer, ["s", "node"], "left_semi"
             ).select("s", "node", "h")
         h = lay_h
-    stress = (
+    return (
         visited.join(acc, ["s", "node"])
         .filter(F.col("node") != F.col("s"))
         .select(
@@ -1856,10 +1757,6 @@ def stress_centrality(
         .groupBy("node")
         .agg(F.sum("p").cast("long").alias("stress"))
     )
-    if caches is not None:
-        caches.extend(handles)
-        return stress
-    return scope_caches(stress, *handles)
 
 
 def _integral_weight(edges: DataFrame, weight_col: str):
@@ -1920,7 +1817,6 @@ def modularity_stats(
     src: str = "src",
     dst: str = "dst",
     weight_col: str | None = None,
-    caches: list | None = None,
     collect_m: bool = True,
 ) -> tuple[DataFrame, DataFrame | None]:
     """The two loop-invariant statistics EVERY modularity operator
@@ -1933,8 +1829,8 @@ def modularity_stats(
     * ``deg`` — (n, k): each node's weighted degree with self-loops
       counted TWICE (the shared convention of :func:`modularity_score`
       / :func:`modularity_refine_step` / :func:`modularity_merge_step`
-      — a self-loop row lands in both union arms), persisted (rides
-      ``caches=`` or the caller's own scoping);
+      — a self-loop row lands in both union arms), persisted; the
+      caller owns its release (``hold`` it, or unpersist it);
     * ``m`` — the 1-row ``(__m decimal(38,0))`` total-weight literal
       (:func:`_m_lit`), collected EAGERLY here (one bounded
       partial-aggregable job; NULL on an empty edge list, exactly as
@@ -1966,8 +1862,6 @@ def modularity_stats(
         .agg(F.sum("__w").cast("long").alias("k"))
         .persist()
     )
-    if caches is not None:
-        caches.append(deg)
     if not collect_m:
         return deg, None
     dec = "decimal(38,0)"
@@ -1975,6 +1869,7 @@ def modularity_stats(
     return deg, _m_lit(edges.sparkSession, m_val)
 
 
+@scoped
 def modularity_score(
     edges: DataFrame,
     communities: DataFrame,
@@ -1985,7 +1880,6 @@ def modularity_score(
     community_col: str = "community",
     weight_col: str | None = None,
     assume_canonical: bool = False,
-    caches: list | None = None,
     deg: DataFrame | None = None,
     m: DataFrame | None = None,
 ) -> DataFrame:
@@ -2066,7 +1960,6 @@ def modularity_score(
     caller's frames are the same expressions over the same rows.
     """
     a, b = F.col(src), F.col(dst)
-    own: list = [] if caches is None else caches
     if (deg is not None or m is not None) and not assume_canonical:
         raise ValueError(
             "deg/m require assume_canonical=True: precomputed stats "
@@ -2095,12 +1988,11 @@ def modularity_score(
             a.alias("u"), b.alias("v"), F.lit(1).cast("long").alias("__w")
         )
     else:
-        und = (
+        und = hold(
             _canonical(edges, src, dst)
             .withColumn("__w", F.lit(1).cast("long"))
             .persist()
         )
-        own.append(und)
     dec = "decimal(38,0)"
     m1 = m if m is not None else und.agg(F.sum("__w").cast(dec).alias("__m"))
     # self-loops land in both branches → 2w, the weighted-degree
@@ -2182,9 +2074,10 @@ def modularity_score(
             "q_e6",
         )
     )
-    return ret if caches is not None else scope_caches(ret, *own)
+    return ret
 
 
+@scoped
 def modularity_merge_step(
     edges: DataFrame,
     communities: DataFrame,
@@ -2195,7 +2088,6 @@ def modularity_merge_step(
     community_col: str = "community",
     weight_col: str | None = None,
     assume_canonical: bool = False,
-    caches: list | None = None,
     deg: DataFrame | None = None,
     m: DataFrame | None = None,
 ) -> DataFrame:
@@ -2270,7 +2162,6 @@ def modularity_merge_step(
     coarsening pass); a lone merge computes each exactly once anyway.
     """
     a, b = F.col(src), F.col(dst)
-    own: list = [] if caches is None else caches
     if (deg is not None or m is not None) and not assume_canonical:
         raise ValueError(
             "deg/m require assume_canonical=True: precomputed stats "
@@ -2296,23 +2187,21 @@ def modularity_merge_step(
             a.alias("u"), b.alias("v"), F.lit(1).cast("long").alias("__w")
         )
     else:
-        und = (
+        und = hold(
             _canonical(edges, src, dst)
             .withColumn("__w", F.lit(1).cast("long"))
             .persist()
         )
-        own.append(und)
     dec = "decimal(38,0)"
-    comm = communities.select(
+    comm = hold(communities.select(
         F.col(node_col).alias("n"),
         F.col(community_col).alias("c"),
-    ).persist()
+    ).persist())
     # EAGER for the same reason as best below: comm is referenced three
     # times (degree rollup join, both sides of the community-graph
     # double-join, final relabel) — lazy, those references materialize
     # its upstream concurrently and re-execute it per reference.
     comm.count()
-    own.append(comm)
     m1 = m if m is not None else und.agg(F.sum("__w").cast(dec).alias("__m"))
     # a self-loop lands in BOTH union branches as the same node, so it
     # contributes 2w to its endpoint's degree — the weighted-graph
@@ -2335,14 +2224,13 @@ def modularity_merge_step(
     # registered merge query).  The persisted frames are bounded by
     # the community count — exactly the coarsened state a distributed
     # Louvain keeps resident.
-    d_c = (
+    d_c = hold(
         degf.join(comm, "n")
         .groupBy("c")
         .agg(F.sum("k").cast("long").alias("d"))
         .persist()
     )
     d_c.count()
-    own.append(d_c)
     ce = (
         und.join(
             comm.select(F.col("n").alias("u"), F.col("c").alias("cu")),
@@ -2361,7 +2249,7 @@ def modularity_merge_step(
         .groupBy("ca", "cb")
         .agg(F.sum("__w").cast("long").alias("e"))
     )
-    gains = (
+    gains = hold(
         ce.join(d_c.select(F.col("c").alias("ca"), F.col("d").alias("da")), "ca")
         .join(d_c.select(F.col("c").alias("cb"), F.col("d").alias("db")), "cb")
         .crossJoin(F.broadcast(m1))
@@ -2377,14 +2265,13 @@ def modularity_merge_step(
         .persist()
     )
     gains.count()
-    own.append(gains)
     sym_g = gains.select(
         F.col("ca").alias("c"), F.col("cb").alias("p"), "__g"
     ).unionByName(
         gains.select(F.col("cb").alias("c"), F.col("ca").alias("p"), "__g")
     )
     w = Window.partitionBy("c").orderBy(F.desc("__g"), F.asc("p"))
-    best = (
+    best = hold(
         sym_g.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
         .select("c", "p")
@@ -2398,7 +2285,6 @@ def modularity_merge_step(
     # merge query).  One count() computes the blocks once; the
     # self-join then reads cache.
     best.count()
-    own.append(best)
     # mutual-best pairs are disjoint by construction (best is a
     # function of c); keep each pair once, relabel the larger id
     mapping = (
@@ -2419,9 +2305,10 @@ def modularity_merge_step(
             F.coalesce("__new", "c").alias("community"),
         )
     )
-    return ret if caches is not None else scope_caches(ret, *own)
+    return ret
 
 
+@scoped
 def contract_graph(
     edges: DataFrame,
     communities: DataFrame,
@@ -2432,7 +2319,6 @@ def contract_graph(
     community_col: str = "community",
     weight_col: str | None = None,
     assume_canonical: bool = False,
-    caches: list | None = None,
 ) -> DataFrame:
     """Louvain PHASE-2 graph contraction: collapse a partition's
     communities into super-nodes and return the weighted community
@@ -2485,7 +2371,6 @@ def contract_graph(
     paid ONCE; output rows are bounded by community pairs ≪ |E|.
     """
     a, b = F.col(src), F.col(dst)
-    own: list = [] if caches is None else caches
     if weight_col is not None:
         if not assume_canonical:
             # Same enforced convention as modularity_merge_step /
@@ -2514,11 +2399,10 @@ def contract_graph(
             _canonical(edges, src, dst)
             .withColumn("__w", F.lit(1).cast("long"))
         )
-    comm = communities.select(
+    comm = hold(communities.select(
         F.col(node_col).alias("n"),
         F.col(community_col).alias("c"),
-    ).persist()
-    own.append(comm)
+    ).persist())
     ret = (
         und.join(
             comm.select(F.col("n").alias("u"), F.col("c").alias("cu")),
@@ -2536,9 +2420,10 @@ def contract_graph(
         .groupBy(src, dst)
         .agg(F.sum("__w").cast("long").alias("weight"))
     )
-    return ret if caches is not None else scope_caches(ret, *own)
+    return ret
 
 
+@scoped
 def modularity_refine_step(
     edges: DataFrame,
     communities: DataFrame,
@@ -2549,7 +2434,6 @@ def modularity_refine_step(
     community_col: str = "community",
     weight_col: str | None = None,
     assume_canonical: bool = False,
-    caches: list | None = None,
     deg: DataFrame | None = None,
     m: DataFrame | None = None,
 ) -> DataFrame:
@@ -2617,7 +2501,6 @@ def modularity_refine_step(
     bit-identical by construction).
     """
     a, b = F.col(src), F.col(dst)
-    own: list = [] if caches is None else caches
     if (deg is not None or m is not None) and not assume_canonical:
         raise ValueError(
             "deg/m require assume_canonical=True: precomputed stats "
@@ -2643,18 +2526,16 @@ def modularity_refine_step(
             a.alias("u"), b.alias("v"), F.lit(1).cast("long").alias("__w")
         )
     else:
-        und = (
+        und = hold(
             _canonical(edges, src, dst)
             .withColumn("__w", F.lit(1).cast("long"))
             .persist()
         )
-        own.append(und)
     dec = "decimal(38,0)"
-    comm = communities.select(
+    comm = hold(communities.select(
         F.col(node_col).alias("n"),
         F.col(community_col).alias("c"),
-    ).persist()
-    own.append(comm)
+    ).persist())
     sym = und.select(
         F.col("u").alias("i"), F.col("v").alias("j"), "__w"
     ).unionByName(
@@ -2666,10 +2547,9 @@ def modularity_refine_step(
     if deg is not None:
         degf = deg.select("n", F.col("k").cast("long").alias("k"))
     else:
-        degf = sym.groupBy(F.col("i").alias("n")).agg(
+        degf = hold(sym.groupBy(F.col("i").alias("n")).agg(
             F.sum("__w").cast("long").alias("k")
-        ).persist()
-        own.append(degf)
+        ).persist())
     m1 = m if m is not None else und.agg(F.sum("__w").cast(dec).alias("__m"))
     d_c = (
         degf.join(comm, "n")
@@ -2697,7 +2577,7 @@ def modularity_refine_step(
     # Coalescing k and d to 0 gives isolated nodes T = 0 for every
     # candidate (their only candidate is their own community, from the
     # cand union), so they stay put and pass through unchanged.
-    scored = (
+    scored = hold(
         cand.join(comm.select("n", F.col("c").alias("__own")), "n")
         .join(degf, "n", "left")
         .join(d_c, "c", "left")
@@ -2721,7 +2601,6 @@ def modularity_refine_step(
         )
         .persist()
     )
-    own.append(scored)
     w = Window.partitionBy("n").orderBy(F.desc("__t"), F.asc("c"))
     pick = scored.withColumn("__rn", F.row_number().over(w)).filter(
         F.col("__rn") == 1
@@ -2735,9 +2614,10 @@ def modularity_refine_step(
         .otherwise(F.col("__own"))
         .alias("community"),
     )
-    return ret if caches is not None else scope_caches(ret, *own)
+    return ret
 
 
+@scoped
 def modularity_refine_guarded(
     edges: DataFrame,
     communities: DataFrame,
@@ -2748,7 +2628,6 @@ def modularity_refine_guarded(
     community_col: str = "community",
     weight_col: str | None = None,
     assume_canonical: bool = False,
-    caches: list | None = None,
     evidence: dict | None = None,
     deg: DataFrame | None = None,
     m: DataFrame | None = None,
@@ -2806,14 +2685,13 @@ def modularity_refine_guarded(
     Nothing is computed beyond what the guard already needs; the dict
     is an out-param, never a cache across calls.
 
-    Lifetime caveat (ADVICE r18): with ``caches=None`` the swept
-    frame's persist is tied to the RETURNED frame via
-    ``scope_caches`` — a caller that keeps ``evidence["swept"]`` but
+    Lifetime caveat (ADVICE r18): the swept frame's persist is held
+    in the caller's scope; called outside any scope it is tied to the
+    RETURNED frame — a caller that keeps ``evidence["swept"]`` but
     drops the result recomputes the sweep on first use (results stay
-    correct; the reuse win silently evaporates).  Callers that want
-    the evidence to stay cached independently of the result must pass
-    ``caches=`` and manage the unpersist themselves, as the
-    registered evidence queries do.
+    correct; the reuse win silently evaporates).  Called from a
+    scoped function (the registered evidence queries), the persist
+    lives as long as that function's result.
 
     ``deg`` / ``m`` (r19): the sweep and both scorings each derive the
     SAME degree rollup and m aggregation from the shared canonical
@@ -2827,7 +2705,6 @@ def modularity_refine_guarded(
     (precomputed stats with ``assume_canonical=False`` raise there).
     """
     a, b = F.col(src), F.col(dst)
-    own: list = [] if caches is None else caches
     if weight_col is not None and not assume_canonical:
         raise ValueError(
             "weight_col requires assume_canonical=True: weighted "
@@ -2856,8 +2733,7 @@ def modularity_refine_guarded(
             .filter(F.col("src") != F.col("dst"))
             .distinct()
         )
-    und = und.persist()
-    own.append(und)
+    und = hold(und.persist())
     if deg is None:
         # deg ONLY — the sweep and both scorings reuse one persisted
         # degree rollup instead of re-shuffling it three times.  m is
@@ -2867,31 +2743,27 @@ def modularity_refine_guarded(
         # aggs it replaces at the AQE tiny-stage floor), and at scale
         # the in-plan m is a shuffle-free scan of the cached edge
         # list, unlike deg's per-recompute shuffle.
-        deg, _ = modularity_stats(
-            und, weight_col=weight_col, caches=own, collect_m=False
+        deg = hold(
+            modularity_stats(und, weight_col=weight_col, collect_m=False)[0]
         )
-    comm = communities.select(
+    comm = hold(communities.select(
         F.col(node_col).alias("node"),
         F.col(community_col).alias("community"),
-    ).persist()
-    own.append(comm)
-    refined = modularity_refine_step(
+    ).persist())
+    refined = hold(modularity_refine_step(
         und,
         comm,
         weight_col=weight_col,
         assume_canonical=True,
-        caches=own,
         deg=deg,
         m=m,
-    ).persist()
-    own.append(refined)
+    ).persist())
     q0_row = (
         modularity_score(
             und,
             comm,
             weight_col=weight_col,
             assume_canonical=True,
-            caches=own,
             deg=deg,
             m=m,
         )
@@ -2904,7 +2776,6 @@ def modularity_refine_guarded(
             refined,
             weight_col=weight_col,
             assume_canonical=True,
-            caches=own,
             deg=deg,
             m=m,
         )
@@ -2918,9 +2789,10 @@ def modularity_refine_guarded(
         evidence["q_in_e6"] = q0
         evidence["q_swept_e6"] = q1
     ret = refined if (q0 is not None and q1 is not None and q1 > q0) else comm
-    return ret if caches is not None else scope_caches(ret, *own)
+    return ret
 
 
+@scoped
 def louvain_coarsen(
     edges: DataFrame,
     communities: DataFrame | None = None,
@@ -2932,7 +2804,6 @@ def louvain_coarsen(
     node_col: str = "node",
     community_col: str = "community",
     assume_canonical: bool = False,
-    caches: list | None = None,
 ) -> DataFrame:
     """Louvain-style agglomerative COARSENING as a user-facing
     operator (r16 — previously this loop lived inline in the
@@ -2991,7 +2862,6 @@ def louvain_coarsen(
             f"refine must be None or 'guarded', got {refine!r}"
         )
     a, b = F.col(src), F.col(dst)
-    own: list = [] if caches is None else caches
     if assume_canonical:
         und = edges.select(a.alias("src"), b.alias("dst"))
     else:
@@ -3008,8 +2878,7 @@ def louvain_coarsen(
         # persist it; with a caller-supplied assignment it has exactly
         # one consumer (the contraction), so a persist would only
         # duplicate the caller's (typically already-persisted) edges
-        und = und.persist()
-        own.append(und)
+        und = hold(und.persist())
         seed = (
             und.select(F.col("src").alias("node"))
             .unionByName(und.select(F.col("dst").alias("node")))
@@ -3021,15 +2890,14 @@ def louvain_coarsen(
             F.col(node_col).alias("node"),
             F.col(community_col).alias("community"),
         )
-    seed = seed.persist()
-    own.append(seed)
+    seed = hold(seed.persist())
     if passes <= 0:
-        return seed if caches is not None else scope_caches(seed, *own)
+        return seed
     # the ONLY |E|-sized join of the loop
     g = contract_graph(
-        und, seed, assume_canonical=True, caches=own
+        und, seed, assume_canonical=True
     ).localCheckpoint()
-    own.append(checkpoint_handle(g))
+    hold(checkpoint_handle(g))
     mapping: DataFrame | None = None
     for t in range(passes):
         ident = (
@@ -3047,19 +2915,17 @@ def louvain_coarsen(
         # eager-collect form measured slower, OPTIMIZATION_r19.md).
         pass_stats: dict = {}
         if refine == "guarded":
-            sdeg, _ = modularity_stats(
-                g, weight_col="weight", caches=own, collect_m=False
-            )
-            pass_stats = {"deg": sdeg}
+            pass_stats = {"deg": hold(
+                modularity_stats(g, weight_col="weight", collect_m=False)[0]
+            )}
         merged = modularity_merge_step(
             g,
             ident,
             weight_col="weight",
             assume_canonical=True,
-            caches=own,
             **pass_stats,
         ).localCheckpoint()
-        own.append(checkpoint_handle(merged))
+        hold(checkpoint_handle(merged))
         if refine == "guarded":
             # one guarded local-move sweep on the SAME super-graph,
             # scored weighted on both sides — adopted only if Q
@@ -3070,10 +2936,9 @@ def louvain_coarsen(
                 merged,
                 weight_col="weight",
                 assume_canonical=True,
-                caches=own,
                 **pass_stats,
             ).localCheckpoint()
-            own.append(checkpoint_handle(merged))
+            hold(checkpoint_handle(merged))
         # fixpoint check: a pass that merges nothing relabels identity
         # to itself, and every later pass would be the identity too —
         # stop before paying another contraction (bounded: the relabel
@@ -3101,12 +2966,11 @@ def louvain_coarsen(
                 merged,
                 weight_col="weight",
                 assume_canonical=True,  # g is contract_graph's own output
-                caches=own,
             ).localCheckpoint()
-            own.append(checkpoint_handle(g))
+            hold(checkpoint_handle(g))
     if mapping is None:
         # the very first pass was already a fixpoint
-        return seed if caches is not None else scope_caches(seed, *own)
+        return seed
     # LEFT join + coalesce (ADVICE r16): the composed mapping only
     # covers communities that reached the contracted graph — i.e. have
     # at least one edge among assignment members.  A caller-supplied
@@ -3127,4 +2991,4 @@ def louvain_coarsen(
     ).select(
         "node", F.coalesce("__to", "community").alias("community")
     )
-    return ret if caches is not None else scope_caches(ret, *own)
+    return ret

@@ -46,6 +46,7 @@ from ..functions.vectors import (
     norm_unrolled,
     norm_unrolled_sql,
 )
+from ..session import checkpoint_handle, hold, scoped
 
 # The wide (dim-term) projections below are assembled as SQL text and
 # parsed with ONE selectExpr/F.expr call instead of operator-by-operator
@@ -591,6 +592,7 @@ def brute_force_range(
     )
 
 
+@scoped
 def mmr_topk(
     emb: DataFrame,
     queries: DataFrame,
@@ -620,7 +622,9 @@ def mmr_topk(
     MMR structure derives from it — the pairwise-sim frame is
     nq·n_cand² bounded rows, each greedy round is a bounded join + one
     window over nq groups, and ``localCheckpoint`` truncates the
-    per-round lineage.  The corpus is touched exactly once (the
+    per-round lineage; once the final round is materialized the
+    superseded rounds' checkpoints are released synchronously and the
+    last one is held.  The corpus is touched exactly once (the
     brute-force candidate generation; swap in ivf_topk for the
     candidate step at extreme scale — the MMR stage is unchanged).
     """
@@ -641,7 +645,7 @@ def mmr_topk(
             "vec_id",
             F.round(F.col("cos_sim") * 1e6).cast("long").alias("rel_e6"),
         )
-    cand = candidates.persist()
+    cand = hold(candidates.persist())
     if pair_sims is None:
         # pairwise sims among each query's candidates (nq·n_cand²
         # bounded) — like ``candidates``, deterministic per (corpus,
@@ -674,7 +678,7 @@ def mmr_topk(
                 F.round(pair_cos * 1e6).cast("long").alias("sim_e6"),
             )
         )
-    pairs = pair_sims.persist()
+    pairs = hold(pair_sims.persist())
     w = Window.partitionBy("query_id").orderBy(
         F.desc("score"), F.asc("vec_id")
     )
@@ -687,6 +691,7 @@ def mmr_topk(
         )
         .localCheckpoint(eager=False)
     )
+    handles = [hold(checkpoint_handle(sel))]
     for step in range(2, k + 1):
         pen = (
             pairs.join(
@@ -717,9 +722,14 @@ def mmr_topk(
             )
         )
         sel = sel.unionByName(pick).localCheckpoint(eager=False)
-    sel.count()  # materialize before releasing the inputs it reads
+        handles.append(hold(checkpoint_handle(sel)))
+    # materialize every round bottom-up before releasing the inputs
+    # and the superseded rounds it read
+    sel.count()
     cand.unpersist()
     pairs.unpersist()
+    for h in handles[:-1]:
+        h.unpersist(False)
     return sel
 
 

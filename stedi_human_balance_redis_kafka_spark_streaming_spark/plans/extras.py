@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from ..operators import associations, profiling
 from ..operators.asof import asof_join
+from ..session import checkpoint_handle, hold
 from ..sources.files import load_table, table_fingerprint
 from . import synthetic
 from .registry import register
@@ -944,19 +945,13 @@ def trade_graph_pagerank(
     # The union above symmetrizes, so every dst is also a src by
     # construction — skip the dangling-node check's extra Spark job on
     # this hot (benchmarked) path; the precondition cannot fail here.
-    caches: list = []
-    ranks = graph.pagerank(edges, iters=iters, validate=False, caches=caches)
-    from ..session import scope_caches
-
-    return scope_caches(
-        ranks.select(
-            F.when(F.col("node") % 2 == 0, F.lit("customer"))
-            .otherwise(F.lit("supplier"))
-            .alias("node_type"),
-            F.expr("node div 2").alias("entity_id"),
-            "rank_e12",
-        ),
-        *caches,
+    ranks = graph.pagerank(edges, iters=iters, validate=False)
+    return ranks.select(
+        F.when(F.col("node") % 2 == 0, F.lit("customer"))
+        .otherwise(F.lit("supplier"))
+        .alias("node_type"),
+        F.expr("node div 2").alias("entity_id"),
+        "rank_e12",
     )
 
 
@@ -1061,21 +1056,15 @@ def graph_pagerank_personalized(
     seeds = cust.filter(
         F.col("c_nationkey") == _PPR_SEED_NATION
     ).select((F.col("c_custkey") * 2).alias("node"))
-    caches: list = []
     ranks = graph.pagerank(
-        edges, iters=iters, validate=False, seeds=seeds, caches=caches
+        edges, iters=iters, validate=False, seeds=seeds
     )
-    from ..session import scope_caches
-
-    return scope_caches(
-        ranks.select(
-            F.when(F.col("node") % 2 == 0, F.lit("customer"))
-            .otherwise(F.lit("supplier"))
-            .alias("node_type"),
-            F.expr("node div 2").alias("entity_id"),
-            "rank_e12",
-        ),
-        *caches,
+    return ranks.select(
+        F.when(F.col("node") % 2 == 0, F.lit("customer"))
+        .otherwise(F.lit("supplier"))
+        .alias("node_type"),
+        F.expr("node div 2").alias("entity_id"),
+        "rank_e12",
     )
 
 
@@ -1167,21 +1156,15 @@ def graph_pagerank_weighted(
         pairs.select(F.col("b").alias("src"), F.col("a").alias("dst"), "w")
     )
     # symmetrized by construction — skip the weight/dangling check jobs
-    caches: list = []
     ranks = graph.pagerank(
-        edges, iters=iters, weight="w", validate=False, caches=caches
+        edges, iters=iters, weight="w", validate=False
     )
-    from ..session import scope_caches
-
-    return scope_caches(
-        ranks.select(
-            F.when(F.col("node") % 2 == 0, F.lit("customer"))
-            .otherwise(F.lit("supplier"))
-            .alias("node_type"),
-            F.expr("node div 2").alias("entity_id"),
-            "rank_e12",
-        ),
-        *caches,
+    return ranks.select(
+        F.when(F.col("node") % 2 == 0, F.lit("customer"))
+        .otherwise(F.lit("supplier"))
+        .alias("node_type"),
+        F.expr("node div 2").alias("entity_id"),
+        "rank_e12",
     )
 
 
@@ -1272,21 +1255,15 @@ def graph_pagerank_dangling(
         )
         .distinct()
     )
-    caches: list = []
     ranks = graph.pagerank(
-        edges, iters=iters, dangling="redistribute", caches=caches
+        edges, iters=iters, dangling="redistribute"
     )
-    from ..session import scope_caches
-
-    return scope_caches(
-        ranks.select(
-            F.when(F.col("node") % 2 == 0, F.lit("customer"))
-            .otherwise(F.lit("supplier"))
-            .alias("node_type"),
-            F.expr("node div 2").alias("entity_id"),
-            "rank_e12",
-        ),
-        *caches,
+    return ranks.select(
+        F.when(F.col("node") % 2 == 0, F.lit("customer"))
+        .otherwise(F.lit("supplier"))
+        .alias("node_type"),
+        F.expr("node div 2").alias("entity_id"),
+        "rank_e12",
     )
 
 
@@ -1501,7 +1478,7 @@ def events_sketch_reaggregate(spark: SparkSession, sf_dir: str) -> DataFrame:
     count (computed alongside from a pre-deduped frame, same shape as
     events_approx_distinct)."""
     e = load_table(spark, sf_dir, "events")
-    d = e.select("event_type", "user_id").distinct().persist()
+    d = hold(e.select("event_type", "user_id").distinct().persist())
     per_type = d.groupBy("event_type").agg(
         F.count("*").alias("exact_users"),
         F.hll_sketch_agg("user_id").alias("sketch"),
@@ -1525,9 +1502,7 @@ def events_sketch_reaggregate(spark: SparkSession, sf_dir: str) -> DataFrame:
             <= 0.05 * F.col("exact_global")
         ).alias("approx_within_5pct"),
     )
-    from ..session import scope_caches
-
-    return scope_caches(out, d)
+    return out
 
 
 _CMS_SPLIT_TS = "2024-01-16 00:00:00"
@@ -1602,12 +1577,11 @@ def events_cms_frequency(spark: SparkSession, sf_dir: str) -> DataFrame:
     are real and the overestimate column is a live monitored number.
     """
     from ..operators import sketches
-    from ..session import scope_caches
 
     # One narrow scan feeds five consumers (global build, two half
     # builds, key sample, exact counts) — persist it or each runs its
     # own parquet scan as a concurrent AQE stage.
-    ev = (
+    ev = hold(
         load_table(spark, sf_dir, "events")
         .select("ts", "user_id")
         .persist()
@@ -1645,7 +1619,7 @@ def events_cms_frequency(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    return scope_caches(out, ev)
+    return out
 
 
 _HH_PHI_PERMILLE = 50  # heavy-hitter threshold φ = 5% of total volume
@@ -1725,9 +1699,8 @@ def events_cms_heavy_hitters(
     frequency table.
     """
     from ..operators import sketches
-    from ..session import scope_caches
 
-    ev = (
+    ev = hold(
         load_table(spark, sf_dir, "events")
         .select(
             F.floor(F.col("value") / 10).cast("long").alias("value_bin")
@@ -1759,7 +1732,7 @@ def events_cms_heavy_hitters(
             >= F.lit(phi_permille) * F.col("n_total")
         ).alias("is_true_heavy"),
     )
-    return scope_caches(out, ev)
+    return out
 
 
 @register(
@@ -2646,10 +2619,9 @@ def events_cms_window_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     the key sample against the broadcast merged grid.
     """
     from ..operators import sketches
-    from ..session import scope_caches
     from ..streaming import stateful
 
-    ev = (
+    ev = hold(
         load_table(spark, sf_dir, "events")
         .select("ts", "user_id")
         .persist()
@@ -2688,7 +2660,7 @@ def events_cms_window_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    return scope_caches(out, ev)
+    return out
 
 
 _WATCH_MODULUS = 25     # watchlist sample: user_id % 25 == 0
@@ -2771,10 +2743,9 @@ def events_cms_watchlist(
     touches per-key counts, and only for windows × watch keys.
     """
     from ..operators import sketches  # noqa: F401 (bucket idiom shared)
-    from ..session import scope_caches
     from ..streaming import stateful
 
-    ev = (
+    ev = hold(
         load_table(spark, sf_dir, "events")
         .select("ts", "user_id")
         .persist()
@@ -2806,7 +2777,7 @@ def events_cms_watchlist(
         ),
         "is_heavy",
     )
-    return scope_caches(out, ev)
+    return out
 
 
 _HIST_LO_C = 0        # histogram domain in cents
@@ -2933,10 +2904,10 @@ def orders_kll_quantile_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     estimate — the pre-aggregated-cube pattern for percentile
     dashboards at 100 TB — validated by the exact rank of the estimate
     (one counting pass), not by trusting the sketch."""
-    o = load_table(spark, sf_dir, "orders").select(
+    o = hold(load_table(spark, sf_dir, "orders").select(
         "o_orderstatus",
         F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
-    ).persist()
+    ).persist())
     per = o.groupBy("o_orderstatus").agg(
         F.expr("kll_sketch_agg_bigint(cents)").alias("sk")
     )
@@ -2971,9 +2942,7 @@ def orders_kll_quantile_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             <= 0.05
         ).alias("median_rank_within_5pct"),
     )
-    from ..session import scope_caches
-
-    return scope_caches(out, o)
+    return out
 
 
 @register(
@@ -3071,7 +3040,7 @@ def documents_lang_source_assoc(spark: SparkSession, sf_dir: str) -> DataFrame:
     ceiling.
     """
     dec = "decimal(38,0)"
-    cells = (
+    cells = hold(
         load_table(spark, sf_dir, "documents")
         .groupBy("lang", "source")
         .agg(F.count("*").alias("o"))
@@ -3117,9 +3086,7 @@ def documents_lang_source_assoc(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("overflow_cells"),
         )
     )
-    from ..session import scope_caches
-
-    return scope_caches(out, cells)
+    return out
 
 
 @register(
@@ -3435,13 +3402,9 @@ def graph_bfs_hops(
         .filter(F.col("c_custkey") <= max_seed)
         .select((F.col("c_custkey") * 2).cast("long").alias("node"))
     )
-    from ..session import scope_caches
-
-    # caches= threads the operator's checkpoint handle out to THIS
-    # frame's lifetime — scope_caches on the inner frame would release
-    # the blocks as soon as the wrapper .select() drops it.
-    held: list = []
-    dist = graph.bfs_distances(edges, seeds, caches=held)
+    # bfs_distances is nested in this query's scope, so its checkpoint
+    # lives as long as the returned frame, not the dropped inner one.
+    dist = graph.bfs_distances(edges, seeds)
     out = dist.select(
         F.when(F.col("node") % 2 == 0, F.lit("customer"))
         .otherwise(F.lit("supplier"))
@@ -3449,7 +3412,7 @@ def graph_bfs_hops(
         F.expr("node div 2").cast("long").alias("entity_id"),
         "dist",
     )
-    return scope_caches(out, *held)
+    return out
 
 
 # Weighted shortest paths over the top-2 trade backbone: Bellman-Ford
@@ -3537,7 +3500,6 @@ def graph_shortest_paths(
     from pyspark.sql import Window
 
     from ..operators import graph
-    from ..session import scope_caches
 
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_suppkey", "l_orderkey"
@@ -3577,14 +3539,13 @@ def graph_shortest_paths(
         .filter(F.col("n_nationkey") == 0)
         .select(F.col("n_nationkey").cast("long").alias("node"))
     )
-    held: list = []
     dist = graph.shortest_paths(
-        backbone, seeds, max_iter=max_iter, caches=held
+        backbone, seeds, max_iter=max_iter
     )
     out = dist.select(
         F.col("node").alias("nationkey"), F.col("dist").alias("cost")
     )
-    return scope_caches(out, *held)
+    return out
 
 
 @register(
@@ -3646,7 +3607,6 @@ def graph_scc(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     from ..operators import graph
-    from ..session import scope_caches
 
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_suppkey", "l_orderkey"
@@ -3680,9 +3640,8 @@ def graph_scc(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n2").cast("long").alias("dst"),
         )
     )
-    held: list = []
-    out = graph.strongly_connected_components(backbone, caches=held)
-    return scope_caches(out, *held)
+    out = graph.strongly_connected_components(backbone)
+    return out
 
 
 @register(
@@ -3742,10 +3701,8 @@ def events_hll_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the correctness gate.  No second scan, no window, no all-pairs
     over rows.
     """
-    from ..session import scope_caches
-
     e = load_table(spark, sf_dir, "events")
-    d = (
+    d = hold(
         e.select(
             "event_type",
             (
@@ -3817,7 +3774,7 @@ def events_hll_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.abs(est_inter - F.col("exact_inter")) <= 0.10 * exact_union
         ).alias("inter_within_10pct"),
     )
-    return scope_caches(out, d)
+    return out
 
 
 _BASKET_MINSUP = 50
@@ -4048,7 +4005,6 @@ def events_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 from ..operators import curation, dedup  # noqa: E402
-from ..session import scope_caches  # noqa: E402
 from .registry import _SQL_COS, _SQL_EMB  # noqa: E402
 
 # SRP parameters: 16 hyperplanes in 4 bands of 4 bits.  The weights are
@@ -4144,29 +4100,26 @@ def dedup_srp_recall(
     emb = load_table(spark, sf_dir, "embeddings")
     # Persist both (tiny) pair sets: each feeds its own count AND the
     # overlap join (see dedup_lsh_recall for the measured rationale);
-    # scoped to the returned frame so a long session releases them.
+    # held, so a long session releases them with the returned frame.
     from .registry import _emb_exact_pairs
 
-    caches: list[DataFrame] = []
     # truth side through the shared fingerprint-cached exact pair set
     # (built once per corpus, shared with dedup_embedding_recall)
-    exact = _emb_exact_pairs(spark, sf_dir, threshold=0.4).persist()
-    srp = (
+    exact = hold(_emb_exact_pairs(spark, sf_dir, threshold=0.4).persist())
+    srp = hold(
         dedup.srp_lsh_pairs(
             emb, threshold=0.4,
             num_hyperplanes=num_hyperplanes, bands=bands,
-            caches=caches,
         )
         .select("vec_a", "vec_b")
         .persist()
     )
     overlap = exact.join(srp, ["vec_a", "vec_b"])
-    ret = (
+    return (
         exact.agg(F.count("*").alias("n_exact"))
         .crossJoin(srp.agg(F.count("*").alias("n_srp")))
         .crossJoin(overlap.agg(F.count("*").alias("n_overlap")))
     )
-    return scope_caches(ret, exact, srp, *caches)
 
 
 _RESERVOIR_K = 25
@@ -4334,16 +4287,14 @@ def events_followed_by(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_id",
         )
     )
-    caches: list[DataFrame] = []
     out = associations.followed_by_pairs(
         ev,
         min_support=_FOLLOWED_BY_MINSUP,
         seq_col="session_id",
         item_col="event_type",
         order_cols=("ts", "event_id"),
-        caches=caches,
     )
-    return scope_caches(out, *caches)
+    return out
 
 
 _STRESS_MAX_SEED = 3   # seed customers: c_custkey <= 3 (keys start at 0)
@@ -4462,13 +4413,12 @@ def graph_stress_centrality(
         .filter(F.col("c_custkey") <= max_seed)
         .select((F.col("c_custkey") * 2).cast("long").alias("node"))
     )
-    held: list = []
     # dedupe_edges=False: the edge list is already DISTINCT and the
     # 2n/2n+1 bipartite namespaces cannot produce cross-direction
     # duplicates under symmetrization, so the operator's safety
     # re-distinct (a full edge-list shuffle) is provably redundant here
     stress = graph.stress_centrality(
-        edges, seeds, dedupe_edges=False, caches=held
+        edges, seeds, dedupe_edges=False
     )
     out = stress.select(
         F.when(F.col("node") % 2 == 0, F.lit("customer"))
@@ -4477,7 +4427,7 @@ def graph_stress_centrality(
         F.expr("node div 2").cast("long").alias("entity_id"),
         "stress",
     )
-    return scope_caches(out, *held)
+    return out
 
 
 _SUBSTR_K = 20          # gram width = minimal detectable run, tokens
@@ -5430,7 +5380,7 @@ def _sql_coarsen_scored(passes: int) -> str:
 
 
 def _coarsened_purchase_partition(
-    spark: SparkSession, sf_dir: str, edges: DataFrame, held: list
+    spark: SparkSession, sf_dir: str, edges: DataFrame
 ) -> DataFrame:
     """The coarsened (node, community) partition of the purchase graph,
     shared by graph_louvain_coarsen and graph_louvain_scored, with the
@@ -5489,14 +5439,12 @@ def _coarsened_purchase_partition(
         ).select(
             "node", F.coalesce("__to", "community").alias("community")
         )
-    comm = graph.louvain_coarsen(
+    comm = hold(graph.louvain_coarsen(
         edges,
         seed,
         passes=_COARSEN_PASSES,
         assume_canonical=True,
-        caches=held,
-    ).persist()
-    held.append(comm)
+    ).persist())
     rows = sorted(
         tuple(r)
         for r in comm.select(
@@ -5560,15 +5508,13 @@ def graph_louvain_coarsen(spark: SparkSession, sf_dir: str) -> DataFrame:
     operators/graph.louvain_coarsen; this query seeds it with the
     16-shard hash partition.  See SCALING.md.
     """
-    from ..session import scope_caches
-
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey"
     )
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_suppkey"
     )
-    edges = (
+    edges = hold(
         orders.join(li, orders["o_orderkey"] == li["l_orderkey"])
         .select(
             (F.col("o_custkey") * 2).cast("long").alias("src"),
@@ -5577,8 +5523,7 @@ def graph_louvain_coarsen(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .persist()
     )
-    held: list = [edges]
-    comm = _coarsened_purchase_partition(spark, sf_dir, edges, held)
+    comm = _coarsened_purchase_partition(spark, sf_dir, edges)
     out = comm.select(
         F.when(F.col("node") % 2 == 0, F.lit("customer"))
         .otherwise(F.lit("supplier"))
@@ -5586,7 +5531,7 @@ def graph_louvain_coarsen(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("node div 2").cast("long").alias("entity_id"),
         "community",
     )
-    return scope_caches(out, *held)
+    return out
 
 
 @register("graph_louvain_scored", oracle=_sql_coarsen_scored(_COARSEN_PASSES))
@@ -5623,7 +5568,6 @@ def graph_louvain_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     1-row fan-ins.  See SCALING.md.
     """
     from ..operators import graph
-    from ..session import scope_caches
 
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey"
@@ -5631,7 +5575,7 @@ def graph_louvain_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_suppkey"
     )
-    edges = (
+    edges = hold(
         orders.join(li, orders["o_orderkey"] == li["l_orderkey"])
         .select(
             (F.col("o_custkey") * 2).cast("long").alias("src"),
@@ -5640,19 +5584,17 @@ def graph_louvain_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .persist()
     )
-    held: list = [edges]
     # the coarsened partition is served from the build cache when the
     # sibling query (or a prior job) already ran the loop — see
     # _coarsened_purchase_partition; this query then pays only its own
     # |E| contraction + the bounded scoring
-    comm = _coarsened_purchase_partition(spark, sf_dir, edges, held)
+    comm = _coarsened_purchase_partition(spark, sf_dir, edges)
     # contract under the FINAL partition; persist — the weighted
     # scorer reads it three times (m, degrees, in-community weights)
     # and each read would otherwise replay the |E| double-join
-    g = graph.contract_graph(
-        edges, comm, assume_canonical=True, caches=held
-    ).persist()
-    held.append(g)
+    g = hold(graph.contract_graph(
+        edges, comm, assume_canonical=True
+    ).persist())
     ident = (
         g.select(F.col("src").alias("node"))
         .unionByName(g.select(F.col("dst").alias("node")))
@@ -5660,12 +5602,12 @@ def graph_louvain_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("node", F.col("node").alias("community"))
     )
     scored = graph.modularity_score(
-        g, ident, weight_col="weight", assume_canonical=True, caches=held
+        g, ident, weight_col="weight", assume_canonical=True
     )
     out = scored.select(
         "community", "in_edges", "deg_sum", "contrib_num", "q_e6"
     )
-    return scope_caches(out, *held)
+    return out
 
 
 @register("graph_refine_weighted", oracle=_sql_refine_weighted())
@@ -5705,7 +5647,6 @@ def graph_refine_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     released via session.checkpoint_handle.  See SCALING.md.
     """
     from ..operators import graph
-    from ..session import checkpoint_handle, scope_caches
 
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey"
@@ -5713,7 +5654,7 @@ def graph_refine_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_suppkey"
     )
-    edges = (
+    edges = hold(
         orders.join(li, orders["o_orderkey"] == li["l_orderkey"])
         .select(
             (F.col("o_custkey") * 2).cast("long").alias("src"),
@@ -5722,7 +5663,6 @@ def graph_refine_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .persist()
     )
-    held: list = [edges]
     shard = (
         edges.select(F.col("src").alias("node"))
         .unionByName(edges.select(F.col("dst").alias("node")))
@@ -5733,10 +5673,10 @@ def graph_refine_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     g = graph.contract_graph(
-        edges, shard, assume_canonical=True, caches=held
+        edges, shard, assume_canonical=True
     ).localCheckpoint()
-    held.append(checkpoint_handle(g))
-    seed = (
+    hold(checkpoint_handle(g))
+    seed = hold(
         g.select(F.col("src").alias("node"))
         .unionByName(g.select(F.col("dst").alias("node")))
         .distinct()
@@ -5748,31 +5688,27 @@ def graph_refine_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .persist()
     )
-    held.append(seed)
     # the sweep and both scorings derive the identical degree rollup
     # from the checkpointed super-graph — computed once and threaded
     # through (r19, guide §1.2; the duplication was three degree
     # shuffles per run; m stays in-plan — the eager-collect form
     # measured slower, OPTIMIZATION_r19.md)
-    sdeg, _ = graph.modularity_stats(
-        g, weight_col="weight", caches=held, collect_m=False
+    sdeg = hold(
+        graph.modularity_stats(g, weight_col="weight", collect_m=False)[0]
     )
-    swept = graph.modularity_refine_step(
-        g, seed, weight_col="weight", assume_canonical=True, caches=held,
+    swept = hold(graph.modularity_refine_step(
+        g, seed, weight_col="weight", assume_canonical=True,
         deg=sdeg,
-    ).persist()
-    held.append(swept)
+    ).persist())
     q0 = (
         graph.modularity_score(
-            g, seed, weight_col="weight", assume_canonical=True,
-            caches=held, deg=sdeg,
+            g, seed, weight_col="weight", assume_canonical=True, deg=sdeg,
         )
         .agg(F.max("q_e6").alias("q_seed_e6"))
     )
     q1 = (
         graph.modularity_score(
-            g, swept, weight_col="weight", assume_canonical=True,
-            caches=held, deg=sdeg,
+            g, swept, weight_col="weight", assume_canonical=True, deg=sdeg,
         )
         .agg(F.max("q_e6").alias("q_swept_e6"))
     )
@@ -5799,7 +5735,7 @@ def graph_refine_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("q_swept_e6") > F.col("q_seed_e6")).alias("adopted"),
         )
     )
-    return scope_caches(out, *held)
+    return out
 
 
 def _q_lit(spark: SparkSession, name: str, val) -> DataFrame:
@@ -5899,11 +5835,10 @@ def graph_refine_adopt(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows with 1-row Q fan-ins).  See SCALING.md.
     """
     from ..operators import graph
-    from ..session import checkpoint_handle, scope_caches
 
     edges = _weighted_backbone(spark, sf_dir).localCheckpoint()
-    held: list = [checkpoint_handle(edges)]
-    seed = (
+    hold(checkpoint_handle(edges))
+    seed = hold(
         edges.select(F.col("src").alias("node"))
         .unionByName(edges.select(F.col("dst").alias("node")))
         .distinct()
@@ -5915,7 +5850,6 @@ def graph_refine_adopt(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .persist()
     )
-    held.append(seed)
     # the REAL guarded operator (eager: sweep + two scorings + the
     # driver-side decision), not a re-derivation — its returned
     # partition is the hashed claim.  The sweep output and both exact
@@ -5924,12 +5858,10 @@ def graph_refine_adopt(spark: SparkSession, sf_dir: str) -> DataFrame:
     # refine_step + two query-level scorings duplicated every job the
     # eager guard had already run — guide §1.2).
     ev: dict = {}
-    guarded = graph.modularity_refine_guarded(
-        edges, seed, weight_col="weight", assume_canonical=True,
-        caches=held, evidence=ev,
-    ).persist()
-    held.append(guarded)
-    swept = ev["swept"]  # persisted by the guard, tracked in `held`
+    guarded = hold(graph.modularity_refine_guarded(
+        edges, seed, weight_col="weight", assume_canonical=True, evidence=ev,
+    ).persist())
+    swept = ev["swept"]  # persisted and held by the guard
     q0 = _q_lit(spark, "q_seed_e6", ev["q_in_e6"])
     q1 = _q_lit(spark, "q_swept_e6", ev["q_swept_e6"])
     out = (
@@ -5965,7 +5897,7 @@ def graph_refine_adopt(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("q_swept_e6") > F.col("q_seed_e6")).alias("adopted"),
         )
     )
-    return scope_caches(out, *held)
+    return out
 
 
 def _sql_refine_pass() -> str:
@@ -6092,10 +6024,9 @@ def graph_refine_pass(spark: SparkSession, sf_dir: str) -> DataFrame:
     fan-ins.  See SCALING.md.
     """
     from ..operators import graph
-    from ..session import checkpoint_handle, scope_caches
 
     edges = _weighted_backbone(spark, sf_dir).localCheckpoint()
-    held: list = [checkpoint_handle(edges)]
+    hold(checkpoint_handle(edges))
     ident = (
         edges.select(F.col("src").alias("node"))
         .unionByName(edges.select(F.col("dst").alias("node")))
@@ -6105,25 +6036,22 @@ def graph_refine_pass(spark: SparkSession, sf_dir: str) -> DataFrame:
     # merge + the guard's sweep/scorings share the backbone's degree
     # rollup — computed once and threaded through (r19, guide §1.2; m
     # stays in-plan, the eager form measured slower)
-    sdeg, _ = graph.modularity_stats(
-        edges, weight_col="weight", caches=held, collect_m=False
+    sdeg = hold(
+        graph.modularity_stats(edges, weight_col="weight", collect_m=False)[0]
     )
     merged = graph.modularity_merge_step(
-        edges, ident, weight_col="weight", assume_canonical=True,
-        caches=held, deg=sdeg,
+        edges, ident, weight_col="weight", assume_canonical=True, deg=sdeg,
     ).localCheckpoint()
-    held.append(checkpoint_handle(merged))
+    hold(checkpoint_handle(merged))
     # sweep output + both exact Q values come from the eager guard's
     # evidence out-param — the standalone refine_step and the two
     # query-level scorings duplicated every job the guard had already
     # run (r18, guide §1.2)
     ev: dict = {}
-    guarded = graph.modularity_refine_guarded(
-        edges, merged, weight_col="weight", assume_canonical=True,
-        caches=held, evidence=ev, deg=sdeg,
-    ).persist()
-    held.append(guarded)
-    swept = ev["swept"]  # persisted by the guard, tracked in `held`
+    guarded = hold(graph.modularity_refine_guarded(
+        edges, merged, weight_col="weight", assume_canonical=True, evidence=ev, deg=sdeg,
+    ).persist())
+    swept = ev["swept"]  # persisted and held by the guard
     q0 = _q_lit(spark, "q_merged_e6", ev["q_in_e6"])
     q1 = _q_lit(spark, "q_swept_e6", ev["q_swept_e6"])
     out = (
@@ -6161,7 +6089,7 @@ def graph_refine_pass(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    return scope_caches(out, *held)
+    return out
 
 
 @register("graph_refine_loop", oracle=_sql_refine_loop())
@@ -6201,10 +6129,9 @@ def graph_refine_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
     fan-ins.  See SCALING.md.
     """
     from ..operators import graph
-    from ..session import checkpoint_handle, scope_caches
 
     edges = _weighted_backbone(spark, sf_dir).localCheckpoint()
-    held: list = [checkpoint_handle(edges)]
+    hold(checkpoint_handle(edges))
 
     def _singletons(g: DataFrame) -> DataFrame:
         return (
@@ -6224,23 +6151,22 @@ def graph_refine_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
         # VERDICT r18 next-round #3: the duplication was four degree
         # shuffles per pass).  m stays in-plan — the eager-collect
         # form measured slower (OPTIMIZATION_r19.md).
-        sdeg, _ = graph.modularity_stats(
-            g, weight_col="weight", caches=held, collect_m=False
+        sdeg = hold(
+            graph.modularity_stats(g, weight_col="weight", collect_m=False)[0]
         )
         merged = graph.modularity_merge_step(
             g, _singletons(g), weight_col="weight",
-            assume_canonical=True, caches=held, deg=sdeg,
+            assume_canonical=True, deg=sdeg,
         ).localCheckpoint()
-        held.append(checkpoint_handle(merged))
+        hold(checkpoint_handle(merged))
         # the eager guard already ran the sweep and both scorings —
         # its evidence out-param replaces the standalone refine_step
         # and the two per-pass query-level scorings (r18, guide §1.2)
         ev: dict = {}
         guarded = graph.modularity_refine_guarded(
-            g, merged, weight_col="weight", assume_canonical=True,
-            caches=held, evidence=ev, deg=sdeg,
+            g, merged, weight_col="weight", assume_canonical=True, evidence=ev, deg=sdeg,
         ).localCheckpoint()
-        held.append(checkpoint_handle(guarded))
+        hold(checkpoint_handle(guarded))
         q_m = _q_lit(spark, "qm", ev["q_in_e6"])
         q_s = _q_lit(spark, "qs", ev["q_swept_e6"])
         return merged, guarded, q_m, q_s, sdeg
@@ -6248,9 +6174,8 @@ def graph_refine_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
     merged1, guarded1, q_m1, q_s1, deg1 = _pass(edges)
     g2 = graph.contract_graph(
         edges, guarded1, weight_col="weight", assume_canonical=True,
-        caches=held,
     ).localCheckpoint()
-    held.append(checkpoint_handle(g2))
+    hold(checkpoint_handle(g2))
     merged2, guarded2, q_m2, q_s2, _deg2 = _pass(g2)
     fin = (
         guarded1.select(
@@ -6271,14 +6196,13 @@ def graph_refine_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .localCheckpoint()
     )
-    held.append(checkpoint_handle(fin))
+    hold(checkpoint_handle(fin))
     q_fin = (
         graph.modularity_score(
             edges,
             fin.select("node", F.col("final_community").alias("community")),
             weight_col="weight",
             assume_canonical=True,
-            caches=held,
             # pass 1 ran on the ORIGINAL backbone, so its degree
             # rollup is exactly this scoring's deg — the fifth reuse
             deg=deg1,
@@ -6331,7 +6255,7 @@ def graph_refine_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    return scope_caches(out, *held)
+    return out
 
 
 @register("graph_modularity_merge", oracle=_sql_merge())
@@ -6357,7 +6281,6 @@ def graph_modularity_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcastable mapping join.  See SCALING.md.
     """
     from ..operators import graph
-    from ..session import scope_caches
 
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey"
@@ -6369,7 +6292,7 @@ def graph_modularity_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     # a reversed duplicate or a self-loop, so the frame is already a
     # simple undirected edge list — assume_canonical skips the
     # redundant re-distinct (the graph_modularity pattern)
-    edges = (
+    edges = hold(
         orders.join(li, orders["o_orderkey"] == li["l_orderkey"])
         .select(
             (F.col("o_custkey") * 2).cast("long").alias("src"),
@@ -6383,7 +6306,6 @@ def graph_modularity_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     # graph) — left lazy, one action materializes them concurrently
     # and the scan+join+distinct build re-executes per reference
     edges.count()
-    held: list = [edges]
     seed = (
         edges.select(F.col("src").alias("node"))
         .unionByName(edges.select(F.col("dst").alias("node")))
@@ -6394,7 +6316,7 @@ def graph_modularity_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     merged = graph.modularity_merge_step(
-        edges, seed, assume_canonical=True, caches=held
+        edges, seed, assume_canonical=True
     )
     out = merged.select(
         F.when(F.col("node") % 2 == 0, F.lit("customer"))
@@ -6403,7 +6325,7 @@ def graph_modularity_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("node div 2").cast("long").alias("entity_id"),
         "community",
     )
-    return scope_caches(out, *held)
+    return out
 
 
 @register("graph_modularity", oracle=_sql_modularity(_LPA_ITERS))
@@ -6426,26 +6348,23 @@ def graph_modularity(
     SCALING.md.
     """
     from ..operators import graph
-    from ..session import scope_caches
 
     # LPA's output lineage ends at a localCheckpoint whose handle must
-    # survive until the SCORED frame is consumed — thread both
-    # operators' caches and scope them to the returned frame (the
-    # graph_stress_centrality pattern; an early release fails hard
-    # with CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND, by contract).
-    held: list = []
+    # survive until the SCORED frame is consumed — both operators are
+    # nested in this query's scope, so their blocks live as long as
+    # the returned frame (an early release fails hard with
+    # CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND).
     # the 4-table backbone build feeds BOTH operators' canonicalization
     # persists — cache it once (measured ~1.5 s of the warm runtime)
-    backbone = _lpa_backbone(spark, sf_dir).persist()
-    held.append(backbone)
-    comm = graph.label_propagation(backbone, iters=iters, caches=held)
+    backbone = hold(_lpa_backbone(spark, sf_dir).persist())
+    comm = graph.label_propagation(backbone, iters=iters)
     # the backbone IS canonical (least/greatest + distinct + no self
     # loops in _lpa_backbone) and persisted above — skip the scorer's
     # redundant re-distinct + second persist (ADVICE r14)
     out = graph.modularity_score(
-        backbone, comm, assume_canonical=True, caches=held
+        backbone, comm, assume_canonical=True
     )
-    return scope_caches(out, *held)
+    return out
 
 
 # Shared actuator chain on top of _SQL_SUBSTR_CTES' runs: keep-first-
@@ -6507,14 +6426,12 @@ def dedup_substring_cuts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..operators import dedup
 
-    caches: list[DataFrame] = []
     runs = dedup.substring_run_pairs(
         load_table(spark, sf_dir, "documents"),
         k=_SUBSTR_K,
         max_gram_occ=_SUBSTR_MAX_OCC,
-        caches=caches,
     )
-    return scope_caches(dedup.substring_cut_spans(runs), *caches)
+    return dedup.substring_cut_spans(runs)
 
 
 @register(
@@ -6580,19 +6497,16 @@ def dedup_substring_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import dedup
 
     docs = load_table(spark, sf_dir, "documents")
-    caches: list[DataFrame] = []
     runs = dedup.substring_run_pairs(
-        docs, k=_SUBSTR_K, max_gram_occ=_SUBSTR_MAX_OCC, caches=caches
+        docs, k=_SUBSTR_K, max_gram_occ=_SUBSTR_MAX_OCC
     )
     cleaned = dedup.apply_substring_cuts(
         docs, dedup.substring_cut_spans(runs)
     )
-    return scope_caches(cleaned, *caches)
+    return cleaned
 
 
-def _intra_cleaned_planted(
-    spark: SparkSession, sf_dir: str, held: list
-) -> DataFrame:
+def _intra_cleaned_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The stage-1 INTRA-cleaned planted corpus shared by
     dedup_substring_self_apply and dedup_substring_pipeline, served
     from the buildcache FRAME tier (VERDICT r17 next-round #4: the two
@@ -6626,7 +6540,7 @@ def _intra_cleaned_planted(
     docs = load_table(spark, sf_dir, "documents")
     planted = _planted_self_view(docs)
     self_runs = dedup.substring_self_run_pairs(
-        planted, k=_SUBSTR_K, max_gram_occ=_SUBSTR_MAX_OCC, caches=held
+        planted, k=_SUBSTR_K, max_gram_occ=_SUBSTR_MAX_OCC
     )
     cleaned = dedup.apply_substring_cuts(
         planted,
@@ -6706,9 +6620,7 @@ def dedup_substring_self_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage 1, previously recomputed per bench pass —
     :func:`_intra_cleaned_planted`).  See SCALING.md.
     """
-    caches: list[DataFrame] = []
-    cleaned = _intra_cleaned_planted(spark, sf_dir, caches)
-    return scope_caches(cleaned, *caches)
+    return _intra_cleaned_planted(spark, sf_dir)
 
 
 @register(
@@ -6857,12 +6769,10 @@ def dedup_substring_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..operators import dedup
 
-    caches: list[DataFrame] = []
-    intra = _intra_cleaned_planted(spark, sf_dir, caches).persist()
-    caches.append(intra)
+    intra = hold(_intra_cleaned_planted(spark, sf_dir).persist())
     corpus = intra.select("doc_id", "text")
     cross_runs = dedup.substring_run_pairs(
-        corpus, k=_SUBSTR_K, max_gram_occ=_SUBSTR_MAX_OCC, caches=caches
+        corpus, k=_SUBSTR_K, max_gram_occ=_SUBSTR_MAX_OCC
     )
     final = dedup.apply_substring_cuts(
         corpus, dedup.substring_cut_spans(cross_runs)
@@ -6881,7 +6791,7 @@ def dedup_substring_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_removed_intra",
         F.col("n_removed").alias("n_removed_cross"),
     )
-    return scope_caches(out, *caches)
+    return out
 
 
 @register(
@@ -7224,7 +7134,6 @@ def dedup_substring_incremental(
     SCALING.md.
     """
     from ..operators import dedup
-    from ..session import scope_caches
 
     docs = load_table(spark, sf_dir, "documents")
     arrivals = docs.filter(
@@ -7233,7 +7142,6 @@ def dedup_substring_incremental(
     corpus = docs.filter(
         F.col("doc_id") % 10 != _SUBSTR_DROP_MOD
     ).select("doc_id", "text")
-    held: list[DataFrame] = []
     # the pre-built versioned index, actually served as one (r18): the
     # frame tier materializes it once per corpus fingerprint, so every
     # later drop pays only its own legs — the documented 100 TB shape
@@ -7253,10 +7161,9 @@ def dedup_substring_incremental(
         index,
         k=_SUBSTR_K,
         max_gram_occ=_SUBSTR_MAX_OCC,
-        caches=held,
         index_counts=counts,
     ).persist()  # feeds the cut chain AND the per-leg accounting
-    held.append(runs)
+    hold(runs)
     cutruns = runs.select(
         F.when(F.col("a_is_new") & F.col("b_is_new"), F.col("doc_b"))
         .when(F.col("a_is_new"), F.col("doc_a"))
@@ -7293,4 +7200,4 @@ def dedup_substring_incremental(
         .cast("long")
         .alias("n_runs_in_drop"),
     )
-    return scope_caches(out, *held)
+    return out

@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import buildcache, dedup, joins, pipeline
-from ..session import scope_caches
+from ..session import hold, owned, scoped
 from ..sources.files import load_table, table_fingerprint
 from . import synthetic
 
@@ -31,7 +31,12 @@ _ORACLES: dict[str, str] = {}
 
 
 def register(name: str, oracle: str | None = None):
+    """Register a query body under ``name``; the body runs
+    :func:`..session.scoped`, so the blocks its operators hold live
+    until the caller drops the returned frame."""
+
     def deco(fn: QueryFn) -> QueryFn:
+        fn = scoped(fn)
         _QUERIES[name] = fn
         if oracle is not None:
             _ORACLES[name] = oracle
@@ -487,10 +492,8 @@ def dedup_prefix_prune_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     an O(vocabulary) aggregate over the df table, no join at all.
     """
     docs = load_table(spark, sf_dir, "documents")
-    caches: list[DataFrame] = []
-    e = dedup._exploded_terms(docs, 3).persist()
+    e = hold(dedup._exploded_terms(docs, 3).persist())
     e.count()
-    caches.append(e)
     dfq = e.groupBy("term").agg(F.count("*").alias("df"))
     stop = dfq.filter(F.col("df") > _MAX_SHINGLE_FREQ).select("term")
     e_cap = e.join(stop, "term", "left_anti").select("doc_id", "term")
@@ -511,9 +514,8 @@ def dedup_prefix_prune_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("n_join_rows_naive")
     )
-    cand = dedup.prefix_candidates(e, 0.7).persist()
+    cand = hold(dedup.prefix_candidates(e, 0.7).persist())
     cand.count()
-    caches.append(cand)
     # Truth side through the ingest-time build cache (VERDICT r12 #5):
     # the verified J >= 0.7 pair set is a pure deterministic function
     # of the corpus (exact integer Jaccard over the complete-by-theorem
@@ -539,8 +541,7 @@ def dedup_prefix_prune_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # join, making the comparison a real two-sided check.
     n_co = co.agg(F.count("*").alias("n_coshingled_capped"))
     n_cand = cand.agg(F.count("*").alias("n_candidates"))
-    tr = truth.persist()
-    caches.append(tr)
+    tr = hold(truth.persist())
     n_true = tr.agg(F.count("*").alias("n_true"))
     n_hit = (
         tr.join(cand, ["doc_a", "doc_b"], "left_semi")
@@ -559,7 +560,7 @@ def dedup_prefix_prune_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("n_true") == F.col("__h")).alias("candidates_complete"),
         )
     )
-    return scope_caches(out, *caches)
+    return out
 
 
 @register(
@@ -767,7 +768,6 @@ def dedup_snm_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     number, not a hope.
     """
     docs = load_table(spark, sf_dir, "documents")
-    caches: list[DataFrame] = []
     # Truth = the complete prefix-filtered exact-Jaccard pair set —
     # deterministic per (corpus, threshold, n), riding the ingest-time
     # build cache.  The entry is SHARED with dedup_prefix_prune_eval
@@ -778,7 +778,7 @@ def dedup_snm_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         sf_dir,
         lambda: dedup.ngram_jaccard_prefix_pairs(
-            docs, threshold=0.7, n=3, caches=caches
+            docs, threshold=0.7, n=3
         ).select("doc_a", "doc_b"),
     )
     # Recall numerators by DEFINITION (r15): |truth ∩ cand| via two
@@ -800,11 +800,10 @@ def dedup_snm_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.least("doc_id", "other").alias("doc_a"),
         F.greatest("doc_id", "other").alias("doc_b"),
     )
-    c1 = pair(dedup._snm_candidates_sharded(k1, 3, None, caches))
-    c2 = pair(dedup._snm_candidates_sharded(k2, 3, None, caches))
-    tr = truth.persist()
+    c1 = pair(dedup._snm_candidates_sharded(k1, 3, None))
+    c2 = pair(dedup._snm_candidates_sharded(k2, 3, None))
+    tr = hold(truth.persist())
     tr.count()
-    caches.append(tr)
     n_true = tr.agg(F.count("*").alias("n_true"))
     counts = (
         tr.join(c1, ["doc_a", "doc_b"], "left_semi")
@@ -831,7 +830,7 @@ def dedup_snm_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         rec("n_snm_1pass", "recall_1pass_e6"),
         rec("n_snm_2pass", "recall_2pass_e6"),
     )
-    return scope_caches(out, *caches)
+    return out
 
 
 _CONTAIN_E6 = 800_000
@@ -1270,14 +1269,14 @@ def dedup_embedding_recall(
     brute-force result-set query ``dedup_embedding_cosine``."""
     # Each pair-set feeds BOTH its own count and the overlap join —
     # persist the (tiny) pair results so neither quadratic/bucketed
-    # pipeline executes twice in the one action.  Scoped to the returned
-    # frame: unpersisted when the caller drops its reference, so a
-    # long-lived session does not accumulate cached blocks.
-    exact = _emb_exact_pairs(spark, sf_dir, threshold=0.4).persist()
+    # pipeline executes twice in the one action.  Held: unpersisted when
+    # the caller drops the returned frame, so a long-lived session does
+    # not accumulate cached blocks.
+    exact = hold(_emb_exact_pairs(spark, sf_dir, threshold=0.4).persist())
     # index side = the shared ingest-time semantic pair-graph build
     # (_emb_pair_graph, defined below) — also consumed by
     # dedup_multi_signal, so the eval amortizes the bucketing pass.
-    bkt = (
+    bkt = hold(
         _emb_pair_graph(
             spark, sf_dir, threshold=0.4, centroid_modulus=centroid_modulus,
             train_iters=train_iters, spill=spill,
@@ -1286,12 +1285,11 @@ def dedup_embedding_recall(
         .persist()
     )
     overlap = exact.join(bkt, ["vec_a", "vec_b"])
-    ret = (
+    return (
         exact.agg(F.count("*").alias("n_exact"))
         .crossJoin(bkt.agg(F.count("*").alias("n_bucketed")))
         .crossJoin(overlap.agg(F.count("*").alias("n_overlap")))
     )
-    return scope_caches(ret, exact, bkt)
 
 
 @register(
@@ -1346,36 +1344,29 @@ def dedup_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the overlap join, and without the cache each full dedup pipeline
     # executes twice in the one action (measured ~2× eval runtime).
     # All persists (including the operators' internal inverted-index /
-    # candidate caches, handed out via ``caches``) are scoped to the
-    # returned frame so they release when the caller drops it.
-    caches: list[DataFrame] = []
+    # candidate caches) are held in this query's scope, so they release
+    # when the caller drops the returned frame.
     # Exact truth side = the shared ingest-time pair-graph build
     # (_dup_pair_graph, defined below) — identical params, so the five
     # consumer queries amortize one verification pass.
-    exact = (
-        _dup_pair_graph(spark, sf_dir, caches=caches)
-        .select("doc_a", "doc_b")
-        .persist()
-    )
-    lsh = (
+    exact = hold(_dup_pair_graph(spark, sf_dir).select("doc_a", "doc_b").persist())
+    lsh = hold(
         dedup.minhash_lsh_pairs(
             docs,
             threshold=0.7,
             shingle_n=3,
             num_hashes=_MINHASH_N,
             num_bands=_MINHASH_BANDS,
-            caches=caches,
         )
         .select("doc_a", "doc_b")
         .persist()
     )
     overlap = exact.join(lsh, ["doc_a", "doc_b"])
-    ret = (
+    return (
         exact.agg(F.count("*").alias("n_exact"))
         .crossJoin(lsh.agg(F.count("*").alias("n_lsh")))
         .crossJoin(overlap.agg(F.count("*").alias("n_overlap")))
     )
-    return scope_caches(ret, exact, lsh, *caches)
 
 
 # --------------------------------------------------------------------------
@@ -1470,9 +1461,7 @@ _DUP_PAIR_CACHE_MAX_ROWS = 250_000
 _DUP_PAIR_SCHEMA = "doc_a long, doc_b long, jaccard double"
 
 
-def _dup_pair_graph(
-    spark: SparkSession, sf_dir: str, caches: list[DataFrame] | None = None
-) -> DataFrame:
+def _dup_pair_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The verified trigram-Jaccard near-dup pair graph — the shared
     ingest-time build consumed by five registered queries
     (dedup_clusters, dedup_clusters_star, dedup_multi_signal,
@@ -1488,10 +1477,9 @@ def _dup_pair_graph(
     set skips the cache and returns the live distributed plan — the
     100 TB-safe degradation.
 
-    ``caches`` matters only on the LIVE path (cache miss + over-cap):
-    it hands the operator's internal index persists to the caller for
-    result-scoped release; on the cached path the returned frame is a
-    LocalRelation and ``caches`` stays untouched.
+    On the LIVE path (cache miss + over-cap) the operator's internal
+    index persists go to the caller's scope; a completed build releases
+    them at once, since the returned frame is then a LocalRelation.
     """
     ckey = (
         "dup_pairs",
@@ -1503,26 +1491,23 @@ def _dup_pair_graph(
     hit = buildcache.lookup(ckey)
     if hit is not None:
         return buildcache.rehydrate(spark, hit, _DUP_PAIR_SCHEMA)
-    own: list[DataFrame] = []
-    pairs = dedup.ngram_jaccard_pairs(
-        load_table(spark, sf_dir, "documents"),
-        threshold=0.7,
-        n=3,
-        max_shingle_freq=_MAX_SHINGLE_FREQ,
-        caches=own,
-    )
-    rows = pairs.limit(_DUP_PAIR_CACHE_MAX_ROWS + 1).collect()
+    with owned() as build:
+        pairs = dedup.ngram_jaccard_pairs(
+            load_table(spark, sf_dir, "documents"),
+            threshold=0.7,
+            n=3,
+            max_shingle_freq=_MAX_SHINGLE_FREQ,
+        )
+        rows = pairs.limit(_DUP_PAIR_CACHE_MAX_ROWS + 1).collect()
     if len(rows) > _DUP_PAIR_CACHE_MAX_ROWS:
         # Too large to hold driver-side: hand the internal persists to
-        # the caller (live-plan consumption) and serve the plan itself.
-        if caches is not None:
-            caches.extend(own)
-            return pairs
-        return scope_caches(pairs, *own)
+        # the caller's scope (live-plan consumption) and serve the plan.
+        hold(*build)
+        return pairs
     # The build is complete — its internal inverted-index persists have
-    # served their purpose; release them now instead of scoping to the
-    # (already materialized) result.
-    for c in own:
+    # served their purpose; release them now instead of holding them
+    # for the (already materialized) result.
+    for c in build:
         c.unpersist(False)
     data = [(int(r["doc_a"]), int(r["doc_b"]), float(r["jaccard"])) for r in rows]
     buildcache.store(ckey, data)
@@ -1605,11 +1590,7 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     min-label propagation) over the ngram-Jaccard near-dup pair graph.
     O(diameter) rounds — the right engine for clique-ish near-dup
     graphs (measured diameter 2-4)."""
-    caches: list[DataFrame] = []
-    pairs = _dup_pair_graph(spark, sf_dir, caches=caches)
-    return scope_caches(
-        curation.connected_components(pairs, caches=caches), *caches
-    )
+    return curation.connected_components(_dup_pair_graph(spark, sf_dir))
 
 
 @register("dedup_clusters_star", oracle=_SQL_CC_ORACLE)
@@ -1618,9 +1599,7 @@ def dedup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(log n)-round engine for long-chain graphs at billion-edge scale;
     identical assignment to dedup_clusters (same oracle), supplementary
     dual outside the driver window."""
-    caches: list[DataFrame] = []
-    pairs = _dup_pair_graph(spark, sf_dir, caches=caches)
-    return scope_caches(curation.cc_star(pairs, caches=caches), *caches)
+    return curation.cc_star(_dup_pair_graph(spark, sf_dir))
 
 
 @register(
@@ -1690,8 +1669,7 @@ def dedup_multi_signal(
     paths; the union is a distinct over two bounded pair sets; CC is
     the O(diameter) propagation engine (swap cc_star for long chains).
     """
-    caches: list[DataFrame] = []
-    text_pairs = _dup_pair_graph(spark, sf_dir, caches=caches).select(
+    text_pairs = _dup_pair_graph(spark, sf_dir).select(
         "doc_a", "doc_b"
     )
     emb_pairs = _emb_pair_graph(
@@ -1704,15 +1682,15 @@ def dedup_multi_signal(
     # the edge frame twice (u→v ∪ v→u) and each label round re-reads it —
     # without this the ENTIRE two-signal pair generation (shingling +
     # bucketed cosine) re-executes per reference (measured the dominant
-    # cost of this query).  Scoped to the result via scope_caches.
+    # cost of this query).  Held in this query's scope.
     # Star contraction, not propagation: the multi-signal union CHAINS
     # lexical and semantic edges (a text-dup of a semantic-dup of ...),
     # so component diameters exceed the single-signal clique-ish graphs
     # propagation is tuned for — star's O(log n) rounds measure ≥ as
     # fast here and degrade gracefully on longer chains.  Identical
     # cluster ids (property-tested equivalence; same oracle).
-    edges = text_pairs.unionByName(emb_pairs).distinct().persist()
-    return scope_caches(curation.cc_star(edges, caches=caches), edges, *caches)
+    edges = hold(text_pairs.unionByName(emb_pairs).distinct().persist())
+    return curation.cc_star(edges)
 # --------------------------------------------------------------------------
 # Similarity search (SURVEY.md §2.6) over the embeddings table
 # --------------------------------------------------------------------------
@@ -3798,9 +3776,8 @@ def curation_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     the SQL mirror, not the plan).
     """
     docs = load_table(spark, sf_dir, "documents")
-    caches: list[DataFrame] = []
     clusters = curation.connected_components(
-        _dup_pair_graph(spark, sf_dir, caches=caches), caches=caches
+        _dup_pair_graph(spark, sf_dir)
     )
     quality = text_ops.text_stats(docs).select("doc_id", "quality_e6")
     j = quality.join(clusters, "doc_id", "left").select(
@@ -3816,7 +3793,7 @@ def curation_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max("quality_e6").alias("rep_quality_e6"),
         F.count("*").cast("long").alias("n_members"),
     )
-    return scope_caches(ret, *caches)
+    return ret
 
 
 @register(

@@ -27,8 +27,33 @@ wrong in both directions.  This factory pins the settings that matter:
   level for that logger only): the engine's unpartitioned windows are
   bounded by design, and the warning was over half of a bench's stderr.
 
-The module also holds the block-lifetime helpers the operators share
-(``scope_caches``, ``checkpoint_handle``) and the one iteration loop:
+The module also owns block lifetime — every persisted frame and every
+``localCheckpoint`` block the engine creates — through one scope:
+
+* ``hold(*blocks)`` registers persisted frames and
+  :func:`checkpoint_handle` handles with the innermost open scope.  With
+  no scope open it raises: an unscoped hold would leak.
+* ``@scoped`` opens a scope around a function that returns a DataFrame
+  (``plans.registry.register`` applies it to every query body).  When the
+  call is the outermost scoped call, every block held inside it — by the
+  function or by any scoped operator it called — is tied to the returned
+  frame and released (non-blocking unpersist) once the caller drops that
+  frame, i.e. after the caller's action.  A nested call hoists its
+  blocks to the caller's scope instead, so an inner frame the caller
+  composed and then dropped can never release a checkpoint the outer
+  plan still reads.  A call that raises releases the blocks it held
+  synchronously before the exception propagates, so a failed call
+  leaves nothing in the block manager.  ``@scoped(tie=False)`` skips
+  the tie at the outermost call and leaves the blocks to Spark's
+  ContextCleaner, for an operator whose result callers derive from and
+  drop (``curation.connected_components``).
+* ``with owned() as blocks:`` opens a scope whose blocks the caller
+  takes: nothing is tied or hoisted on exit, and the caller releases
+  them (or hands them to the enclosing scope with ``hold``).  For early
+  release after an eager build (``_dup_pair_graph``) and per-iteration
+  scratch (SCC's reach sets).  It too releases on raise.
+
+and the one iteration loop:
 
 * ``fixpoint`` — the checkpointed loop behind k_core, k_truss, the
   coreness h-index engine, label propagation, BFS, shortest paths, the
@@ -38,13 +63,17 @@ The module also holds the block-lifetime helpers the operators share
   job, not by a separate count.  The superseded round's checkpoint is
   released only after the convergence test has seen both rounds, and
   a loop that runs out of ``max_iter`` releases its live checkpoint
-  before it raises, so no block outlives a failed call.
+  before it raises; the final round's checkpoint is held in the
+  caller's scope.
 """
 
 from __future__ import annotations
 
+import functools
 import os
+import threading
 import weakref
+from contextlib import contextmanager
 from typing import Callable, NamedTuple
 
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -52,43 +81,83 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
-def scope_caches(result: DataFrame, *cached: DataFrame) -> DataFrame:
-    """Tie the lifetime of ``cached`` (persisted) frames to ``result``.
+class _Scopes(threading.local):
+    """Per-thread stack of open scopes, innermost last."""
 
-    Query functions return plans lazily — the caller runs the action — so
-    an in-function ``unpersist()`` would evict the cache before it is ever
-    hit.  Instead, register a ``weakref.finalize`` on the *result* frame:
-    when the caller drops its reference (i.e. after the action completes,
-    in every registry/bench/driver call pattern), each cached frame is
-    unpersisted (non-blocking) so a long-lived session does not accumulate
-    blocks in the block manager.
+    def __init__(self) -> None:
+        self.stack: list[list] = []
 
-    The finalizer holds only the JVM ``Dataset`` handles, never the Python
-    ``result`` object, so it cannot keep the result alive.  Errors are
-    swallowed: at interpreter shutdown the JVM gateway may already be gone.
 
-    CONTRACT SHARPENING (checkpoint handles on this seam): ``cached`` may
-    also be :class:`_RddHandle` objects from :func:`checkpoint_handle`.
-    For a PERSISTED frame, releasing early merely costs a recompute; for
-    a localCheckpoint handle the lineage was truncated at
-    materialization, so any plan still deriving from the checkpointed
-    frame fails hard ("checkpoint block not found") instead of
-    recomputing.  Callers passing checkpoint handles must therefore
-    ensure the returned ``result`` is the LAST plan that reads the
-    checkpoint — do not hand out other derived frames that outlive it
-    (see graph_bfs_hops for the caches= threading pattern).
-    """
-    jdfs = [c._jdf for c in cached]
+_scopes = _Scopes()
 
-    def _release(jdfs=jdfs):
-        for j in jdfs:
-            try:
-                j.unpersist(False)
-            except Exception:
-                pass
 
-    weakref.finalize(result, _release)
-    return result
+def _release(jdfs) -> None:
+    # Errors are swallowed: at interpreter shutdown the JVM gateway may
+    # already be gone.
+    for j in jdfs:
+        try:
+            j.unpersist(False)
+        except Exception:
+            pass
+
+
+def hold(*blocks):
+    """Register persisted frames / checkpoint handles with the innermost
+    open scope; return the first, so a persist can be held where it is
+    made (``e = hold(x.persist())``)."""
+    stack = _scopes.stack
+    if not stack:
+        raise RuntimeError(
+            "hold() outside a @scoped call or owned() block — the blocks "
+            "would never be released"
+        )
+    stack[-1].extend(blocks)
+    return blocks[0] if blocks else None
+
+
+@contextmanager
+def owned():
+    """Open a scope whose blocks the caller takes (see module docstring);
+    blocks held inside it are released if the body raises."""
+    stack = _scopes.stack
+    blocks: list = []
+    stack.append(blocks)
+    try:
+        yield blocks
+    except BaseException:
+        _release([b._jdf for b in blocks])
+        raise
+    finally:
+        stack.pop()
+
+
+def scoped(fn=None, *, tie: bool = True):
+    """Run ``fn`` in its own scope: the outermost call ties its blocks to
+    the returned frame, a nested call hoists them to the caller's scope,
+    and a raising call releases them (see module docstring).
+
+    ``@scoped(tie=False)``: an outermost call leaves its blocks to
+    Spark's ContextCleaner (JVM GC) instead of tying them — for an
+    operator whose callers derive new frames from its result and drop
+    the result itself (``curation.connected_components``).
+
+    The finalizer holds only the JVM handles, never the result, so it
+    cannot keep the result alive."""
+    if fn is None:
+        return functools.partial(scoped, tie=tie)
+
+    @functools.wraps(fn)
+    def wrapper(*args, **kwargs):
+        with owned() as blocks:
+            result = fn(*args, **kwargs)
+        stack = _scopes.stack
+        if stack:
+            stack[-1].extend(blocks)
+        elif blocks and tie:
+            weakref.finalize(result, _release, [b._jdf for b in blocks])
+        return result
+
+    return wrapper
 
 
 class _RddHandle:
@@ -100,8 +169,7 @@ class _RddHandle:
     ContextCleaner's GC-driven weak refs fire (minutes later under the
     5-min periodicGC interval — the round-8 full-suite flake).  The
     handle exposes the same ``unpersist``/``._jdf`` duck-type as a
-    persisted DataFrame so it rides the existing ``caches=`` seam and
-    :func:`scope_caches` unchanged.
+    persisted DataFrame, so :func:`hold` takes either.
 
     SAFETY: a localCheckpoint RDD's lineage is truncated at
     materialization — unpersisting it before every consumer has run
@@ -110,7 +178,7 @@ class _RddHandle:
     """
 
     def __init__(self, jrdd) -> None:
-        self._jdf = jrdd  # named _jdf so scope_caches treats it uniformly
+        self._jdf = jrdd  # named _jdf so scopes treat it like a frame
 
     def unpersist(self, blocking: bool = False) -> None:
         try:
@@ -191,8 +259,8 @@ def fixpoint(
     converged: Callable[[Round, Round], bool] | None,
     max_iter: int,
     error: str | None,
-) -> tuple[DataFrame, _RddHandle]:
-    """Run a checkpointed iteration loop; return ``(frame, handle)``.
+) -> DataFrame:
+    """Run a checkpointed iteration loop; return the final round's frame.
 
     ``state`` is materialized first (round 0).  Round ``r`` = 1, 2, …
     builds ``step(frame, r)`` from the previous round's frame, attaches
@@ -208,8 +276,8 @@ def fixpoint(
     then runs exactly ``max_iter`` rounds and returns the last one.
     Otherwise reaching ``max_iter`` without converging releases the
     live checkpoint and raises ``RuntimeError(error)`` — no block
-    outlives a failed call.  The returned handle backs the returned
-    frame; callers thread it through ``caches=`` / :func:`scope_caches`.
+    outlives a failed call.  The returned frame's checkpoint is held in
+    the caller's scope.
     """
     cur, handle = _checkpoint(state, metric)
     live = [handle]
@@ -221,14 +289,16 @@ def fixpoint(
             done = converged is not None and converged(prev, cur)
             live.pop(0).unpersist(False)
             if done:
-                return cur.frame, handle
-        if error is None:
-            return cur.frame, handle
-        raise RuntimeError(error)
+                break
+        else:
+            if error is not None:
+                raise RuntimeError(error)
     except BaseException:
         for h in live:
             h.unpersist(False)
         raise
+    hold(handle)
+    return cur.frame
 
 
 def get_spark(

@@ -3,9 +3,10 @@
 Round-3 VERDICT flagged that the recall-eval queries (and the dedup
 operators' inverted-index caches) persist() without unpersist(), so a
 long-lived session accumulates blocks until the ContextCleaner happens to
-reclaim them.  session.scope_caches ties each persist to the lifetime of
-the frame the caller actually holds; these tests assert the blocks are
-gone from the block manager once the result is dropped.
+reclaim them.  session's block scope (hold / @scoped / owned) ties each
+persist to the lifetime of the frame the caller actually holds; these
+tests assert the blocks are gone from the block manager once the result
+is dropped.
 """
 
 from __future__ import annotations
@@ -18,6 +19,7 @@ from pyspark.sql import functions as F
 
 from stedi_human_balance_redis_kafka_spark_streaming_spark.operators import dedup
 from stedi_human_balance_redis_kafka_spark_streaming_spark.plans import registry
+from stedi_human_balance_redis_kafka_spark_streaming_spark.session import owned
 from stedi_human_balance_redis_kafka_spark_streaming_spark.sources.files import load_table
 
 
@@ -69,10 +71,10 @@ def test_caches_survive_until_action(spark, sf_dir):
     spark.catalog.clearCache()
     baseline = _persistent_rdd_count(spark)
     docs = load_table(spark, sf_dir, "documents")
-    caches: list = []
-    pairs = dedup.ngram_jaccard_pairs(
-        docs, threshold=0.7, n=3, max_shingle_freq=64, caches=caches
-    )
+    with owned() as caches:
+        pairs = dedup.ngram_jaccard_pairs(
+            docs, threshold=0.7, n=3, max_shingle_freq=64
+        )
     assert len(caches) == 1
     n_live = _persistent_rdd_count(spark)
     assert n_live > baseline
@@ -174,6 +176,31 @@ def test_modularity_query_releases_all_caches(spark, sf_dir):
     _assert_drains_to(spark, baseline)
 
 
+def test_mmr_topk_releases_its_checkpoints_synchronously(spark):
+    """mmr_topk's per-round localCheckpoints leave the block manager as
+    soon as its result is dropped: gc.collect only, no JVM GC — the
+    ContextCleaner would otherwise take up to the periodicGC interval."""
+    from stedi_human_balance_redis_kafka_spark_streaming_spark.operators import (
+        similarity,
+    )
+
+    spark.catalog.clearCache()
+    gc.collect()
+    baseline = _persistent_rdd_count(spark)
+    emb = spark.createDataFrame(
+        [(i, [float(i % 3), float(i % 5), 1.0, 0.0]) for i in range(1, 9)],
+        "vec_id long, embedding array<float>",
+    )
+    q = spark.createDataFrame(
+        [(100, [0.8, 0.6, 0.0, 0.0])], "query_id long, qv array<double>"
+    )
+    result = similarity.mmr_topk(emb, q, k=3, n_cand=4)
+    assert len(result.collect()) == 3
+    del result
+    gc.collect()
+    assert _persistent_rdd_count(spark) <= baseline
+
+
 def _chain(spark, n):
     return spark.createDataFrame(
         [(i, i + 1, 1) for i in range(n - 1)], "src long, dst long, w long"
@@ -183,7 +210,9 @@ def _chain(spark, n):
 def _raising_fixpoints():
     """One max_iter-exceeded call per operator that runs on
     session.fixpoint (label_propagation runs fixed rounds and never
-    raises), with the message its RuntimeError must carry."""
+    raises) or on its own checkpointed loop (stress centrality, the
+    coreness peel engine, SCC's FW-BW pivot reach), with the message
+    its RuntimeError must carry."""
     from stedi_human_balance_redis_kafka_spark_streaming_spark.operators import (
         curation,
         graph,
@@ -204,6 +233,28 @@ def _raising_fixpoints():
         ),
         "coreness_hindex": (
             lambda s: graph.coreness(_chain(s, 10), max_iter=1), "h-index"
+        ),
+        "coreness_peel": (
+            lambda s: graph.coreness(
+                _chain(s, 10), algorithm="peel", max_iter=1
+            ),
+            "coreness did not exhaust",
+        ),
+        "stress_centrality": (
+            lambda s: graph.stress_centrality(
+                _chain(s, 10), seeds(s), max_iter=2
+            ),
+            "stress_centrality",
+        ),
+        "scc_fwbw": (
+            lambda s: graph.strongly_connected_components(
+                s.createDataFrame(
+                    [(i, (i + 1) % 12) for i in range(12)], "src long, dst long"
+                ),
+                algorithm="fwbw",
+                bfs_max_iter=3,
+            ),
+            "pivot reachability",
         ),
         "bfs_distances": (
             lambda s: graph.bfs_distances(_chain(s, 10), seeds(s), max_iter=2),

@@ -23,6 +23,7 @@ column on the other.
 
 from __future__ import annotations
 
+import gc
 import math
 import os
 
@@ -108,7 +109,12 @@ QUERY_NAMES = sorted(entry_mod.oracle_sql().keys())
 @pytest.mark.parametrize("name", QUERY_NAMES)
 def test_query_matches_oracle(spark, duck, name):
     qfn = entry_mod.queries()[name]
+    n_rdds = spark.sparkContext._jsc.getPersistentRDDs().size()
     spark_pdf = qfn(spark, SF_DIR).toPandas()
+    # the result frame is already dropped: every block the query held
+    # must be released now, synchronously — no JVM GC
+    gc.collect()
+    n_left = spark.sparkContext._jsc.getPersistentRDDs().size()
     duck_pdf = duck.execute(entry_mod.oracle_sql()[name]).df()
 
     assert sorted(spark_pdf.columns) == sorted(duck_pdf.columns), (
@@ -132,6 +138,10 @@ def test_query_matches_oracle(spark, duck, name):
     sc, dc = _canon(spark_pdf), _canon(duck_pdf)
     mismatches = [(a, b) for a, b in zip(sc, dc) if a != b]
     assert not mismatches, f"{name}: first value mismatches: {mismatches[:3]}"
+    assert n_left <= n_rdds, (
+        f"{name}: {n_left - n_rdds} persisted RDD(s) left after the "
+        f"result was dropped"
+    )
 
 
 def test_entry_smoke(spark):

@@ -4071,6 +4071,7 @@ def test_modularity_merge_improves_purchase_graph_q(spark):
         modularity_merge_step,
         modularity_score,
     )
+    from stedi_human_balance_redis_kafka_spark_streaming_spark.session import owned
     from stedi_human_balance_redis_kafka_spark_streaming_spark.sources.files import (
         load_table,
     )
@@ -4100,10 +4101,11 @@ def test_modularity_merge_improves_purchase_graph_q(spark):
         .persist()
     )
     held.append(seed)
-    merged = modularity_merge_step(
-        edges, seed, assume_canonical=True, caches=held
-    ).persist()
-    held.append(merged)
+    with owned() as step_blocks:
+        merged = modularity_merge_step(
+            edges, seed, assume_canonical=True
+        ).persist()
+    held += [*step_blocks, merged]
     q0 = modularity_score(
         edges, seed, assume_canonical=True
     ).select("q_e6").first()[0]

@@ -1,6 +1,18 @@
-"""Session factory defaults that are not visible in query results."""
+"""Session factory defaults that are not visible in query results, and
+the block scope (hold / @scoped / owned) every operator relies on."""
 
 from __future__ import annotations
+
+import ast
+import gc
+from pathlib import Path
+
+import pytest
+from pyspark.sql import functions as F
+
+from stedi_human_balance_redis_kafka_spark_streaming_spark import session
+from stedi_human_balance_redis_kafka_spark_streaming_spark.operators import graph
+from stedi_human_balance_redis_kafka_spark_streaming_spark.session import hold, scoped
 
 
 def test_only_the_window_exec_logger_is_raised_to_error(spark):
@@ -13,3 +25,64 @@ def test_only_the_window_exec_logger_is_raised_to_error(spark):
     assert str(log_manager.getRootLogger().getLevel()) == "WARN"
     assert level("org.apache.spark.sql.execution.window.WindowExecBase") == "WARN"
     assert level("org.apache.spark.sql.execution.SparkPlan") == "WARN"
+
+
+def _persistent_rdd_count(spark) -> int:
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
+def test_nested_operator_blocks_live_until_the_outer_result_is_dropped(spark):
+    """Hoisting: a scoped function that derives from bfs_distances' frame
+    and drops the inner frame still executes after gc — the inner
+    checkpoint belongs to the OUTER result — and the blocks drain
+    synchronously once that result is dropped."""
+
+    @scoped
+    def hops(edges, seeds):
+        return graph.bfs_distances(edges, seeds).select(
+            "node", (F.col("dist") * 10).alias("d10")
+        )
+
+    spark.catalog.clearCache()
+    gc.collect()
+    baseline = _persistent_rdd_count(spark)
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(6)], "src long, dst long"
+    )
+    seeds = spark.createDataFrame([(0,)], "node long")
+    out = hops(edges, seeds)
+    gc.collect()
+    assert _persistent_rdd_count(spark) > baseline
+    assert sorted(r["d10"] for r in out.collect()) == list(range(0, 70, 10))
+    del out
+    gc.collect()
+    assert _persistent_rdd_count(spark) <= baseline
+
+
+def test_hold_outside_a_scope_raises(spark):
+    df = spark.range(3).persist()
+    try:
+        with pytest.raises(RuntimeError, match="outside"):
+            hold(df)
+    finally:
+        df.unpersist()
+
+
+def test_block_lifetime_has_one_mechanism():
+    """Only session.py manages block lifetime by hand: no other module
+    declares a ``caches`` parameter, calls ``scope_caches`` or
+    registers a ``weakref.finalize``."""
+    home = Path(session.__file__)
+    found = []
+    for path in sorted(home.parent.rglob("*.py")):
+        if path == home:
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.arg) and node.arg == "caches":
+                found.append(f"{path.name}:{node.lineno} caches parameter")
+            elif isinstance(node, ast.Call):
+                f = node.func
+                name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", "")
+                if name in ("scope_caches", "finalize"):
+                    found.append(f"{path.name}:{node.lineno} {name}()")
+    assert not found, found
