@@ -327,7 +327,7 @@ def pack_sequences(
     )
 
 
-@scoped(tie=False)
+@scoped
 def connected_components(
     edges: DataFrame,
     *,
@@ -353,10 +353,8 @@ def connected_components(
     aggregate replaces a per-round shuffle join + count.
     decimal(38,0) keeps the sum exact far beyond int64 (10¹⁰ nodes ×
     10¹⁰ max id ≈ 10²⁰ ≪ 10³⁸).  The final round's checkpoint backs
-    the returned frame: called from a scoped function it is held there
-    (the registry pattern); called at top level it is left to the
-    ContextCleaner, the safe default for callers that derive from the
-    result.
+    the returned frame, so a top-level caller keeps that frame
+    referenced until its last action has run (``session`` scope rules).
     """
     sym = (
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))

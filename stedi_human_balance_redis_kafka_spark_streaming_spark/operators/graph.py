@@ -1829,8 +1829,8 @@ def modularity_stats(
     * ``deg`` — (n, k): each node's weighted degree with self-loops
       counted TWICE (the shared convention of :func:`modularity_score`
       / :func:`modularity_refine_step` / :func:`modularity_merge_step`
-      — a self-loop row lands in both union arms), persisted; the
-      caller owns its release (``hold`` it, or unpersist it);
+      — a self-loop row lands in both union arms), persisted and held
+      in the caller's scope;
     * ``m`` — the 1-row ``(__m decimal(38,0))`` total-weight literal
       (:func:`_m_lit`), collected EAGERLY here (one bounded
       partial-aggregable job; NULL on an empty edge list, exactly as
@@ -1862,6 +1862,7 @@ def modularity_stats(
         .agg(F.sum("__w").cast("long").alias("k"))
         .persist()
     )
+    hold(deg)
     if not collect_m:
         return deg, None
     dec = "decimal(38,0)"
@@ -2743,9 +2744,7 @@ def modularity_refine_guarded(
         # aggs it replaces at the AQE tiny-stage floor), and at scale
         # the in-plan m is a shuffle-free scan of the cached edge
         # list, unlike deg's per-recompute shuffle.
-        deg = hold(
-            modularity_stats(und, weight_col=weight_col, collect_m=False)[0]
-        )
+        deg = modularity_stats(und, weight_col=weight_col, collect_m=False)[0]
     comm = hold(communities.select(
         F.col(node_col).alias("node"),
         F.col(community_col).alias("community"),
@@ -2915,9 +2914,9 @@ def louvain_coarsen(
         # eager-collect form measured slower, OPTIMIZATION_r19.md).
         pass_stats: dict = {}
         if refine == "guarded":
-            pass_stats = {"deg": hold(
-                modularity_stats(g, weight_col="weight", collect_m=False)[0]
-            )}
+            pass_stats = {"deg": modularity_stats(
+                g, weight_col="weight", collect_m=False
+            )[0]}
         merged = modularity_merge_step(
             g,
             ident,

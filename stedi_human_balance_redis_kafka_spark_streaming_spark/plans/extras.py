@@ -5693,9 +5693,9 @@ def graph_refine_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     # through (r19, guide §1.2; the duplication was three degree
     # shuffles per run; m stays in-plan — the eager-collect form
     # measured slower, OPTIMIZATION_r19.md)
-    sdeg = hold(
-        graph.modularity_stats(g, weight_col="weight", collect_m=False)[0]
-    )
+    sdeg = graph.modularity_stats(
+        g, weight_col="weight", collect_m=False
+    )[0]
     swept = hold(graph.modularity_refine_step(
         g, seed, weight_col="weight", assume_canonical=True,
         deg=sdeg,
@@ -6036,9 +6036,9 @@ def graph_refine_pass(spark: SparkSession, sf_dir: str) -> DataFrame:
     # merge + the guard's sweep/scorings share the backbone's degree
     # rollup — computed once and threaded through (r19, guide §1.2; m
     # stays in-plan, the eager form measured slower)
-    sdeg = hold(
-        graph.modularity_stats(edges, weight_col="weight", collect_m=False)[0]
-    )
+    sdeg = graph.modularity_stats(
+        edges, weight_col="weight", collect_m=False
+    )[0]
     merged = graph.modularity_merge_step(
         edges, ident, weight_col="weight", assume_canonical=True, deg=sdeg,
     ).localCheckpoint()
@@ -6151,9 +6151,9 @@ def graph_refine_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
         # VERDICT r18 next-round #3: the duplication was four degree
         # shuffles per pass).  m stays in-plan — the eager-collect
         # form measured slower (OPTIMIZATION_r19.md).
-        sdeg = hold(
-            graph.modularity_stats(g, weight_col="weight", collect_m=False)[0]
-        )
+        sdeg = graph.modularity_stats(
+            g, weight_col="weight", collect_m=False
+        )[0]
         merged = graph.modularity_merge_step(
             g, _singletons(g), weight_col="weight",
             assume_canonical=True, deg=sdeg,

@@ -87,8 +87,8 @@ def test_caches_survive_until_action(spark, sf_dir):
 
 
 def test_multi_signal_caches_live_through_execution_then_release(spark, sf_dir):
-    """dedup_multi_signal threads the pair-generators' index caches out
-    via the caches= seam and scopes them (plus the persisted evidence
+    """dedup_multi_signal's pair generators hoist their index caches
+    into the query's scope, which ties them (plus the persisted evidence
     graph) to ITS result — the round-4 fix for the finalizer firing on
     the immediately-dropped inner frame and unpersisting the index
     before execution."""
@@ -105,7 +105,7 @@ def test_multi_signal_caches_live_through_execution_then_release(spark, sf_dir):
 
 
 def test_srp_pairs_self_scope_releases_caches(spark, sf_dir):
-    """ADVICE r13 #2 regression pin: srp_lsh_pairs with caches=None
+    """ADVICE r13 #2 regression pin: srp_lsh_pairs called at top level
     (property tests, plan audits, direct use) must release its two
     persisted frames (flattened verify frame + signature frame) once
     the caller drops the result."""
@@ -126,7 +126,7 @@ def test_srp_pairs_self_scope_releases_caches(spark, sf_dir):
 def test_followed_by_self_scope_releases_caches(spark):
     """ADVICE r13 #2 regression pin, associations side: the persisted
     (seq, item) first/last frame scopes to the returned rules frame
-    when caches=None."""
+    when called at top level."""
     from stedi_human_balance_redis_kafka_spark_streaming_spark.operators import (
         associations,
     )
@@ -148,7 +148,7 @@ def test_followed_by_self_scope_releases_caches(spark):
 
 def test_substring_runs_self_scope_releases_caches(spark, sf_dir):
     """substring_run_pairs persists the gram frame once for its four
-    consumers; caches=None callers must not leak it."""
+    consumers; top-level callers must not leak it."""
     from stedi_human_balance_redis_kafka_spark_streaming_spark.sources.files import (
         load_table,
     )
@@ -164,9 +164,9 @@ def test_substring_runs_self_scope_releases_caches(spark, sf_dir):
 
 
 def test_modularity_query_releases_all_caches(spark, sf_dir):
-    """graph_modularity threads LPA's checkpoint handle + two persists
-    through caches/scope_caches; everything drains once the scored
-    frame is dropped."""
+    """graph_modularity holds LPA's checkpoint handle + two persists in
+    the query's scope; everything drains once the scored frame is
+    dropped."""
     spark.catalog.clearCache()
     baseline = _persistent_rdd_count(spark)
     result = registry.queries()["graph_modularity"](spark, sf_dir)

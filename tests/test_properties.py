@@ -3376,7 +3376,8 @@ def test_modularity_of_cc_partition_invariants(spark, raw_edges):
         return
     m = len(und)
     edf = spark.createDataFrame(sorted(und), "doc_a long, doc_b long")
-    comm = connected_components(edf).select(
+    cc = connected_components(edf)  # referenced until the action below
+    comm = cc.select(
         F.col("doc_id").alias("node"), F.col("cluster_id").alias("community")
     )
     rows = modularity_score(
@@ -4478,6 +4479,9 @@ def test_modularity_stats_threading_is_bit_identical(spark):
         modularity_score,
         modularity_stats,
     )
+    from stedi_human_balance_redis_kafka_spark_streaming_spark.session import (
+        owned,
+    )
 
     comm = spark.createDataFrame(
         [(1, 100), (2, 200), (3, 200), (9, 900)],
@@ -4491,7 +4495,8 @@ def test_modularity_stats_threading_is_bit_identical(spark):
         [(1, 2), (2, 3), (1, 3)], "src long, dst long"
     )
     for edges, wc in ((weighted, "weight"), (unweighted, None)):
-        deg, m = modularity_stats(edges, weight_col=wc)
+        with owned():
+            deg, m = modularity_stats(edges, weight_col=wc)
         # the stats themselves match the in-plan formulas
         sym = {}
         for r in edges.collect():
@@ -4529,7 +4534,8 @@ def test_modularity_stats_threading_is_bit_identical(spark):
         )
         deg.unpersist()
     # canonical-only enforcement: stats with assume_canonical=False raise
-    deg, m = modularity_stats(unweighted)
+    with owned():
+        deg, m = modularity_stats(unweighted)
     for op in (modularity_score, modularity_refine_step,
                modularity_merge_step, modularity_refine_guarded):
         with pytest.raises(ValueError, match="assume_canonical"):
@@ -4537,7 +4543,8 @@ def test_modularity_stats_threading_is_bit_identical(spark):
     deg.unpersist()
     # empty graph: collected m is NULL, exactly like the in-plan agg
     empty = spark.createDataFrame([], "src long, dst long")
-    deg, m = modularity_stats(empty)
+    with owned():
+        deg, m = modularity_stats(empty)
     assert m.first()["__m"] is None
     assert sorted(map(str, modularity_score(
         empty, comm, assume_canonical=True, deg=deg, m=m

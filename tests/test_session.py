@@ -59,6 +59,46 @@ def test_nested_operator_blocks_live_until_the_outer_result_is_dropped(spark):
     assert _persistent_rdd_count(spark) <= baseline
 
 
+def _checkpoint_backed_results():
+    from stedi_human_balance_redis_kafka_spark_streaming_spark.operators import (
+        curation,
+    )
+
+    def pairs(spark):
+        return spark.createDataFrame(
+            [(0, 1), (1, 2), (5, 6)], "doc_a long, doc_b long"
+        )
+
+    def cycle(spark):
+        return spark.createDataFrame(
+            [(i, (i + 1) % 4) for i in range(4)], "src long, dst long"
+        )
+
+    return {
+        "cc_star": (lambda s: curation.cc_star(pairs(s)), "doc_id"),
+        "connected_components": (
+            lambda s: curation.connected_components(pairs(s)), "doc_id"
+        ),
+        "pagerank": (lambda s: graph.pagerank(cycle(s)), "node"),
+    }
+
+
+@pytest.mark.parametrize("name", sorted(_checkpoint_backed_results()))
+def test_top_level_result_must_outlive_frames_derived_from_it(spark, name):
+    """A top-level call ties its checkpoint to the returned object, not
+    to frames derived from it: a derived frame runs while the result is
+    referenced, and fails loudly (never silently wrong) once the result
+    was dropped before the action."""
+    call, col = _checkpoint_backed_results()[name]
+    result = call(spark)
+    derived = result.select(col)
+    assert derived.count() > 0
+    del result
+    gc.collect()
+    with pytest.raises(Exception, match="CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND"):
+        derived.count()
+
+
 def test_hold_outside_a_scope_raises(spark):
     df = spark.range(3).persist()
     try:
