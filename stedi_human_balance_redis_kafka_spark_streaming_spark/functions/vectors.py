@@ -1,150 +1,124 @@
-"""Vector math over ``array<float>`` embedding columns — pure Column exprs.
+"""Vector arithmetic over ``array<float>`` embedding columns, as SQL text.
 
-Everything here stays inside whole-stage codegen (``F.zip_with`` /
-``F.aggregate`` higher-order functions), so similarity computations run
-JVM-side with zero Python crossings.  At 100 TB this is the difference
-between a vectorized scan and a per-row pickle round-trip.
+This module is the only place the engine writes out dim-wide vector
+arithmetic (dot products, norms, rounded cosines, flattening).  Every
+builder returns SQL TEXT that the caller parses once, with ``F.expr`` or
+``selectExpr``.
+
+Why unrolled: Spark's higher-order functions (``zip_with`` /
+``aggregate``) are interpreted per element, outside whole-stage codegen,
+which makes them the bottleneck of any O(n²) similarity stage (measured:
+minutes for 2M pairs × 64 dims).  An explicit fixed-dimension sum
+compiles into codegen and runs ~2 orders of magnitude faster.  Every sum
+is left-associated in index order 0..dim-1 — the same order as the fold
+and as DuckDB's ``list_sum`` — so oracle bit-parity holds.
+
+Why SQL text: every Column operator is one py4j round trip (~1–2 ms), so
+a dim-wide expression built operator by operator costs hundreds of
+milliseconds of DRIVER time per call site — measured 3–7 s of pure query
+CONSTRUCTION per ANN query at dim=64 (r19), more than execution at sf0.1
+and a per-query constant at any scale.  The streaming index operators
+inline k·dim literal terms: at k = dim = 64 (local[1], 4-core VM)
+``streaming_assign_centroids`` took 20.5 s to build operator by operator
+and 8.3 s as text.  Text is assembled in Python for free and parsed in
+one call; the parsed tree is the one the Column form built, so plans,
+codegen and values are unchanged.
+
+Double literals need the ``D`` suffix: a bare ``0.5`` parses as a
+DECIMAL.  :func:`lit_sql` writes ``repr(x)`` plus ``D``, which Spark reads
+back as the same double (``repr`` is the shortest round-tripping form).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from collections.abc import Sequence
+
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+EMB_SQL = "CAST(embedding AS ARRAY<DOUBLE>)"
 
-def dot(a: Column | str, b: Column | str) -> Column:
-    """Dot product of two equal-length float-array columns."""
-    a, b = F.col(a) if isinstance(a, str) else a, F.col(b) if isinstance(b, str) else b
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
+
+def lit_sql(x: float) -> str:
+    """A double literal that parses back to exactly ``x``."""
+    return f"{float(x)!r}D"
+
+
+def dot_sql(xs: Sequence[str], ys: Sequence[str]) -> str:
+    """``x0 * y0 + x1 * y1 + ...`` over paired SQL operands,
+    left-associated in order."""
+    return " + ".join(f"{x} * {y}" for x, y in zip(xs, ys, strict=True))
+
+
+def lit_dot_sql(xs: Sequence[str], ws: Sequence[float]) -> str:
+    """Dot product of SQL operands ``xs`` with a literal vector ``ws``."""
+    return dot_sql(xs, [lit_sql(w) for w in ws])
+
+
+def flat_dot_sql(pa: str, pb: str, dim: int) -> str:
+    """Dot product over flattened scalar columns ``pa0..`` and ``pb0..``.
+
+    ``pa``/``pb`` are column-name prefixes (may be alias-qualified, e.g.
+    ``"a.d"``)."""
+    return dot_sql(
+        [f"{pa}{i}" for i in range(dim)], [f"{pb}{i}" for i in range(dim)]
     )
 
 
-def norm(a: Column | str) -> Column:
-    """L2 norm of a float-array column."""
-    a = F.col(a) if isinstance(a, str) else a
-    return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v))
+def norm_sql(xs: Sequence[str]) -> str:
+    """L2 norm of the vector whose components are the SQL operands ``xs``."""
+    return f"SQRT({dot_sql(xs, xs)})"
 
 
-def cosine(a: Column | str, b: Column | str) -> Column:
-    """Cosine similarity; 0.0 when either vector has zero norm."""
-    d = dot(a, b)
-    na, nb = norm(a), norm(b)
-    return F.when((na > 0) & (nb > 0), d / (na * nb)).otherwise(F.lit(0.0))
+def norm_unrolled_sql(a: str, dim: int) -> str:
+    """L2 norm of the ``dim``-long array expression ``a``."""
+    return norm_sql([f"element_at({a}, {i})" for i in range(1, dim + 1)])
 
 
-# ---------------------------------------------------------------------------
-# Unrolled (fixed-dimension) variants.
-#
-# Spark's higher-order functions (zip_with/aggregate) are interpreted per
-# element — outside whole-stage codegen — which makes them the bottleneck of
-# any O(n²) similarity stage (measured: minutes for 2M pairs × 64 dims).
-# When the dimension is known, an explicit 64-term arithmetic expression
-# compiles into codegen and runs ~2 orders of magnitude faster, while
-# keeping the same left-associated accumulation order as the fold (and as
-# DuckDB's list_sum), so oracle bit-parity is unchanged.
-# ---------------------------------------------------------------------------
+def rounded_cosine_sql(dot: str, na: str, nb: str, round_digits: int) -> str:
+    """``ROUND(dot / (na * nb), round_digits)`` — the engine's one cosine
+    form: norms precomputed, the rounded value is what ranks and
+    thresholds compare, so Spark and the DuckDB oracle see identical
+    numbers."""
+    return f"ROUND(({dot}) / ({na} * {nb}), {round_digits})"
 
 
-# Construction cost (r19): every Column operator is one py4j round trip
-# (~1–2 ms), so a dim-wide unrolled expression built operator-by-operator
-# costs hundreds of milliseconds of DRIVER time per call site — measured
-# 3–7 s of pure query CONSTRUCTION per ANN query at dim=64, dwarfing
-# execution at sf0.1 and still a per-query constant at 100 TB.  The
-# unrolled builders therefore assemble the SQL TEXT in Python (free) and
-# parse it with ONE ``F.expr`` call.  The parsed tree is the identical
-# left-associated expression the operator-by-operator form produced, so
-# plans, codegen, and values are unchanged.  Double literals in SQL text
-# need the ``D`` suffix (a bare ``0.0`` parses as DECIMAL(1,1)).
+def cosine_sql(
+    pa: str, pb: str, na: str, nb: str, dim: int, round_digits: int
+) -> str:
+    """Rounded cosine between flattened vectors ``pa0..`` and ``pb0..``
+    whose norms are the columns ``na`` and ``nb``."""
+    return rounded_cosine_sql(flat_dot_sql(pa, pb, dim), na, nb, round_digits)
 
 
-def dot_unrolled(a: Column | str, b: Column | str, dim: int) -> Column:
-    """Dot product as an explicit ``dim``-term codegen'd expression.
-
-    ``a``/``b`` may be SQL text (one-call construction, preferred) or
-    Columns (legacy operator-by-operator form, kept for callers holding
-    computed Columns).
-    """
-    if isinstance(a, str) and isinstance(b, str):
-        return F.expr(
-            " + ".join(
-                f"element_at({a}, {i}) * element_at({b}, {i})"
-                for i in range(1, dim + 1)
-            )
-        )
-    out = F.element_at(a, 1) * F.element_at(b, 1)
-    for i in range(2, dim + 1):
-        out = out + F.element_at(a, i) * F.element_at(b, i)
-    return out
+def flatten_sql(vec: str, prefix: str, dim: int) -> list[str]:
+    """``selectExpr`` items projecting the array expression ``vec`` into
+    ``dim`` scalar columns ``prefix0 .. prefix{dim-1}``."""
+    return [f"({vec})[{i}] AS {prefix}{i}" for i in range(dim)]
 
 
-def norm_unrolled(a: Column | str, dim: int) -> Column:
-    """L2 norm as an explicit codegen'd expression (SQL-text or Column
-    input — see :func:`dot_unrolled`)."""
-    if isinstance(a, str):
-        return F.sqrt(
-            F.expr(
-                " + ".join(
-                    f"element_at({a}, {i}) * element_at({a}, {i})"
-                    for i in range(1, dim + 1)
-                )
-            )
-        )
-    out = F.element_at(a, 1) * F.element_at(a, 1)
-    for i in range(2, dim + 1):
-        out = out + F.element_at(a, i) * F.element_at(a, i)
-    return F.sqrt(out)
-
-
-def flatten(vec: Column | str, prefix: str, dim: int) -> list[Column]:
-    """Project an ``array<double>`` column into ``dim`` scalar columns
-    ``prefix0 .. prefix{dim-1}``.
+def flat(
+    df: DataFrame,
+    key: str,
+    prefix: str,
+    dim: int,
+    *,
+    vec: str = EMB_SQL,
+    nrm: str = "nrm",
+) -> DataFrame:
+    """``(key, nrm, prefix0..prefix{dim-1})`` from the array expression
+    ``vec`` of ``df``, in one ``selectExpr``.
 
     Codegen'd arithmetic over flat doubles skips the per-element array
     bounds/null checks that array indexing pays on every pair of a
     quadratic stage (measured 20.7 s → 3.0 s for 50 M pairs × 64 dims at
-    sf0.1).  Flatten ONCE on the linear side, before the join.
-    ``vec`` may be SQL text (one ``F.expr`` per column instead of two
-    py4j ops) or a Column.
-    """
-    if isinstance(vec, str):
-        return [
-            F.expr(f"({vec})[{i}] AS {prefix}{i}") for i in range(dim)
-        ]
-    return [vec[i].alias(f"{prefix}{i}") for i in range(dim)]
-
-
-def flatten_sql(vec: str, prefix: str, dim: int) -> list[str]:
-    """:func:`flatten` as raw ``selectExpr`` strings — zero py4j calls;
-    the whole projection parses in the single ``selectExpr``."""
-    return [f"({vec})[{i}] AS {prefix}{i}" for i in range(dim)]
-
-
-def norm_unrolled_sql(a: str, dim: int) -> str:
-    """:func:`norm_unrolled` as a raw SQL string for ``selectExpr``."""
-    terms = " + ".join(
-        f"element_at({a}, {i}) * element_at({a}, {i})"
-        for i in range(1, dim + 1)
+    sf0.1).  Flatten ONCE on the linear side, before the join; the norm
+    is computed once per vector here."""
+    return df.selectExpr(
+        key,
+        f"{norm_unrolled_sql(vec, dim)} AS {nrm}",
+        *flatten_sql(vec, prefix, dim),
     )
-    return f"SQRT({terms})"
-
-
-def flat_dot_sql(pa: str, pb: str, dim: int) -> str:
-    """:func:`flat_dot` as a raw SQL string."""
-    return " + ".join(f"{pa}{i} * {pb}{i}" for i in range(dim))
-
-
-def flat_dot(pa: str, pb: str, dim: int) -> Column:
-    """Dot product over flattened scalar columns.
-
-    ``pa``/``pb`` are column-name prefixes (may be alias-qualified, e.g.
-    ``"a.d"``).  Adds run in the same left-associated d0..d{dim-1} order
-    as :func:`dot_unrolled` and DuckDB's ``list_sum``, so values — and
-    oracle hashes — are bit-identical.
-    """
-    return F.expr(flat_dot_sql(pa, pb, dim))
 
 
 def embedding_dim(emb, col: str = "embedding") -> int:

@@ -54,6 +54,14 @@ from collections import OrderedDict
 
 MAX_ENTRIES = 32
 
+# Driver-side row cap for one cached build.  Build artifacts (centroids,
+# codebooks, bucket maps, near-dup pair sets: sf0.1 has ~10² pairs for
+# 5k docs) are orders of magnitude smaller than the corpus; callers
+# collect at most MAX_ROWS + 1 rows, so a pathological corpus degrades
+# to the live distributed plan instead of an unbounded driver
+# materialization.
+MAX_ROWS = 250_000
+
 INDEX_BUILD_CACHE: "OrderedDict[tuple, list[tuple]]" = OrderedDict()
 
 _KEY_META = b"buildcache_key"

@@ -38,12 +38,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.hashing import tokens
-from ..functions.vectors import (
-    embedding_dim,
-    flat_dot,
-    flatten_sql,
-    norm_unrolled_sql,
-)
+from ..functions.vectors import cosine_sql, embedding_dim, flat
 from ..session import hold, scoped
 
 
@@ -522,27 +517,15 @@ def embedding_cosine_pairs(
                 f"max_rows=None to override deliberately."
             )
     dim = embedding_dim(emb)
-    # Flatten the vector to scalar columns BEFORE the quadratic stage:
-    # codegen'd arithmetic on flat doubles skips the per-element array
-    # bounds/null checks that array indexing pays per pair (measured
-    # 20.7 s → 3.0 s at sf0.1, 50 M pairs).  The adds run in the same
-    # d0..d{dim-1} sequential order as the array fold, so values — and
-    # the DuckDB oracle hash — are bit-identical.
-    _v = "CAST(embedding AS ARRAY<DOUBLE>)"
-    e = emb.selectExpr(
-        "vec_id",
-        f"{norm_unrolled_sql(_v, dim)} AS nrm",
-        *flatten_sql(_v, "d", dim),
-    )
+    # Flatten BEFORE the quadratic stage (functions.vectors.flat has the
+    # measured reason); values stay bit-identical to the array fold.
+    e = flat(emb, "vec_id", "d", dim)
     # The source is typically a single parquet file → one input split; the
     # O(n²) nested-loop stage inherits that and runs on ONE core unless the
     # stream side is re-split (measured 70 s single-task vs seconds at 32).
     par = emb.sparkSession.sparkContext.defaultParallelism
     a, b = e.repartition(par).alias("a"), F.broadcast(e).alias("b")
-    cos = F.round(
-        flat_dot("a.d", "b.d", dim) / (F.col("a.nrm") * F.col("b.nrm")),
-        round_digits,
-    )
+    cos = F.expr(cosine_sql("a.d", "b.d", "a.nrm", "b.nrm", dim, round_digits))
     return (
         a.join(b, F.col("a.vec_id") < F.col("b.vec_id"))
         .select(
@@ -592,17 +575,12 @@ def embedding_bucketed_pairs(
         assign_nearest_centroid,
         assign_spill_centroids,
         kmeans_centroids,
+        seed_centroids,
     )
 
     dim = embedding_dim(emb)
-    _v = "CAST(embedding AS ARRAY<DOUBLE>)"
-    # Flattened scalar columns before every scored stage (see
-    # embedding_cosine_pairs for the measured rationale).
-    e = emb.selectExpr(
-        "vec_id",
-        f"{norm_unrolled_sql(_v, dim)} AS nrm",
-        *flatten_sql(_v, "d", dim),
-    )
+    # Flattened scalar columns before every scored stage.
+    e = flat(emb, "vec_id", "d", dim)
     # Re-split: single-file sources arrive as one input partition.
     par = emb.sparkSession.sparkContext.defaultParallelism
     e = e.repartition(par)
@@ -612,11 +590,7 @@ def embedding_bucketed_pairs(
             round_digits=round_digits, cache_key=cache_key,
         )
     else:
-        cents = e.filter(F.col("vec_id") % centroid_modulus == 0).selectExpr(
-            "vec_id AS cid",
-            "nrm AS cnrm",
-            *[f"d{i} AS c{i}" for i in range(dim)],
-        )
+        cents = seed_centroids(e, centroid_modulus, dim)
     if spill > 1:
         assigned = assign_spill_centroids(e, cents, dim, spill, round_digits)
     else:
@@ -633,10 +607,7 @@ def embedding_bucketed_pairs(
         )
         assigned = e.join(bucket_map, "vec_id")
     a, b = assigned.alias("a"), assigned.alias("b")
-    cos = F.round(
-        flat_dot("a.d", "b.d", dim) / (F.col("a.nrm") * F.col("b.nrm")),
-        round_digits,
-    )
+    cos = F.expr(cosine_sql("a.d", "b.d", "a.nrm", "b.nrm", dim, round_digits))
     pairs = (
         a.join(
             b,
@@ -733,16 +704,11 @@ def srp_lsh_pairs(
     r = num_hyperplanes // bands
     dim = embedding_dim(emb)
     ws = srp_weights(num_hyperplanes, dim, salt=salt)
-    _v = "CAST(embedding AS ARRAY<DOUBLE>)"
     # Quantized flat int64 columns for the sign stage + double norm/dims
     # for the verify stage — both from one scan, flattened so the whole
-    # signature is codegen'd scalar arithmetic (see embedding_cosine_pairs
-    # for the measured flat-vs-array rationale).
-    e = emb.selectExpr(
-        "vec_id",
-        f"{norm_unrolled_sql(_v, dim)} AS nrm",
-        *flatten_sql(_v, "d", dim),
-    )
+    # signature is codegen'd scalar arithmetic (functions.vectors.flat
+    # has the measured flat-vs-array reason).
+    e = flat(emb, "vec_id", "d", dim)
     par = emb.sparkSession.sparkContext.defaultParallelism
     # The flattened frame feeds the signature stage AND both verify
     # sides, and the signature frame feeds both sides of the band
@@ -803,10 +769,7 @@ def srp_lsh_pairs(
         .distinct()
     )
     ea, eb = e.alias("ea"), e.alias("eb")
-    cos = F.round(
-        flat_dot("ea.d", "eb.d", dim) / (F.col("ea.nrm") * F.col("eb.nrm")),
-        round_digits,
-    )
+    cos = F.expr(cosine_sql("ea.d", "eb.d", "ea.nrm", "eb.nrm", dim, round_digits))
     ret = (
         cand.join(ea, F.col("vec_a") == F.col("ea.vec_id"))
         .join(eb, F.col("vec_b") == F.col("eb.vec_id"))
@@ -826,30 +789,6 @@ def _snm_key(text_col: str, key_chars: int, token_sorted: bool = False):
     if token_sorted:
         nrm = F.array_join(F.array_sort(F.split(nrm, " ")), " ")
     return F.substring(nrm, 1, key_chars)
-
-
-def _snm_candidates_global(keyed: DataFrame, window: int) -> DataFrame:
-    """SNM candidate stream via ONE global window — exact but funnels
-    every (bkey, doc_id) row through a single task.  Retained only as
-    the reference form the sharded path is property-tested against
-    (tests/test_properties.py); production callers use
-    :func:`_snm_candidates_sharded`.  Output: (doc_id, other) rows,
-    un-normalized and possibly duplicated — callers least/greatest +
-    distinct."""
-    w = Window.orderBy("bkey", "doc_id")
-    leads = keyed.select(
-        "doc_id",
-        *[
-            F.lead("doc_id", k).over(w).alias(f"__n{k}")
-            for k in range(1, window + 1)
-        ],
-    )
-    return leads.select(
-        "doc_id",
-        F.explode(
-            F.array(*[F.col(f"__n{k}") for k in range(1, window + 1)])
-        ).alias("other"),
-    ).filter(F.col("other").isNotNull())
 
 
 def _snm_candidates_sharded(
@@ -971,7 +910,6 @@ def sorted_neighborhood_pairs(
     key_chars: int = 24,
     text_col: str = "text",
     shards: int | None = None,
-    sharded: bool = True,
 ) -> DataFrame:
     """Sorted-neighborhood (SNM) near-dup pairs — the fourth classic
     blocking strategy next to the inverted-index join (exact,
@@ -993,22 +931,17 @@ def sorted_neighborhood_pairs(
 
     Output: (doc_a, doc_b, jaccard ≥ threshold), doc_a < doc_b.
 
-    Scale shape: candidate generation is range-partitioned by default
+    Scale shape: candidate generation is range-partitioned
     (:func:`_snm_candidates_sharded` — per-shard ``lead`` plus a
     cluster-bounded boundary-overlap frame; no single-task global
-    sort).  ``sharded=False`` selects the one-global-window form,
-    retained for the shard-equality property test.  Multi-pass SNM
+    sort).  Multi-pass SNM
     (:func:`sorted_neighborhood_multipass_pairs`) raises recall with a
     second, token-sorted key.
     """
     keyed = docs.select(
         "doc_id", _snm_key(text_col, key_chars).alias("bkey")
     )
-    raw = (
-        _snm_candidates_sharded(keyed, window, shards)
-        if sharded
-        else _snm_candidates_global(keyed, window)
-    )
+    raw = _snm_candidates_sharded(keyed, window, shards)
     cand = hold(
         raw.select(
             F.least("doc_id", "other").alias("doc_a"),

@@ -23,7 +23,7 @@ Three index families:
   vector instead of dim floats).
 
 Hot-path arithmetic: vectors are FLATTENED to scalar columns before any
-O(n·q) / O(n·|centroids|) stage (functions.vectors.flatten/flat_dot) —
+O(n·q) / O(n·|centroids|) stage (functions.vectors.flat/cosine_sql) —
 codegen'd flat-double arithmetic skips the per-element array bounds/null
 checks array indexing pays per scored pair, and interpreted higher-order
 folds are ~100× slower still.  Norms are precomputed once per vector.
@@ -34,47 +34,36 @@ break identically in Spark and the DuckDB oracle.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.vectors import (
+    EMB_SQL,
+    cosine_sql,
+    dot_sql,
     embedding_dim,
-    flat_dot,
+    flat as _flat,
     flat_dot_sql,
-    flatten,
-    flatten_sql,
-    norm_unrolled,
-    norm_unrolled_sql,
 )
 from ..session import checkpoint_handle, hold, scoped
 
-# The wide (dim-term) projections below are assembled as SQL text and
-# parsed with ONE selectExpr/F.expr call instead of operator-by-operator
-# Column construction: each Column operator is a py4j round trip, and at
-# dim=64 the per-query CONSTRUCTION cost measured 3-7 s driver time —
-# bigger than execution at sf0.1 and a per-query constant at any scale.
-# The parsed trees are the identical expressions, so plans and values
-# are unchanged (see functions/vectors.py).
-
-_EMB_SQL = "CAST(embedding AS ARRAY<DOUBLE>)"
-
-
-def _flat(emb: DataFrame, id_col: str, prefix: str, dim: int) -> DataFrame:
-    """(id, nrm, prefix0..prefix{dim-1}) from an embedding table."""
-    return emb.selectExpr(
-        id_col,
-        f"{norm_unrolled_sql(_EMB_SQL, dim)} AS nrm",
-        *flatten_sql(_EMB_SQL, prefix, dim),
-    )
+# Dim-wide arithmetic is SQL text from functions/vectors.py, parsed in
+# one F.expr/selectExpr call (see that module for the measured reasons).
 
 
 def _q_flat(queries: DataFrame, dim: int) -> DataFrame:
-    """(query_id, qnrm, q0..q{dim-1}) from a (query_id, qv) frame —
-    the query-side twin of :func:`_flat`."""
-    return queries.selectExpr(
-        "query_id",
-        f"{norm_unrolled_sql('qv', dim)} AS qnrm",
-        *flatten_sql("qv", "q", dim),
+    """(query_id, qnrm, q0..q{dim-1}) from a (query_id, qv) frame."""
+    return _flat(queries, "query_id", "q", dim, vec="qv", nrm="qnrm")
+
+
+def seed_centroids(e: DataFrame, modulus: int, dim: int) -> DataFrame:
+    """The deterministic seed quantizer: the vectors of the flattened
+    corpus ``e`` with ``vec_id % modulus == 0``, renamed to the centroid
+    layout (cid, cnrm, c0..c{dim-1})."""
+    return e.filter(F.col("vec_id") % modulus == 0).selectExpr(
+        "vec_id AS cid",
+        "nrm AS cnrm",
+        *[f"d{i} AS c{i}" for i in range(dim)],
     )
 
 
@@ -105,7 +94,7 @@ def brute_force_topk(
     par = emb.sparkSession.sparkContext.defaultParallelism
     e = _flat(emb, "vec_id", "d", dim).repartition(par)
     q = _q_flat(queries, dim)
-    cos = F.round(flat_dot("d", "q", dim) / (F.col("nrm") * F.col("qnrm")), round_digits)
+    cos = F.expr(cosine_sql("d", "q", "nrm", "qnrm", dim, round_digits))
     scored = e.join(F.broadcast(q), F.col("vec_id") != F.col("query_id")).select(
         "query_id", "vec_id", cos.alias("cos_sim")
     )
@@ -133,9 +122,7 @@ def assign_nearest_centroid(
     (cos_c, -cid) == (cos DESC, cid ASC) for deterministic ties.
     """
     carry = [c for c in e.columns if c != "vec_id"]
-    cos_c = F.round(
-        flat_dot("d", "c", dim) / (F.col("nrm") * F.col("cnrm")), round_digits
-    )
+    cos_c = F.expr(cosine_sql("d", "c", "nrm", "cnrm", dim, round_digits))
     return (
         e.crossJoin(F.broadcast(cents))
         .select("vec_id", *carry, "cid", cos_c.alias("cos_c"))
@@ -158,12 +145,11 @@ def assign_nearest_centroid(
 # introduced the pattern; the OrderedDict itself lives in buildcache so
 # the near-dup pair-graph build (plans/registry) shares the same store
 # and bound.
+from . import buildcache  # noqa: E402
 from .buildcache import INDEX_BUILD_CACHE as _INDEX_BUILD_CACHE  # noqa: E402
 from .buildcache import lookup as _cache_lookup  # noqa: E402
 from .buildcache import rehydrate as _cache_rehydrate  # noqa: E402
 from .buildcache import store as _cache_store  # noqa: E402
-
-_BUILD_CACHE_MAX_ROWS = 250_000
 
 
 def _cached_build(df: DataFrame, ckey: tuple) -> DataFrame:
@@ -176,8 +162,8 @@ def _cached_build(df: DataFrame, ckey: tuple) -> DataFrame:
     hit = _cache_lookup(ckey)
     if hit is not None:
         return _cache_rehydrate(spark, hit, df.schema)
-    rows = df.limit(_BUILD_CACHE_MAX_ROWS + 1).collect()
-    if len(rows) > _BUILD_CACHE_MAX_ROWS:
+    rows = df.limit(buildcache.MAX_ROWS + 1).collect()
+    if len(rows) > buildcache.MAX_ROWS:
         return df
     data = [tuple(r) for r in rows]
     _cache_store(ckey, data)
@@ -274,10 +260,7 @@ def kmeans_centroids(
     try:
         for _ in range(iters):
             cents_d = as_double(cents_q)
-            cos_c = F.round(
-                flat_dot("d", "c", dim) / (F.col("nrm") * F.col("cnrm")),
-                round_digits,
-            )
+            cos_c = F.expr(cosine_sql("d", "c", "nrm", "cnrm", dim, round_digits))
             assigned = (
                 e.crossJoin(F.broadcast(cents_d))
                 .select("vec_id", "cid", cos_c.alias("cos_c"))
@@ -355,9 +338,7 @@ def assign_spill_centroids(
     (fewer iff |centroids| < spill).
     """
     carry = [c for c in e.columns if c != "vec_id"]
-    cos_c = F.round(
-        flat_dot("d", "c", dim) / (F.col("nrm") * F.col("cnrm")), round_digits
-    )
+    cos_c = F.expr(cosine_sql("d", "c", "nrm", "cnrm", dim, round_digits))
     cur = e
     taken: list[str] = []
     parts: list[DataFrame] = []
@@ -428,11 +409,7 @@ def ivf_topk(
             round_digits=round_digits, cache_key=cache_key,
         )
     else:
-        cents = e.filter(F.col("vec_id") % centroid_modulus == 0).selectExpr(
-            "vec_id AS cid",
-            "nrm AS cnrm",
-            *[f"d{i} AS c{i}" for i in range(dim)],
-        )
+        cents = seed_centroids(e, centroid_modulus, dim)
 
     if spill > 1:
         assigned = assign_spill_centroids(e, cents, dim, spill, round_digits)
@@ -452,9 +429,7 @@ def ivf_topk(
         assigned = e.join(bucket_map, "vec_id")
 
     q = _q_flat(queries, dim)
-    cos_probe = F.round(
-        flat_dot("q", "c", dim) / (F.col("qnrm") * F.col("cnrm")), round_digits
-    )
+    cos_probe = F.expr(cosine_sql("q", "c", "qnrm", "cnrm", dim, round_digits))
     w_probe = Window.partitionBy("query_id").orderBy(F.desc("cos_c"), F.asc("cid"))
     probes = (
         q.crossJoin(F.broadcast(cents))
@@ -470,9 +445,7 @@ def ivf_topk(
         .drop("cos_c", "prank")
     )
 
-    cos_sim = F.round(
-        flat_dot("d", "q", dim) / (F.col("nrm") * F.col("qnrm")), round_digits
-    )
+    cos_sim = F.expr(cosine_sql("d", "q", "nrm", "qnrm", dim, round_digits))
     w_rank = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("vec_id"))
     cand = (
         assigned.join(F.broadcast(probes), "cid")
@@ -520,11 +493,7 @@ def ivf_range_search(
     """
     dim = embedding_dim(emb)
     e = _flat(emb, "vec_id", "d", dim)
-    cents = e.filter(F.col("vec_id") % centroid_modulus == 0).selectExpr(
-        "vec_id AS cid",
-        "nrm AS cnrm",
-        *[f"d{i} AS c{i}" for i in range(dim)],
-    )
+    cents = seed_centroids(e, centroid_modulus, dim)
     assigned = assign_nearest_centroid(e, cents, dim, round_digits)
     if cache_key is not None:
         # same ingest-time bucket-map entry as ivf_topk at equal
@@ -536,9 +505,7 @@ def ivf_range_search(
         )
         assigned = e.join(bucket_map, "vec_id")
     q = _q_flat(queries, dim)
-    cos_probe = F.round(
-        flat_dot("q", "c", dim) / (F.col("qnrm") * F.col("cnrm")), round_digits
-    )
+    cos_probe = F.expr(cosine_sql("q", "c", "qnrm", "cnrm", dim, round_digits))
     w_probe = Window.partitionBy("query_id").orderBy(
         F.desc("cos_c"), F.asc("cid")
     )
@@ -555,9 +522,7 @@ def ivf_range_search(
         .filter(F.col("prank") <= nprobe)
         .drop("cos_c", "prank")
     )
-    cos_sim = F.round(
-        flat_dot("d", "q", dim) / (F.col("nrm") * F.col("qnrm")), round_digits
-    )
+    cos_sim = F.expr(cosine_sql("d", "q", "nrm", "qnrm", dim, round_digits))
     return (
         assigned.join(F.broadcast(probes), "cid")
         .filter(F.col("vec_id") != F.col("query_id"))
@@ -581,14 +546,47 @@ def brute_force_range(
     par = emb.sparkSession.sparkContext.defaultParallelism
     e = _flat(emb, "vec_id", "d", dim).repartition(par)
     q = _q_flat(queries, dim)
-    cos = F.round(
-        flat_dot("d", "q", dim) / (F.col("nrm") * F.col("qnrm")), round_digits
-    )
+    cos = F.expr(cosine_sql("d", "q", "nrm", "qnrm", dim, round_digits))
     return (
         e.join(F.broadcast(q), F.col("vec_id") != F.col("query_id"))
         .select("query_id", "vec_id", cos.alias("cos_sim"))
         .filter(F.col("cos_sim") >= threshold)
         .select("query_id", "vec_id")
+    )
+
+
+def candidate_pair_sims(
+    emb: DataFrame, cand: DataFrame, dim: int, round_digits: int = 6
+) -> DataFrame:
+    """Pairwise similarities among each query's candidates — the MMR
+    redundancy term.  ``cand``: (query_id, vec_id, ...) — bounded
+    (nq·n_cand rows), so the output is nq·n_cand² bounded rows.  Output:
+    (query_id, va, vb, sim_e6) with va != vb and ``sim_e6`` the rounded
+    cosine in exact 1e-6 integer units."""
+    flat = _flat(emb, "vec_id", "d", dim)
+    cv = cand.select("query_id", "vec_id").join(flat, "vec_id")
+    a = cv.selectExpr(
+        "query_id",
+        "vec_id AS va",
+        "nrm AS anrm",
+        *[f"d{i} AS a{i}" for i in range(dim)],
+    )
+    b = cv.selectExpr(
+        "query_id",
+        "vec_id AS vb",
+        "nrm AS bnrm",
+        *[f"d{i} AS b{i}" for i in range(dim)],
+    )
+    pair_cos = F.expr(cosine_sql("a", "b", "anrm", "bnrm", dim, round_digits))
+    return (
+        a.join(b, ["query_id"])
+        .filter(F.col("va") != F.col("vb"))
+        .select(
+            "query_id",
+            "va",
+            "vb",
+            F.round(pair_cos * 1e6).cast("long").alias("sim_e6"),
+        )
     )
 
 
@@ -650,34 +648,7 @@ def mmr_topk(
         # pairwise sims among each query's candidates (nq·n_cand²
         # bounded) — like ``candidates``, deterministic per (corpus,
         # query set, n_cand) and servable from the build cache.
-        flat = _flat(emb, "vec_id", "d", dim)
-        cv = cand.select("query_id", "vec_id").join(flat, "vec_id")
-        a = cv.selectExpr(
-            "query_id",
-            "vec_id AS va",
-            "nrm AS anrm",
-            *[f"d{i} AS a{i}" for i in range(dim)],
-        )
-        b = cv.selectExpr(
-            "query_id",
-            "vec_id AS vb",
-            "nrm AS bnrm",
-            *[f"d{i} AS b{i}" for i in range(dim)],
-        )
-        pair_cos = F.round(
-            flat_dot("a", "b", dim) / (F.col("anrm") * F.col("bnrm")),
-            round_digits,
-        )
-        pair_sims = (
-            a.join(b, ["query_id"])
-            .filter(F.col("va") != F.col("vb"))
-            .select(
-                "query_id",
-                "va",
-                "vb",
-                F.round(pair_cos * 1e6).cast("long").alias("sim_e6"),
-            )
-        )
+        pair_sims = candidate_pair_sims(emb, cand, dim, round_digits)
     pairs = hold(pair_sims.persist())
     w = Window.partitionBy("query_id").orderBy(
         F.desc("score"), F.asc("vec_id")
@@ -759,7 +730,8 @@ def pq_codebooks(
     identical codewords.  Output: (m, code, cnrm, cw0..cw{w-1});
     bounded by construction → broadcast.
 
-    ``e``: flattened corpus (vec_id, nrm, d0..d{dim-1}) from ``_flat``.
+    ``e``: flattened corpus (vec_id, nrm, d0..d{dim-1}) from
+    :func:`..functions.vectors.flat`.
     """
     w = dim // n_sub
     seeds = e.filter(F.col("vec_id") % seed_modulus == 0)
@@ -824,13 +796,9 @@ def _sub_terms(prefix: str, n_sub: int, w: int):
     both as fixed-order left-associated sums (SQL-text construction;
     the CASE subtree is duplicated per term exactly as the Column form
     duplicated its shared Column object in the tree)."""
-    sq_terms = []
-    dp_terms = []
-    for j in range(w):
-        x = _case_component_sql(prefix, j, n_sub, w)
-        sq_terms.append(f"({x}) * ({x})")
-        dp_terms.append(f"({x}) * cw{j}")
-    return F.expr(" + ".join(sq_terms)), F.expr(" + ".join(dp_terms))
+    xs = [f"({_case_component_sql(prefix, j, n_sub, w)})" for j in range(w)]
+    cw = [f"cw{j}" for j in range(w)]
+    return F.expr(dot_sql(xs, xs)), F.expr(dot_sql(xs, cw))
 
 
 def pq_encode(
@@ -851,9 +819,9 @@ def pq_encode(
     """
     w = dim // n_sub
     sl = _sub_slices(e, dim, n_sub)
-    sub_sq = " + ".join(f"s{j} * s{j}" for j in range(w))
-    sub_dot = " + ".join(f"s{j} * cw{j}" for j in range(w))
-    csub_sq = " + ".join(f"cw{j} * cw{j}" for j in range(w))
+    sub_sq = flat_dot_sql("s", "s", w)
+    sub_dot = flat_dot_sql("s", "cw", w)
+    csub_sq = flat_dot_sql("cw", "cw", w)
     dist = F.expr(
         f"ROUND(({sub_sq}) / (nrm * nrm)"
         f" + ({csub_sq}) / (cnrm * cnrm)"
@@ -935,9 +903,7 @@ def pq_topk(
         .select("query_id", "vec_id")
     )
 
-    cos_sim = F.round(
-        flat_dot("d", "q", dim) / (F.col("nrm") * F.col("qnrm")), round_digits
-    )
+    cos_sim = F.expr(cosine_sql("d", "q", "nrm", "qnrm", dim, round_digits))
     w_rank = Window.partitionBy("query_id").orderBy(
         F.desc("cos_sim"), F.asc("vec_id")
     )
@@ -1000,11 +966,7 @@ def ivfpq_topk(
     e = _flat(emb, "vec_id", "d", dim)
     # Coarse quantizer: deterministic seed centroids (see ivf_topk's
     # measured trained-vs-seed note — seeds win on the query path here).
-    cents = e.filter(F.col("vec_id") % centroid_modulus == 0).selectExpr(
-        "vec_id AS cid",
-        "nrm AS cnrm",
-        *[f"d{i} AS c{i}" for i in range(dim)],
-    )
+    cents = seed_centroids(e, centroid_modulus, dim)
     if spill > 1:
         assigned = assign_spill_centroids(e, cents, dim, spill, round_digits)
     else:
@@ -1031,9 +993,7 @@ def ivfpq_topk(
     enc_b = enc.join(buckets, "vec_id")
 
     q = _q_flat(queries, dim)
-    cos_probe = F.round(
-        flat_dot("q", "c", dim) / (F.col("qnrm") * F.col("cnrm")), round_digits
-    )
+    cos_probe = F.expr(cosine_sql("q", "c", "qnrm", "cnrm", dim, round_digits))
     w_probe = Window.partitionBy("query_id").orderBy(F.desc("cos_c"), F.asc("cid"))
     probes = (
         q.crossJoin(F.broadcast(cents))
@@ -1073,9 +1033,7 @@ def ivfpq_topk(
         .select("query_id", "vec_id")
     )
 
-    cos_sim = F.round(
-        flat_dot("d", "q", dim) / (F.col("nrm") * F.col("qnrm")), round_digits
-    )
+    cos_sim = F.expr(cosine_sql("d", "q", "nrm", "qnrm", dim, round_digits))
     w_rank = Window.partitionBy("query_id").orderBy(
         F.desc("cos_sim"), F.asc("vec_id")
     )
@@ -1154,11 +1112,8 @@ def pq_codebooks_trained(
                 schema="code long, "
                 + ", ".join(f"k{j} long" for j in range(w)),
             )
-            dist = None
-            for j in range(w):
-                d = F.col(f"nq{j}") - F.col(f"k{j}")
-                t = d * d
-                dist = t if dist is None else dist + t
+            diffs = [f"(nq{j} - k{j})" for j in range(w)]
+            dist = F.expr(dot_sql(diffs, diffs))
             assigned = (
                 nq.crossJoin(F.broadcast(cb))
                 .select("vec_id", "code", dist.alias("dist"))
@@ -1236,11 +1191,8 @@ def pq_topk_trained(
     # (_sub_slices) — the CASE-indexed form re-derived the slice per
     # codeword row (|codebook|× redundant round/divide work).
     nsl = _sub_slices(e, dim, n_sub, quant=quant)
-    dist = None
-    for j in range(w):
-        d = F.col(f"s{j}") - F.col(f"k{j}")
-        t = d * d
-        dist = t if dist is None else dist + t
+    diffs = [f"(s{j} - k{j})" for j in range(w)]
+    dist = F.expr(dot_sql(diffs, diffs))
     enc = (
         nsl.join(F.broadcast(cb), "m")
         .select("vec_id", "m", "code", dist.alias("dist"))
@@ -1256,17 +1208,8 @@ def pq_topk_trained(
         )
 
     q = _q_flat(queries, dim)
-
-    def _qsub_case(j: int) -> F.Column:
-        expr = F.when(F.col("m") == 0, F.col(f"q{j}"))
-        for m in range(1, n_sub):
-            expr = expr.when(F.col("m") == m, F.col(f"q{m * w + j}"))
-        return expr
-
-    pdot = None
-    for j in range(w):
-        t = _qsub_case(j) * F.col(f"k{j}")
-        pdot = t if pdot is None else pdot + t
+    qsub = [f"({_case_component_sql('q', j, n_sub, w)})" for j in range(w)]
+    pdot = F.expr(dot_sql(qsub, [f"k{j}" for j in range(w)]))
     # LUT units: the codebook components are already int64 in 1e-6 units
     # (pq_codebooks_trained), so Σ q̂_j·k_j / qnrm lands in ~1e6-scaled
     # doubles and ONE further 1e6 quantization step suffices — hence
@@ -1292,9 +1235,7 @@ def pq_topk_trained(
         .filter(F.col("arnk") <= rerank)
         .select("query_id", "vec_id")
     )
-    cos_sim = F.round(
-        flat_dot("d", "q", dim) / (F.col("nrm") * F.col("qnrm")), round_digits
-    )
+    cos_sim = F.expr(cosine_sql("d", "q", "nrm", "qnrm", dim, round_digits))
     w_rank = Window.partitionBy("query_id").orderBy(
         F.desc("cos_sim"), F.asc("vec_id")
     )
@@ -1433,7 +1374,7 @@ def _sq8_recon(
     xi = emb.selectExpr(
         "vec_id",
         *[
-            f"CAST(ROUND({_EMB_SQL}[{i}] * 1000000, 0) AS BIGINT) AS x{i}"
+            f"CAST(ROUND({EMB_SQL}[{i}] * 1000000, 0) AS BIGINT) AS x{i}"
             for i in range(dim)
         ],
     )
@@ -1555,10 +1496,7 @@ def sq8_topk(
     # exact re-rank: full vectors touched only for shortlist x q rows
     e = _flat(emb, "vec_id", "d", dim)
     qf = _q_flat(queries, dim)
-    cos = F.round(
-        flat_dot("d", "q", dim) / (F.col("nrm") * F.col("qnrm")),
-        round_digits,
-    )
+    cos = F.expr(cosine_sql("d", "q", "nrm", "qnrm", dim, round_digits))
     rw = Window.partitionBy("query_id").orderBy(
         F.desc("cos_sim"), F.asc("vec_id")
     )
@@ -1610,11 +1548,7 @@ def ivfsq_topk(
         raise ValueError(f"shortlist ({shortlist}) must be >= k ({k})")
     dim = embedding_dim(emb)
     e = _flat(emb, "vec_id", "d", dim)
-    cents = e.filter(F.col("vec_id") % centroid_modulus == 0).selectExpr(
-        "vec_id AS cid",
-        "nrm AS cnrm",
-        *[f"d{i} AS c{i}" for i in range(dim)],
-    )
+    cents = seed_centroids(e, centroid_modulus, dim)
     assigned = assign_nearest_centroid(e, cents, dim, round_digits)
     buckets = assigned.select("vec_id", "cid")
     if cache_key is not None:
@@ -1627,10 +1561,7 @@ def ivfsq_topk(
     recon_b = _sq8_recon(emb, dim, cache_key).join(buckets, "vec_id")
 
     q = _q_flat(queries, dim)
-    cos_probe = F.round(
-        flat_dot("q", "c", dim) / (F.col("qnrm") * F.col("cnrm")),
-        round_digits,
-    )
+    cos_probe = F.expr(cosine_sql("q", "c", "qnrm", "cnrm", dim, round_digits))
     w_probe = Window.partitionBy("query_id").orderBy(
         F.desc("cos_c"), F.asc("cid")
     )
@@ -1662,10 +1593,7 @@ def ivfsq_topk(
         .select("query_id", "vec_id")
     )
     qf = _q_flat(queries, dim)
-    cos = F.round(
-        flat_dot("d", "q", dim) / (F.col("nrm") * F.col("qnrm")),
-        round_digits,
-    )
+    cos = F.expr(cosine_sql("d", "q", "nrm", "qnrm", dim, round_digits))
     rw = Window.partitionBy("query_id").orderBy(
         F.desc("cos_sim"), F.asc("vec_id")
     )
@@ -1716,15 +1644,8 @@ def semantic_decontaminate(
     dim = embedding_dim(corpus)
     par = corpus.sparkSession.sparkContext.defaultParallelism
     e = _flat(corpus, "vec_id", "d", dim).repartition(par)
-    r = refs.select(
-        F.col("vec_id").alias("ref_id"),
-        norm_unrolled(F.col("v"), dim).alias("rnrm"),
-        *flatten(F.col("v"), "r", dim),
-    )
-    cos = F.round(
-        flat_dot("d", "r", dim) / (F.col("nrm") * F.col("rnrm")),
-        round_digits,
-    )
+    r = _flat(refs, "vec_id AS ref_id", "r", dim, vec="v", nrm="rnrm")
+    cos = F.expr(cosine_sql("d", "r", "nrm", "rnrm", dim, round_digits))
     return (
         e.join(F.broadcast(r), F.lit(True), "left")
         .select("vec_id", cos.alias("cos_sim"))

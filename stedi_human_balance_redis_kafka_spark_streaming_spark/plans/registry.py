@@ -19,9 +19,11 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.vectors import embedding_dim
 from ..operators import buildcache, dedup, joins, pipeline
 from ..session import hold, owned, scoped
 from ..sources.files import load_table, table_fingerprint
+from ..streaming.stateful import _avg_score_e4
 from . import synthetic
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
@@ -156,35 +158,6 @@ def stedi_customer_risk_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# FP policy (module docstring + plans/analytics.py): scores are quantized
-# per-row to exact 1e-4 units and summed as int64 — reassociation-proof —
-# and the average double is derived ONCE from the exact sum.  round(avg(
-# double)) is NOT deterministic across engines: Spark's partial aggregation
-# reassociates the sum differently from DuckDB's sequential reduce, and a
-# group landing within an ULP of a rounding boundary flips the 4th decimal
-# (this exact failure: CORRECTNESS_r01 stedi_risk_by_birth_year).
-def _score_e4():
-    return F.round(F.col("score") * 10000).cast("long")
-
-
-def _avg_score_from_e4():
-    # Average rounded to 4 decimals ENTIRELY in integers — half-up in
-    # 1e-4 units is ``(2·sum + n) div (2·n)`` (scores non-negative, so
-    # Spark's truncating div == DuckDB's floor //).  The former
-    # ``round(sum/n/10000.0, 4)`` hit a half-ULP boundary at sf0.1
-    # (sum/n = 491912.5 exactly: Spark's BigDecimal-of-shortest-repr
-    # rounds 49.19125 up, DuckDB rounds the binary double down — one row
-    # hash-diverged).  The final ÷10000.0 of an int ≤ 1e15 is a single
-    # correctly-rounded IEEE op, identical on both engines.
-    return (
-        F.expr(
-            "(2 * SUM(CAST(round(score * 10000) AS BIGINT)) + COUNT(*))"
-            " div (2 * COUNT(*))"
-        ).cast("double")
-        / 10000.0
-    )
-
-
 SQL_SCORE_E4 = "CAST(round(score * 10000) AS BIGINT)"
 SQL_AVG_SCORE = (
     f"CAST((2 * SUM({SQL_SCORE_E4}) + COUNT(*)) // (2 * COUNT(*))"
@@ -220,7 +193,7 @@ def stedi_risk_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         risk.groupBy("customer")
         .agg(
             F.count("*").alias("n_assessments"),
-            _avg_score_from_e4().alias("avg_score"),
+            _avg_score_e4().alias("avg_score"),
             F.max("riskDate").alias("last_risk_date"),
         )
         .filter(F.col("n_assessments") >= 4)
@@ -255,7 +228,7 @@ def stedi_risk_by_birth_year(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined = joins.join_risk_with_customers(risk, customers)
     return joined.groupBy("birthYear").agg(
         F.count("*").alias("n_scores"),
-        _avg_score_from_e4().alias("avg_score"),
+        _avg_score_e4().alias("avg_score"),
     )
 
 
@@ -413,8 +386,8 @@ def _shared_jaccard_truth(spark, sf_dir: str, build_live):
     if hit is not None:
         return buildcache.rehydrate(spark, hit, "doc_a long, doc_b long")
     live = build_live()
-    rows = live.limit(_DUP_PAIR_CACHE_MAX_ROWS + 1).collect()
-    if len(rows) > _DUP_PAIR_CACHE_MAX_ROWS:
+    rows = live.limit(buildcache.MAX_ROWS + 1).collect()
+    if len(rows) > buildcache.MAX_ROWS:
         return live  # over-cap corpus: live distributed plan
     data = [(int(r["doc_a"]), int(r["doc_b"])) for r in rows]
     buildcache.store(tkey, data)
@@ -1084,7 +1057,7 @@ def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --------------------------------------------------------------------------
 # Shared DuckDB fragments for embedding ops: double-widened vectors and the
-# explicit sequential-style cosine (mirrors functions.vectors.flat_dot's
+# explicit sequential-style cosine (mirrors functions.vectors.cosine_sql's
 # left-associated d0..d{dim-1} accumulation — values are bit-identical).
 # --------------------------------------------------------------------------
 _SQL_EMB = "SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings"
@@ -1452,12 +1425,6 @@ _SQL_CC_ORACLE = f"""
     """
 
 
-# Driver-side row cap for caching the verified pair graph.  Near-dup
-# pair sets are orders of magnitude smaller than the corpus (sf0.1:
-# ~10² pairs for 5k docs); the cap bounds the one-time collect so a
-# pathological corpus (everything near-duplicate) degrades to the live
-# distributed plan instead of an unbounded driver materialization.
-_DUP_PAIR_CACHE_MAX_ROWS = 250_000
 _DUP_PAIR_SCHEMA = "doc_a long, doc_b long, jaccard double"
 
 
@@ -1472,7 +1439,7 @@ def _dup_pair_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     freq-cap) — exact integer Jaccard, md5-free shingling — so the
     cached rows are bit-identical to rebuilding, and a production
     pipeline builds this graph once per ingest, not once per consumer.
-    The build collects AT MOST ``_DUP_PAIR_CACHE_MAX_ROWS + 1`` rows
+    The build collects AT MOST ``buildcache.MAX_ROWS + 1`` rows
     (LIMIT-bounded, like the brute-force dedup gate); an over-cap pair
     set skips the cache and returns the live distributed plan — the
     100 TB-safe degradation.
@@ -1498,8 +1465,8 @@ def _dup_pair_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
             n=3,
             max_shingle_freq=_MAX_SHINGLE_FREQ,
         )
-        rows = pairs.limit(_DUP_PAIR_CACHE_MAX_ROWS + 1).collect()
-    if len(rows) > _DUP_PAIR_CACHE_MAX_ROWS:
+        rows = pairs.limit(buildcache.MAX_ROWS + 1).collect()
+    if len(rows) > buildcache.MAX_ROWS:
         # Too large to hold driver-side: hand the internal persists to
         # the caller's scope (live-plan consumption) and serve the plan.
         hold(*build)
@@ -1537,8 +1504,8 @@ def _emb_exact_pairs(
     pairs = dedup.embedding_cosine_pairs(
         load_table(spark, sf_dir, "embeddings"), threshold=threshold
     ).select("vec_a", "vec_b")
-    rows = pairs.limit(_DUP_PAIR_CACHE_MAX_ROWS + 1).collect()
-    if len(rows) > _DUP_PAIR_CACHE_MAX_ROWS:
+    rows = pairs.limit(buildcache.MAX_ROWS + 1).collect()
+    if len(rows) > buildcache.MAX_ROWS:
         return pairs
     data = [(int(r["vec_a"]), int(r["vec_b"])) for r in rows]
     buildcache.store(ckey, data)
@@ -1576,8 +1543,8 @@ def _emb_pair_graph(
         spill=spill,
         cache_key=fp,
     )
-    rows = pairs.limit(_DUP_PAIR_CACHE_MAX_ROWS + 1).collect()
-    if len(rows) > _DUP_PAIR_CACHE_MAX_ROWS:
+    rows = pairs.limit(buildcache.MAX_ROWS + 1).collect()
+    if len(rows) > buildcache.MAX_ROWS:
         return pairs
     data = [(int(r["vec_a"]), int(r["vec_b"]), float(r["cos_sim"])) for r in rows]
     buildcache.store(ckey, data)
@@ -1747,8 +1714,8 @@ def _cached_pair_truth(
     if hit is not None:
         return buildcache.rehydrate(spark, hit, "query_id long, vec_id long")
     bf = build_fn().select("query_id", "vec_id")
-    rows = bf.limit(_DUP_PAIR_CACHE_MAX_ROWS + 1).collect()
-    if len(rows) > _DUP_PAIR_CACHE_MAX_ROWS:
+    rows = bf.limit(buildcache.MAX_ROWS + 1).collect()
+    if len(rows) > buildcache.MAX_ROWS:
         return bf
     data = [(int(r["query_id"]), int(r["vec_id"])) for r in rows]
     buildcache.store(ckey, data)
@@ -2371,8 +2338,8 @@ def _mmr_candidates(
         "vec_id",
         F.round(F.col("cos_sim") * 1e6).cast("long").alias("rel_e6"),
     )
-    rows = cand.limit(_DUP_PAIR_CACHE_MAX_ROWS + 1).collect()
-    if len(rows) > _DUP_PAIR_CACHE_MAX_ROWS:
+    rows = cand.limit(buildcache.MAX_ROWS + 1).collect()
+    if len(rows) > buildcache.MAX_ROWS:
         return None
     data = [(int(r["query_id"]), int(r["vec_id"]), int(r["rel_e6"])) for r in rows]
     buildcache.store(ckey, data)
@@ -2397,41 +2364,11 @@ def _mmr_pair_sims(
     if hit is not None:
         return buildcache.rehydrate(spark, hit, schema)
     emb = load_table(spark, sf_dir, "embeddings")
-    q = similarity.queries_by_modulus(emb, query_modulus)
-    # replicate the operator's bounded pair construction (identical for
-    # any k at equal n_cand) rather than a throwaway mmr run
-    from ..functions.vectors import embedding_dim, flat_dot
-
-    dim = embedding_dim(emb)
-    flat = similarity._flat(emb, "vec_id", "d", dim)
-    cv = cand.select("query_id", "vec_id").join(flat, "vec_id")
-    a = cv.select(
-        "query_id",
-        F.col("vec_id").alias("va"),
-        F.col("nrm").alias("anrm"),
-        *[F.col(f"d{i}").alias(f"a{i}") for i in range(dim)],
-    )
-    b = cv.select(
-        "query_id",
-        F.col("vec_id").alias("vb"),
-        F.col("nrm").alias("bnrm"),
-        *[F.col(f"d{i}").alias(f"b{i}") for i in range(dim)],
-    )
-    pair_cos = F.round(
-        flat_dot("a", "b", dim) / (F.col("anrm") * F.col("bnrm")), 6
-    )
-    pairs = (
-        a.join(b, ["query_id"])
-        .filter(F.col("va") != F.col("vb"))
-        .select(
-            "query_id",
-            "va",
-            "vb",
-            F.round(pair_cos * 1e6).cast("long").alias("sim_e6"),
-        )
-    )
-    rows = pairs.limit(_DUP_PAIR_CACHE_MAX_ROWS + 1).collect()
-    if len(rows) > _DUP_PAIR_CACHE_MAX_ROWS:
+    # the operator's own bounded pair construction (identical for any k
+    # at equal n_cand) rather than a throwaway mmr run
+    pairs = similarity.candidate_pair_sims(emb, cand, embedding_dim(emb))
+    rows = pairs.limit(buildcache.MAX_ROWS + 1).collect()
+    if len(rows) > buildcache.MAX_ROWS:
         return None
     data = [
         (int(r["query_id"]), int(r["va"]), int(r["vb"]), int(r["sim_e6"]))

@@ -15,15 +15,32 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from ..functions.vectors import (
+    EMB_SQL,
+    dot_sql,
+    lit_dot_sql,
+    lit_sql,
+    norm_sql,
+    rounded_cosine_sql,
+)
+
 
 def _avg_score_e4():
     """Reassociation-proof average: per-row quantize to exact 1e-4 int
     units, sum exactly, derive the double once (repo FP policy —
     plans/analytics.py docstring).  round(avg(double)) is not stable
-    across partial-aggregation orders."""
-    # Integer half-up to 4 decimals — (2·sum + n) div (2·n) — matching
-    # plans/registry._avg_score_from_e4 (a double round() diverged
-    # cross-engine on an exact-half boundary at sf0.1).
+    across partial-aggregation orders: Spark's partial aggregation
+    reassociates the sum differently from DuckDB's sequential reduce
+    (CORRECTNESS_r01 stedi_risk_by_birth_year).  Shared by the batch
+    queries in plans/registry.py and the streaming gates here."""
+    # Average rounded to 4 decimals ENTIRELY in integers — half-up in
+    # 1e-4 units is ``(2·sum + n) div (2·n)`` (scores non-negative, so
+    # Spark's truncating div == DuckDB's floor //).  The former
+    # ``round(sum/n/10000.0, 4)`` hit a half-ULP boundary at sf0.1
+    # (sum/n = 491912.5 exactly: Spark's BigDecimal-of-shortest-repr
+    # rounds 49.19125 up, DuckDB rounds the binary double down — one row
+    # hash-diverged).  The final ÷10000.0 of an int ≤ 1e15 is a single
+    # correctly-rounded IEEE op, identical on both engines.
     return (
         F.expr(
             "(2 * SUM(CAST(round(score * 10000) AS BIGINT)) + COUNT(*))"
@@ -360,31 +377,28 @@ def streaming_assign_centroids(
 
     Inline-expression bound: k·dim literal terms — fine to k ~ 10²-10³
     centroids; beyond that, route through the batch path per
-    micro-batch (foreachBatch) instead.  Output: (vec_id, cid, cos_c).
+    micro-batch (foreachBatch) instead.  The terms are SQL text from
+    functions/vectors.py, parsed in one call.  Output: (vec_id, cid,
+    cos_c).
     """
     rows = centroids.collect()
     dim = len([c for c in centroids.columns if c.startswith("c") and c[1:].isdigit()])
-    v = F.col("embedding").cast("array<double>")
-    nrm = None
-    for j in range(dim):
-        t = v[j] * v[j]
-        nrm = t if nrm is None else nrm + t
-    nrm = F.sqrt(nrm)
+    v = [f"({EMB_SQL})[{j}]" for j in range(dim)]
+    nrm = norm_sql(v)
     scored = []
     for r in rows:
-        dot = None
-        for j in range(dim):
-            t = v[j] * F.lit(float(r[f"c{j}"]))
-            dot = t if dot is None else dot + t
-        cos = F.round(dot / (nrm * F.lit(float(r["cnrm"]))), round_digits)
-        scored.append(
-            F.struct(
-                cos.alias("cos_c"),
-                F.lit(-int(r["cid"])).cast("long").alias("neg_cid"),
-                F.lit(int(r["cid"])).cast("long").alias("cid"),
-            )
+        cos = rounded_cosine_sql(
+            lit_dot_sql(v, [r[f"c{j}"] for j in range(dim)]),
+            nrm,
+            lit_sql(r["cnrm"]),
+            round_digits,
         )
-    best = F.array_max(F.array(*scored))
+        cid = int(r["cid"])
+        scored.append(
+            f"struct({cos} AS cos_c, CAST({-cid} AS BIGINT) AS neg_cid,"
+            f" CAST({cid} AS BIGINT) AS cid)"
+        )
+    best = F.expr(f"array_max(array({', '.join(scored)}))")
     return vecs.select(
         "vec_id",
         best["cid"].alias("cid"),
@@ -415,7 +429,9 @@ def streaming_pq_encode(
 
     Inline-expression bound: |codebook|·w literal terms — fine to
     ~10³ codewords; beyond that, encode through the batch path per
-    micro-batch (foreachBatch).  Output: (vec_id, m, code).
+    micro-batch (foreachBatch).  The terms are SQL text from
+    functions/vectors.py, parsed in one call.  Output: (vec_id, m,
+    code).
     """
     rows = codebook.collect()
     w = len([c for c in codebook.columns if c.startswith("cw") and c[2:].isdigit()])
@@ -424,53 +440,35 @@ def streaming_pq_encode(
         by_m.setdefault(int(r["m"]), []).append(r)
     n_sub = len(by_m)
 
-    v = F.col("embedding").cast("array<double>")
-    dim = n_sub * w
-    nrm_sq = None
-    for j in range(dim):
-        t = v[j] * v[j]
-        nrm_sq = t if nrm_sq is None else nrm_sq + t
-    nrm = F.sqrt(nrm_sq)
-
+    v = [f"({EMB_SQL})[{j}]" for j in range(n_sub * w)]
+    nrm = norm_sql(v)
     per_m = []
     for m in sorted(by_m):
+        x = v[m * w:(m + 1) * w]
+        sub_sq = dot_sql(x, x)
         cands = []
         for r in sorted(by_m[m], key=lambda r: int(r["code"])):
             cw = [float(r[f"cw{j}"]) for j in range(w)]
-            cnrm = float(r["cnrm"])
+            cnrm = lit_sql(r["cnrm"])
             # codeword self-product folds driver-side in the same
             # left-associated IEEE order as the batch expression
             csub_sq = cw[0] * cw[0]
             for j in range(1, w):
                 csub_sq += cw[j] * cw[j]
-            sub_sq = None
-            sub_dot = None
-            for j in range(w):
-                x = v[m * w + j]
-                sq_t = x * x
-                dp_t = x * F.lit(cw[j])
-                sub_sq = sq_t if sub_sq is None else sub_sq + sq_t
-                sub_dot = dp_t if sub_dot is None else sub_dot + dp_t
-            dist = F.round(
-                sub_sq / (nrm * nrm)
-                + F.lit(csub_sq) / (F.lit(cnrm) * F.lit(cnrm))
-                - F.lit(2.0) * sub_dot / (nrm * F.lit(cnrm)),
-                round_digits,
+            dist = (
+                f"ROUND(({sub_sq}) / ({nrm} * {nrm})"
+                f" + {lit_sql(csub_sq)} / ({cnrm} * {cnrm})"
+                f" - 2.0D * ({lit_dot_sql(x, cw)}) / ({nrm} * {cnrm}),"
+                f" {round_digits})"
             )
-            cands.append(
-                F.struct(
-                    dist.alias("dist"),
-                    F.lit(int(r["code"])).cast("long").alias("code"),
-                )
-            )
-        best = F.array_min(F.array(*cands))
+            code = int(r["code"])
+            cands.append(f"struct({dist} AS dist, CAST({code} AS BIGINT) AS code)")
         per_m.append(
-            F.struct(
-                F.lit(m).cast("int").alias("m"), best["code"].alias("code")
-            )
+            f"struct(CAST({m} AS INT) AS m,"
+            f" (array_min(array({', '.join(cands)}))).code AS code)"
         )
     return vecs.select(
-        "vec_id", F.explode(F.array(*per_m)).alias("__e")
+        "vec_id", F.expr(f"explode(array({', '.join(per_m)}))").alias("__e")
     ).select("vec_id", F.col("__e.m").alias("m"), F.col("__e.code").alias("code"))
 
 

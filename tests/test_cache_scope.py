@@ -12,10 +12,11 @@ is dropped.
 from __future__ import annotations
 
 import gc
-import time
 
 import pytest
 from pyspark.sql import functions as F
+
+from _blocks import NewBlocks
 
 from stedi_human_balance_redis_kafka_spark_streaming_spark.operators import dedup
 from stedi_human_balance_redis_kafka_spark_streaming_spark.plans import registry
@@ -23,67 +24,46 @@ from stedi_human_balance_redis_kafka_spark_streaming_spark.session import owned
 from stedi_human_balance_redis_kafka_spark_streaming_spark.sources.files import load_table
 
 
-def _persistent_rdd_count(spark) -> int:
-    return spark.sparkContext._jsc.getPersistentRDDs().size()
-
-
-def _assert_drains_to(spark, baseline: int) -> None:
-    # unpersist(blocking=False) removes the RDD from the persistentRdds
-    # map synchronously; poll briefly anyway to absorb finalizer timing.
-    # localCheckpoint RDDs (CC label rounds) are reclaimed by the
-    # ContextCleaner only after a JVM GC surfaces their weak refs — the
-    # same mechanism session.py's periodicGC interval relies on — so the
-    # poll nudges the JVM collector too.
-    for _ in range(50):
-        if _persistent_rdd_count(spark) <= baseline:
-            return
-        gc.collect()
-        spark.sparkContext._jvm.System.gc()
-        time.sleep(0.2)
-    assert _persistent_rdd_count(spark) <= baseline
-
-
 def test_operator_self_scope_releases_caches(spark, sf_dir):
     spark.catalog.clearCache()
-    baseline = _persistent_rdd_count(spark)
+    blocks = NewBlocks(spark)
     docs = load_table(spark, sf_dir, "documents")
     result = dedup.minhash_lsh_pairs(docs, threshold=0.7, shingle_n=3)
-    assert _persistent_rdd_count(spark) > baseline  # index + candidates live
+    blocks.assert_live()  # index + candidates live
     result.count()
     del result
-    _assert_drains_to(spark, baseline)
+    blocks.assert_released(jvm_gc=True)
 
 
 def test_recall_query_releases_all_caches(spark, sf_dir):
     spark.catalog.clearCache()
-    baseline = _persistent_rdd_count(spark)
+    blocks = NewBlocks(spark)
     result = registry.queries()["dedup_lsh_recall"](spark, sf_dir)
     rows = result.collect()
     assert len(rows) == 1
-    assert _persistent_rdd_count(spark) > baseline
+    blocks.assert_live()
     del result
-    _assert_drains_to(spark, baseline)
+    blocks.assert_released(jvm_gc=True)
 
 
 def test_caches_survive_until_action(spark, sf_dir):
     # The scope must NOT evict eagerly: while the caller holds the result,
     # the operators' eagerly-materialized caches stay hot for the action.
     spark.catalog.clearCache()
-    baseline = _persistent_rdd_count(spark)
+    blocks = NewBlocks(spark)
     docs = load_table(spark, sf_dir, "documents")
     with owned() as caches:
         pairs = dedup.ngram_jaccard_pairs(
             docs, threshold=0.7, n=3, max_shingle_freq=64
         )
     assert len(caches) == 1
-    n_live = _persistent_rdd_count(spark)
-    assert n_live > baseline
+    live = blocks.assert_live()
     gc.collect()
-    assert _persistent_rdd_count(spark) == n_live  # nothing released early
+    assert blocks.live() == live  # nothing released early
     pairs.count()
     for c in caches:
         c.unpersist(False)
-    _assert_drains_to(spark, baseline)
+    blocks.assert_released(jvm_gc=True)
 
 
 def test_multi_signal_caches_live_through_execution_then_release(spark, sf_dir):
@@ -93,15 +73,15 @@ def test_multi_signal_caches_live_through_execution_then_release(spark, sf_dir):
     the immediately-dropped inner frame and unpersisting the index
     before execution."""
     spark.catalog.clearCache()
-    baseline = _persistent_rdd_count(spark)
+    blocks = NewBlocks(spark)
     result = registry.queries()["dedup_multi_signal"](spark, sf_dir)
     # caches must still be registered while the caller holds the result
-    assert _persistent_rdd_count(spark) > baseline
+    blocks.assert_live()
     rows = result.collect()
     assert rows
-    assert _persistent_rdd_count(spark) > baseline
+    blocks.assert_live()
     del result
-    _assert_drains_to(spark, baseline)
+    blocks.assert_released(jvm_gc=True)
 
 
 def test_srp_pairs_self_scope_releases_caches(spark, sf_dir):
@@ -114,13 +94,13 @@ def test_srp_pairs_self_scope_releases_caches(spark, sf_dir):
     )
 
     spark.catalog.clearCache()
-    baseline = _persistent_rdd_count(spark)
+    blocks = NewBlocks(spark)
     emb = load_table(spark, sf_dir, "embeddings")
     result = dedup.srp_lsh_pairs(emb, threshold=0.4)
     result.count()
-    assert _persistent_rdd_count(spark) > baseline
+    blocks.assert_live()
     del result
-    _assert_drains_to(spark, baseline)
+    blocks.assert_released(jvm_gc=True)
 
 
 def test_followed_by_self_scope_releases_caches(spark):
@@ -132,7 +112,7 @@ def test_followed_by_self_scope_releases_caches(spark):
     )
 
     spark.catalog.clearCache()
-    baseline = _persistent_rdd_count(spark)
+    blocks = NewBlocks(spark)
     ev = spark.createDataFrame(
         [(f"s{i % 3}", "ab"[i % 2], i, i) for i in range(12)],
         "sid string, item string, ts long, eid long",
@@ -143,7 +123,7 @@ def test_followed_by_self_scope_releases_caches(spark):
     )
     result.count()
     del result
-    _assert_drains_to(spark, baseline)
+    blocks.assert_released(jvm_gc=True)
 
 
 def test_substring_runs_self_scope_releases_caches(spark, sf_dir):
@@ -154,13 +134,13 @@ def test_substring_runs_self_scope_releases_caches(spark, sf_dir):
     )
 
     spark.catalog.clearCache()
-    baseline = _persistent_rdd_count(spark)
+    blocks = NewBlocks(spark)
     docs = load_table(spark, sf_dir, "documents")
     result = dedup.substring_run_pairs(docs)
     result.count()
-    assert _persistent_rdd_count(spark) > baseline
+    blocks.assert_live()
     del result
-    _assert_drains_to(spark, baseline)
+    blocks.assert_released(jvm_gc=True)
 
 
 def test_modularity_query_releases_all_caches(spark, sf_dir):
@@ -168,12 +148,12 @@ def test_modularity_query_releases_all_caches(spark, sf_dir):
     the query's scope; everything drains once the scored frame is
     dropped."""
     spark.catalog.clearCache()
-    baseline = _persistent_rdd_count(spark)
+    blocks = NewBlocks(spark)
     result = registry.queries()["graph_modularity"](spark, sf_dir)
     rows = result.collect()
     assert len(rows) >= 1
     del result
-    _assert_drains_to(spark, baseline)
+    blocks.assert_released(jvm_gc=True)
 
 
 def test_mmr_topk_releases_its_checkpoints_synchronously(spark):
@@ -186,7 +166,7 @@ def test_mmr_topk_releases_its_checkpoints_synchronously(spark):
 
     spark.catalog.clearCache()
     gc.collect()
-    baseline = _persistent_rdd_count(spark)
+    blocks = NewBlocks(spark)
     emb = spark.createDataFrame(
         [(i, [float(i % 3), float(i % 5), 1.0, 0.0]) for i in range(1, 9)],
         "vec_id long, embedding array<float>",
@@ -198,7 +178,7 @@ def test_mmr_topk_releases_its_checkpoints_synchronously(spark):
     assert len(result.collect()) == 3
     del result
     gc.collect()
-    assert _persistent_rdd_count(spark) <= baseline
+    blocks.assert_released()
 
 
 def _chain(spark, n):
@@ -291,11 +271,10 @@ def test_non_converged_fixpoint_releases_every_block(spark, name):
     not by a later GC (no gc.collect / System.gc here)."""
     call, message = _raising_fixpoints()[name]
     spark.catalog.clearCache()
-    baseline = _persistent_rdd_count(spark)
+    blocks = NewBlocks(spark)
     with pytest.raises(RuntimeError, match=message):
         call(spark)
-    # <=: a block another test leaked may be GC-released meanwhile
-    assert _persistent_rdd_count(spark) <= baseline
+    blocks.assert_released()
 
 
 @pytest.mark.parametrize(
@@ -316,8 +295,8 @@ def test_fixpoint_query_releases_all_blocks(spark, sf_dir, name):
     """Every registered query built on session.fixpoint leaves no
     persisted frame or checkpoint behind once its result is dropped."""
     spark.catalog.clearCache()
-    baseline = _persistent_rdd_count(spark)
+    blocks = NewBlocks(spark)
     result = registry.queries()[name](spark, sf_dir)
     result.collect()
     del result
-    _assert_drains_to(spark, baseline)
+    blocks.assert_released(jvm_gc=True)

@@ -31,6 +31,7 @@ import duckdb
 import numpy as np
 import pandas as pd
 import pytest
+from _blocks import NewBlocks
 
 import __spark_entry__ as entry_mod
 
@@ -109,12 +110,12 @@ QUERY_NAMES = sorted(entry_mod.oracle_sql().keys())
 @pytest.mark.parametrize("name", QUERY_NAMES)
 def test_query_matches_oracle(spark, duck, name):
     qfn = entry_mod.queries()[name]
-    n_rdds = spark.sparkContext._jsc.getPersistentRDDs().size()
+    blocks = NewBlocks(spark)
     spark_pdf = qfn(spark, SF_DIR).toPandas()
     # the result frame is already dropped: every block the query held
     # must be released now, synchronously — no JVM GC
     gc.collect()
-    n_left = spark.sparkContext._jsc.getPersistentRDDs().size()
+    left = blocks.live()
     duck_pdf = duck.execute(entry_mod.oracle_sql()[name]).df()
 
     assert sorted(spark_pdf.columns) == sorted(duck_pdf.columns), (
@@ -138,8 +139,8 @@ def test_query_matches_oracle(spark, duck, name):
     sc, dc = _canon(spark_pdf), _canon(duck_pdf)
     mismatches = [(a, b) for a, b in zip(sc, dc) if a != b]
     assert not mismatches, f"{name}: first value mismatches: {mismatches[:3]}"
-    assert n_left <= n_rdds, (
-        f"{name}: {n_left - n_rdds} persisted RDD(s) left after the "
+    assert not left, (
+        f"{name}: persisted RDD(s) {sorted(left)} left after the "
         f"result was dropped"
     )
 

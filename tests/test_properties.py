@@ -603,6 +603,29 @@ def test_clustering_coefficient_matches_brute_force(spark, edges):
         assert got[v] == (deg[v], tri[v], cc)
 
 
+def _snm_candidates_global(keyed, window):
+    """Reference SNM candidate stream: ONE global window over
+    (bkey, doc_id), each row paired with its ``window`` successors —
+    exact, but every row passes through a single task.  Output:
+    (doc_id, other) rows, un-normalized and possibly duplicated."""
+    from pyspark.sql import Window
+
+    w = Window.orderBy("bkey", "doc_id")
+    leads = keyed.select(
+        "doc_id",
+        *[
+            F.lead("doc_id", k).over(w).alias(f"__n{k}")
+            for k in range(1, window + 1)
+        ],
+    )
+    return leads.select(
+        "doc_id",
+        F.explode(
+            F.array(*[F.col(f"__n{k}") for k in range(1, window + 1)])
+        ).alias("other"),
+    ).filter(F.col("other").isNotNull())
+
+
 @settings(**_SETTINGS)
 @given(
     texts=st.lists(
@@ -622,28 +645,31 @@ def test_snm_sharded_equals_global_window(spark, texts, window, shards):
     boundary-overlap frame filtered on true global rank distance) must
     return EXACTLY the single-global-window pair set — including when
     shards outnumber rows (empty/short partitions) and when duplicate
-    blocking keys straddle shard boundaries."""
+    blocking keys straddle shard boundaries.  Compared on the
+    normalized candidate streams, before verification."""
     from stedi_human_balance_redis_kafka_spark_streaming_spark.operators import (
         dedup,
+    )
+    from stedi_human_balance_redis_kafka_spark_streaming_spark.session import (
+        owned,
     )
 
     df = spark.createDataFrame(
         [(i, s) for i, s in enumerate(texts)], "doc_id long, text string"
     )
-    kw = dict(threshold=0.0, n=1, window=window, key_chars=4)
-    glob = sorted(
-        (r.doc_a, r.doc_b)
-        for r in dedup.sorted_neighborhood_pairs(
-            df, sharded=False, **kw
-        ).collect()
-    )
-    shard = sorted(
-        (r.doc_a, r.doc_b)
-        for r in dedup.sorted_neighborhood_pairs(
-            df, sharded=True, shards=shards, **kw
-        ).collect()
-    )
-    assert shard == glob
+    keyed = df.select("doc_id", dedup._snm_key("text", 4).alias("bkey"))
+
+    def pairs(raw):
+        return sorted(
+            {(min(r.doc_id, r.other), max(r.doc_id, r.other))
+             for r in raw.collect()}
+        )
+
+    with owned() as blocks:
+        shard = pairs(dedup._snm_candidates_sharded(keyed, window, shards))
+    for b in blocks:
+        b.unpersist(False)
+    assert shard == pairs(_snm_candidates_global(keyed, window))
 
 
 def test_snm_multipass_superset_and_reorder_recall(spark):

@@ -10,6 +10,8 @@ from pathlib import Path
 import pytest
 from pyspark.sql import functions as F
 
+from _blocks import NewBlocks
+
 from stedi_human_balance_redis_kafka_spark_streaming_spark import session
 from stedi_human_balance_redis_kafka_spark_streaming_spark.operators import graph
 from stedi_human_balance_redis_kafka_spark_streaming_spark.session import hold, scoped
@@ -27,10 +29,6 @@ def test_only_the_window_exec_logger_is_raised_to_error(spark):
     assert level("org.apache.spark.sql.execution.SparkPlan") == "WARN"
 
 
-def _persistent_rdd_count(spark) -> int:
-    return spark.sparkContext._jsc.getPersistentRDDs().size()
-
-
 def test_nested_operator_blocks_live_until_the_outer_result_is_dropped(spark):
     """Hoisting: a scoped function that derives from bfs_distances' frame
     and drops the inner frame still executes after gc — the inner
@@ -45,18 +43,18 @@ def test_nested_operator_blocks_live_until_the_outer_result_is_dropped(spark):
 
     spark.catalog.clearCache()
     gc.collect()
-    baseline = _persistent_rdd_count(spark)
+    blocks = NewBlocks(spark)
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(6)], "src long, dst long"
     )
     seeds = spark.createDataFrame([(0,)], "node long")
     out = hops(edges, seeds)
     gc.collect()
-    assert _persistent_rdd_count(spark) > baseline
+    blocks.assert_live()
     assert sorted(r["d10"] for r in out.collect()) == list(range(0, 70, 10))
     del out
     gc.collect()
-    assert _persistent_rdd_count(spark) <= baseline
+    blocks.assert_released()
 
 
 def _checkpoint_backed_results():
