@@ -83,6 +83,20 @@ def rounded_cosine_sql(dot: str, na: str, nb: str, round_digits: int) -> str:
     return f"ROUND(({dot}) / ({na} * {nb}), {round_digits})"
 
 
+def pq_dist_sql(
+    sub_sq: str, csub_sq: str, sub_dot: str, nrm: str, cnrm: str, round_digits: int
+) -> str:
+    """Rounded normalized-space L2² between a subvector and a PQ codeword:
+    ``|x/nrm|² + |c/cnrm|² - 2·x·c/(nrm·cnrm)`` from the subvector's
+    self-product ``sub_sq``, the codeword's ``csub_sq``, their dot
+    ``sub_dot`` and the two full-vector norms."""
+    return (
+        f"ROUND(({sub_sq}) / ({nrm} * {nrm})"
+        f" + ({csub_sq}) / ({cnrm} * {cnrm})"
+        f" - 2.0D * ({sub_dot}) / ({nrm} * {cnrm}), {round_digits})"
+    )
+
+
 def cosine_sql(
     pa: str, pb: str, na: str, nb: str, dim: int, round_digits: int
 ) -> str:
@@ -91,10 +105,16 @@ def cosine_sql(
     return rounded_cosine_sql(flat_dot_sql(pa, pb, dim), na, nb, round_digits)
 
 
+def elements_sql(vec: str, dim: int) -> list[str]:
+    """The ``dim`` components ``(vec)[0] .. (vec)[dim-1]`` of the array
+    expression ``vec``."""
+    return [f"({vec})[{i}]" for i in range(dim)]
+
+
 def flatten_sql(vec: str, prefix: str, dim: int) -> list[str]:
     """``selectExpr`` items projecting the array expression ``vec`` into
     ``dim`` scalar columns ``prefix0 .. prefix{dim-1}``."""
-    return [f"({vec})[{i}] AS {prefix}{i}" for i in range(dim)]
+    return [f"{x} AS {prefix}{i}" for i, x in enumerate(elements_sql(vec, dim))]
 
 
 def flat(

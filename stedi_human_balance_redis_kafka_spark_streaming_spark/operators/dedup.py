@@ -794,7 +794,7 @@ def _snm_key(text_col: str, key_chars: int, token_sorted: bool = False):
 def _snm_candidates_sharded(
     keyed: DataFrame,
     window: int,
-    shards: int | None,
+    shards: int | None = None,
 ) -> DataFrame:
     """Range-partitioned SNM candidate stream — the 100 TB form of the
     global-window path, exactly equal to it (property-tested):
@@ -816,6 +816,8 @@ def _snm_candidates_sharded(
        shard edge), so boundary-frame lead distance equals global
        distance: no pair is missed, no false pair survives the rank
        filter.  Same-shard duplicates fall to the caller's distinct.
+
+    ``shards`` defaults to ``spark.sql.shuffle.partitions``.
 
     The shard-local frame is persisted (held) before
     reuse: ``repartitionByRange`` samples boundaries, so the pinned
@@ -909,7 +911,6 @@ def sorted_neighborhood_pairs(
     window: int = 3,
     key_chars: int = 24,
     text_col: str = "text",
-    shards: int | None = None,
 ) -> DataFrame:
     """Sorted-neighborhood (SNM) near-dup pairs — the fourth classic
     blocking strategy next to the inverted-index join (exact,
@@ -941,7 +942,7 @@ def sorted_neighborhood_pairs(
     keyed = docs.select(
         "doc_id", _snm_key(text_col, key_chars).alias("bkey")
     )
-    raw = _snm_candidates_sharded(keyed, window, shards)
+    raw = _snm_candidates_sharded(keyed, window)
     cand = hold(
         raw.select(
             F.least("doc_id", "other").alias("doc_a"),
@@ -965,7 +966,6 @@ def sorted_neighborhood_multipass_pairs(
     window: int = 3,
     key_chars: int = 24,
     text_col: str = "text",
-    shards: int | None = None,
 ) -> DataFrame:
     """Multi-pass SNM: run the sorted-neighborhood candidate stage
     TWICE with independent blocking keys — the raw normalized prefix
@@ -989,8 +989,8 @@ def sorted_neighborhood_multipass_pairs(
         "doc_id",
         _snm_key(text_col, key_chars, token_sorted=True).alias("bkey"),
     )
-    raw = _snm_candidates_sharded(k1, window, shards).unionByName(
-        _snm_candidates_sharded(k2, window, shards)
+    raw = _snm_candidates_sharded(k1, window).unionByName(
+        _snm_candidates_sharded(k2, window)
     )
     cand = hold(
         raw.select(

@@ -41,9 +41,13 @@ from ..functions.vectors import (
     EMB_SQL,
     cosine_sql,
     dot_sql,
+    elements_sql,
     embedding_dim,
     flat as _flat,
     flat_dot_sql,
+    norm_sql,
+    norm_unrolled_sql,
+    pq_dist_sql,
 )
 from ..session import checkpoint_handle, hold, scoped
 
@@ -229,7 +233,7 @@ def kmeans_centroids(
         )
         return cd.selectExpr(
             "cid",
-            f"SQRT({flat_dot_sql('c', 'c', dim)}) AS cnrm",
+            f"{norm_sql([f'c{i}' for i in range(dim)])} AS cnrm",
             *[f"c{i}" for i in range(dim)],
         )
 
@@ -822,11 +826,7 @@ def pq_encode(
     sub_sq = flat_dot_sql("s", "s", w)
     sub_dot = flat_dot_sql("s", "cw", w)
     csub_sq = flat_dot_sql("cw", "cw", w)
-    dist = F.expr(
-        f"ROUND(({sub_sq}) / (nrm * nrm)"
-        f" + ({csub_sq}) / (cnrm * cnrm)"
-        f" - 2.0D * ({sub_dot}) / (nrm * cnrm), {round_digits})"
-    )
+    dist = F.expr(pq_dist_sql(sub_sq, csub_sq, sub_dot, "nrm", "cnrm", round_digits))
     return (
         sl.join(F.broadcast(cb), "m")
         .select("vec_id", "m", "code", dist.alias("dist"))
@@ -1644,7 +1644,14 @@ def semantic_decontaminate(
     dim = embedding_dim(corpus)
     par = corpus.sparkSession.sparkContext.defaultParallelism
     e = _flat(corpus, "vec_id", "d", dim).repartition(par)
-    r = _flat(refs, "vec_id AS ref_id", "r", dim, vec="v", nrm="rnrm")
+    # Column-API aliases, not _flat: a DataFrame-API alias carries
+    # non-inheritable metadata keys that a selectExpr alias lacks, and
+    # they are part of this query's analyzed plan (and plan digest).
+    r = refs.select(
+        F.col("vec_id").alias("ref_id"),
+        F.expr(norm_unrolled_sql("v", dim)).alias("rnrm"),
+        *[F.expr(x).alias(f"r{i}") for i, x in enumerate(elements_sql("v", dim))],
+    )
     cos = F.expr(cosine_sql("d", "r", "nrm", "rnrm", dim, round_digits))
     return (
         e.join(F.broadcast(r), F.lit(True), "left")

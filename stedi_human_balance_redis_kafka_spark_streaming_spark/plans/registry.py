@@ -773,8 +773,8 @@ def dedup_snm_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.least("doc_id", "other").alias("doc_a"),
         F.greatest("doc_id", "other").alias("doc_b"),
     )
-    c1 = pair(dedup._snm_candidates_sharded(k1, 3, None))
-    c2 = pair(dedup._snm_candidates_sharded(k2, 3, None))
+    c1 = pair(dedup._snm_candidates_sharded(k1, 3))
+    c2 = pair(dedup._snm_candidates_sharded(k2, 3))
     tr = hold(truth.persist())
     tr.count()
     n_true = tr.agg(F.count("*").alias("n_true"))

@@ -18,9 +18,11 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from ..functions.vectors import (
     EMB_SQL,
     dot_sql,
+    elements_sql,
     lit_dot_sql,
     lit_sql,
     norm_sql,
+    pq_dist_sql,
     rounded_cosine_sql,
 )
 
@@ -383,7 +385,7 @@ def streaming_assign_centroids(
     """
     rows = centroids.collect()
     dim = len([c for c in centroids.columns if c.startswith("c") and c[1:].isdigit()])
-    v = [f"({EMB_SQL})[{j}]" for j in range(dim)]
+    v = elements_sql(EMB_SQL, dim)
     nrm = norm_sql(v)
     scored = []
     for r in rows:
@@ -440,7 +442,7 @@ def streaming_pq_encode(
         by_m.setdefault(int(r["m"]), []).append(r)
     n_sub = len(by_m)
 
-    v = [f"({EMB_SQL})[{j}]" for j in range(n_sub * w)]
+    v = elements_sql(EMB_SQL, n_sub * w)
     nrm = norm_sql(v)
     per_m = []
     for m in sorted(by_m):
@@ -455,11 +457,9 @@ def streaming_pq_encode(
             csub_sq = cw[0] * cw[0]
             for j in range(1, w):
                 csub_sq += cw[j] * cw[j]
-            dist = (
-                f"ROUND(({sub_sq}) / ({nrm} * {nrm})"
-                f" + {lit_sql(csub_sq)} / ({cnrm} * {cnrm})"
-                f" - 2.0D * ({lit_dot_sql(x, cw)}) / ({nrm} * {cnrm}),"
-                f" {round_digits})"
+            dist = pq_dist_sql(
+                sub_sq, lit_sql(csub_sq), lit_dot_sql(x, cw), nrm, cnrm,
+                round_digits,
             )
             code = int(r["code"])
             cands.append(f"struct({dist} AS dist, CAST({code} AS BIGINT) AS code)")

@@ -5,14 +5,26 @@ Usage::
     python3 tests/_plan_digest.py [SF_DIR]    # default /root/testdata/sf0.001
 
 Builds every registered query in registry order and prints
-``<name> <sha256>``, where the hash is over
-``queryExecution().analyzed()`` with the ``#<n>`` expression ids
-stripped.  Two trees that print the same listing hand Spark the same
-analyzed plans, so a refactor of how plans are BUILT is shown to leave
-them unchanged.  The disk tier of the build cache is switched off, so
-every index build runs in this process and the listing does not depend
-on what an earlier run left on disk.  A query whose construction raises
-prints ``<name> ERROR <exception type>`` (traceback on stderr).
+``<name> <sha256>``, where the hash is over the JSON form of
+``queryExecution().analyzed()`` with the expression ids (``"id"`` and
+``"jvmId"`` fields) and temp views' ``"createTime"`` stripped.  The
+JSON form spells out every argument and child; the string form does
+not, because Spark's tree string cuts long argument lists at
+``spark.sql.debug.maxToStringFields`` (default 25), which hides all but
+the first columns of a dim-wide projection.  Two trees that print the
+same listing hand Spark the same analyzed plans, so a refactor of how
+plans are BUILT is shown to leave them unchanged.
+
+A result that an operator checkpoints (graph fixpoints, some dedup
+clusterings) is a ``LogicalRDD`` leaf in its analyzed plan: its digest
+covers the plan from that leaf to the output, not the plans that
+computed the checkpointed data, so identical digests say nothing about
+what ran before the checkpoint (oracle parity covers that).
+
+The disk tier of the build cache is switched off, so every index build
+runs in this process and the listing does not depend on what an earlier
+run left on disk.  A query whose construction raises prints
+``<name> ERROR <exception type>`` (traceback on stderr).
 
 Not collected by pytest (the file name does not start with ``test_``).
 """
@@ -27,11 +39,11 @@ import traceback
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-_IDS = re.compile(r"#\d+")
+_IDS = re.compile(r'"(?:id":\d+|jvmId":"[^"]*"|createTime":\d+)')
 
 
 def digest(df) -> str:
-    plan = df._jdf.queryExecution().analyzed().toString()
+    plan = df._jdf.queryExecution().analyzed().toJSON()
     return hashlib.sha256(_IDS.sub("", plan).encode()).hexdigest()
 
 

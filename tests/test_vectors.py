@@ -14,6 +14,7 @@ from stedi_human_balance_redis_kafka_spark_streaming_spark.functions.vectors imp
     cosine_sql,
     lit_dot_sql,
     lit_sql,
+    pq_dist_sql,
 )
 
 
@@ -54,6 +55,40 @@ def test_cosine_sql_parses_to_the_column_form_it_replaced(spark):
         old = df.select(ref.alias("c"))
         assert _analyzed(new) == _analyzed(old)
         assert new.first().c == old.first().c
+
+
+def test_pq_dist_sql_parses_to_the_hand_written_forms(spark):
+    """The batch (column operands) and streaming (inlined literal
+    codeword, unparenthesized self-product) forms each operator wrote by
+    hand before pq_dist_sql."""
+    df = spark.createDataFrame(
+        [(0.1, -0.7, 0.3, 0.4, 1.2, 0.9)],
+        "s0 double, s1 double, cw0 double, cw1 double, nrm double, cnrm double",
+    )
+    batch_old = (
+        "ROUND((s0 * s0 + s1 * s1) / (nrm * nrm)"
+        " + (cw0 * cw0 + cw1 * cw1) / (cnrm * cnrm)"
+        " - 2.0D * (s0 * cw0 + s1 * cw1) / (nrm * cnrm), 6)"
+    )
+    batch_new = pq_dist_sql(
+        "s0 * s0 + s1 * s1", "cw0 * cw0 + cw1 * cw1", "s0 * cw0 + s1 * cw1",
+        "nrm", "cnrm", 6,
+    )
+    nrm = "SQRT(s0 * s0 + s1 * s1)"
+    stream_old = (
+        f"ROUND((s0 * s0 + s1 * s1) / ({nrm} * {nrm})"
+        " + 0.25D / (0.9D * 0.9D)"
+        f" - 2.0D * (s0 * 0.3D + s1 * 0.4D) / ({nrm} * 0.9D), 6)"
+    )
+    stream_new = pq_dist_sql(
+        "s0 * s0 + s1 * s1", lit_sql(0.25), lit_dot_sql(["s0", "s1"], [0.3, 0.4]),
+        nrm, lit_sql(0.9), 6,
+    )
+    for old_text, new_text in [(batch_old, batch_new), (stream_old, stream_new)]:
+        old = df.select(F.expr(old_text).alias("d"))
+        new = df.select(F.expr(new_text).alias("d"))
+        assert _analyzed(new) == _analyzed(old)
+        assert new.first().d == old.first().d
 
 
 def test_dim_wide_vector_arithmetic_is_built_only_in_vectors_py():
