@@ -1,6 +1,6 @@
 """Ingest-time index-build cache (shared by trained k-means centroids,
-PQ codebooks, BPE merge tables, the verified near-dup pair graph, and
-the ANN ground-truth sets).
+PQ codebooks, BPE merge tables, the verified near-dup pair graphs, the
+IVF/PQ/SQ8 corpus encodings and the ANN ground-truth sets).
 
 Index TRAINING / pair-graph VERIFICATION is an ingest-time build step,
 not a per-query cost: a production system builds these artifacts once
@@ -8,19 +8,41 @@ when the corpus is (re)ingested and every query reads the built result.
 Every build routed through here is fully deterministic (integer k-means,
 fixed iters/seeds, exact-integer Jaccard), so cached rows are
 bit-identical to rebuilding — correctness is unaffected, only the
-redundant rebuild is skipped.  Entries are plain Python rows (kilobytes
-— NOT Spark blocks), keyed by an explicit caller-provided corpus key
-(which should embed a data fingerprint — ``sources.files.
-table_fingerprint`` — so a regenerated corpus at the same path can
-never be served a stale artifact) plus every build parameter.
+redundant rebuild is skipped.  Entries are keyed by an explicit
+caller-provided corpus key (which should embed a data fingerprint —
+``sources.files.table_fingerprint`` — so a regenerated corpus at the
+same path can never be served a stale artifact) plus every build
+parameter.
 
-Two tiers:
+Two entry points carry the whole policy; call sites state only a key,
+the schema of the artifact and how to build it:
+
+* :func:`cached` ``(key, schema, build)`` — the ROW tier, for
+  kilobyte-sized artifacts (pair sets, bucket maps, encodings, truth
+  sets).  A hit rehydrates the stored rows.  A miss runs ``build()``
+  inside ``session.owned()`` and collects at most ``MAX_ROWS + 1`` rows
+  (a LIMIT-gated collect, never an unbounded driver materialization):
+
+  - under the cap the rows are stored, the blocks the build persisted
+    or checkpointed are released at once (the rehydrated result no
+    longer reads them) and the rehydrated rows are returned;
+  - over the cap nothing is stored, the build's blocks are handed to
+    the caller's scope with ``session.hold`` and the live distributed
+    frame is returned — the 100 TB-safe degradation.
+
+* :func:`cached_frame` ``(spark, key, schema, build)`` — the FRAME
+  tier, for CORPUS-shaped artifacts: a hit reads the stored parquet
+  directory; a miss writes ``build()`` there BY SPARK (executor-side,
+  no driver collect) and serves the re-read frame, or serves the live
+  frame when the tier is disabled or the write failed.
+
+Storage:
 
 * **Memory** — an LRU-bounded ``OrderedDict`` (``MAX_ENTRIES``): a
   long-lived session training over many corpora evicts its oldest
   builds instead of growing without bound.
-* **Disk** — each entry is also written as a small Parquet file under
-  the Spark-conventional warehouse location
+* **Disk** — each row entry is also written as a small Parquet file
+  under the Spark-conventional warehouse location
   ``$PWD/spark-warehouse/buildcache/`` (override with
   ``$SPARK_GRAFT_BUILDCACHE_DIR``; set it to the empty string to
   disable the tier).  This is the production contract: ingest builds
@@ -33,14 +55,16 @@ Two tiers:
   different key ⇒ different file) can never serve a wrong artifact.
   Writes are atomic (tmp + rename) and best-effort: an unwritable
   warehouse degrades to memory-only, never to an error.
+* **Frames** — parquet directories written by Spark under
+  ``<dir>/frames/`` (:func:`store_frame` / :func:`lookup_frame`).  Same
+  key contract (fingerprint + params + version token, verified via a
+  ``_KEY`` sidecar on read), same best-effort degradation.
 
-* **Frames** (r18) — CORPUS-SHAPED artifacts (e.g. the substring
-  family's intra-cleaned corpus) are parquet directories written BY
-  SPARK under ``<dir>/frames/`` (:func:`store_frame` /
-  :func:`lookup_frame`): executor-side materialization, never a driver
-  collect — the row tiers stay reserved for kilobyte model artifacts.
-  Same key contract (fingerprint + params + version token, verified
-  via a ``_KEY`` sidecar on read), same best-effort degradation.
+Builds that end in driver-held rows rather than a frame (k-means
+centroids, PQ codebooks, BPE merges, the louvain shard map) call
+:func:`lookup` / :func:`store` themselves: their miss serves the frame
+the build already made, which :func:`cached` would re-collect through a
+Spark job and replace with a differently-planned LocalRelation.
 
 ``invalidate()`` clears every tier (tests, corpus rewrites within one
 process when a fingerprint is not practical).
@@ -52,12 +76,14 @@ import hashlib
 import os
 from collections import OrderedDict
 
+from ..session import hold, owned
+
 MAX_ENTRIES = 32
 
 # Driver-side row cap for one cached build.  Build artifacts (centroids,
 # codebooks, bucket maps, near-dup pair sets: sf0.1 has ~10² pairs for
-# 5k docs) are orders of magnitude smaller than the corpus; callers
-# collect at most MAX_ROWS + 1 rows, so a pathological corpus degrades
+# 5k docs) are orders of magnitude smaller than the corpus; ``cached``
+# collects at most MAX_ROWS + 1 rows, so a pathological corpus degrades
 # to the live distributed plan instead of an unbounded driver
 # materialization.
 MAX_ROWS = 250_000
@@ -325,3 +351,41 @@ def invalidate(prefix: str | None = None) -> int:
             shutil.rmtree(path, ignore_errors=True)
             evicted.add(meta.get("key", fn).encode())
     return len(evicted)
+
+
+def cached(key: tuple, schema, build):
+    """The row tier's one entry point (see the module docstring): the
+    stored rows of ``key`` as a frame of ``schema``, else ``build()``'s
+    result — stored and rehydrated when it fits under ``MAX_ROWS``, the
+    live frame (its blocks held in the caller's scope) when it does
+    not."""
+    from pyspark.sql import SparkSession
+
+    rows = lookup(key)
+    if rows is not None:
+        return rehydrate(SparkSession.active(), rows, schema)
+    with owned() as blocks:
+        live = build()
+        got = live.limit(MAX_ROWS + 1).collect()
+    if len(got) > MAX_ROWS:
+        if blocks:
+            hold(*blocks)
+        return live
+    for b in blocks:
+        b.unpersist(False)
+    rows = [tuple(r) for r in got]
+    store(key, rows)
+    return rehydrate(live.sparkSession, rows, schema)
+
+
+def cached_frame(spark, key: tuple, schema, build):
+    """The frame tier's one entry point (see the module docstring): the
+    stored parquet artifact of ``key`` read as ``schema``, else
+    ``build()`` written to the tier and re-read, else (tier off or the
+    write failed) the live frame."""
+    hit = lookup_frame(spark, key, schema)
+    if hit is not None:
+        return hit
+    live = build()
+    stored = store_frame(key, live)
+    return live if stored is None else stored

@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 from ..functions.hashing import tokens
 from ..functions.vectors import cosine_sql, embedding_dim, flat
 from ..session import hold, scoped
+from . import buildcache
 
 
 def dedup_exact(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -598,13 +599,10 @@ def embedding_bucketed_pairs(
     if cache_key is not None:
         # ingest-time bucket map (same entry family as similarity's
         # ivf_assign — the trained/spill params key this one apart)
-        from .similarity import _cached_build
-
-        bucket_map = _cached_build(
-            assigned.select("vec_id", "cid"),
-            ("ivf_assign", cache_key, centroid_modulus, train_iters,
-             spill, round_digits),
-        )
+        buckets = assigned.select("vec_id", "cid")
+        key = ("ivf_assign", cache_key, centroid_modulus, train_iters,
+               spill, round_digits)
+        bucket_map = buildcache.cached(key, buckets.schema, lambda: buckets)
         assigned = e.join(bucket_map, "vec_id")
     a, b = assigned.alias("a"), assigned.alias("b")
     cos = F.expr(cosine_sql("a.d", "b.d", "a.nrm", "b.nrm", dim, round_digits))

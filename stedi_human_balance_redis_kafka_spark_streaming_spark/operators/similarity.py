@@ -50,6 +50,7 @@ from ..functions.vectors import (
     pq_dist_sql,
 )
 from ..session import checkpoint_handle, hold, scoped
+from . import buildcache
 
 # Dim-wide arithmetic is SQL text from functions/vectors.py, parsed in
 # one F.expr/selectExpr call (see that module for the measured reasons).
@@ -141,39 +142,6 @@ def assign_nearest_centroid(
     )
 
 
-# Trained-index build cache — see operators/buildcache.py for the full
-# contract (ingest-time build step, deterministic hence bit-identical,
-# LRU-bounded, fingerprinted keys).  Callers that do not pass
-# ``cache_key`` (tests, ad-hoc frames) always retrain.
-# ``_INDEX_BUILD_CACHE`` is re-exported here because this module
-# introduced the pattern; the OrderedDict itself lives in buildcache so
-# the near-dup pair-graph build (plans/registry) shares the same store
-# and bound.
-from . import buildcache  # noqa: E402
-from .buildcache import INDEX_BUILD_CACHE as _INDEX_BUILD_CACHE  # noqa: E402
-from .buildcache import lookup as _cache_lookup  # noqa: E402
-from .buildcache import rehydrate as _cache_rehydrate  # noqa: E402
-from .buildcache import store as _cache_store  # noqa: E402
-
-
-def _cached_build(df: DataFrame, ckey: tuple) -> DataFrame:
-    """Route a bounded deterministic ingest-time build frame through the
-    build cache: serve cached rows under ``df``'s own schema on a hit;
-    on a miss, LIMIT-gate the collect (an over-cap build — huge corpus —
-    degrades to the live distributed plan instead of an unbounded driver
-    materialization), store, and serve the local rows."""
-    spark = df.sparkSession
-    hit = _cache_lookup(ckey)
-    if hit is not None:
-        return _cache_rehydrate(spark, hit, df.schema)
-    rows = df.limit(buildcache.MAX_ROWS + 1).collect()
-    if len(rows) > buildcache.MAX_ROWS:
-        return df
-    data = [tuple(r) for r in rows]
-    _cache_store(ckey, data)
-    return _cache_rehydrate(spark, data, df.schema)
-
-
 def kmeans_centroids(
     e: DataFrame,
     dim: int,
@@ -213,7 +181,7 @@ def kmeans_centroids(
     ``e``.
 
     ``cache_key``: opt into the ingest-time build cache
-    (``_INDEX_BUILD_CACHE`` above) — pass a stable corpus identifier
+    (operators/buildcache.py) — pass a stable corpus identifier
     (e.g. the source path) and repeat builds with identical parameters
     reuse the previously-trained rows instead of re-running the
     deterministic (hence bit-identical) training.
@@ -238,9 +206,9 @@ def kmeans_centroids(
         )
 
     if ckey is not None:
-        hit = _cache_lookup(ckey)
+        hit = buildcache.lookup(ckey)
         if hit is not None:
-            return as_double(_cache_rehydrate(spark, hit, schema))
+            return as_double(buildcache.rehydrate(spark, hit, schema))
     # Both inputs are read EVERY round (e by the assignment scoring, eq
     # by the update) — persist for the duration of training so each
     # round reuses the materialized flatten/quantize instead of
@@ -319,7 +287,7 @@ def kmeans_centroids(
         eq.unpersist()
         e.unpersist()
     if ckey is not None and rows:
-        _cache_store(ckey, rows)
+        buildcache.store(ckey, rows)
     return as_double(cents_q)
 
 
@@ -425,11 +393,10 @@ def ivf_topk(
         # (vec_id, cid) rows and re-attach the full-width vectors with
         # one vec_id-keyed join; seed vs trained quantizers (and spill
         # replication) key apart via the build params.
-        bucket_map = _cached_build(
-            assigned.select("vec_id", "cid"),
-            ("ivf_assign", cache_key, centroid_modulus, train_iters,
-             spill, round_digits),
-        )
+        buckets = assigned.select("vec_id", "cid")
+        key = ("ivf_assign", cache_key, centroid_modulus, train_iters,
+               spill, round_digits)
+        bucket_map = buildcache.cached(key, buckets.schema, lambda: buckets)
         assigned = e.join(bucket_map, "vec_id")
 
     q = _q_flat(queries, dim)
@@ -502,11 +469,9 @@ def ivf_range_search(
     if cache_key is not None:
         # same ingest-time bucket-map entry as ivf_topk at equal
         # (centroid_modulus, spill=1) — the radius path reuses it
-        bucket_map = _cached_build(
-            assigned.select("vec_id", "cid"),
-            ("ivf_assign", cache_key, centroid_modulus, 0, 1,
-             round_digits),
-        )
+        buckets = assigned.select("vec_id", "cid")
+        key = ("ivf_assign", cache_key, centroid_modulus, 0, 1, round_digits)
+        bucket_map = buildcache.cached(key, buckets.schema, lambda: buckets)
         assigned = e.join(bucket_map, "vec_id")
     q = _q_flat(queries, dim)
     cos_probe = F.expr(cosine_sql("q", "c", "qnrm", "cnrm", dim, round_digits))
@@ -875,10 +840,8 @@ def pq_topk(
         # Corpus PQ ENCODING is an ingest-time build (n·n_sub small
         # rows): cache it like the codebooks — ivfpq_topk at equal
         # params shares the identical entry.
-        enc = _cached_build(
-            enc, ("pq_enc", cache_key, dim, n_sub, seed_modulus,
-                  round_digits)
-        )
+        key = ("pq_enc", cache_key, dim, n_sub, seed_modulus, round_digits)
+        enc = buildcache.cached(key, enc.schema, lambda: enc)
 
     q = _q_flat(queries, dim)
     _, qsub_dot = _sub_terms("q", n_sub, w)
@@ -975,21 +938,17 @@ def ivfpq_topk(
     if cache_key is not None:
         # shares the seed-quantizer bucket-map entry with ivf_topk at
         # equal (centroid_modulus, spill) — one assignment per ingest
-        buckets = _cached_build(
-            buckets,
-            ("ivf_assign", cache_key, centroid_modulus, 0, spill,
-             round_digits),
-        )
+        key = ("ivf_assign", cache_key, centroid_modulus, 0, spill,
+               round_digits)
+        buckets = buildcache.cached(key, buckets.schema, lambda: buckets)
 
     cb = pq_codebooks(e, dim, n_sub, seed_modulus)
     enc = pq_encode(e, cb, dim, n_sub, round_digits)
     if cache_key is not None:
         # same ingest-time entry as pq_topk at equal params — one
         # corpus encoding serves both index layouts
-        enc = _cached_build(
-            enc, ("pq_enc", cache_key, dim, n_sub, seed_modulus,
-                  round_digits)
-        )
+        key = ("pq_enc", cache_key, dim, n_sub, seed_modulus, round_digits)
+        enc = buildcache.cached(key, enc.schema, lambda: enc)
     enc_b = enc.join(buckets, "vec_id")
 
     q = _q_flat(queries, dim)
@@ -1086,9 +1045,9 @@ def pq_codebooks_trained(
     if ckey is not None:
         # ingest-time build cache — see buildcache.py: deterministic
         # training makes the cached rows bit-identical to retraining
-        hit = _cache_lookup(ckey)
+        hit = buildcache.lookup(ckey)
         if hit is not None:
-            return _cache_rehydrate(spark, hit, cb_schema)
+            return buildcache.rehydrate(spark, hit, cb_schema)
     e = e.persist()
 
     def _train_subspace(m: int) -> list:
@@ -1153,7 +1112,7 @@ def pq_codebooks_trained(
                 for row in sub
             ]
         if ckey is not None:
-            _cache_store(ckey, parts)
+            buildcache.store(ckey, parts)
         return spark.createDataFrame(parts, schema=cb_schema)
     finally:
         e.unpersist()
@@ -1202,10 +1161,9 @@ def pq_topk_trained(
     if cache_key is not None:
         # corpus encoding against the TRAINED codebook is its own
         # ingest-time entry (distinct from the seed-codebook encode)
-        enc = _cached_build(
-            enc, ("pq_enc_trained", cache_key, dim, n_sub, seed_modulus,
-                  train_iters, quant)
-        )
+        key = ("pq_enc_trained", cache_key, dim, n_sub, seed_modulus,
+               train_iters, quant)
+        enc = buildcache.cached(key, enc.schema, lambda: enc)
 
     q = _q_flat(queries, dim)
     qsub = [f"({_case_component_sql('q', j, n_sub, w)})" for j in range(w)]
@@ -1367,7 +1325,7 @@ def _sq8_recon(
     ingest-time build cache (VERDICT r10 #2 — previously both
     retrained on every call), invalidated by corpus fingerprint
     exactly like the shared IVF assignment, and an over-cap corpus
-    degrades to the live one-pass plan via ``_cached_build``'s
+    degrades to the live one-pass plan via ``buildcache.cached``'s
     LIMIT gate.  At scale this is the point of SQ8: scoring scans the
     1-byte/dim code table (8× less IO than float64 vectors); recon is
     the scoring-time view of the cached codes."""
@@ -1404,8 +1362,12 @@ def _sq8_recon(
         # combination reconstructs the same values.  A corpus change
         # rotates ``cache_key`` itself, so entries from different
         # corpora can never pair.
-        mm = _cached_build(mm, ("sq8_minmax", cache_key, dim))
-        codes = _cached_build(codes, ("sq8_codes", cache_key, dim))
+        mm = buildcache.cached(
+            ("sq8_minmax", cache_key, dim), mm.schema, lambda: mm
+        )
+        codes = buildcache.cached(
+            ("sq8_codes", cache_key, dim), codes.schema, lambda: codes
+        )
     recon = codes.crossJoin(F.broadcast(mm)).selectExpr(
         "vec_id",
         *[
@@ -1425,7 +1387,9 @@ def _sq8_recon(
         # Janino per call at sf0.1, shared by sq8_topk and ivfsq_topk).
         # Over the row cap the live plan remains the code-table scan,
         # preserving SQ8's 8×-narrower-IO scale contract.
-        recon = _cached_build(recon, ("sq8_recon", cache_key, dim))
+        recon = buildcache.cached(
+            ("sq8_recon", cache_key, dim), recon.schema, lambda: recon
+        )
     return recon
 
 
@@ -1554,10 +1518,8 @@ def ivfsq_topk(
     if cache_key is not None:
         # identical entry to ivf_topk/ivfpq_topk at equal params — one
         # ingest-time assignment serves every bucketed layout
-        buckets = _cached_build(
-            buckets,
-            ("ivf_assign", cache_key, centroid_modulus, 0, 1, round_digits),
-        )
+        key = ("ivf_assign", cache_key, centroid_modulus, 0, 1, round_digits)
+        buckets = buildcache.cached(key, buckets.schema, lambda: buckets)
     recon_b = _sq8_recon(emb, dim, cache_key).join(buckets, "vec_id")
 
     q = _q_flat(queries, dim)

@@ -6527,29 +6527,31 @@ def _intra_cleaned_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame, never to an error."""
     from ..operators import buildcache, dedup
 
-    schema = "doc_id long, text string, n_tokens long, n_removed long"
     ckey = (
         "substring_intra_clean_v1",
         table_fingerprint(sf_dir, "documents"),
         _SUBSTR_K,
         _SUBSTR_MAX_OCC,
     )
-    hit = buildcache.lookup_frame(spark, ckey, schema)
-    if hit is not None:
-        return hit
-    docs = load_table(spark, sf_dir, "documents")
-    planted = _planted_self_view(docs)
-    self_runs = dedup.substring_self_run_pairs(
-        planted, k=_SUBSTR_K, max_gram_occ=_SUBSTR_MAX_OCC
+
+    def build() -> DataFrame:
+        planted = _planted_self_view(load_table(spark, sf_dir, "documents"))
+        self_runs = dedup.substring_self_run_pairs(
+            planted, k=_SUBSTR_K, max_gram_occ=_SUBSTR_MAX_OCC
+        )
+        return dedup.apply_substring_cuts(
+            planted,
+            dedup.substring_cut_spans(
+                self_runs, doc_col="doc_id", start_col="b_start"
+            ),
+        ).select("doc_id", "text", "n_tokens", "n_removed")
+
+    return buildcache.cached_frame(
+        spark,
+        ckey,
+        "doc_id long, text string, n_tokens long, n_removed long",
+        build,
     )
-    cleaned = dedup.apply_substring_cuts(
-        planted,
-        dedup.substring_cut_spans(
-            self_runs, doc_col="doc_id", start_col="b_start"
-        ),
-    ).select("doc_id", "text", "n_tokens", "n_removed")
-    stored = buildcache.store_frame(ckey, cleaned)
-    return stored if stored is not None else cleaned
 
 
 @register(
@@ -6916,7 +6918,6 @@ def _cached_gram_index(
     (gram-key joins), so cached rows == rebuilding."""
     from ..operators import buildcache, dedup
 
-    schema = "index_doc_id long, index_pos long, g string"
     ckey = (
         "substring_gram_index_v1",
         table_fingerprint(sf_dir, "documents"),
@@ -6924,14 +6925,14 @@ def _cached_gram_index(
         _SUBSTR_K,
         _SUBSTR_MAX_OCC,
     )
-    hit = buildcache.lookup_frame(spark, ckey, schema)
-    if hit is not None:
-        return hit
-    idx = dedup.substring_gram_index(
-        corpus, k=_SUBSTR_K, max_gram_occ=_SUBSTR_MAX_OCC
-    ).select("index_doc_id", "index_pos", "g")
-    stored = buildcache.store_frame(ckey, idx)
-    return stored if stored is not None else idx
+    return buildcache.cached_frame(
+        spark,
+        ckey,
+        "index_doc_id long, index_pos long, g string",
+        lambda: dedup.substring_gram_index(
+            corpus, k=_SUBSTR_K, max_gram_occ=_SUBSTR_MAX_OCC
+        ).select("index_doc_id", "index_pos", "g"),
+    )
 
 
 def _cached_gram_counts(
@@ -6965,7 +6966,6 @@ def _cached_gram_counts(
     read poisoned counts under the wrong key."""
     from ..operators import buildcache, dedup
 
-    schema = "g string, n_occ long"
     ckey = (
         "substring_gram_counts_v1",
         table_fingerprint(sf_dir, "documents"),
@@ -6973,12 +6973,12 @@ def _cached_gram_counts(
         k,
         max_gram_occ,
     )
-    hit = buildcache.lookup_frame(spark, ckey, schema)
-    if hit is not None:
-        return hit
-    cnts = dedup.substring_gram_counts(index)
-    stored = buildcache.store_frame(ckey, cnts)
-    return stored if stored is not None else cnts
+    return buildcache.cached_frame(
+        spark,
+        ckey,
+        "g string, n_occ long",
+        lambda: dedup.substring_gram_counts(index),
+    )
 
 
 _SUBSTR_DROP_MOD = 7  # arrivals = doc_id % 10 == 7 — the one residue

@@ -21,9 +21,9 @@ from pyspark.sql import functions as F
 
 from ..functions.vectors import embedding_dim
 from ..operators import buildcache, dedup, joins, pipeline
-from ..session import hold, owned, scoped
+from ..session import hold, scoped
 from ..sources.files import load_table, table_fingerprint
-from ..streaming.stateful import _avg_score_e4
+from ..streaming.stateful import _avg_score_e4, streaming_risk_gate_agg
 from . import synthetic
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
@@ -185,19 +185,10 @@ SQL_AVG_SCORE = (
 def stedi_risk_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A1 (SURVEY.md §2.4): the ≥4-assessments risk gate the reference
     delegates to the STEDI Java app (project/starter/README.md:96) —
-    internalized as a partial-aggregable groupBy (map-side combine, one
-    shuffle on the customer key).
+    internalized as streaming/stateful.py's gate, whose plan is the same
+    in batch and streaming.
     """
-    risk = stedi_risk_events(spark, sf_dir)
-    return (
-        risk.groupBy("customer")
-        .agg(
-            F.count("*").alias("n_assessments"),
-            _avg_score_e4().alias("avg_score"),
-            F.max("riskDate").alias("last_risk_date"),
-        )
-        .filter(F.col("n_assessments") >= 4)
-    )
+    return streaming_risk_gate_agg(stedi_risk_events(spark, sf_dir))
 
 
 @register(
@@ -373,25 +364,14 @@ def _shared_jaccard_truth(spark, sf_dir: str, build_live):
 
     ``build_live`` produces the live distributed plan on a cache miss
     (each eval reuses its own already-persisted frames for the cold
-    build); the result is LIMIT-gated into the ingest-time build cache
-    per corpus fingerprint, degrading to the live plan over the cap,
-    and rehydrated through one Arrow batch."""
+    build); ``buildcache.cached`` keys it per corpus fingerprint."""
     tkey = (
         "jaccard_truth",
         table_fingerprint(sf_dir, "documents"),
         3,
         700_000,
     )
-    hit = buildcache.lookup(tkey)
-    if hit is not None:
-        return buildcache.rehydrate(spark, hit, "doc_a long, doc_b long")
-    live = build_live()
-    rows = live.limit(buildcache.MAX_ROWS + 1).collect()
-    if len(rows) > buildcache.MAX_ROWS:
-        return live  # over-cap corpus: live distributed plan
-    data = [(int(r["doc_a"]), int(r["doc_b"])) for r in rows]
-    buildcache.store(tkey, data)
-    return buildcache.rehydrate(spark, data, "doc_a long, doc_b long")
+    return buildcache.cached(tkey, "doc_a long, doc_b long", build_live)
 
 
 @register(
@@ -1434,19 +1414,11 @@ def _dup_pair_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     (dedup_clusters, dedup_clusters_star, dedup_multi_signal,
     curation_keep_best, dedup_lsh_recall's exact side).
 
-    Cached via operators/buildcache (the trained-index precedent): the
+    Cached via ``buildcache.cached`` (the trained-index precedent): the
     pair set is deterministic per (corpus fingerprint, n, threshold,
     freq-cap) — exact integer Jaccard, md5-free shingling — so the
     cached rows are bit-identical to rebuilding, and a production
     pipeline builds this graph once per ingest, not once per consumer.
-    The build collects AT MOST ``buildcache.MAX_ROWS + 1`` rows
-    (LIMIT-bounded, like the brute-force dedup gate); an over-cap pair
-    set skips the cache and returns the live distributed plan — the
-    100 TB-safe degradation.
-
-    On the LIVE path (cache miss + over-cap) the operator's internal
-    index persists go to the caller's scope; a completed build releases
-    them at once, since the returned frame is then a LocalRelation.
     """
     ckey = (
         "dup_pairs",
@@ -1455,30 +1427,16 @@ def _dup_pair_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
         0.7,
         _MAX_SHINGLE_FREQ,
     )
-    hit = buildcache.lookup(ckey)
-    if hit is not None:
-        return buildcache.rehydrate(spark, hit, _DUP_PAIR_SCHEMA)
-    with owned() as build:
-        pairs = dedup.ngram_jaccard_pairs(
+    return buildcache.cached(
+        ckey,
+        _DUP_PAIR_SCHEMA,
+        lambda: dedup.ngram_jaccard_pairs(
             load_table(spark, sf_dir, "documents"),
             threshold=0.7,
             n=3,
             max_shingle_freq=_MAX_SHINGLE_FREQ,
-        )
-        rows = pairs.limit(buildcache.MAX_ROWS + 1).collect()
-    if len(rows) > buildcache.MAX_ROWS:
-        # Too large to hold driver-side: hand the internal persists to
-        # the caller's scope (live-plan consumption) and serve the plan.
-        hold(*build)
-        return pairs
-    # The build is complete — its internal inverted-index persists have
-    # served their purpose; release them now instead of holding them
-    # for the (already materialized) result.
-    for c in build:
-        c.unpersist(False)
-    data = [(int(r["doc_a"]), int(r["doc_b"]), float(r["jaccard"])) for r in rows]
-    buildcache.store(ckey, data)
-    return buildcache.rehydrate(spark, data, _DUP_PAIR_SCHEMA)
+        ),
+    )
 
 
 _EMB_PAIR_SCHEMA = "vec_a long, vec_b long, cos_sim double"
@@ -1493,23 +1451,16 @@ def _emb_exact_pairs(
     is a pure deterministic function of the corpus, built once per
     fingerprint and read by BOTH consumers (dedup_embedding_recall and
     dedup_srp_recall) instead of each re-running the quadratic baseline
-    per run.  LIMIT-gated like every truth build; an over-cap truth set
-    degrades to the live (row-cap-gated) plan."""
+    per run."""
     fp = table_fingerprint(sf_dir, "embeddings")
     ckey = ("emb_exact_pairs", fp, int(round(threshold * 1e6)))
-    hit = buildcache.lookup(ckey)
-    schema = "vec_a long, vec_b long"
-    if hit is not None:
-        return buildcache.rehydrate(spark, hit, schema)
-    pairs = dedup.embedding_cosine_pairs(
-        load_table(spark, sf_dir, "embeddings"), threshold=threshold
-    ).select("vec_a", "vec_b")
-    rows = pairs.limit(buildcache.MAX_ROWS + 1).collect()
-    if len(rows) > buildcache.MAX_ROWS:
-        return pairs
-    data = [(int(r["vec_a"]), int(r["vec_b"])) for r in rows]
-    buildcache.store(ckey, data)
-    return buildcache.rehydrate(spark, data, schema)
+    return buildcache.cached(
+        ckey,
+        "vec_a long, vec_b long",
+        lambda: dedup.embedding_cosine_pairs(
+            load_table(spark, sf_dir, "embeddings"), threshold=threshold
+        ).select("vec_a", "vec_b"),
+    )
 
 
 def _emb_pair_graph(
@@ -1526,29 +1477,23 @@ def _emb_pair_graph(
     by dedup_multi_signal and dedup_embedding_recall's index side.
     (dedup_embedding_bucketed itself stays on the live plan — it IS the
     operator's registered demonstration, exactly like dedup_ngram_jaccard
-    vs _dup_pair_graph.)  Same buildcache contract, bounded driver
-    collect, and over-cap live-plan degradation as :func:`_dup_pair_graph`;
-    determinism comes from the rounded-cosine threshold over the
-    deterministic (trained, spilled) bucketing."""
+    vs _dup_pair_graph.)  Same ``buildcache.cached`` contract as
+    :func:`_dup_pair_graph`; determinism comes from the rounded-cosine
+    threshold over the deterministic (trained, spilled) bucketing."""
     fp = table_fingerprint(sf_dir, "embeddings")
     ckey = ("emb_pairs", fp, threshold, centroid_modulus, train_iters, spill)
-    hit = buildcache.lookup(ckey)
-    if hit is not None:
-        return buildcache.rehydrate(spark, hit, _EMB_PAIR_SCHEMA)
-    pairs = dedup.embedding_bucketed_pairs(
-        load_table(spark, sf_dir, "embeddings"),
-        threshold=threshold,
-        centroid_modulus=centroid_modulus,
-        train_iters=train_iters,
-        spill=spill,
-        cache_key=fp,
+    return buildcache.cached(
+        ckey,
+        _EMB_PAIR_SCHEMA,
+        lambda: dedup.embedding_bucketed_pairs(
+            load_table(spark, sf_dir, "embeddings"),
+            threshold=threshold,
+            centroid_modulus=centroid_modulus,
+            train_iters=train_iters,
+            spill=spill,
+            cache_key=fp,
+        ),
     )
-    rows = pairs.limit(buildcache.MAX_ROWS + 1).collect()
-    if len(rows) > buildcache.MAX_ROWS:
-        return pairs
-    data = [(int(r["vec_a"]), int(r["vec_b"]), float(r["cos_sim"])) for r in rows]
-    buildcache.store(ckey, data)
-    return buildcache.rehydrate(spark, data, _EMB_PAIR_SCHEMA)
 
 
 @register("dedup_clusters", oracle=_SQL_CC_ORACLE)
@@ -1699,27 +1644,7 @@ def ann_brute_force_topk(
 
 
 
-def _cached_pair_truth(
-    spark: SparkSession,
-    ckey: tuple,
-    build_fn,
-) -> DataFrame:
-    """Shared cache plumbing for the (query_id, vec_id) ground-truth
-    builders: look up ``ckey`` in the ingest-time build cache, else run
-    ``build_fn()`` (which returns the exact distributed truth plan),
-    LIMIT-gate the collect, store, and return the cached frame.  An
-    over-cap truth set degrades to the live distributed plan instead of
-    an unbounded driver materialization."""
-    hit = buildcache.lookup(ckey)
-    if hit is not None:
-        return buildcache.rehydrate(spark, hit, "query_id long, vec_id long")
-    bf = build_fn().select("query_id", "vec_id")
-    rows = bf.limit(buildcache.MAX_ROWS + 1).collect()
-    if len(rows) > buildcache.MAX_ROWS:
-        return bf
-    data = [(int(r["query_id"]), int(r["vec_id"])) for r in rows]
-    buildcache.store(ckey, data)
-    return buildcache.rehydrate(spark, data, "query_id long, vec_id long")
+_TRUTH_SCHEMA = "query_id long, vec_id long"
 
 
 def _ann_truth(
@@ -1738,10 +1663,9 @@ def _ann_truth(
     ann_ivf_spill_recall, ann_pq_recall, ann_pq_trained_recall,
     ann_ivfpq_recall, ann_label_purity.
 
-    Bounded: nq·k rows (nq = n/query_modulus).  The collect is
-    LIMIT-gated like the pair-graph builds; an over-cap query set
-    (huge corpus at fixed modulus) degrades to the live distributed
-    plan instead of an unbounded driver materialization.
+    Bounded: nq·k rows (nq = n/query_modulus); an over-cap query set
+    (huge corpus at fixed modulus) is served live by
+    ``buildcache.cached``.
     Output: (query_id, vec_id) — the exact top-k per query.
     """
     fp = table_fingerprint(sf_dir, "embeddings")
@@ -1750,9 +1674,11 @@ def _ann_truth(
     def build() -> DataFrame:
         emb = load_table(spark, sf_dir, "embeddings")
         q = similarity.queries_by_modulus(emb, query_modulus)
-        return similarity.brute_force_topk(emb, q, k=k)
+        return similarity.brute_force_topk(emb, q, k=k).select(
+            "query_id", "vec_id"
+        )
 
-    return _cached_pair_truth(spark, ckey, build)
+    return buildcache.cached(ckey, _TRUTH_SCHEMA, build)
 
 
 def _ann_range_truth(
@@ -1765,8 +1691,7 @@ def _ann_range_truth(
     """Exact radius (cos ≥ τ) ground truth for the range-search eval —
     the radius counterpart of :func:`_ann_truth`, built once per
     (corpus fingerprint, τ, query set) through the ingest-time cache.
-    The truth set is data-bounded (matching pairs only), so the collect
-    is LIMIT-gated with the same live-plan fallback.
+    The truth set is data-bounded (matching pairs only).
     Output: (query_id, vec_id)."""
     fp = table_fingerprint(sf_dir, "embeddings")
     ckey = ("ann_range_truth", fp, int(round(threshold * 1e6)), query_modulus)
@@ -1774,9 +1699,11 @@ def _ann_range_truth(
     def build() -> DataFrame:
         emb = load_table(spark, sf_dir, "embeddings")
         q = similarity.queries_by_modulus(emb, query_modulus)
-        return similarity.brute_force_range(emb, q, threshold=threshold)
+        return similarity.brute_force_range(emb, q, threshold=threshold).select(
+            "query_id", "vec_id"
+        )
 
-    return _cached_pair_truth(spark, ckey, build)
+    return buildcache.cached(ckey, _TRUTH_SCHEMA, build)
 
 
 @register(
@@ -2320,30 +2247,25 @@ def _mmr_candidates(
     *,
     n_cand: int,
     query_modulus: int,
-) -> DataFrame | None:
+) -> DataFrame:
     """Cached exact top-``n_cand`` candidate set for MMR — same
     ingest-time build-cache pattern as :func:`_ann_truth` (deterministic
-    per (corpus, query set, n_cand), LIMIT-gated collect).  Returns None
-    on an over-cap corpus; the caller falls back to the live plan."""
+    per (corpus, query set, n_cand))."""
     fp = table_fingerprint(sf_dir, "embeddings")
     ckey = ("mmr_cand", fp, n_cand, query_modulus)
-    schema = "query_id long, vec_id long, rel_e6 long"
-    hit = buildcache.lookup(ckey)
-    if hit is not None:
-        return buildcache.rehydrate(spark, hit, schema)
-    emb = load_table(spark, sf_dir, "embeddings")
-    q = similarity.queries_by_modulus(emb, query_modulus)
-    cand = similarity.brute_force_topk(emb, q, k=n_cand).select(
-        "query_id",
-        "vec_id",
-        F.round(F.col("cos_sim") * 1e6).cast("long").alias("rel_e6"),
+
+    def build() -> DataFrame:
+        emb = load_table(spark, sf_dir, "embeddings")
+        q = similarity.queries_by_modulus(emb, query_modulus)
+        return similarity.brute_force_topk(emb, q, k=n_cand).select(
+            "query_id",
+            "vec_id",
+            F.round(F.col("cos_sim") * 1e6).cast("long").alias("rel_e6"),
+        )
+
+    return buildcache.cached(
+        ckey, "query_id long, vec_id long, rel_e6 long", build
     )
-    rows = cand.limit(buildcache.MAX_ROWS + 1).collect()
-    if len(rows) > buildcache.MAX_ROWS:
-        return None
-    data = [(int(r["query_id"]), int(r["vec_id"]), int(r["rel_e6"])) for r in rows]
-    buildcache.store(ckey, data)
-    return buildcache.rehydrate(spark, data, schema)
 
 
 def _mmr_pair_sims(
@@ -2353,29 +2275,22 @@ def _mmr_pair_sims(
     *,
     n_cand: int,
     query_modulus: int,
-) -> DataFrame | None:
+) -> DataFrame:
     """Cached pairwise candidate similarities for MMR (nq·n_cand²
     bounded, deterministic — same build-cache contract as
     :func:`_mmr_candidates`)."""
     fp = table_fingerprint(sf_dir, "embeddings")
     ckey = ("mmr_pairs", fp, n_cand, query_modulus)
-    schema = "query_id long, va long, vb long, sim_e6 long"
-    hit = buildcache.lookup(ckey)
-    if hit is not None:
-        return buildcache.rehydrate(spark, hit, schema)
-    emb = load_table(spark, sf_dir, "embeddings")
-    # the operator's own bounded pair construction (identical for any k
-    # at equal n_cand) rather than a throwaway mmr run
-    pairs = similarity.candidate_pair_sims(emb, cand, embedding_dim(emb))
-    rows = pairs.limit(buildcache.MAX_ROWS + 1).collect()
-    if len(rows) > buildcache.MAX_ROWS:
-        return None
-    data = [
-        (int(r["query_id"]), int(r["va"]), int(r["vb"]), int(r["sim_e6"]))
-        for r in rows
-    ]
-    buildcache.store(ckey, data)
-    return buildcache.rehydrate(spark, data, schema)
+
+    def build() -> DataFrame:
+        emb = load_table(spark, sf_dir, "embeddings")
+        # the operator's own bounded pair construction (identical for
+        # any k at equal n_cand) rather than a throwaway mmr run
+        return similarity.candidate_pair_sims(emb, cand, embedding_dim(emb))
+
+    return buildcache.cached(
+        ckey, "query_id long, va long, vb long, sim_e6 long", build
+    )
 
 
 @register("ann_mmr_topk", oracle=_sql_mmr(_MMR_K, _MMR_CAND, _MMR_LAM10))
@@ -2398,12 +2313,8 @@ def ann_mmr_topk(
     cand = _mmr_candidates(
         spark, sf_dir, n_cand=n_cand, query_modulus=query_modulus
     )
-    pairs = (
-        None
-        if cand is None
-        else _mmr_pair_sims(
-            spark, sf_dir, cand, n_cand=n_cand, query_modulus=query_modulus
-        )
+    pairs = _mmr_pair_sims(
+        spark, sf_dir, cand, n_cand=n_cand, query_modulus=query_modulus
     )
     return similarity.mmr_topk(
         emb, q, k=k, n_cand=n_cand, lam10=lam10,

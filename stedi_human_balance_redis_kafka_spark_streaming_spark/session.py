@@ -52,8 +52,9 @@ The module also owns block lifetime — every persisted frame and every
 * ``with owned() as blocks:`` opens a scope whose blocks the caller
   takes: nothing is tied or hoisted on exit, and the caller releases
   them (or hands them to the enclosing scope with ``hold``).  For early
-  release after an eager build (``_dup_pair_graph``) and per-iteration
-  scratch (SCC's reach sets).  It too releases on raise.
+  release after an eager build (``operators.buildcache.cached``, which
+  releases a stored build's blocks and holds an over-cap build's) and
+  per-iteration scratch (SCC's reach sets).  It too releases on raise.
 
 and the one iteration loop:
 
@@ -295,6 +296,14 @@ def fixpoint(
     return cur.frame
 
 
+def _default_driver_memory() -> str:
+    """Half the host's physical memory, capped at 24g.  In local mode the
+    driver heap holds every executor's working set, and a fixed 24g on a
+    smaller host lets the JVM grow until the kernel kills it."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(24 << 10, phys >> 21)}m"
+
+
 def get_spark(
     app_name: str = "stedi-spark",
     cpus: int | None = None,
@@ -304,8 +313,9 @@ def get_spark(
     """Build (or reuse) a local SparkSession tuned for this machine.
 
     In ``local[N]`` mode there is a single JVM; ``spark.driver.memory`` is
-    the only memory knob.  On a real cluster the same configs apply, with
-    ``master`` supplied by spark-submit instead.
+    the only memory knob: ``$SPARK_DRIVER_MEMORY`` when set, else half
+    the host's physical memory capped at 24g.  On a real cluster the same
+    configs apply, with ``master`` supplied by spark-submit instead.
     """
     cpus = cpus or DEFAULT_CPUS
     shuffle_partitions = shuffle_partitions or cpus
@@ -318,7 +328,10 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY") or _default_driver_memory(),
+        )
         # ContextCleaner triggers System.gc(); make that a concurrent G1
         # cycle, not a stop-the-world full GC — on a multi-GB heap the
         # full-GC pauses otherwise land on whatever query is running.

@@ -53,11 +53,19 @@ def _avg_score_e4():
 
 
 def streaming_risk_gate_agg(risk: DataFrame) -> DataFrame:
-    """A1 as a streaming aggregation (complete/update output modes).
+    """A1, the ≥4-assessments risk gate (reference rule:
+    project/starter/README.md:96), as one partial-aggregable
+    groupBy(customer): map-side combine, one shuffle on the customer
+    key.  The same plan runs in batch (``stedi_risk_gate``) and as a
+    stream in complete or update output mode, where the state store
+    keeps the aggregation buffers per customer across micro-batches.
 
-    groupBy(customer) with the ≥4-assessments gate
-    (reference rule: project/starter/README.md:96).  Identical plan in
-    batch — this is the batch-testable form.
+    The one gate the engine keeps.  Against the applyInPandasWithState
+    form it replaced (running count and exact-integer sum per customer
+    in a pandas UDF), draining a 10,000-event feed from 28 files one per
+    trigger (update mode, memory sink, local[2] on a 4-core VM, four
+    alternating pairs) it took 6.5–17.1 s against 14.7–21.8 s, with
+    per-trigger medians of 226–428 ms against 512–703 ms.
     """
     return (
         risk.groupBy("customer")
@@ -67,55 +75,6 @@ def streaming_risk_gate_agg(risk: DataFrame) -> DataFrame:
             F.max("riskDate").alias("last_risk_date"),
         )
         .filter(F.col("n_assessments") >= 4)
-    )
-
-
-RISK_GATE_STATE_SCHEMA = "n long, total_e4 long"
-RISK_GATE_OUTPUT_SCHEMA = (
-    "customer string, n_assessments long, avg_score double"
-)
-
-
-def _risk_gate_fn(
-    key: tuple,
-    pdf_iter: Iterator[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
-    """Custom stateful A1: running (count, exact-int sum) per customer;
-    emits a row whenever the gate (n ≥ 4) is satisfied after a batch.
-    The sum is kept in quantized 1e-4 units (repo FP policy) so the
-    running state is exact and the derived average matches the batch
-    form bit-for-bit regardless of batch boundaries."""
-    n, total_e4 = state.get if state.exists else (0, 0)
-    for pdf in pdf_iter:
-        n += len(pdf)
-        total_e4 += _quantize_e4(pdf["score"])
-    state.update((n, total_e4))
-    if n >= 4:
-        yield pd.DataFrame(
-            [
-                {
-                    "customer": key[0],
-                    "n_assessments": n,
-                    "avg_score": ((2 * total_e4 + n) // (2 * n)) / 10000.0,
-                }
-            ]
-        )
-
-
-def streaming_risk_gate_stateful(risk: DataFrame) -> DataFrame:
-    """A1 via applyInPandasWithState — the custom-stateful-operator form
-    (running count/sum state per customer, no full re-aggregation).
-
-    Use with update output mode; state lives in the state store across
-    micro-batches.
-    """
-    return risk.groupBy("customer").applyInPandasWithState(
-        _risk_gate_fn,
-        outputStructType=RISK_GATE_OUTPUT_SCHEMA,
-        stateStructType=RISK_GATE_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
 
@@ -268,70 +227,6 @@ def streaming_decontaminate(
     return sh.join(bench, "term").select("doc_id", "term")
 
 
-def _quantize_e4(scores) -> int:
-    """Exact 1e-4-unit sum of a float series, HALF_UP to match F.round."""
-    import numpy as np
-
-    s = scores.to_numpy(dtype="float64") * 10000.0
-    return int((np.sign(s) * np.floor(np.abs(s) + 0.5)).sum())
-
-
-def streaming_risk_gate_tws(risk: DataFrame) -> DataFrame:
-    """A1 via ``transformWithStateInPandas`` — the Spark-4 arbitrary-state
-    API (typed state handles, timers, TTL) that supersedes
-    applyInPandasWithState.  Same semantics and FP policy as
-    :func:`streaming_risk_gate_stateful`: running (count, exact-int sum)
-    per customer, emit whenever the n ≥ 4 gate holds after a batch.
-
-    Use with update output mode.  Runtime-gated, two requirements:
-
-    * the API's state-server protocol needs ``protobuf`` in the Python
-      environment (without it the query fails at start, not import; the
-      pytest is importorskip-gated the same way as the Redis sink);
-    * the RocksDB state store provider (``session.get_spark``'s default):
-      the operator keeps its state in column families, which Spark
-      4.1.2's HDFS-backed provider rejects
-      (``UNSUPPORTED_FEATURE.STATE_STORE_MULTIPLE_COLUMN_FAMILIES``).
-    """
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class RiskGateProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("gate", RISK_GATE_STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timerValues) -> Iterator[pd.DataFrame]:
-            n, total_e4 = (
-                self._state.get() if self._state.exists() else (0, 0)
-            )
-            for pdf in rows:
-                n += len(pdf)
-                total_e4 += _quantize_e4(pdf["score"])
-            self._state.update((n, total_e4))
-            if n >= 4:
-                yield pd.DataFrame(
-                    [
-                        {
-                            "customer": key[0],
-                            "n_assessments": n,
-                            "avg_score": ((2 * total_e4 + n) // (2 * n)) / 10000.0,
-                        }
-                    ]
-                )
-
-        def close(self) -> None:
-            pass
-
-    return risk.groupBy("customer").transformWithStateInPandas(
-        RiskGateProcessor(),
-        outputStructType=RISK_GATE_OUTPUT_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
 def streaming_shared_span_hits(
     docs: DataFrame,
     span_set: DataFrame,
@@ -377,21 +272,22 @@ def streaming_assign_centroids(
     :func:`..operators.similarity.assign_nearest_centroid`, and the
     batch form of this function returns identical rows (tested).
 
-    Inline-expression bound: k·dim literal terms — fine to k ~ 10²-10³
-    centroids; beyond that, route through the batch path per
-    micro-batch (foreachBatch) instead.  The terms are SQL text from
-    functions/vectors.py, parsed in one call.  Output: (vec_id, cid,
-    cos_c).
+    Inline-expression size: k·dim literal terms.  Building the operator
+    over 512 centroids at dim 64 took 9.8–10.2 s (local[1], 4g driver
+    heap, 4-core VM; 25.6–33.4 s while the vector norm was inlined into
+    every centroid's term).  Past a few hundred centroids, route through
+    the batch path per micro-batch (foreachBatch) instead.  The terms
+    are SQL text from functions/vectors.py, parsed in one call.  Output:
+    (vec_id, cid, cos_c).
     """
     rows = centroids.collect()
     dim = len([c for c in centroids.columns if c.startswith("c") and c[1:].isdigit()])
     v = elements_sql(EMB_SQL, dim)
-    nrm = norm_sql(v)
     scored = []
     for r in rows:
         cos = rounded_cosine_sql(
             lit_dot_sql(v, [r[f"c{j}"] for j in range(dim)]),
-            nrm,
+            "__nrm",
             lit_sql(r["cnrm"]),
             round_digits,
         )
@@ -400,11 +296,12 @@ def streaming_assign_centroids(
             f"struct({cos} AS cos_c, CAST({-cid} AS BIGINT) AS neg_cid,"
             f" CAST({cid} AS BIGINT) AS cid)"
         )
-    best = F.expr(f"array_max(array({', '.join(scored)}))")
-    return vecs.select(
-        "vec_id",
-        best["cid"].alias("cid"),
-        best["cos_c"].alias("cos_c"),
+    # The vector norm and the winning struct are projected once and
+    # referenced, not inlined into every centroid's term.
+    return (
+        vecs.selectExpr("vec_id", "embedding", f"{norm_sql(v)} AS __nrm")
+        .selectExpr("vec_id", f"array_max(array({', '.join(scored)})) AS __b")
+        .select("vec_id", "__b.cid", "__b.cos_c")
     )
 
 
@@ -429,9 +326,13 @@ def streaming_pq_encode(
     (dist ASC, code ASC) via struct ordering — same as the batch
     ``min_by``.
 
-    Inline-expression bound: |codebook|·w literal terms — fine to
-    ~10³ codewords; beyond that, encode through the batch path per
-    micro-batch (foreachBatch).  The terms are SQL text from
+    Inline-expression size: |codebook|·w literal terms.  Building the
+    operator over 8 subspaces × 64 codewords at dim 64 took 3.7–3.9 s
+    (local[1], 4g driver heap, 4-core VM; 25.0–27.6 s while the vector
+    norm was inlined three times and the subvector self-product once
+    into every codeword's distance), but running it on 20 vectors still
+    exhausted that heap.  At that size, encode through the batch path
+    per micro-batch (foreachBatch).  The terms are SQL text from
     functions/vectors.py, parsed in one call.  Output: (vec_id, m,
     code).
     """
@@ -443,11 +344,9 @@ def streaming_pq_encode(
     n_sub = len(by_m)
 
     v = elements_sql(EMB_SQL, n_sub * w)
-    nrm = norm_sql(v)
+    subs = {m: v[m * w:(m + 1) * w] for m in sorted(by_m)}
     per_m = []
-    for m in sorted(by_m):
-        x = v[m * w:(m + 1) * w]
-        sub_sq = dot_sql(x, x)
+    for m, x in subs.items():
         cands = []
         for r in sorted(by_m[m], key=lambda r: int(r["code"])):
             cw = [float(r[f"cw{j}"]) for j in range(w)]
@@ -458,8 +357,8 @@ def streaming_pq_encode(
             for j in range(1, w):
                 csub_sq += cw[j] * cw[j]
             dist = pq_dist_sql(
-                sub_sq, lit_sql(csub_sq), lit_dot_sql(x, cw), nrm, cnrm,
-                round_digits,
+                f"__sq{m}", lit_sql(csub_sq), lit_dot_sql(x, cw), "__nrm",
+                cnrm, round_digits,
             )
             code = int(r["code"])
             cands.append(f"struct({dist} AS dist, CAST({code} AS BIGINT) AS code)")
@@ -467,9 +366,18 @@ def streaming_pq_encode(
             f"struct(CAST({m} AS INT) AS m,"
             f" (array_min(array({', '.join(cands)}))).code AS code)"
         )
-    return vecs.select(
-        "vec_id", F.expr(f"explode(array({', '.join(per_m)}))").alias("__e")
-    ).select("vec_id", F.col("__e.m").alias("m"), F.col("__e.code").alias("code"))
+    # The vector norm and each subvector's self-product are projected
+    # once and referenced, not inlined into every codeword's distance.
+    return (
+        vecs.selectExpr(
+            "vec_id",
+            "embedding",
+            f"{norm_sql(v)} AS __nrm",
+            *[f"{dot_sql(x, x)} AS __sq{m}" for m, x in subs.items()],
+        )
+        .selectExpr("vec_id", f"explode(array({', '.join(per_m)})) AS __e")
+        .select("vec_id", "__e.m", "__e.code")
+    )
 
 
 FUNNEL_STATE_SCHEMA = "t1 long, t2 long, t3 long"

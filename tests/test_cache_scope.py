@@ -300,3 +300,61 @@ def test_fixpoint_query_releases_all_blocks(spark, sf_dir, name):
     result.collect()
     del result
     blocks.assert_released(jvm_gc=True)
+
+
+def _ivf_topk_with_key(spark, sf_dir):
+    from stedi_human_balance_redis_kafka_spark_streaming_spark.operators import (
+        similarity,
+    )
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    q = similarity.queries_by_modulus(emb, 100)
+    return similarity.ivf_topk(emb, q, k=10, cache_key="over-cap-test")
+
+
+@pytest.mark.parametrize(
+    "build",
+    [
+        registry.queries()["ann_ivf_recall"],
+        registry.queries()["ann_mmr_topk"],
+        registry.queries()["dedup_clusters"],
+        _ivf_topk_with_key,
+    ],
+    ids=["ann_ivf_recall", "ann_mmr_topk", "dedup_clusters", "ivf_topk"],
+)
+def test_over_cap_build_serves_the_live_plan(
+    spark, sf_dir, tmp_path, monkeypatch, build
+):
+    """buildcache.cached over its row cap: no entry is stored in either
+    tier, the live plans return the cached run's rows, and the build's
+    blocks, held in the caller's scope, leave with the result."""
+    from stedi_human_balance_redis_kafka_spark_streaming_spark.operators import (
+        buildcache,
+    )
+
+    saved = dict(buildcache.INDEX_BUILD_CACHE)
+    buildcache.INDEX_BUILD_CACHE.clear()
+    try:
+        monkeypatch.setenv("SPARK_GRAFT_BUILDCACHE_DIR", str(tmp_path / "warm"))
+        want = sorted(map(tuple, build(spark, sf_dir).collect()))
+        keys = set(buildcache.INDEX_BUILD_CACHE)
+        assert keys  # the cached run stored its builds
+        buildcache.INDEX_BUILD_CACHE.clear()
+
+        cold = tmp_path / "cold"
+        monkeypatch.setenv("SPARK_GRAFT_BUILDCACHE_DIR", str(cold))
+        monkeypatch.setattr(buildcache, "MAX_ROWS", 1)
+        spark.catalog.clearCache()
+        gc.collect()
+        blocks = NewBlocks(spark)
+        result = build(spark, sf_dir)
+        assert sorted(map(tuple, result.collect())) == want
+        assert not buildcache.INDEX_BUILD_CACHE
+        assert all(buildcache.lookup(k) is None for k in keys)
+        assert not cold.exists() or not any(cold.iterdir())
+        del result
+        gc.collect()
+        blocks.assert_released()
+    finally:
+        buildcache.INDEX_BUILD_CACHE.clear()
+        buildcache.INDEX_BUILD_CACHE.update(saved)

@@ -17,6 +17,7 @@ from stedi_human_balance_redis_kafka_spark_streaming_spark.functions.hashing imp
     token_shingles,
 )
 from stedi_human_balance_redis_kafka_spark_streaming_spark.operators import (
+    buildcache,
     dedup,
     multimodal,
     similarity,
@@ -720,13 +721,13 @@ def test_index_build_cache_bit_identical_and_scoped(vec_corpus):
     engages without a cache_key."""
     e, dim = _flat_corpus(vec_corpus)
     key = "test-corpus-A"
-    for k in [k for k in similarity._INDEX_BUILD_CACHE if k[1] == key]:
-        del similarity._INDEX_BUILD_CACHE[k]
+    for k in [k for k in buildcache.INDEX_BUILD_CACHE if k[1] == key]:
+        del buildcache.INDEX_BUILD_CACHE[k]
     fresh = sorted(
         map(tuple, similarity.kmeans_centroids(
             e, dim, seed_modulus=2, iters=2, cache_key=key).collect())
     )
-    assert any(k[1] == key for k in similarity._INDEX_BUILD_CACHE)
+    assert any(k[1] == key for k in buildcache.INDEX_BUILD_CACHE)
     cached = sorted(
         map(tuple, similarity.kmeans_centroids(
             e, dim, seed_modulus=2, iters=2, cache_key=key).collect())
@@ -736,7 +737,7 @@ def test_index_build_cache_bit_identical_and_scoped(vec_corpus):
     other = similarity.kmeans_centroids(
         e, dim, seed_modulus=2, iters=1, cache_key=key
     )
-    keys = [k for k in similarity._INDEX_BUILD_CACHE if k[1] == key]
+    keys = [k for k in buildcache.INDEX_BUILD_CACHE if k[1] == key]
     assert len(keys) == 2 and other is not None
 
 
@@ -746,12 +747,12 @@ def test_sq8_build_artifacts_ride_the_cache(vec_corpus):
     on first use and the cached pass returns bit-identical top-k
     (ann_sq8_recall's hash must not move)."""
     key = "test-sq8-corpus"
-    for k in [k for k in similarity._INDEX_BUILD_CACHE if k[1] == key]:
-        del similarity._INDEX_BUILD_CACHE[k]
+    for k in [k for k in buildcache.INDEX_BUILD_CACHE if k[1] == key]:
+        del buildcache.INDEX_BUILD_CACHE[k]
     q = similarity.queries_by_modulus(vec_corpus, 7)
     fresh = sorted(map(tuple, similarity.sq8_topk(
         vec_corpus, q, k=5, shortlist=8, cache_key=key).collect()))
-    kinds = {k[0] for k in similarity._INDEX_BUILD_CACHE if k[1] == key}
+    kinds = {k[0] for k in buildcache.INDEX_BUILD_CACHE if k[1] == key}
     # r13 adds the reconstruction VIEW as a third entry (a pure
     # deterministic function of the first two — serving it skips the
     # per-call dim-wide CASE/div re-plan)
@@ -763,7 +764,7 @@ def test_sq8_build_artifacts_ride_the_cache(vec_corpus):
     nokey = sorted(map(tuple, similarity.sq8_topk(
         vec_corpus, q, k=5, shortlist=8).collect()))
     assert nokey == fresh
-    assert len([k for k in similarity._INDEX_BUILD_CACHE if k[1] == key]) == 3
+    assert len([k for k in buildcache.INDEX_BUILD_CACHE if k[1] == key]) == 3
 
 
 def test_index_build_cache_lru_eviction(monkeypatch):

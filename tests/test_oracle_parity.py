@@ -24,23 +24,16 @@ column on the other.
 from __future__ import annotations
 
 import gc
-import math
 import os
 
 import duckdb
-import numpy as np
-import pandas as pd
 import pytest
 from _blocks import NewBlocks
 
 import __spark_entry__ as entry_mod
+from perfbench.oracle import TABLES, canon, dtype_kinds
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.01")
-
-TABLES = (
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-)
 
 
 @pytest.fixture(scope="module")
@@ -51,57 +44,6 @@ def duck():
         if os.path.exists(path):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')")
     return con
-
-
-def _normalize(v):
-    """Make values hashable/comparable across engines (floats EXACT —
-    the driver hashes exact values, so so do we)."""
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "NaN"
-        return v
-    if v is pd.NaT:
-        return None
-    if isinstance(v, np.generic):
-        return _normalize(v.item())
-    if isinstance(v, pd.Timestamp):
-        return v.to_pydatetime()
-    if isinstance(v, bytes):
-        return v.hex()
-    if isinstance(v, np.ndarray):
-        return tuple(_normalize(x) for x in v.tolist())
-    if isinstance(v, list):
-        return tuple(_normalize(x) for x in v)
-    return v
-
-
-def _canon(pdf: pd.DataFrame):
-    pdf = pdf.reindex(sorted(pdf.columns), axis=1)
-    rows = [
-        tuple(_normalize(v) for v in row)
-        for row in pdf.itertuples(index=False, name=None)
-    ]
-    # None-safe sort key (NULL grouping keys from ROLLUP/CUBE subtotals
-    # are not comparable to str/int); equality compares the raw values.
-    return sorted(rows, key=lambda t: tuple(
-        (x is None, x or 0 if not isinstance(x, str) else x) for x in t
-    ))
-
-
-def _dtype_kinds(pdf: pd.DataFrame) -> dict[str, str]:
-    """Column → coarse dtype kind, with all-NULL float columns treated as
-    'nullable' wildcards (a column of only NULLs is float64(NaN) on one
-    engine and object(None) on the other — no value information to hash
-    differently)."""
-    kinds = {}
-    for c in sorted(pdf.columns):
-        k = pdf[c].dtype.kind
-        if k in ("i", "u"):
-            k = "i"
-        if pdf[c].isna().all():
-            k = "null"
-        kinds[c] = k
-    return kinds
 
 
 QUERY_NAMES = sorted(entry_mod.oracle_sql().keys())
@@ -125,7 +67,7 @@ def test_query_matches_oracle(spark, duck, name):
     assert len(spark_pdf) == len(duck_pdf), (
         f"{name}: row count {len(spark_pdf)} vs {len(duck_pdf)}"
     )
-    sk, dk = _dtype_kinds(spark_pdf), _dtype_kinds(duck_pdf)
+    sk, dk = dtype_kinds(spark_pdf), dtype_kinds(duck_pdf)
     dtype_mismatch = {
         c: (sk[c], dk[c]) for c in sk
         if sk[c] != dk[c] and "null" not in (sk[c], dk[c])
@@ -136,7 +78,7 @@ def test_query_matches_oracle(spark, duck, name):
         f"float/object (e.g. uncast DuckDB HUGEINT SUM) fails the driver "
         f"hash even when values match; CAST the oracle output to BIGINT"
     )
-    sc, dc = _canon(spark_pdf), _canon(duck_pdf)
+    sc, dc = canon(spark_pdf), canon(duck_pdf)
     mismatches = [(a, b) for a, b in zip(sc, dc) if a != b]
     assert not mismatches, f"{name}: first value mismatches: {mismatches[:3]}"
     assert not left, (
