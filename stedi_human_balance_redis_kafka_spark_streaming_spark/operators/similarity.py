@@ -282,7 +282,7 @@ def kmeans_centroids(
                 t = -((-s) // cnt) if s < 0 else s // cnt
                 by_cid.setdefault(int(r["cid"]), [0] * dim)[int(r["i"])] = t
             rows = [(cid, *vals) for cid, vals in sorted(by_cid.items())]
-            cents_q = spark.createDataFrame(rows, schema=schema)
+            cents_q = buildcache.rehydrate(spark, rows, schema)
     finally:
         eq.unpersist()
         e.unpersist()
@@ -1113,7 +1113,7 @@ def pq_codebooks_trained(
             ]
         if ckey is not None:
             buildcache.store(ckey, parts)
-        return spark.createDataFrame(parts, schema=cb_schema)
+        return buildcache.rehydrate(spark, parts, cb_schema)
     finally:
         e.unpersist()
 

@@ -655,7 +655,7 @@ def bpe_merges(
         words.unpersist()
     if ckey is not None:
         buildcache.store(ckey, out_rows)
-    return spark.createDataFrame(out_rows, schema=_BPE_SCHEMA)
+    return buildcache.rehydrate(spark, out_rows, _BPE_SCHEMA)
 
 
 def bpe_segment_counts(

@@ -5,9 +5,11 @@ from __future__ import annotations
 
 import ast
 import gc
+import os
 from pathlib import Path
 
 import pytest
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import functions as F
 
 from _blocks import NewBlocks
@@ -27,6 +29,157 @@ def test_only_the_window_exec_logger_is_raised_to_error(spark):
     assert str(log_manager.getRootLogger().getLevel()) == "WARN"
     assert level("org.apache.spark.sql.execution.window.WindowExecBase") == "WARN"
     assert level("org.apache.spark.sql.execution.SparkPlan") == "WARN"
+
+
+needs_javac = pytest.mark.skipif(
+    session._javac() is None,
+    reason="no javac: the session keeps Hadoop's stock file:// filesystem",
+)
+
+
+def _file_systems(spark):
+    """(the session's file:// FileSystem, Hadoop's stock LocalFileSystem),
+    both new instances the caller closes."""
+    jvm = spark.sparkContext._jvm
+    conf = spark._jsparkSession.sessionState().newHadoopConf()
+    stock_conf = jvm.org.apache.hadoop.conf.Configuration(conf)
+    stock_conf.set("fs.file.impl", "org.apache.hadoop.fs.LocalFileSystem")
+    uri = jvm.java.net.URI("file:///")
+    new_instance = jvm.org.apache.hadoop.fs.FileSystem.newInstance
+    return new_instance(uri, conf), new_instance(uri, stock_conf)
+
+
+@needs_javac
+def test_file_scheme_resolves_to_the_in_process_local_fs(spark):
+    jvm = spark.sparkContext._jvm
+    conf = spark._jsparkSession.sessionState().newHadoopConf()
+    uri = jvm.java.net.URI("file:///")
+    fs = jvm.org.apache.hadoop.fs.FileSystem.get(uri, conf)
+    assert fs.getClass().getName() == "stedi.fs.LocalFs"
+    assert fs.getRaw().getClass().getName() == "stedi.fs.LocalFs$Raw"
+    fc = jvm.org.apache.hadoop.fs.FileContext.getFileContext(uri, conf)
+    assert fc.getDefaultFileSystem().getClass().getName() == "stedi.fs.LocalFs$Fc"
+
+
+def _jvm_dir(tmp_path, source: str) -> Path:
+    (tmp_path / "LocalFs.java").write_text(source)
+    return tmp_path
+
+
+def test_local_fs_without_javac_keeps_the_stock_filesystem(monkeypatch, tmp_path, caplog):
+    """No javac: one warning, no classes, and the session confs are the
+    caller's alone."""
+    source = (Path(session.__file__).parent / "jvm" / "LocalFs.java").read_text()
+    monkeypatch.setattr(session, "_JVM_DIR", _jvm_dir(tmp_path, source))
+    monkeypatch.setattr(session, "_javac", lambda: None)
+    with caplog.at_level("WARNING", logger=session.__name__):
+        assert session.local_fs_classes.__wrapped__() is None
+    assert [r.getMessage().endswith("no javac") for r in caplog.records] == [True]
+    assert not (tmp_path / "classes").exists()
+
+
+@needs_javac
+def test_local_fs_compile_failure_warns_and_leaves_nothing(monkeypatch, tmp_path, caplog):
+    monkeypatch.setattr(session, "_JVM_DIR", _jvm_dir(tmp_path, "class Broken {"))
+    with caplog.at_level("WARNING", logger=session.__name__):
+        assert session.local_fs_classes.__wrapped__() is None
+    assert len(caplog.records) == 1 and "LocalFs.java" in caplog.records[0].getMessage()
+    assert list((tmp_path / "classes").iterdir()) == []
+
+
+def _modes(root: Path) -> dict[str, int]:
+    return {
+        str(p.relative_to(root)): p.stat().st_mode & 0o7777
+        for p in sorted(root.rglob("*"))
+    }
+
+
+@needs_javac
+def test_local_fs_sets_the_modes_chmod_sets(spark, tmp_path):
+    """Files and directories made with explicit modes (and the files'
+    .crc twins) get the POSIX modes the stock filesystem's chmod gives
+    them, under a plain parent and under a setgid one, whose bit chmod
+    keeps on new directories."""
+    jvm = spark.sparkContext._jvm
+    fsp = jvm.org.apache.hadoop.fs
+    ours, stock = _file_systems(spark)
+    try:
+        for name, fs in (("ours", ours), ("stock", stock)):
+            for parent_mode in (0o755, 0o2775):
+                base = tmp_path / name / f"{parent_mode:o}"
+                base.mkdir(parents=True)
+                base.chmod(parent_mode)
+                for mode in (0o600, 0o640, 0o750):
+                    perm = fsp.permission.FsPermission(mode)
+                    path = fsp.Path(str(base / f"f{mode:o}"))
+                    fs.create(path, perm, True, 4096, 1, 1 << 27, None).close()
+                    assert fs.mkdirs(fsp.Path(str(base / f"d{mode:o}" / "sub")), perm)
+    finally:
+        ours.close()
+        stock.close()
+    got, want = _modes(tmp_path / "ours"), _modes(tmp_path / "stock")
+    assert got == want
+    assert want["755/f640"] == 0o640 and want["755/d750/sub"] == 0o750
+    assert want["2775/d750/sub"] == 0o2750 and "755/.f600.crc" in want
+
+
+def _link_status(fs, path):
+    try:
+        st = fs.getFileLinkStatus(path)
+    except Py4JJavaError as e:
+        return e.java_exception.getClass().getName()
+    return (
+        st.getPath().toString(), st.isDirectory(), st.isSymlink(),
+        st.getSymlink().toString() if st.isSymlink() else None,
+        st.getLen(), st.getModificationTime(),
+        st.getPermission().toString(), st.getOwner(), st.getGroup(),
+    )
+
+
+@needs_javac
+def test_local_fs_link_status_matches_stock(spark, tmp_path):
+    """getFileLinkStatus answers as the stock readlink-based one for a
+    file, a directory, a symlink and a dangling symlink, addressed by a
+    plain path and by a file: URI."""
+    Path_ = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
+    (tmp_path / "file").write_text("x")
+    (tmp_path / "dir").mkdir()
+    (tmp_path / "link").symlink_to(tmp_path / "file")
+    (tmp_path / "dangling").symlink_to(tmp_path / "gone")
+    ours, stock = _file_systems(spark)
+    try:
+        for name in ("file", "dir", "link", "dangling"):
+            for path in (str(tmp_path / name), (tmp_path / name).as_uri()):
+                want = _link_status(stock.getRaw(), Path_(path))
+                assert _link_status(ours.getRaw(), Path_(path)) == want, path
+                assert _link_status(ours, Path_(path)) == _link_status(stock, Path_(path))
+        assert _link_status(stock.getRaw(), Path_(str(tmp_path / "link")))[2]
+    finally:
+        ours.close()
+        stock.close()
+
+
+@needs_javac
+def test_local_fs_file_reads_back_through_stock_with_checksums(spark, tmp_path):
+    jvm = spark.sparkContext._jvm
+    target = jvm.org.apache.hadoop.fs.Path(str(tmp_path / "data.bin"))
+    payload = os.urandom(100_000)
+    ours, stock = _file_systems(spark)
+    try:
+        out = ours.create(target)
+        out.write(bytearray(payload))
+        out.close()
+        stock.setVerifyChecksum(True)
+        inp = stock.open(target)
+        try:
+            back = jvm.org.apache.hadoop.io.IOUtils.readFullyToByteArray(inp)
+        finally:
+            inp.close()
+    finally:
+        ours.close()
+        stock.close()
+    assert (tmp_path / ".data.bin.crc").is_file()
+    assert bytes(back) == payload
 
 
 def test_nested_operator_blocks_live_until_the_outer_result_is_dropped(spark):

@@ -7,11 +7,13 @@ the batch result).
 
 from __future__ import annotations
 
+import os
 import uuid
 
 import pytest
 from pyspark.sql import functions as F
 
+from stedi_human_balance_redis_kafka_spark_streaming_spark import session
 from stedi_human_balance_redis_kafka_spark_streaming_spark.operators import joins, pipeline
 from stedi_human_balance_redis_kafka_spark_streaming_spark.plans import synthetic
 from stedi_human_balance_redis_kafka_spark_streaming_spark.streaming import (
@@ -21,6 +23,7 @@ from stedi_human_balance_redis_kafka_spark_streaming_spark.streaming import (
 )
 from stedi_human_balance_redis_kafka_spark_streaming_spark.streaming.progress import (
     JsonProgressListener,
+    progress_record,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -204,6 +207,48 @@ def test_join_restart_mid_drain_matches_uninterrupted_run(spark, split_stream_di
     assert _rows(spark.read.parquet(sink)) == expected
 
 
+def _reaped_children_cpu_s(pid: int) -> float:
+    """CPU seconds of the children ``pid`` has waited for (``cutime`` +
+    ``cstime``, fields 16 and 17 of ``/proc/<pid>/stat``)."""
+    with open(f"/proc/{pid}/stat") as f:
+        fields = f.read().rsplit(")", 1)[1].split()  # fields[0] is field 3
+    return (int(fields[13]) + int(fields[14])) / os.sysconf("SC_CLK_TCK")
+
+
+@pytest.mark.skipif(
+    session._javac() is None or not os.path.exists("/proc/self/stat"),
+    reason="no javac (the session keeps Hadoop's stock file:// filesystem) or no /proc",
+)
+def test_join_drain_forks_no_processes(spark, split_stream_dirs, tmp_path):
+    """After its first trigger, a checkpointed join into a parquet sink
+    writes its offset, commit and source logs, RocksDB changelogs and
+    sink files without the driver JVM forking a process for each:
+    Hadoop's stock file:// filesystem forks ``chmod`` per file and
+    directory it makes and ``readlink`` per rename when no libhadoop is
+    loaded.  (The first trigger is left out: loading each partition's
+    RocksDB store clears its local directory with an ``rm -rf``, once
+    per query.)"""
+    import time
+
+    pid = spark.sparkContext._jvm.java.lang.management.ManagementFactory.getRuntimeMXBean().getPid()
+    query = _start_join_to_files(
+        spark, split_stream_dirs, str(tmp_path / "sink"), str(tmp_path / "ckpt")
+    )
+    try:
+        while query.lastProgress is None:
+            assert query.isActive, query.exception()
+            time.sleep(0.01)
+        first = query.lastProgress["batchId"]
+        before = _reaped_children_cpu_s(pid)
+        query.processAllAvailable()
+        grew = _reaped_children_cpu_s(pid) - before
+        triggers = query.lastProgress["batchId"] - first
+    finally:
+        query.stop()
+    assert triggers >= 4
+    assert grew < 0.05, f"driver JVM children used {grew:.2f} s CPU over {triggers} triggers"
+
+
 def test_progress_listener_writes_json_lines(spark, split_stream_dirs, tmp_path, capsys):
     """``JsonProgressListener`` writes one JSON line per progress event
     to stderr, with the per-batch and per-state-operator fields."""
@@ -234,13 +279,60 @@ def test_progress_listener_writes_json_lines(spark, split_stream_dirs, tmp_path,
         assert r["numInputRows"] == p["numInputRows"]
         assert r["durationMs"]["triggerExecution"] == p["durationMs"]["triggerExecution"]
         op = p["stateOperators"][0]
+        custom = op["customMetrics"]
         assert r["stateOperators"] == [
             {
                 "numRowsTotal": op["numRowsTotal"],
                 "commitTimeMs": op["commitTimeMs"],
                 "numStateStoreInstances": op["numStateStoreInstances"],
+                "rocksdbChangeLogWriterCommitLatencyMs": custom[
+                    "rocksdbChangeLogWriterCommitLatencyMs"
+                ],
+                "rocksdbCommitFileSyncLatencyMs": custom["rocksdbCommitFileSyncLatencyMs"],
             }
         ]
+
+
+def _recorded_progress(name):
+    import json
+    from pathlib import Path
+
+    return json.loads((Path(__file__).parent / "data" / name).read_text())
+
+
+def test_progress_record_of_a_rocksdb_join():
+    """A recorded last-trigger progress of the join on the RocksDB store
+    (8 shuffle partitions): the two commit latencies come from the
+    operator's custom metrics."""
+    record = progress_record(_recorded_progress("progress_rocksdb.json"))
+    assert record == {
+        "batchId": 5,
+        "numInputRows": 190,
+        "durationMs": {
+            "addBatch": 669, "commitOffsets": 2, "getBatch": 29, "latestOffset": 6,
+            "queryPlanning": 220, "triggerExecution": 936, "walCommit": 5,
+        },
+        "stateOperators": [
+            {
+                "numRowsTotal": 1150,
+                "commitTimeMs": 138,
+                "numStateStoreInstances": 8,
+                "rocksdbChangeLogWriterCommitLatencyMs": 60,
+                "rocksdbCommitFileSyncLatencyMs": 60,
+            }
+        ],
+    }
+
+
+def test_progress_record_of_an_hdfs_store_join():
+    """On the HDFS-backed store (join state format 2, four stores per
+    partition) the custom metrics carry no RocksDB latencies, and the
+    record leaves them out."""
+    record = progress_record(_recorded_progress("progress_hdfs.json"))
+    assert record["stateOperators"] == [
+        {"numRowsTotal": 1150, "commitTimeMs": 305, "numStateStoreInstances": 32}
+    ]
+    assert (record["batchId"], record["numInputRows"]) == (5, 190)
 
 
 def test_risk_gate_stream_matches_batch(spark, split_stream_dirs):
