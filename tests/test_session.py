@@ -76,6 +76,9 @@ def test_local_fs_without_javac_keeps_the_stock_filesystem(monkeypatch, tmp_path
         assert session.local_fs_classes.__wrapped__() is None
     assert [r.getMessage().endswith("no javac") for r in caplog.records] == [True]
     assert not (tmp_path / "classes").exists()
+    monkeypatch.setattr(session, "local_fs_classes", lambda: None)
+    conf = {"spark.driver.extraClassPath": "extra.jar"}
+    assert session._with_local_fs(conf) == conf
 
 
 @needs_javac
@@ -141,7 +144,7 @@ def test_local_fs_link_status_matches_stock(spark, tmp_path):
     """getFileLinkStatus answers as the stock readlink-based one for a
     file, a directory, a symlink and a dangling symlink, addressed by a
     plain path and by a file: URI."""
-    Path_ = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
+    HPath = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
     (tmp_path / "file").write_text("x")
     (tmp_path / "dir").mkdir()
     (tmp_path / "link").symlink_to(tmp_path / "file")
@@ -150,10 +153,10 @@ def test_local_fs_link_status_matches_stock(spark, tmp_path):
     try:
         for name in ("file", "dir", "link", "dangling"):
             for path in (str(tmp_path / name), (tmp_path / name).as_uri()):
-                want = _link_status(stock.getRaw(), Path_(path))
-                assert _link_status(ours.getRaw(), Path_(path)) == want, path
-                assert _link_status(ours, Path_(path)) == _link_status(stock, Path_(path))
-        assert _link_status(stock.getRaw(), Path_(str(tmp_path / "link")))[2]
+                want = _link_status(stock.getRaw(), HPath(path))
+                assert _link_status(ours.getRaw(), HPath(path)) == want, path
+                assert _link_status(ours, HPath(path)) == _link_status(stock, HPath(path))
+        assert _link_status(stock.getRaw(), HPath(str(tmp_path / "link")))[2]
     finally:
         ours.close()
         stock.close()
@@ -161,25 +164,34 @@ def test_local_fs_link_status_matches_stock(spark, tmp_path):
 
 @needs_javac
 def test_local_fs_file_reads_back_through_stock_with_checksums(spark, tmp_path):
+    """A file the session's filesystem writes reads back through the
+    stock one with its .crc checked, which a flipped byte then fails."""
     jvm = spark.sparkContext._jvm
     target = jvm.org.apache.hadoop.fs.Path(str(tmp_path / "data.bin"))
     payload = os.urandom(100_000)
     ours, stock = _file_systems(spark)
+
+    def read_back():
+        inp = stock.open(target)
+        try:
+            return bytes(jvm.org.apache.hadoop.io.IOUtils.readFullyToByteArray(inp))
+        finally:
+            inp.close()
+
     try:
         out = ours.create(target)
         out.write(bytearray(payload))
         out.close()
         stock.setVerifyChecksum(True)
-        inp = stock.open(target)
-        try:
-            back = jvm.org.apache.hadoop.io.IOUtils.readFullyToByteArray(inp)
-        finally:
-            inp.close()
+        assert read_back() == payload
+        with open(tmp_path / "data.bin", "r+b") as f:
+            f.seek(5000)
+            f.write(bytes([payload[5000] ^ 1]))
+        with pytest.raises(Py4JJavaError, match="ChecksumException"):
+            read_back()
     finally:
         ours.close()
         stock.close()
-    assert (tmp_path / ".data.bin.crc").is_file()
-    assert bytes(back) == payload
 
 
 def test_nested_operator_blocks_live_until_the_outer_result_is_dropped(spark):
