@@ -1,41 +1,29 @@
 package stedi.fs;
 
-import java.io.File;
 import java.io.IOException;
-import java.net.URI;
-import java.net.URISyntaxException;
 import java.nio.file.Files;
-import java.nio.file.InvalidPathException;
 import java.nio.file.attribute.PosixFilePermission;
 import java.util.EnumSet;
 import java.util.Set;
 
-import org.apache.hadoop.conf.Configuration;
-import org.apache.hadoop.fs.ChecksumFs;
-import org.apache.hadoop.fs.DelegateToFileSystem;
-import org.apache.hadoop.fs.FileStatus;
-import org.apache.hadoop.fs.FsConstants;
-import org.apache.hadoop.fs.FsServerDefaults;
 import org.apache.hadoop.fs.LocalFileSystem;
 import org.apache.hadoop.fs.Path;
 import org.apache.hadoop.fs.RawLocalFileSystem;
-import org.apache.hadoop.fs.local.LocalConfigKeys;
 import org.apache.hadoop.fs.permission.FsPermission;
 import org.apache.hadoop.io.nativeio.NativeIO;
 
 /**
  * Hadoop's checksummed file:// FileSystem ({@code fs.file.impl}) without
- * the two shell-outs it makes when no native libhadoop is loaded:
+ * the shell-out it makes when no native libhadoop is loaded:
  * {@code setPermission} forks {@code chmod} for every file and directory
- * created, and {@code getFileLinkStatus} forks {@code readlink} (twice per
- * FileContext rename).  Both are answered in process, with the same result.
+ * created.  It is answered in process, with the same result.
  */
 public class LocalFs extends LocalFileSystem {
   public LocalFs() {
     super(new Raw());
   }
 
-  /** RawLocalFileSystem with the two shell-outs done through java.nio. */
+  /** RawLocalFileSystem with chmod done through java.nio. */
   public static class Raw extends RawLocalFileSystem {
     private static final PosixFilePermission[] BITS = PosixFilePermission.values();
 
@@ -58,57 +46,6 @@ public class LocalFs extends LocalFileSystem {
         }
       }
       Files.setPosixFilePermissions(f, perms);
-    }
-
-    /** The parent runs {@code readlink <p>} and, when it prints nothing
-     *  (not a symlink, or no such file), answers getFileStatus; a symlink
-     *  still goes to the parent. */
-    @Override
-    public FileStatus getFileLinkStatus(Path p) throws IOException {
-      try {
-        if (!Files.isSymbolicLink(new File(p.toString()).toPath())) {
-          return getFileStatus(p);
-        }
-      } catch (InvalidPathException e) {
-        // the parent's readlink decides
-      }
-      return super.getFileLinkStatus(p);
-    }
-  }
-
-  /** FileContext's file:// ({@code fs.AbstractFileSystem.file.impl}):
-   *  Hadoop's local.LocalFs over {@link Raw}. */
-  public static class Fc extends ChecksumFs {
-    public Fc(URI uri, Configuration conf) throws IOException, URISyntaxException {
-      super(new RawFc(uri, conf));
-    }
-  }
-
-  /** Hadoop's local.RawLocalFs, delegating to {@link Raw}. */
-  public static class RawFc extends DelegateToFileSystem {
-    public RawFc(URI uri, Configuration conf) throws IOException, URISyntaxException {
-      super(uri, new Raw(), conf, FsConstants.LOCAL_FS_URI.getScheme(), false);
-    }
-
-    @Override
-    public int getUriDefaultPort() {
-      return -1;
-    }
-
-    @Override
-    public FsServerDefaults getServerDefaults(Path f) throws IOException {
-      return LocalConfigKeys.getServerDefaults();
-    }
-
-    @Override
-    @Deprecated
-    public FsServerDefaults getServerDefaults() throws IOException {
-      return LocalConfigKeys.getServerDefaults();
-    }
-
-    @Override
-    public boolean isValidName(String src) {
-      return true;
     }
   }
 }

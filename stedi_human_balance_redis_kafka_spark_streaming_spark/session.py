@@ -28,29 +28,42 @@ wrong in both directions.  This factory pins the settings that matter:
   bounded by design, and the warning was over half of a bench's stderr.
 * ``file://`` served in process by ``jvm/LocalFs.java``.  With no native
   libhadoop on the host, Hadoop's local filesystem forks ``chmod`` for
-  every file and directory it creates and ``readlink`` for every
-  FileContext rename, so each trigger of the paper's join (source,
-  offset and commit logs, RocksDB changelogs, parquet sink files and
-  their ``.crc`` twins) spawned about 100 processes from the driver JVM,
-  each with a JVM thread reading its stderr.
-  ``LocalFs`` subclasses ``RawLocalFileSystem`` and answers those two
-  calls through ``java.nio`` with the same result (modes above 0777, a
-  setuid/setgid/sticky file and symlinks still go to Hadoop), behind
-  ``fs.file.impl`` (checksummed) and ``fs.AbstractFileSystem.file.impl``;
-  names, modes and ``.crc`` files are unchanged, so a checkpoint moves
-  between the two filesystems.  (Without it, ``file://`` is whichever
-  FileSystem service registers it last: with pyspark's jars Hive's
-  ``ProxyLocalFileSystem``, a ``LocalFileSystem`` that refuses a rename
-  onto an existing file; no engine write renames onto one.)  On perfbench ``stream_join`` (local[2],
-  4-core VM, 10 alternating pairs) ``trigger_p50_ms`` fell from 764 to
-  535 ms and ``cpu_s`` from 24.6 to 16.1 s; over a 28-trigger drain the
-  JVM's reaped-child CPU went from 7.1-7.6 s to 0.05 s and the median
-  state commit from 118-154 to 13-16 ms.  :func:`local_fs_classes`
-  compiles the source once per source hash with the JDK's ``javac``
-  against Spark's ``hadoop-client-api`` jar into the gitignored
-  ``jvm/classes/`` (about 1 s); without ``javac``, or when the compile
-  fails, it logs one warning and the session keeps Hadoop's stock
-  filesystem.  The simpler alternative,
+  every file and directory it creates, and Spark's default checkpoint
+  file manager renames through FileContext, which forks ``readlink``
+  twice per rename.  Each trigger of the paper's join (source, offset
+  and commit logs, RocksDB changelogs, parquet sink files and their
+  ``.crc`` twins) spawned about 100 processes from the driver JVM, each
+  with a JVM thread reading its stderr.  ``LocalFs`` subclasses
+  ``RawLocalFileSystem`` and sets modes through ``java.nio`` with
+  chmod's result (modes above 0777 and a setuid/setgid/sticky file
+  still go to Hadoop), behind ``fs.file.impl`` (checksummed).  With it,
+  ``spark.sql.streaming.checkpointFileManagerClass`` is pinned to
+  Spark's ``FileSystemBasedCheckpointFileManager``, so checkpoint logs
+  and RocksDB changelogs and snapshots go through ``LocalFs`` too, whose
+  rename is ``java.io.File.renameTo`` and forks nothing.  On a local
+  disk both managers check that the destination is absent and then
+  rename, so neither is atomic.  Names, modes and ``.crc`` files are
+  unchanged, so a checkpoint moves between the two setups.  (Without
+  ``LocalFs``, ``file://`` is whichever FileSystem service registers it
+  last: with pyspark's jars Hive's ``ProxyLocalFileSystem``, a
+  ``LocalFileSystem`` that refuses a rename onto an existing file, which
+  is why the manager is pinned only together with ``LocalFs``.)
+  On perfbench ``stream_join`` (local[2], 4-core VM, 4 alternating
+  pairs) ``trigger_p50_ms`` fell from 648-742 to 430-481 ms and
+  ``cpu_s`` from 21.2-24.1 to 13.3-14.5 s; the traced median state
+  commit fell from 107-114 to 8 ms, and over a drain the driver JVM's
+  reaped-child CPU after the first trigger stays under 0.05 s, where it
+  was 7.1-7.6 s over 28 triggers.  A FileContext wrapper of ``LocalFs``
+  (``fs.AbstractFileSystem.file.impl``, about 50 lines of Java) in place
+  of the pinned manager measured the same over 6 alternating pairs
+  (``trigger_p50_ms`` 500-576 against 509-522 ms).
+  :func:`local_fs_classes` compiles the source once per source hash with
+  the JDK's ``javac`` against Spark's ``hadoop-client-api`` jar into the
+  gitignored ``jvm/classes/`` (about 1 s).  Without ``javac``, when the
+  compile fails (one warning), when the caller sets ``fs.file.impl``, or
+  when the driver JVM was started without the classes (by
+  ``spark-submit``, say), the session keeps Hadoop's stock filesystem
+  and Spark's default checkpoint manager.  The simpler alternative,
   ``-Djdk.lang.Process.launchMechanism=VFORK``, makes each fork cheaper
   but gave no gain (probe trigger p50 949 → 1014 ms).
 
@@ -340,6 +353,9 @@ def _default_driver_memory() -> str:
 
 _JVM_DIR = Path(__file__).resolve().with_name("jvm")
 _LOCAL_FS = "stedi.fs.LocalFs"
+_CHECKPOINT_FILE_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager"
+)
 
 
 def _javac() -> str | None:
@@ -397,23 +413,32 @@ def local_fs_classes() -> str | None:
 
 def _with_local_fs(conf: dict[str, str]) -> dict[str, str]:
     """``conf`` plus the confs that put :data:`_LOCAL_FS` behind
-    ``file://``: its classes appended to the driver class path, the two
-    filesystem keys unless ``conf`` sets them.  ``conf`` unchanged when
-    there are no classes, or when the driver JVM is already up without
-    them on its class path."""
+    ``file://``: its classes appended to the driver class path, the
+    filesystem key and the checkpoint manager pin.  ``conf`` unchanged
+    when it sets ``fs.file.impl`` itself, when there are no classes, or
+    when the driver JVM is already up without them on its class path.
+    The class path is fixed when the JVM launches, and Hadoop would fail
+    every ``file://`` lookup with ``ClassNotFoundException``.  The JVM is
+    up when this process started it (``SparkContext._jvm``), or when a
+    launcher such as ``spark-submit`` started it before Python and hands
+    it over through ``PYSPARK_GATEWAY_PORT``; such a JVM was launched
+    without the classes."""
     from pyspark import SparkContext
 
-    classes = local_fs_classes()
+    fs = "spark.hadoop.fs.file.impl"
+    classes = None if fs in conf else local_fs_classes()
     if classes is None:
         return conf
     if SparkContext._jvm is not None:
         running = SparkContext._jvm.System.getProperty("java.class.path")
         if classes not in running.split(os.pathsep):
             return conf
+    elif "PYSPARK_GATEWAY_PORT" in os.environ:
+        return conf
     cp = "spark.driver.extraClassPath"
     return {
-        "spark.hadoop.fs.file.impl": _LOCAL_FS,
-        "spark.hadoop.fs.AbstractFileSystem.file.impl": _LOCAL_FS + "$Fc",
+        fs: _LOCAL_FS,
+        "spark.sql.streaming.checkpointFileManagerClass": _CHECKPOINT_FILE_MANAGER,
         **conf,
         cp: os.pathsep.join(filter(None, (conf.get(cp), classes))),
     }

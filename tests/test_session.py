@@ -57,8 +57,9 @@ def test_file_scheme_resolves_to_the_in_process_local_fs(spark):
     fs = jvm.org.apache.hadoop.fs.FileSystem.get(uri, conf)
     assert fs.getClass().getName() == "stedi.fs.LocalFs"
     assert fs.getRaw().getClass().getName() == "stedi.fs.LocalFs$Raw"
-    fc = jvm.org.apache.hadoop.fs.FileContext.getFileContext(uri, conf)
-    assert fc.getDefaultFileSystem().getClass().getName() == "stedi.fs.LocalFs$Fc"
+    checkpoint = jvm.org.apache.spark.sql.execution.streaming.checkpointing
+    manager = checkpoint.CheckpointFileManager.create(jvm.org.apache.hadoop.fs.Path("file:///"), conf)
+    assert manager.getClass().getSimpleName() == "FileSystemBasedCheckpointFileManager"
 
 
 def _jvm_dir(tmp_path, source: str) -> Path:
@@ -79,6 +80,46 @@ def test_local_fs_without_javac_keeps_the_stock_filesystem(monkeypatch, tmp_path
     monkeypatch.setattr(session, "local_fs_classes", lambda: None)
     conf = {"spark.driver.extraClassPath": "extra.jar"}
     assert session._with_local_fs(conf) == conf
+
+
+def test_local_fs_is_left_out_of_a_jvm_launched_without_it(monkeypatch):
+    """A driver JVM already up keeps its launch class path: one a
+    launcher such as spark-submit started before Python (handed over
+    through PYSPARK_GATEWAY_PORT) or one running without the classes
+    gets the caller's conf alone, as does a caller that names its own
+    fs.file.impl; only a JVM still to be launched, or one launched with
+    the classes, gets the filesystem confs."""
+    from pyspark import SparkContext
+
+    class_path = ["spark.jar"]
+
+    class Jvm:
+        class System:
+            @staticmethod
+            def getProperty(key):
+                return os.pathsep.join(class_path)
+
+    classes = "/checkout/jvm/classes/0123456789abcdef"
+    monkeypatch.setattr(session, "local_fs_classes", lambda: classes)
+    conf = {"spark.driver.extraClassPath": "extra.jar"}
+    monkeypatch.setattr(SparkContext, "_jvm", None)
+    monkeypatch.delenv("PYSPARK_GATEWAY_PORT", raising=False)
+    launched = session._with_local_fs(conf)
+    assert launched["spark.hadoop.fs.file.impl"] == "stedi.fs.LocalFs"
+    manager = launched["spark.sql.streaming.checkpointFileManagerClass"]
+    assert manager.endswith(".FileSystemBasedCheckpointFileManager")
+    assert launched["spark.driver.extraClassPath"] == os.pathsep.join(("extra.jar", classes))
+
+    own = {"spark.hadoop.fs.file.impl": "org.apache.hadoop.fs.LocalFileSystem"}
+    assert session._with_local_fs(own) == own
+
+    monkeypatch.setenv("PYSPARK_GATEWAY_PORT", "40000")
+    assert session._with_local_fs(conf) == conf
+
+    monkeypatch.setattr(SparkContext, "_jvm", Jvm)
+    assert session._with_local_fs(conf) == conf
+    class_path.append(classes)
+    assert session._with_local_fs(conf) == launched
 
 
 @needs_javac
@@ -124,42 +165,6 @@ def test_local_fs_sets_the_modes_chmod_sets(spark, tmp_path):
     assert got == want
     assert want["755/f640"] == 0o640 and want["755/d750/sub"] == 0o750
     assert want["2775/d750/sub"] == 0o2750 and "755/.f600.crc" in want
-
-
-def _link_status(fs, path):
-    try:
-        st = fs.getFileLinkStatus(path)
-    except Py4JJavaError as e:
-        return e.java_exception.getClass().getName()
-    return (
-        st.getPath().toString(), st.isDirectory(), st.isSymlink(),
-        st.getSymlink().toString() if st.isSymlink() else None,
-        st.getLen(), st.getModificationTime(),
-        st.getPermission().toString(), st.getOwner(), st.getGroup(),
-    )
-
-
-@needs_javac
-def test_local_fs_link_status_matches_stock(spark, tmp_path):
-    """getFileLinkStatus answers as the stock readlink-based one for a
-    file, a directory, a symlink and a dangling symlink, addressed by a
-    plain path and by a file: URI."""
-    HPath = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
-    (tmp_path / "file").write_text("x")
-    (tmp_path / "dir").mkdir()
-    (tmp_path / "link").symlink_to(tmp_path / "file")
-    (tmp_path / "dangling").symlink_to(tmp_path / "gone")
-    ours, stock = _file_systems(spark)
-    try:
-        for name in ("file", "dir", "link", "dangling"):
-            for path in (str(tmp_path / name), (tmp_path / name).as_uri()):
-                want = _link_status(stock.getRaw(), HPath(path))
-                assert _link_status(ours.getRaw(), HPath(path)) == want, path
-                assert _link_status(ours, HPath(path)) == _link_status(stock, HPath(path))
-        assert _link_status(stock.getRaw(), HPath(str(tmp_path / "link")))[2]
-    finally:
-        ours.close()
-        stock.close()
 
 
 @needs_javac

@@ -224,8 +224,8 @@ def test_join_drain_forks_no_processes(spark, split_stream_dirs, tmp_path):
     writes its offset, commit and source logs, RocksDB changelogs and
     sink files without the driver JVM forking a process for each:
     Hadoop's stock file:// filesystem forks ``chmod`` per file and
-    directory it makes and ``readlink`` per rename when no libhadoop is
-    loaded.  (The first trigger is left out: loading each partition's
+    directory it makes, and Spark's default FileContext checkpoint
+    manager ``readlink`` per rename, when no libhadoop is loaded.  (The first trigger is left out: loading each partition's
     RocksDB store clears its local directory with an ``rm -rf``, once
     per query.)"""
     import time
