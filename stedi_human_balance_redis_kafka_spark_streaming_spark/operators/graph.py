@@ -1,16 +1,25 @@
-"""Iterative graph analytics: fixed-iteration, integer-exact PageRank.
+"""Graph analytics over edge lists, exact and SQL-mirrorable.
 
-The third graph engine next to min-label propagation and star
-contraction (operators/curation.py): where those compute *membership*
-(connected components), PageRank computes *centrality* — the standard
-authority score for ranking entities in a link/interaction graph
-(domain authority in web-crawl curation, canonical-representative
-scoring in dedup graphs, hub detection in transaction graphs).
+Next to the connected-components engines of operators/curation.py
+(membership), this module holds the rest of the graph family:
 
-Everything is exact integer arithmetic (ranks in 1e12 units, damping as
-a /100 rational, `div` truncation) so a SQL oracle can unroll the same
-rounds and match bit-for-bit — the same determinism policy as the
-k-means and BPE trainers.
+* centrality — fixed-iteration :func:`pagerank`,
+  :func:`stress_centrality`;
+* cohesion and density — :func:`triangle_count`,
+  :func:`clustering_coefficient`, :func:`k_core`, :func:`coreness`,
+  :func:`k_truss`;
+* reachability — :func:`bfs_distances`, :func:`shortest_paths`,
+  :func:`strongly_connected_components`;
+* communities — :func:`label_propagation`, and the modularity family
+  (:func:`modularity_score`, :func:`modularity_merge_step`,
+  :func:`modularity_refine_step`, :func:`modularity_refine_guarded`,
+  :func:`contract_graph`, :func:`louvain_coarsen`).
+
+Everything is exact integer arithmetic (PageRank ranks in 1e12 units
+with damping as a /100 rational and ``div`` truncation, modularity as
+exact decimal numerators and a truncated Q·10⁶) so a SQL oracle can
+unroll the same rounds and match bit-for-bit — the same determinism
+policy as the k-means and BPE trainers.
 """
 
 from __future__ import annotations
@@ -530,40 +539,54 @@ def k_core(
     )
 
 
-def _coreness_hindex(
-    und: DataFrame,
+@scoped
+def coreness(
+    edges: DataFrame,
     *,
-    max_iter: int,
-    deg: DataFrame | None = None,
+    src: str = "src",
+    dst: str = "dst",
+    max_iter: int = 200,
 ) -> DataFrame:
-    """h-index fixpoint engine for :func:`coreness` — ``und`` is the
-    caller-persisted canonical simple edge set (u < v).
+    """Full core decomposition: every node's core NUMBER — the largest
+    k for which the node survives the k-core peel (k_core gives
+    membership at ONE k; the standard deliverable ranks every entity
+    by its engagement depth in one pass).  Output: (node, coreness),
+    coreness ≥ 1 for every node incident to an edge (isolated nodes
+    never appear in an edge list and are not represented, exactly as
+    in :func:`k_core`).
 
-    ``deg``: optional PRECOMPUTED degree rollup (node, deg) over the
-    same canonical edge set — ``coreness(algorithm='auto')`` already
-    shuffles it for the engine probe, and c₀ IS that rollup (the
-    symmetrized per-node count equals the endpoint count), so threading
-    it here removes a duplicate full-edge-list shuffle (the guard
-    deg-sharing discipline, r19).  The frame is consumed once into the
-    c₀ checkpoint and unpersisted when the loop ends.
+    Algorithm — the h-index fixpoint iteration (Lü, Zhou, Zhang &
+    Stanley, "The H-index of a network node and its relation to degree
+    and coreness", Nat. Commun. 2016): c₀ = deg, c_{t+1}(v) =
+    H({c_t(u) : u ~ v}) — the largest h such that ≥ h neighbors
+    currently hold value ≥ h.  Monotone non-increasing, fixpoint =
+    coreness.  The registered query's SQL oracle replays the PEEL
+    (plans/extras.py graph_coreness), so the two algorithms verify
+    each other.
 
-    Per round: ONE b-keyed join ships every node its neighbors' current
-    values, one per-node descending rank computes H (h = max rank r
-    with value ≥ r; every node has ≥ 1 neighbor of value ≥ 1, so h ≥ 1
-    and no node drops out).  The loop runs on
-    :func:`..session.fixpoint` with Σc (decimal(38,0)-exact) as the
-    observed metric: c is monotone non-increasing, so an unchanged sum
-    IS the pointwise fixpoint.
+    Per round: ONE b-keyed join over the persisted symmetric edge set
+    ships every node its neighbors' current values, one per-node
+    descending rank computes H (every node has ≥ 1 neighbor of value
+    ≥ 1, so h ≥ 1 and no node drops out).  Rounds = error-propagation
+    depth (≤ peel rounds; measured 10 vs 16 on the sf0.1 trade graph).
+    The loop runs on :func:`..session.fixpoint` with Σc
+    (decimal(38,0)-exact) as the observed metric: c is monotone
+    non-increasing, so an unchanged sum IS the pointwise fixpoint.  It
+    RAISES on non-convergence within ``max_iter`` rather than
+    returning a partial decomposition.
+
+    Skew: the H step ranks one node's messages inside one window
+    partition, so its largest task is O(max degree).  A second,
+    all-partial-aggregable peel engine for mega-hub graphs was removed
+    unused: no registered graph comes near the 5,000,000-degree switch
+    it had, and at sf0.01/sf0.1 it ran 174/186 Spark jobs against
+    h-index's 47/50 for identical output (SCALING.md).
     """
-    sym = _symmetric(und).persist()
+    sym = _symmetric(_canonical(edges, src, dst)).persist()
     sym.count()
-    und.unpersist()  # sym supersedes the caller's canonical edge cache
-    if deg is None:
-        c0 = sym.groupBy(F.col("a").alias("node")).agg(
-            F.count("*").cast("long").alias("c")
-        )
-    else:
-        c0 = deg.select("node", F.col("deg").cast("long").alias("c"))
+    c0 = sym.groupBy(F.col("a").alias("node")).agg(
+        F.count("*").cast("long").alias("c")
+    )
     rank_w = Window.partitionBy("a").orderBy(F.desc("c"))
 
     def h_step(c: DataFrame, _) -> DataFrame:
@@ -581,186 +604,11 @@ def _coreness_hindex(
             metric=[F.sum(F.col("c").cast("decimal(38,0)")).alias("s")],
             converged=unchanged, max_iter=max_iter,
             error=f"coreness (h-index) did not reach the fixpoint in "
-            f"{max_iter} rounds; raise max_iter (or use algorithm='peel')",
+            f"{max_iter} rounds; raise max_iter",
         )
     finally:
-        sym.unpersist()
-        if deg is not None:
-            deg.unpersist()
+        sym.unpersist()  # the last round's checkpoint no longer reads it
     return c.select("node", F.col("c").alias("coreness"))
-
-
-def _pick_coreness_engine(max_degree: int, threshold: int) -> str:
-    """Engine decision for ``algorithm='auto'``: the h-index engine's
-    per-node rank window sorts one node's messages inside a single
-    partition, so its largest task is O(max_degree) — fine almost
-    always, a straggler/spill risk on a mega-hub graph.  Past the
-    threshold, pick the peel engine, whose every step is a
-    partial-aggregable degree rollup + node-keyed anti-joins (no
-    per-node frame ever assembled in one task)."""
-    return "peel" if max_degree >= threshold else "hindex"
-
-
-@scoped
-def coreness(
-    edges: DataFrame,
-    *,
-    src: str = "src",
-    dst: str = "dst",
-    max_iter: int = 200,
-    algorithm: str = "auto",
-    hub_degree_threshold: int = 5_000_000,
-) -> DataFrame:
-    """Full core decomposition: every node's core NUMBER — the largest
-    k for which the node survives the k-core peel (k_core gives
-    membership at ONE k; the standard deliverable ranks every entity
-    by its engagement depth in one pass).  Output: (node, coreness),
-    coreness ≥ 1 for every node incident to an edge (isolated nodes
-    never appear in an edge list and are not represented, exactly as
-    in :func:`k_core`).
-
-    Two engines, identical output (property-tested equal, and the
-    registered query's SQL oracle replays the PEEL while the usual
-    engine is h-index — cross-algorithm verification).
-    ``algorithm="auto"`` (the default) probes the max degree (one
-    partial-aggregable rollup over the cached canonical edges) and
-    picks h-index below ``hub_degree_threshold``, peel at or above it
-    — the h-index engine's one skew exposure is its per-node rank
-    window, whose largest task is O(max_degree); on a mega-hub graph
-    the all-partial-aggregable peel is the safe plan
-    (:func:`_pick_coreness_engine`):
-
-    - ``"hindex"``: the h-index fixpoint iteration (Lü,
-      Zhou, Zhang & Stanley, "The H-index of a network node and its
-      relation to degree and coreness", Nat. Commun. 2016): c₀ = deg,
-      c_{t+1}(v) = H({c_t(u) : u ~ v}) — the largest h such that ≥ h
-      neighbors currently hold value ≥ h.  Monotone non-increasing,
-      fixpoint = coreness.  Each round is ONE src-keyed join + one
-      per-node ranked count; rounds = error-propagation depth (≤ peel
-      rounds; measured 10 vs 16 on the sf0.1 trade graph).  The
-      per-node H step ranks a node's messages inside one window
-      partition, so it is bounded by max degree — ``"auto"`` switches
-      to peel past ``hub_degree_threshold`` for exactly this reason.
-    - ``"peel"``: the ascending-threshold cascade — run the k_core
-      peel at k = 2, 3, … on the surviving subgraph; casualties of
-      level k carry coreness k−1; no-op levels are JUMPED (min active
-      degree + 1).  More rounds, but every step is the partial-
-      aggregable degree rollup + node-keyed anti-joins of
-      :func:`k_core`.
-
-    Both RAISE on non-convergence within ``max_iter`` rather than
-    returning a partial decomposition.  The h-index loop runs on
-    :func:`..session.fixpoint`; the peel engine keeps every level's
-    casualty frame and jumps no-op levels, so it keeps its own loop
-    and releases superseded edge checkpoints synchronously.
-    """
-    if algorithm not in ("auto", "hindex", "peel"):
-        raise ValueError(
-            f"algorithm must be 'auto', 'hindex' or 'peel', got "
-            f"{algorithm!r}"
-        )
-    und = hold(_canonical(edges, src, dst).persist())
-    und.count()
-    if algorithm == "auto":
-        # ONE degree rollup serves both the engine probe and (for the
-        # h-index engine) c₀ — previously the probe's full-edge-list
-        # shuffle was thrown away and recomputed as c₀ (r19, the guard
-        # deg-sharing discipline; measured ~1.3 s / 3 jobs at sf0.1).
-        deg = hold(_degrees(und).persist())
-        max_deg = deg.agg(F.max("deg")).first()[0]
-        algorithm = _pick_coreness_engine(
-            int(max_deg or 0), hub_degree_threshold
-        )
-        if algorithm == "hindex":
-            return _coreness_hindex(und, max_iter=max_iter, deg=deg)
-        deg.unpersist()
-    if algorithm == "hindex":
-        return _coreness_hindex(und, max_iter=max_iter)
-
-    def endpoints(df: DataFrame) -> DataFrame:
-        return (
-            df.select(F.col("u").alias("node"))
-            .unionByName(df.select(F.col("v").alias("node")))
-            .distinct()
-        )
-
-    # Per removal round the loop runs three jobs: the casualty PROBE
-    # (weak.count() on the persisted sub-k frame — probed BEFORE any
-    # survivor materialization, so a no-op threshold level never pays
-    # an eager checkpoint), the survivor-edge eager checkpoint (whose
-    # two anti-joins read the already-persisted weak frame instead of
-    # recomputing the degree rollup twice, mirroring k_core), then the
-    # casualty frame's lazy checkpoint materialized by its own count.
-    # Casualties are the ENDPOINT-SET DIFFERENCE of consecutive edge
-    # frames — this catches both the sub-k-degree nodes and the nodes
-    # isolated by their neighbors' removal (no edges left ⇒ absent
-    # from the new endpoint set), which the oracle removes as deg-0
-    # members of the same level: identical coreness either way.
-    # weak nonempty ⟺ the endpoint diff is nonempty (removed nodes
-    # leave the endpoint set), so the weak count IS the jump probe.
-    active = und
-    live_handle = None
-    casualty_frames: list[DataFrame] = []
-    k = 2
-    converged = False
-    for _ in range(max_iter):
-        deg = _degrees(active)
-        weak = hold(deg.filter(F.col("deg") < k).select("node").persist())
-        if weak.count() == 0:
-            weak.unpersist()
-            # k-core reached.  Exhausted graph ⇒ done; else JUMP the
-            # threshold straight past the core's minimum degree d:
-            # every level in (k, d] would peel nothing (all degrees
-            # ≥ d), and the d+1 casualties carry coreness d either
-            # way — identical result, no no-op rounds burned on
-            # high-degree cores.  The SQL oracle mirrors the jump.
-            min_deg = deg.agg(F.min("deg")).first()[0]
-            if min_deg is None:  # no edges and no endpoints left
-                converged = True
-                break
-            k = int(min_deg) + 1
-            continue
-        new_active = (
-            active.join(
-                weak.withColumnRenamed("node", "u"), "u", "left_anti"
-            )
-            .join(weak.withColumnRenamed("node", "v"), "v", "left_anti")
-            .localCheckpoint(eager=True)
-        )
-        new_handle = hold(checkpoint_handle(new_active))
-        fallen = (
-            endpoints(active)
-            .join(endpoints(new_active), "node", "left_anti")
-            .withColumn("coreness", F.lit(k - 1).cast("long"))
-            .localCheckpoint(eager=False)
-        )
-        hold(checkpoint_handle(fallen))
-        fallen.count()  # materialize before the superseded round frees
-        casualty_frames.append(fallen)
-        if live_handle is not None:
-            live_handle.unpersist(False)
-        live_handle = new_handle
-        active = new_active
-        weak.unpersist()
-    if not converged:
-        raise RuntimeError(
-            f"coreness did not exhaust the graph within max_iter="
-            f"{max_iter} rounds; raise max_iter"
-        )
-    # The final active set is empty — every node left through a
-    # casualty frame; the union of the (disjoint) per-round frames IS
-    # the decomposition.
-    spark = edges.sparkSession
-    if not casualty_frames:
-        out = spark.createDataFrame([], "node long, coreness long")
-    else:
-        out = casualty_frames[0]
-        for f in casualty_frames[1:]:
-            out = out.unionByName(f)
-    if live_handle is not None:
-        # the (empty) final edge checkpoint has no further readers
-        live_handle.unpersist(False)
-    return out
 
 
 def _edge_support(active: DataFrame) -> DataFrame:
@@ -1233,8 +1081,8 @@ def strongly_connected_components(
       >= #roots components per round — the many-small-SCC shape
       (thousands of short cycles) that costs FW-BW one driver-
       synchronized round EACH resolves in O(1) coloring rounds.
-    - ``algorithm="auto"`` (default) measures instead of guessing
-      (the coreness engine-probe pattern), re-evaluated every pivot
+    - ``algorithm="auto"`` (default) measures instead of guessing,
+      re-evaluated every pivot
       round: while each FW-BW pivot's component covers at least half
       of the remaining nodes the few-large-cores shape is confirmed
       and FW-BW continues; the first small pivot switches the engine
@@ -1244,6 +1092,22 @@ def strongly_connected_components(
       retired components is valid under either engine (both peel
       whole SCCs off the same remaining subgraph), so the mid-stream
       switch cannot change the labeling.
+
+    Why two engines: each loses badly on some shape.  Spark jobs
+    (seconds) under auto / fwbw / coloring, ``local[2]`` engine
+    session on a 4-core VM:
+
+    ==================================  ===============  ==================
+    graph                               jobs             seconds
+    ==================================  ===============  ==================
+    ``graph_scc`` sf0.01                86 / 84 / 120
+    ``graph_scc`` sf0.1                 93 / 91 / 132
+    40-cycle                            231 / 229 / 515  16.3 / 17.0 / 20.1
+    10-cycle feeding 40 two-cycles      129 / 970 / 203  5.1 / 42.9 / 7.6
+    120 disjoint two-cycles             90 / 934 / 59    3.5 / 123.7 / 2.3
+    ==================================  ===============  ==================
+
+    ``algorithm`` also lets tests pin each engine against Kosaraju.
 
     Scale shape: every stage is node-keyed joins / partial-aggregable
     degree counts; the reach sets are frontier expansions
@@ -1259,7 +1123,7 @@ def strongly_connected_components(
     Determinism + cross-algorithm verification: the registered
     oracle (plans/extras.py graph_scc) computes mutual reachability
     through a recursive-CTE transitive closure — an INDEPENDENT
-    algorithm, per the coreness h-index/peel pattern.
+    algorithm, as graph_coreness's peel oracle is for h-index.
     """
     if algorithm not in ("auto", "fwbw", "coloring"):
         raise ValueError(
@@ -1389,9 +1253,9 @@ def strongly_connected_components(
                     .localCheckpoint(eager=True)
                 )
                 if engine == "auto":
-                    # Engine probe (the coreness auto pattern, but
-                    # MEASURED on this graph rather than a static
-                    # threshold), re-evaluated EVERY pivot round: while
+                    # Engine probe, MEASURED on this graph rather than
+                    # a static threshold, re-evaluated EVERY pivot
+                    # round: while
                     # each pivot's component covers >= half of the
                     # remaining nodes, few-large-cores FW-BW is winning
                     # and auto keeps probing; the first small pivot
@@ -2797,7 +2661,6 @@ def louvain_coarsen(
     communities: DataFrame | None = None,
     *,
     passes: int = 3,
-    refine: str | None = None,
     src: str = "src",
     dst: str = "dst",
     node_col: str = "node",
@@ -2827,19 +2690,14 @@ def louvain_coarsen(
     list (hypothesis- and data-pinned), while paying the |E|-sized
     assignment join once.
 
-    ``refine='guarded'`` (r17 — VERDICT r16 next-round #4) interleaves
-    one GUARDED local-move sweep between each merge pass and the next
-    contraction (:func:`modularity_refine_guarded` with
-    ``weight_col='weight'`` on the super-graph — true Louvain phase 1
-    inside phase 2): mutual-best matching can stall at coarser optima
-    than move-then-contract Louvain, and the guarded sweep escapes
-    those without ever regressing — Q after each refined pass is >=
-    Q after the merge alone BY CONSTRUCTION (score-and-keep-better),
-    so the loop's per-pass Q-monotonicity pin is preserved.  The
-    fixpoint early-stop then checks the COMBINED pass output (a merge
-    no-op can still be improved by a move, and vice versa).  Costs one
-    extra sweep + two community-bounded scorings per pass; the default
-    ``refine=None`` is the r16 loop unchanged.
+    Merge passes only: a guarded local-move sweep between each merge
+    and the next contraction was removed unused — it measured ΔQ = 0
+    at sf0.001 and sf0.1 on the purchase graph (the guard rejected
+    every sweep) while sf0.1 time rose 9.0 → 14.7 s (SCALING.md).  The
+    merge → guarded-sweep pass stays composable from
+    :func:`modularity_merge_step`, :func:`modularity_refine_guarded`
+    and :func:`contract_graph` (the ``graph_refine_pass`` and
+    ``graph_refine_loop`` queries).
 
     Iteration contract: each pass's (tiny, community-count-bounded)
     output is ``localCheckpoint``'d — without truncation every pass
@@ -2856,10 +2714,6 @@ def louvain_coarsen(
     community-count-bounded joins/windows and one-row fan-ins; the
     final relabel is one broadcastable join against the seed.
     """
-    if refine not in (None, "guarded"):
-        raise ValueError(
-            f"refine must be None or 'guarded', got {refine!r}"
-        )
     a, b = F.col(src), F.col(dst)
     if assume_canonical:
         und = edges.select(a.alias("src"), b.alias("dst"))
@@ -2905,39 +2759,13 @@ def louvain_coarsen(
             .distinct()
             .select("node", F.col("node").alias("community"))
         )
-        # with the guarded sweep in the pass, the merge AND the guard's
-        # sweep + two scorings all derive the same degree rollup from
-        # this pass's super-graph — compute it once and thread it
-        # through (r19, VERDICT r18 next-round #3); the plain-merge
-        # path computes it exactly once in-plan already, so a shared
-        # frame would buy it nothing.  m stays in-plan everywhere (the
-        # eager-collect form measured slower, OPTIMIZATION_r19.md).
-        pass_stats: dict = {}
-        if refine == "guarded":
-            pass_stats = {"deg": modularity_stats(
-                g, weight_col="weight", collect_m=False
-            )[0]}
         merged = modularity_merge_step(
             g,
             ident,
             weight_col="weight",
             assume_canonical=True,
-            **pass_stats,
         ).localCheckpoint()
         hold(checkpoint_handle(merged))
-        if refine == "guarded":
-            # one guarded local-move sweep on the SAME super-graph,
-            # scored weighted on both sides — adopted only if Q
-            # strictly improves, so the per-pass monotonicity pin
-            # survives by construction
-            merged = modularity_refine_guarded(
-                g,
-                merged,
-                weight_col="weight",
-                assume_canonical=True,
-                **pass_stats,
-            ).localCheckpoint()
-            hold(checkpoint_handle(merged))
         # fixpoint check: a pass that merges nothing relabels identity
         # to itself, and every later pass would be the identity too —
         # stop before paying another contraction (bounded: the relabel

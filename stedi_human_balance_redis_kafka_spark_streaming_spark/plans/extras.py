@@ -1978,13 +1978,13 @@ _CORENESS_NODES_SQL = f"""SELECT u AS node FROM ({_KCORE_EDGES_SQL})
 @register(
     "graph_coreness",
     # CROSS-ALGORITHM oracle: the Spark side runs the h-index fixpoint
-    # (operators/graph.py coreness default); this CTE computes the same
+    # (operators/graph.py coreness); this CTE computes the same
     # decomposition by the ascending-threshold PEEL — the working row
     # carries (k, removed-node list, aligned removal-k list); each step
     # either peels the sub-k-degree stratum (tagging every casualty
     # with the CURRENT k, isolated deg-0 nodes included) or, at a
     # k-core fixpoint, JUMPS k past the core's minimum active degree
-    # (the same jump the algorithm='peel' engine makes).  Two
+    # (every level in between would peel nothing).  Two
     # independent algorithms agreeing on every core number is a
     # stronger check than a same-algorithm replay.  Positional
     # double-unnest zips the two lists into (node, coreness =
@@ -2034,7 +2034,7 @@ _CORENESS_NODES_SQL = f"""SELECT u AS node FROM ({_KCORE_EDGES_SQL})
 def graph_coreness(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full core decomposition of the quarter's supplier<->customer
     trade graph (operators/graph.py coreness): every entity's core
-    NUMBER — the deepest k-core it survives — in one ascending peel,
+    NUMBER — the deepest k-core it survives — in one h-index fixpoint,
     where graph_kcore answers membership at the single k={_KCORE_K}.
     The per-entity engagement-depth ranking a marketplace-health
     report actually wants: coreness 1 = held in the graph only by
@@ -5633,8 +5633,8 @@ def graph_refine_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     (every synchronous sweep overshoots — the r15/r16 measured
     phenomenon, here driver-verified as data: q_swept_e6 < q_seed_e6
     in both engines), which is exactly why
-    modularity_refine_guarded / louvain_coarsen(refine='guarded')
-    score-and-keep-better instead of trusting the sweep; the adopt
+    modularity_refine_guarded scores-and-keeps-better instead of
+    trusting the sweep; the adopt
     branch is pinned by the weighted-triangle pytest.
 
     Scale shape: ONE |E|-sized contraction (the graph_modularity shape,
@@ -5996,8 +5996,8 @@ def _sql_refine_pass() -> str:
 @register("graph_refine_pass", oracle=_sql_refine_pass())
 def graph_refine_pass(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The coarsen loop's COMPOSED PASS BODY driver-verified (birth
-    r18): exactly what ``louvain_coarsen(refine='guarded')`` runs per
-    pass — one weighted mutual-best merge
+    r18): the merge → guarded-sweep pass, composed from the real
+    operators — one weighted mutual-best merge
     (operators/graph.modularity_merge_step) from the identity
     partition, then the guarded weighted local-move sweep
     (operators/graph.modularity_refine_guarded) SEEDED WITH THE MERGE
@@ -6095,8 +6095,8 @@ def graph_refine_pass(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register("graph_refine_loop", oracle=_sql_refine_loop())
 def graph_refine_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The full TWO-PASS REFINED COARSENING LOOP as one hashed trace
-    (birth r18, completing the refine arc): exactly the iteration
-    ``louvain_coarsen(refine='guarded')`` runs, composed from the real
+    (birth r18, completing the refine arc): two merge → guarded-sweep
+    passes with a contraction between them, composed from the real
     operators on the weighted trade backbone — pass 1: weighted
     mutual-best merge from singletons
     (operators/graph.modularity_merge_step), guarded weighted sweep on

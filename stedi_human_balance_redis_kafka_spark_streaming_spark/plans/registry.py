@@ -5196,8 +5196,8 @@ EXTENDED_QUERIES: tuple[str, ...] = (
     # graph: the brute-force betweenness-style centrality
     # (graph_stress_centrality, birth r13, driver-hashed r16+r17)
     # yields to the coarsen loop's composed pass body
-    # (graph_refine_pass, birth r18) — the merge-then-guarded-sweep
-    # composition louvain_coarsen(refine='guarded') runs per pass,
+    # (graph_refine_pass, birth r18) — the merge → guarded-sweep pass
+    # composed from modularity_merge_step and modularity_refine_guarded,
     # driver-verified on the trade backbone where the sweep strictly
     # improves the matching's own output; the graph family keeps
     # scc/lpa/coarsen/refine_weighted/refine_adopt in-window, and
@@ -5205,9 +5205,9 @@ EXTENDED_QUERIES: tuple[str, ...] = (
     "graph_stress_centrality",
     # tpc-h: the scored top-k join chain (q18_large_volume_customers,
     # birth r3, driver-hashed r16+r17) yields to the two-pass refined
-    # coarsening trace (graph_refine_loop, birth r18) — the full
-    # louvain_coarsen(refine='guarded') iteration as one hashed row
-    # set, both guard branches firing in a single run and the
+    # coarsening trace (graph_refine_loop, birth r18) — two
+    # merge → guarded-sweep passes around a contraction as one hashed
+    # row set, both guard branches firing in a single run and the
     # contraction-invariance lemma verified per row via q_final_e6;
     # the q-shape family keeps q21's double anti/semi stack in-window
     # and q18 stays parity-green every round (its scored-top-k

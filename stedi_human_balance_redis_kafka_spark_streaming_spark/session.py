@@ -98,9 +98,9 @@ The module also owns block lifetime — every persisted frame and every
 
 and the one iteration loop:
 
-* ``fixpoint`` — the checkpointed loop behind k_core, k_truss, the
-  coreness h-index engine, label propagation, BFS, shortest paths, the
-  SCC coloring fixpoint and both connected-components engines.  Each
+* ``fixpoint`` — the checkpointed loop behind k_core, k_truss,
+  coreness, label propagation, BFS, shortest paths, the SCC coloring
+  fixpoint and both connected-components engines.  Each
   round is ONE Spark action: the convergence metric is attached with
   ``observe`` and collected by the round's eager ``localCheckpoint``
   job, not by a separate count.  Every round's checkpoint is held in

@@ -39,7 +39,6 @@ SLOW_TESTS = frozenset(
         "tests/test_properties.py::test_refine_guarded_evidence_out_param",  # 17.3s
         "tests/test_properties.py::test_modularity_merge_matches_python_and_never_decreases_q",  # 16.7s
         "tests/test_properties.py::test_coreness_is_max_k_surviving_k_core",  # 16.4s
-        "tests/test_properties.py::test_coarsen_guarded_refine_q_on_purchase_graph",  # 16.0s
         "tests/test_properties.py::test_lm_score_partition_invariant",  # 15.3s
         "tests/test_properties.py::test_snm_sharded_equals_global_window",  # 14.4s
         "tests/test_streaming.py::test_windowed_cms_watchlist_stream_matches_batch",  # 13.5s
@@ -97,7 +96,6 @@ SLOW_TESTS = frozenset(
         "tests/test_plans.py::test_new_round10_queries_not_cartesian[ann_sq8_recall]",  # 5.7s
         "tests/test_oracle_parity.py::test_query_matches_oracle[ann_pq_recall]",  # 5.6s
         "tests/test_properties.py::test_identical_docs_always_become_lsh_pair",  # 5.5s
-        "tests/test_properties.py::test_coreness_auto_engine_switch_on_hub_graph",  # 5.5s
         "tests/test_properties.py::test_snm_multipass_superset_and_reorder_recall",  # 5.4s
         "tests/test_plans.py::test_no_row_python_udfs_anywhere[ann_ivfpq_recall]",  # 5.4s
         "tests/test_oracle_parity.py::test_query_matches_oracle[events_cms_watchlist]",  # 5.3s

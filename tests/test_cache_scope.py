@@ -190,9 +190,8 @@ def _chain(spark, n):
 def _raising_fixpoints():
     """One max_iter-exceeded call per operator that runs on
     session.fixpoint (label_propagation runs fixed rounds and never
-    raises) or on its own checkpointed loop (stress centrality, the
-    coreness peel engine, SCC's FW-BW pivot reach), with the message
-    its RuntimeError must carry."""
+    raises) or on its own checkpointed loop (stress centrality, SCC's
+    FW-BW pivot reach), with the message its RuntimeError must carry."""
     from stedi_human_balance_redis_kafka_spark_streaming_spark.operators import (
         curation,
         graph,
@@ -213,12 +212,6 @@ def _raising_fixpoints():
         ),
         "coreness_hindex": (
             lambda s: graph.coreness(_chain(s, 10), max_iter=1), "h-index"
-        ),
-        "coreness_peel": (
-            lambda s: graph.coreness(
-                _chain(s, 10), algorithm="peel", max_iter=1
-            ),
-            "coreness did not exhaust",
         ),
         "stress_centrality": (
             lambda s: graph.stress_centrality(

@@ -1568,15 +1568,19 @@ def test_sorted_neighborhood_pairs_window_and_verify(spark):
 
 @pytest.mark.parametrize("n", [6, 10])
 def test_fixpoint_loops_run_one_job_per_round(spark, n):
-    """k_core, bfs_distances and shortest_paths observe their
+    """k_core, coreness, bfs_distances and shortest_paths observe their
     convergence metric inside each round's checkpoint job, so a round
     is exactly one Spark job.  AQE and broadcast joins are off for the
     count: each would launch extra jobs of its own (one per shuffle
     stage, one per broadcast), and one action would no longer be one
     job.  On the path 0-1-…-(n-1): k_core (k=2) peels both leaves per
     round, ceil((n-1)/2) rounds, plus one round that sees the edge
-    count stand still; bfs_distances and shortest_paths reach one new
-    node per round, n-1 rounds, plus one that finds nothing new."""
+    count stand still; coreness starts from the degrees (1 at the two
+    ends, 2 at the n-2 inner nodes) and each h-index round lowers the
+    outermost 2 at each end to 1, ceil((n-2)/2) rounds, plus one round
+    that sees the sum stand still; bfs_distances and shortest_paths
+    reach one new node per round, n-1 rounds, plus one that finds
+    nothing new."""
     from stedi_human_balance_redis_kafka_spark_streaming_spark.operators import (
         graph,
     )
@@ -1587,10 +1591,11 @@ def test_fixpoint_loops_run_one_job_per_round(spark, n):
     )
     seeds = spark.createDataFrame([(0,)], "node long")
     # fixed setup jobs: every loop checkpoints its initial frame (round
-    # 0); bfs_distances and shortest_paths first persist + count their
-    # adjacency
+    # 0); coreness, bfs_distances and shortest_paths first persist +
+    # count their symmetric edge set or adjacency
     cases = {
         "k_core": (lambda: graph.k_core(path, k=2), (n - 1 + 1) // 2 + 1, 1),
+        "coreness": (lambda: graph.coreness(path), (n - 2 + 1) // 2 + 1, 2),
         "bfs_distances": (lambda: graph.bfs_distances(path, seeds), n, 2),
         "shortest_paths": (
             lambda: graph.shortest_paths(path, seeds, validate=False), n, 2
