@@ -1093,20 +1093,23 @@ def strongly_connected_components(
       whole SCCs off the same remaining subgraph), so the mid-stream
       switch cannot change the labeling.
 
-    Why two engines: each loses badly on some shape.  Spark jobs
-    (seconds) under auto / fwbw / coloring, ``local[2]`` engine
-    session on a 4-core VM:
+    Why two engines: each loses badly on some shape.  Spark jobs per
+    call under auto / fwbw / coloring (``local[2]`` engine session,
+    4-core VM; AQE moves a count by up to ~6% between runs):
 
-    ==================================  ===============  ==================
-    graph                               jobs             seconds
-    ==================================  ===============  ==================
-    ``graph_scc`` sf0.01                86 / 84 / 120
-    ``graph_scc`` sf0.1                 93 / 91 / 132
-    40-cycle                            231 / 229 / 515  16.3 / 17.0 / 20.1
-    10-cycle feeding 40 two-cycles      129 / 970 / 203  5.1 / 42.9 / 7.6
-    120 disjoint two-cycles             90 / 934 / 59    3.5 / 123.7 / 2.3
-    ==================================  ===============  ==================
+    ==============================  ===============
+    graph                           jobs
+    ==============================  ===============
+    ``graph_scc`` sf0.01            86 / 84 / 120
+    ``graph_scc`` sf0.1             93 / 91 / 132
+    40-cycle                        231 / 229 / 515
+    10-cycle feeding 40 two-cycles  129 / 909 / 204
+    120 disjoint two-cycles         89 / 973 / 59
+    ==============================  ===============
 
+    Coloring runs 2.2× FW-BW's jobs on one long cycle; FW-BW runs 4.5×
+    and 16× coloring's on the many-small-SCC shapes, where it took
+    48 s and 141 s against coloring's 8 s and 3 s.
     ``algorithm`` also lets tests pin each engine against Kosaraju.
 
     Scale shape: every stage is node-keyed joins / partial-aggregable
