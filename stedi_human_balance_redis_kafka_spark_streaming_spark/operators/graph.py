@@ -1109,7 +1109,7 @@ def strongly_connected_components(
 
     Coloring runs 2.2× FW-BW's jobs on one long cycle; FW-BW runs 4.5×
     and 16× coloring's on the many-small-SCC shapes, where it took
-    48 s and 141 s against coloring's 8 s and 3 s.
+    48 s and 141 s against coloring's 8 s and 3 s (host busy).
     ``algorithm`` also lets tests pin each engine against Kosaraju.
 
     Scale shape: every stage is node-keyed joins / partial-aggregable
